@@ -41,10 +41,14 @@ object Clean {
     else extracted
   }
 
-  /** E3 — numeric cast normalize (`etl_job.py:240-243`). */
+  /** E3 — numeric cast normalize (`etl_job.py:240-243`). `try_cast`
+    * keeps the reference's non-ANSI semantics under Spark's ANSI default:
+    * a malformed value (`n/a`, `""`) becomes null, which `dropNullRows`
+    * then removes, instead of failing the whole job.
+    */
   def castNumeric(df: DataFrame, cols: Seq[String] = numericCols): DataFrame =
     cols.filter(df.columns.contains).foldLeft(df)((d, c) =>
-      d.withColumn(c, col(c).cast(DoubleType)))
+      d.withColumn(c, col(c).try_cast(DoubleType)))
 
   /** E4 — null-row filter (`etl_job.py:245-247`). */
   def dropNullRows(df: DataFrame, cols: Seq[String] = numericCols): DataFrame =

@@ -10,19 +10,32 @@ import org.apache.spark.sql.types._
   *
   *  - a per-symbol high watermark = max(timestamp) of the last processed
   *    batch, persisted in a small state table;
-  *  - each run loads only rows with timestamp > watermark (pushed into the
-  *    source scan), computes indicators, appends, advances the watermark;
+  *  - each run keeps only rows with timestamp > watermark, computes
+  *    indicators, appends, advances the watermark. The watermark filter
+  *    compares against a column joined from the state table, so it cannot
+  *    push into the source scan: every run reads its whole input once.
+  *    `historyBound` sits in the same filter (fresh rows are exempt from
+  *    it), so it cannot prune the scan either; it bounds the rows that
+  *    reach the exchange and the sort;
   *  - late rows older than the watermark are silently skipped forever
   *    (documented reference behavior — no event-time lateness).
   *
   * Window-boundary semantics (SURVEY §7.4.3): the reference computes
   * indicators over ONLY the new rows, so the first 199 rows of each
   * increment see truncated SMA-200 frames. Both behaviors are offered:
-  * `Truncated` replicates the reference; `OverlapReload` re-reads
+  * `Truncated` replicates the reference; `OverlapReload` keeps
   * (frame−1) rows of history per symbol, computes over the overlap, and
-  * trims the warm-up rows — exact indicators at ~1 extra frame of I/O.
-  * At 100 TB the overlap re-read is bounded (199 rows/symbol) and prunes
-  * via the symbol partitioning + timestamp min/max.
+  * trims the warm-up rows — exact indicators at ~1 extra frame of window
+  * work per symbol.
+  *
+  * Single pass: one scan of the input feeds everything a run produces.
+  * OverlapReload keeps fresh rows and bounded history rows in one filter,
+  * then ranks the history tail with running counts over the indicator
+  * window itself, so one hash exchange and one sort serve both the tail
+  * selection and the indicators. The processed rows are checkpointed once;
+  * the append and the new watermarks (max(timestamp) per symbol over the
+  * checkpointed rows, which are exactly the fresh rows in both modes) both
+  * read the checkpoint, never the input.
   */
 object Incremental {
 
@@ -83,62 +96,35 @@ object Incremental {
 
   /** One incremental run: filter past watermarks, compute indicators,
     * append idempotently (dedup key), advance watermarks. Returns the
-    * newly processed frame.
+    * newly processed frame, locally checkpointed: the caller owns its
+    * blocks and should `unpersist()` it when done.
     */
   // orderCols has NO default on purpose: it must be a total order on the
   // caller's data (Queries.tieCols for the OHLCV testdata) and no single
   // column set is total on every frame — a silent wrong default made
   // window frames nondeterministic.
   /** `historyBound`: optional predicate bounding the OverlapReload
-    * history scan (e.g. `col("timestamp") >= <watermark − 2 years>`).
-    * Without it, finding the last 199 rows per symbol row_number-sorts
-    * the ENTIRE processed history — the re-read is bounded but the
-    * tail-finding is not (measured in StressBench's incremental pair).
-    * A caller always knows a safe time bound covering maxFrame−1 trading
-    * rows; the predicate pushes into the source scan (partition/row-group
-    * pruning), making overlap cost O(bound), independent of history
-    * size. Contract: the bound must keep ≥ maxFrame−1 rows per symbol,
-    * else the first new rows see partially truncated frames.
+    * history rows (e.g. `col("timestamp") >= <watermark − 2 years>`).
+    * Without it, the indicator sort covers the ENTIRE processed history
+    * to find the last 199 rows per symbol. A caller always knows a safe
+    * time bound covering maxFrame−1 trading rows; with it, the shuffle
+    * and sort cost is O(bound), independent of history size (the scan
+    * still reads the whole input, see the object doc). It applies to
+    * history rows only: fresh rows are never bounded.
+    * Contract: the bound must keep ≥ maxFrame−1 rows per symbol, else
+    * the first new rows see partially truncated frames.
     */
   def runIncremental(spark: SparkSession, input: DataFrame, stateDir: String,
       outDir: String, mode: BoundaryMode, orderCols: Seq[String],
       historyBound: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val wm = readWatermarks(spark, stateDir)
-      .select(col("symbol"), col("last_processed_timestamp").as("_wm"))
-
-    val withWm = input.join(broadcast(wm), Seq("symbol"), "left")
-    val fresh = withWm.filter(col("_wm").isNull || col("timestamp") > col("_wm"))
-
-    // orderCols must be a TOTAL order within each symbol or window results
-    // are nondeterministic (Queries.tieCols is the canonical testdata set)
-    val w = Window.partitionBy("symbol").orderBy(orderCols.map(col): _*)
-    val processed = mode match {
-      case Truncated =>
-        // reference behavior: indicators over new rows only
-        Indicators.withIndicators(fresh.drop("_wm"), w)
-      case OverlapReload =>
-        // exact: include up to (maxFrame-1) rows of already-processed tail
-        // per symbol as warm-up context, then trim them from the output
-        val histW = Window.partitionBy("symbol").orderBy(orderCols.map(c => col(c).desc): _*)
-        val histAll = withWm
-          .filter(col("_wm").isNotNull && col("timestamp") <= col("_wm"))
-        val history = historyBound.fold(histAll)(histAll.filter)
-          .withColumn("_rn", row_number().over(histW))
-          .filter(col("_rn") <= maxFrame - 1)
-          .drop("_rn")
-        val all = history.withColumn("_warmup", lit(true))
-          .unionByName(fresh.withColumn("_warmup", lit(false)))
-        Indicators.withIndicators(all.drop("_wm"), w)
-          .filter(!col("_warmup"))
-          .drop("_warmup")
-    }
+    val processed = process(input, readWatermarks(spark, stateDir), mode, orderCols, historyBound)
 
     // Materialize before advancing the watermark: the plan reads the state
     // table, which is rewritten below — a lazily returned frame would
     // otherwise silently re-filter against the NEW watermark.
-    // localCheckpoint truncates the lineage (no re-eval hazard) and its
-    // blocks are released when the frame is GC'd, unlike an unbounded
-    // cache() per incremental run.
+    // localCheckpoint truncates the lineage (no re-eval hazard); the
+    // append and the watermark aggregate below read its blocks, not the
+    // input.
     val keyed = processed.withColumn("symbol_date_key",
       Clean.compositeKey(col("symbol"), col("trading_date"))).localCheckpoint(true)
     // At-least-once, like the reference's Mongo append (etl_job.py:389-394):
@@ -147,9 +133,55 @@ object Incremental {
     // (the reference's ES-upsert semantics).
     keyed.write.mode(SaveMode.Append).partitionBy("symbol").parquet(outDir)
 
-    val newWm = fresh.groupBy("symbol")
-      .agg(max("timestamp").as("last_processed_timestamp"))
-    if (!newWm.isEmpty) advanceWatermarks(spark, stateDir, newWm)
+    // keyed holds exactly the fresh rows, so its per-symbol max is the new
+    // watermark. One small collect replaces an emptiness probe plus a
+    // re-scan of the input; the rows go back into a frame with the
+    // aggregate's own schema so a TIMESTAMP_NTZ input keeps NTZ state.
+    val newWm = keyed.groupBy("symbol").agg(max("timestamp").as("last_processed_timestamp"))
+    val wmRows = newWm.collect()
+    if (wmRows.nonEmpty)
+      advanceWatermarks(spark, stateDir,
+        spark.createDataFrame(java.util.Arrays.asList(wmRows: _*), newWm.schema))
     keyed
+  }
+
+  /** The rows one run processes, with indicators, given the watermark
+    * state `wmState` (a `readWatermarks` frame). Lazy: one scan of
+    * `input`, and for OverlapReload one hash exchange on `symbol`.
+    */
+  private[graft] def process(input: DataFrame, wmState: DataFrame, mode: BoundaryMode,
+      orderCols: Seq[String], historyBound: Option[org.apache.spark.sql.Column]): DataFrame = {
+    val wm = wmState.select(col("symbol"), col("last_processed_timestamp").as("_wm"))
+    val withWm = input.join(broadcast(wm), Seq("symbol"), "left")
+    val isFresh = col("_wm").isNull || col("timestamp") > col("_wm")
+
+    // orderCols must be a TOTAL order within each symbol or window results
+    // are nondeterministic (Queries.tieCols is the canonical testdata set)
+    val w = Window.partitionBy("symbol").orderBy(orderCols.map(col): _*)
+    mode match {
+      case Truncated =>
+        // reference behavior: indicators over new rows only
+        Indicators.withIndicators(withWm.filter(isFresh).drop("_wm"), w)
+      case OverlapReload =>
+        // exact: include up to (maxFrame-1) rows of already-processed tail
+        // per symbol as warm-up context, then trim them from the output.
+        // Fresh and bounded history rows come from one filtered scan; a
+        // history row is in the tail when fewer than maxFrame-1 history
+        // rows follow it (history total − running history count). Both
+        // counts run over `w` itself, so the ranking shares the
+        // indicators' exchange and sort.
+        val isHistory = col("_wm").isNotNull && col("timestamp") <= col("_wm")
+        val histOne = when(col("_warmup"), 1).otherwise(0)
+        val all = withWm.filter(isFresh || (isHistory && historyBound.getOrElse(lit(true))))
+          .withColumn("_warmup", !isFresh)
+          .withColumn("_hist_after",
+            sum(histOne).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)) -
+              sum(histOne).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .filter(!col("_warmup") || col("_hist_after") < maxFrame - 1)
+          .drop("_wm", "_hist_after")
+        Indicators.withIndicators(all, w)
+          .filter(!col("_warmup"))
+          .drop("_warmup")
+    }
   }
 }

@@ -39,6 +39,23 @@ class CleanSpec extends SparkSpec {
     assert(dates.flatten.forall(_.startsWith("2021")))
   }
 
+  test("E3 castNumeric: malformed numeric strings become null under ANSI and are dropped") {
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val raw = Seq(("A", "10.5", "100"), ("B", "n/a", "5"), ("C", "", "7"), ("D", "1e2", "x"))
+        .toDF("symbol", "close", "volume")
+      val cast = Clean.castNumeric(raw)
+      assert(cast.schema("close").dataType == DoubleType)
+      val rows = cast.orderBy("symbol").collect()
+      assert(rows(1).isNullAt(1) && rows(2).isNullAt(1) && rows(3).isNullAt(2))
+      assert(rows(3).getDouble(1) == 100.0)
+      val kept = Clean.dropNullRows(cast).collect()
+      assert(kept.map(_.getString(0)).toSeq == Seq("A"))
+      assert(kept.head.getDouble(1) == 10.5 && kept.head.getDouble(2) == 100.0)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("E9 NaN scrub: double NaN -> null; 'NaN' string -> null; numeric string -> double") {
     val df = Seq((Double.NaN, "NaN"), (1.5, "42"), (2.5, "7"))
       .toDF("d", "s")

@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Incremental
+import graft.operators.{Incremental, Indicators}
 
 class IncrementalSpec extends SparkSpec {
   import spark.implicits._
@@ -20,6 +24,66 @@ class IncrementalSpec extends SparkSpec {
   private val specOrd = Seq("trading_date", "timestamp")
 
   private def tmp() = Files.createTempDirectory("graft_inc").toString
+
+  private val day0 = java.time.LocalDate.parse("2023-01-02")
+
+  /** `days` consecutive daily bars per symbol from `day0`, with a close
+    * that moves both ways (so every indicator sees gains and losses).
+    */
+  private def series(symbols: Seq[String], days: Seq[Int]): DataFrame =
+    (for (s <- symbols; i <- days) yield {
+      val c = 100.0 + 10 * math.sin(i * 0.3 + s.hashCode % 7) + i * 0.05
+      (s, day0.plusDays(i).toString, c, c - 0.5, c + 1.0, c - 1.0, 10L + i % 13)
+    }).toDF("symbol", "d", "close", "open", "high", "low", "volume")
+      .withColumn("trading_date", to_date(col("d")))
+      .withColumn("timestamp", to_timestamp(col("d")))
+      .drop("d")
+
+  private def asParquet(df: DataFrame): DataFrame = {
+    val dir = tmp() + "/in"
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def tsOf(day: Int) = lit(s"${day0.plusDays(day)} 00:00:00").cast("timestamp")
+
+  /** Input records read by every job `body` starts: the tasks of jobs
+    * carrying a local property set on this thread (inherited by the
+    * broadcast and stage threads). A tagged sentinel job flushes the
+    * listener bus before the total is read.
+    */
+  private def recordsRead(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val tag = "graft.test.recordsRead"
+    val read = new AtomicLong
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val sentinelJobs = ConcurrentHashMap.newKeySet[Int]()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("body") => e.stageIds.foreach(stages.add)
+          case Some("sentinel") => sentinelJobs.add(e.jobId)
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (sentinelJobs.contains(e.jobId)) flushed.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      try body finally sc.setLocalProperty(tag, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      read.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("two-batch overlap-reload run equals single-batch run") {
     val (st1, out1) = (tmp() + "/wm", tmp() + "/out")
@@ -92,5 +156,65 @@ class IncrementalSpec extends SparkSpec {
     val wm = Incremental.readWatermarks(spark, st).collect()
     assert(wm.length == 1)
     assert(wm.head.getAs[java.sql.Timestamp]("last_processed_timestamp").toString.startsWith("2024-01-10"))
+  }
+
+  test("an increment scans its input once: the append and watermarks read the checkpoint") {
+    val input = asParquet(series(Seq("A", "B"), 0 until 300))
+    val (st, out) = (tmp() + "/wm", tmp() + "/out")
+    Incremental.runIncremental(spark, input.filter(col("trading_date") < lit(day0.plusDays(280).toString)),
+      st, out, Incremental.OverlapReload, specOrd).unpersist()
+    var inc: DataFrame = null
+    val read = recordsRead {
+      inc = Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd)
+    }
+    val outRows = inc.count()
+    inc.unpersist()
+    val stateRows = Incremental.readWatermarks(spark, st).count()
+    assert(outRows == 40 && stateRows == 2)
+    // one input scan; the state is read for the join and for the merge;
+    // the checkpoint is read by the append and the watermark aggregate
+    val bound = 600 + 2 * stateRows + 2 * outRows
+    assert(read <= bound, s"read $read input records, bound $bound (input 600, state $stateRows, out $outRows)")
+  }
+
+  test("historyBound keeping >= maxFrame-1 rows per symbol leaves every indicator unchanged") {
+    val input = asParquet(series(Seq("A", "B"), 0 until 330))
+    val boot = input.filter(col("trading_date") < lit(day0.plusDays(300).toString))
+    def run(bound: Option[org.apache.spark.sql.Column]) = {
+      val (st, out) = (tmp() + "/wm", tmp() + "/out")
+      Incremental.runIncremental(spark, boot, st, out, Incremental.OverlapReload, specOrd).unpersist()
+      val inc = Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd, bound)
+      val rows = inc.select((Seq("symbol_date_key") ++ Indicators.indicatorCols).map(col): _*)
+        .orderBy("symbol_date_key").collect().toSeq
+      inc.unpersist()
+      rows
+    }
+    val unbounded = run(None)
+    // day 95 leaves 204 history rows per symbol (days 95..299)
+    val bounded = run(Some(col("timestamp") >= tsOf(95)))
+    assert(unbounded.size == 60)
+    assert(bounded == unbounded)
+    // a bound that keeps too few rows does change the first increment rows:
+    // the contract is load-bearing, not vacuous
+    val tooTight = run(Some(col("timestamp") >= tsOf(250)))
+    assert(tooTight != unbounded)
+  }
+
+  test("historyBound: late rows are never written; fresh rows older than the bound are") {
+    val (st, out) = (tmp() + "/wm", tmp() + "/out")
+    val boot = series(Seq("A"), (0 until 250).filter(_ != 120))
+    Incremental.runIncremental(spark, asParquet(boot), st, out, Incremental.OverlapReload, specOrd).unpersist()
+    // day 120 of A lands late (before A's watermark, inside the bound);
+    // symbol N is new, and all its rows predate the bound
+    val next = asParquet(series(Seq("A"), 0 until 260).unionByName(series(Seq("N"), 0 until 30)))
+    Incremental.runIncremental(spark, next, st, out, Incremental.OverlapReload, specOrd,
+      Some(col("timestamp") >= tsOf(40))).unpersist()
+    val keys = spark.read.parquet(out).select("symbol_date_key").collect().map(_.getString(0)).toSet
+    assert(!keys.contains(s"A_${day0.plusDays(120)}"), "late row was written")
+    assert(keys.size == 249 + 10 + 30)
+    assert((0 until 30).forall(i => keys.contains(s"N_${day0.plusDays(i)}")))
+    val wm = Incremental.readWatermarks(spark, st).collect()
+      .map(r => r.getString(0) -> r.get(1).toString).toMap
+    assert(wm("A").startsWith(day0.plusDays(259).toString) && wm("N").startsWith(day0.plusDays(29).toString))
   }
 }

@@ -1128,4 +1128,38 @@ class PlanSpec extends SparkSpec {
     assert(collectAll(p2) { case e: Exchange => e }.isEmpty,
       "fan-out must not engage when the scan already has enough splits")
   }
+
+  test("incremental OverlapReload: one scan per input relation, one hash exchange on symbol") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import spark.implicits._
+    import graft.operators.Incremental
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_inc").toString
+    def bars(days: Range) = (for (s <- Seq("A", "B"); i <- days) yield (s, i, 100.0 + i % 17))
+      .toDF("symbol", "i", "close")
+      .withColumn("trading_date", date_add(lit("2023-01-02").cast("date"), col("i")))
+      .withColumn("timestamp", col("trading_date").cast("timestamp"))
+      .withColumn("volume", col("i").cast("long"))
+      .drop("i")
+    bars(0 until 250).write.parquet(s"$dir/raw")
+    bars(250 until 251).write.parquet(s"$dir/landing")
+    val raw = spark.read.parquet(s"$dir/raw")
+    val order = Seq("trading_date")
+    Incremental.runIncremental(spark, raw, s"$dir/wm", s"$dir/out", Incremental.OverlapReload, order)
+      .unpersist()
+    // the two-relation input of a daily increment (history ∪ landed day)
+    val input = raw.unionByName(spark.read.parquet(s"$dir/landing"))
+    val p = physical(Incremental.process(input, Incremental.readWatermarks(spark, s"$dir/wm"),
+      Incremental.OverlapReload, order, Some(col("timestamp") >= lit("2023-03-01").cast("timestamp"))))
+
+    val hashed = collectAll(p) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .collect { case h: HashPartitioning => h }
+    assert(hashed.size == 1, s"expected one hash exchange, got ${hashed.size}:\n$p")
+    assert(hashed.head.expressions.map(_.references.map(_.name).mkString) == Seq("symbol"))
+    // history, landing and the watermark state: each scanned exactly once
+    val scans = collectAll(p) { case s: FileSourceScanExec => s.relation.location.rootPaths.mkString }
+    assert(scans.size == 3 && scans.distinct.size == 3, s"scans: ${scans.mkString(", ")}")
+  }
 }
