@@ -28,23 +28,39 @@ object QueriesMeta {
     */
   private val StreamStateBytesPerPartition = 256L * 1024
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** State-store partition count for a stream over `table`: one per
+    * [[StreamStateBytesPerPartition]] of the size `probeBytes` reports,
+    * clamped to [1, parallelism]. A failed probe falls back to
+    * `parallelism` and logs a warning naming the table and the error
+    * class: guessing 0 bytes would silently serialize the stateful stream
+    * on one partition.
+    */
+  private[graft] def streamStatePartitions(table: String, parallelism: Int)(
+      probeBytes: => Long): Int =
+    scala.util.Try(probeBytes) match {
+      case scala.util.Success(bytes) =>
+        math.max(1L, math.min(parallelism.toLong,
+          (bytes + StreamStateBytesPerPartition - 1) / StreamStateBytesPerPartition)).toInt
+      case scala.util.Failure(e) =>
+        log.warn(s"size probe of $table failed (${e.getClass.getName}); " +
+          s"using $parallelism state-store partitions")
+        parallelism
+    }
+
   /** Cloned session for the stateful streaming gate keys with the
     * state-store partition count derived from the source parquet's size
-    * (see [[StreamStateBytesPerPartition]]), clamped to
-    * [1, defaultParallelism].
+    * (see [[streamStatePartitions]]).
     */
   private def streamStateSession(sOuter: SparkSession, dir: String,
       table: String): SparkSession = {
     val s = sOuter.newSession()
-    val bytes =
-      try {
-        val hp = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(hp).getLength
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    val parts = math.max(1L,
-      math.min(s.sparkContext.defaultParallelism.toLong,
-        (bytes + StreamStateBytesPerPartition - 1) / StreamStateBytesPerPartition))
+    val parts = streamStatePartitions(table, s.sparkContext.defaultParallelism) {
+      val hp = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+      hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(hp).getLength
+    }
     s.conf.set("spark.sql.shuffle.partitions", parts.toString)
     s
   }

@@ -51,8 +51,10 @@ object MicroBatch {
       to_json(struct(df.columns.map(col): _*)).as("value"))
 
   /** S7 — micro-batch trigger mirroring the consumer's 10 s time flush.
-    * (The 500-row size flush maps to `maxOffsetsPerTrigger` on a real
-    * Kafka source; file sources use `maxFilesPerTrigger`.)
+    * Per-trigger admission is a cap, not a flush threshold: Kafka caps a
+    * batch at `maxOffsetsPerTrigger` (see [[kafkaSource]]); file sources
+    * cap it at [[DefaultMaxBytesPerTrigger]] bytes of files, always
+    * admitting at least one file.
     */
   val microBatchTrigger: Trigger = Trigger.ProcessingTime("10 seconds")
 
@@ -68,6 +70,11 @@ object MicroBatch {
     * `maxOffsetsPerTrigger` = 500 mirrors its size-flush of 500 messages
     * per micro-batch (`consumer.py:35-36`); `failOnDataLoss=false` mirrors
     * its at-least-once stance toward expired offsets.
+    *
+    * Known limit: the consumer flushes at 500 messages to bound latency,
+    * but `maxOffsetsPerTrigger` is a per-trigger cap. Under
+    * [[microBatchTrigger]] a live stream is therefore held to 500 messages
+    * per 10 s and a backlog drains 500 at a time.
     */
   def kafkaSource(bootstrapServers: String, topic: String,
       maxOffsetsPerTrigger: Long = 500L,
@@ -79,16 +86,28 @@ object MicroBatch {
       "maxOffsetsPerTrigger" -> maxOffsetsPerTrigger.toString,
       "failOnDataLoss" -> "false"), None)
 
-  /** Sandbox fallback: JSON files with one message per line, rate-limited
-    * per micro-batch like the Kafka path. The raw line rides in a `value`
-    * column so [[decode]] is source-agnostic.
+  /** Per-trigger byte budget of [[fileSource]]: 128 MB, Spark's own
+    * `spark.sql.files.maxPartitionBytes` default (one max-size scan split).
     */
-  def fileSource(path: String, maxFilesPerTrigger: Int = 1): SourceConfig =
+  val DefaultMaxBytesPerTrigger: Long = 128L * 1024 * 1024
+
+  /** Sandbox fallback: JSON files with one message per line. The raw line
+    * rides in a `value` column so [[decode]] is source-agnostic.
+    *
+    * Each trigger admits staged files up to `maxBytesPerTrigger` bytes, so
+    * a backlog of small files drains in ⌈bytes/budget⌉ micro-batches (one
+    * planned job, one state-store version and one partitioned write each)
+    * rather than one per file, while a cold backlog stays memory-bounded.
+    * Spark always admits at least one file, so a file larger than the
+    * budget runs alone instead of stalling the stream.
+    */
+  def fileSource(path: String,
+      maxBytesPerTrigger: Long = DefaultMaxBytesPerTrigger): SourceConfig =
     // the text source's fixed schema is exactly (value STRING) — no
     // explicit schema needed (and the source rejects one)
     SourceConfig("text", Map(
       "path" -> path,
-      "maxFilesPerTrigger" -> maxFilesPerTrigger.toString), None)
+      "maxBytesPerTrigger" -> maxBytesPerTrigger.toString), None)
 
   /** Materialize a config into a streaming DataFrame. */
   def openSource(spark: SparkSession, cfg: SourceConfig): DataFrame = {

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -534,6 +536,107 @@ class StreamingSpec extends SparkSpec {
     q.awaitTermination(60000)
     assert(spark.sql("select ticker from filesrc").as[String].collect().sorted.toSeq ==
       Seq("AAPL", "TSLA"))
+  }
+
+  /** Writes one JSON-lines message file `name` into `dir`. */
+  private def stageFile(dir: String, name: String, lines: Seq[String]): Unit = {
+    Files.write(java.nio.file.Paths.get(dir, name), lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    ()
+  }
+
+  /** Drains `cfg` through decode → idempotentSink (AvailableNow) into
+    * `out` on checkpoint `ckpt`; returns the micro-batches that had input
+    * and the jobs the query ran. A sentinel job in its own group flushes
+    * the listener bus before the jobs are counted.
+    */
+  private def drain(cfg: MicroBatch.SourceConfig, out: String, ckpt: String): (Int, Int) = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = "graft.test.sentinel"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => if (g == sentinel) flushed.countDown() else groups.add(g))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val q = MicroBatch.idempotentSink(
+        MicroBatch.decode(MicroBatch.openSource(spark, cfg)), out, ckpt)
+      q.awaitTermination(60000)
+      q.exception.foreach(e => throw e)
+      sc.setJobGroup(sentinel, "flush listener bus")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      val runId = q.runId.toString
+      (q.recentProgress.count(_.numInputRows > 0), groups.asScala.count(_ == runId))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def esIds(out: String): Seq[String] =
+    spark.read.parquet(out).select("es_id").as[String].collect().sorted.toSeq
+
+  /** Four files of three messages each (one redelivered within its own
+    * file), then a later fifth file redelivering a key of the first.
+    */
+  private val backlog: Seq[Seq[String]] = (0 until 4).map { f =>
+    val d = f"2024-01-${f + 1}%02d"
+    Seq(msg("AAPL", d, 10.0 + f), msg("MSFT", d, 20.0 + f), msg("AAPL", d, 10.0 + f))
+  }
+  private val lateFile = Seq(msg("MSFT", "2024-01-01", 20.0), msg("TSLA", "2024-01-05", 30.0))
+  private val backlogKeys =
+    ((1 to 4).flatMap(d => Seq(f"AAPL_2024-01-$d%02d", f"MSFT_2024-01-$d%02d")) :+ "TSLA_2024-01-05").sorted
+
+  /** Stages [[backlog]], drains it, stages [[lateFile]] and drains again,
+    * all through `cfg`; returns (batches with input, jobs) per drain and
+    * the sink's es_ids.
+    */
+  private def backlogDrains(cfg: String => MicroBatch.SourceConfig): (Seq[(Int, Int)], Seq[String]) = {
+    val dir = Files.createTempDirectory("graft_backlog_src").toString
+    val out = Files.createTempDirectory("graft_backlog_out").toString + "/sink"
+    val ckpt = Files.createTempDirectory("graft_backlog_ckpt").toString
+    backlog.zipWithIndex.foreach { case (lines, i) => stageFile(dir, s"m$i.json", lines) }
+    val first = drain(cfg(dir), out, ckpt)
+    stageFile(dir, "m4.json", lateFile)
+    val second = drain(cfg(dir), out, ckpt)
+    (Seq(first, second), esIds(out))
+  }
+
+  test("file source drains a backlog of small files in ONE micro-batch and one job") {
+    val (drains, ids) = backlogDrains(MicroBatch.fileSource(_))
+    assert(drains == Seq((1, 1), (1, 1)),
+      s"(batches with input, jobs) per drain: $drains")
+    assert(ids == backlogKeys, s"redelivery across drains must collapse: $ids")
+  }
+
+  test("a byte budget below one file admits one file per batch and never stalls") {
+    val (drains, ids) = backlogDrains(MicroBatch.fileSource(_, maxBytesPerTrigger = 1L))
+    assert(drains.map(_._1) == Seq(4, 1), s"batches with input per drain: $drains")
+    assert(ids == backlogKeys, s"every row once, no duplicate: $ids")
+  }
+
+  test("a checkpoint started one file per trigger resumes under the byte budget") {
+    val dir = Files.createTempDirectory("graft_resume_src").toString
+    val out = Files.createTempDirectory("graft_resume_out").toString + "/sink"
+    val ckpt = Files.createTempDirectory("graft_resume_ckpt").toString
+    backlog.take(2).zipWithIndex.foreach { case (lines, i) => stageFile(dir, s"m$i.json", lines) }
+    val perFile = MicroBatch.SourceConfig("text", Map("path" -> dir, "maxFilesPerTrigger" -> "1"), None)
+    assert(drain(perFile, out, ckpt)._1 == 2)
+    // two more files; the later one redelivers a key of the first drain
+    stageFile(dir, "m2.json", backlog(2))
+    stageFile(dir, "m3.json", backlog(3) ++ lateFile)
+    assert(drain(MicroBatch.fileSource(dir), out, ckpt)._1 == 1,
+      "the resumed drain must admit both new files in one batch")
+    assert(esIds(out) == backlogKeys, s"every key exactly once: ${esIds(out)}")
+  }
+
+  test("stream state partitions: a failed size probe falls back to parallelism, not 1") {
+    def parts(bytes: => Long): Int = QueriesMeta.streamStatePartitions("events", 8)(bytes)
+    assert(parts(throw new java.io.FileNotFoundException("events.parquet")) == 8)
+    assert(parts(0L) == 1)
+    assert(parts(300L * 1024) == 2)
+    assert(parts(2L * 1024 * 1024) == 8)
+    assert(parts(1L << 40) == 8)
   }
 
   test("S10 csv symbols source with fallback") {
