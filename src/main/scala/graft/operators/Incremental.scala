@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,11 +12,16 @@ import org.apache.spark.sql.types._
   * orchestration semantic (`etl_job.py:99-120,159-198,489-513`; SURVEY §2.8):
   *
   *  - a per-symbol high watermark = max(timestamp) of the last processed
-  *    batch, persisted in a small state table;
+  *    batch, persisted in a small state table. Like the reference's
+  *    `etl_watermarks` table, a run reads it once (one row per symbol,
+  *    collected to the driver) and upserts it once at the end;
   *  - each run keeps only rows with timestamp > watermark, computes
-  *    indicators, appends, advances the watermark. The watermark filter
-  *    compares against a column joined from the state table, so it cannot
-  *    push into the source scan: every run reads its whole input once.
+  *    indicators, appends, advances the watermark. The watermarks enter
+  *    the plan as a map literal captured when the plan is built
+  *    (`element_at(map, symbol)`: no join, no broadcast). The filter is a
+  *    per-symbol lookup, so it cannot push into the source scan: every run
+  *    reads its whole input once. The lookup scans the map's keys, so its
+  *    per-row cost grows with the symbol count.
   *    `historyBound` sits in the same filter (fresh rows are exempt from
   *    it), so it cannot prune the scan either; it bounds the rows that
   *    reach the exchange and the sort;
@@ -33,9 +41,11 @@ import org.apache.spark.sql.types._
   * then ranks the history tail with running counts over the indicator
   * window itself, so one hash exchange and one sort serve both the tail
   * selection and the indicators. The processed rows are checkpointed once;
-  * the append and the new watermarks (max(timestamp) per symbol over the
-  * checkpointed rows, which are exactly the fresh rows in both modes) both
-  * read the checkpoint, never the input.
+  * the append and the new watermarks both read the checkpoint, never the
+  * input. The new watermarks are max(timestamp) per symbol over the
+  * checkpointed rows (exactly the fresh rows in both modes): one partial
+  * max per partition, merged on the driver with the state already there,
+  * so no exchange and no second read of the state.
   */
 object Incremental {
 
@@ -45,37 +55,86 @@ object Incremental {
 
   val maxFrame = 200 // longest ROWS frame in the indicator set (SMA-200)
 
-  private val wmSchema = StructType(Seq(
+  /** `tsType` types `last_processed_timestamp` like the input's `timestamp`
+    * (TIMESTAMP or TIMESTAMP_NTZ).
+    */
+  private def wmSchema(tsType: DataType) = StructType(Seq(
     StructField("symbol", StringType, nullable = false),
-    StructField("last_processed_timestamp", TimestampType),
+    StructField("last_processed_timestamp", tsType),
     StructField("updated_at", TimestampType)))
 
-  /** Read the watermark state table (empty frame when absent). */
-  def readWatermarks(spark: SparkSession, stateDir: String): DataFrame = {
+  /** Read the watermark state table: the state dir, else the `_bak` copy a
+    * crash mid-swap leaves, else an empty frame. The schema is given, so the
+    * read runs no schema-inference job; `tsType` is the input's `timestamp`
+    * type.
+    */
+  def readWatermarks(spark: SparkSession, stateDir: String,
+      tsType: DataType = TimestampType): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def nonEmpty(dir: String) = {
       val p = new org.apache.hadoop.fs.Path(dir)
       fs.exists(p) && fs.listStatus(p).nonEmpty
     }
-    if (nonEmpty(stateDir)) spark.read.parquet(stateDir)
-    else if (nonEmpty(stateDir + "_bak")) spark.read.parquet(stateDir + "_bak")
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], wmSchema)
+    val schema = wmSchema(tsType)
+    if (nonEmpty(stateDir)) spark.read.schema(schema).parquet(stateDir)
+    else if (nonEmpty(stateDir + "_bak")) spark.read.schema(schema).parquet(stateDir + "_bak")
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 
   /** Upsert new per-symbol watermarks (keep the max per symbol) — the
-    * `etl_watermarks` upsert at `etl_job.py:110-120`.
+    * `etl_watermarks` upsert at `etl_job.py:110-120`. `newWm` is small
+    * (`symbol`, `last_processed_timestamp`) and is collected.
     */
   def advanceWatermarks(spark: SparkSession, stateDir: String, newWm: DataFrame): Unit = {
-    val merged = readWatermarks(spark, stateDir)
-      .unionByName(newWm.withColumn("updated_at", current_timestamp()))
-      .groupBy("symbol")
-      .agg(max("last_processed_timestamp").as("last_processed_timestamp"),
-        max("updated_at").as("updated_at"))
-    // small state table; swap via backup so a crash mid-swap never loses
-    // the watermark table (readWatermarks falls back to the .bak copy)
+    val tsType = newWm.schema("last_processed_timestamp").dataType
+    val maxima = newWm.select("symbol", "last_processed_timestamp").collect().toSeq
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .groupMapReduce(_.getString(0))(r => micros(r.get(1)))(math.max)
+    writeWatermarks(spark, stateDir, tsType,
+      readWatermarks(spark, stateDir, tsType).collect().toSeq, maxima)
+  }
+
+  private def micros(ts: Any): Long = CatalystTypeConverters.convertToCatalyst(ts).asInstanceOf[Long]
+
+  /** Per-symbol max(timestamp) of `df` in epoch micros, nulls ignored: a
+    * partial max per partition, merged on the driver. One job with one
+    * task per partition; a `groupBy` would plan an exchange, since a
+    * checkpointed frame reports no partitioning.
+    */
+  private def maxTimestamps(df: DataFrame): Map[String, Long] =
+    df.select("symbol", "timestamp").queryExecution.toRdd.mapPartitions { rows =>
+      val partial = mutable.HashMap.empty[String, Long]
+      for (r <- rows if !r.isNullAt(0) && !r.isNullAt(1)) {
+        val (s, t) = (r.getUTF8String(0).toString, r.getLong(1))
+        if (partial.get(s).forall(_ < t)) partial(s) = t
+      }
+      Iterator.single(partial.toMap)
+    }.collect().toSeq.flatten.groupMapReduce(_._1)(_._2)(math.max)
+
+  /** Merge `maxima` into the collected `state` rows and write the result
+    * when it changed. A symbol whose watermark rises (or is new) gets
+    * `updated_at` = now; every other row is kept as it was.
+    */
+  private def writeWatermarks(spark: SparkSession, stateDir: String, tsType: DataType,
+      state: Seq[Row], maxima: Map[String, Long]): Unit = {
+    val old = state.map(r => r.getString(0) -> r).toMap
+    val now = java.time.Instant.now()
+    val raised = maxima.collect {
+      case (s, t) if old.get(s).forall(r => r.isNullAt(1) || micros(r.get(1)) < t) =>
+        s -> Row(s, CatalystTypeConverters.convertToScala(t, tsType), now)
+    }
+    if (raised.nonEmpty) swapIn(spark, stateDir,
+      spark.createDataFrame((old ++ raised).values.toSeq.asJava, wmSchema(tsType)))
+  }
+
+  /** Write the small state table via `_tmp` and swap it in via a backup,
+    * so a crash mid-swap never loses the watermark table (readWatermarks
+    * falls back to the `_bak` copy). One job, one task, one file.
+    */
+  private def swapIn(spark: SparkSession, stateDir: String, table: DataFrame): Unit = {
     val tmp = stateDir + "_tmp"
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+    table.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     val conf = spark.sparkContext.hadoopConfiguration
     val state = new org.apache.hadoop.fs.Path(stateDir)
     val bak = new org.apache.hadoop.fs.Path(stateDir + "_bak")
@@ -117,14 +176,16 @@ object Incremental {
   def runIncremental(spark: SparkSession, input: DataFrame, stateDir: String,
       outDir: String, mode: BoundaryMode, orderCols: Seq[String],
       historyBound: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val processed = process(input, readWatermarks(spark, stateDir), mode, orderCols, historyBound)
+    val tsType = input.schema("timestamp").dataType
+    require(tsType == TimestampType || tsType == TimestampNTZType,
+      s"runIncremental needs a TIMESTAMP or TIMESTAMP_NTZ `timestamp` column, got $tsType")
+    val state = readWatermarks(spark, stateDir, tsType).collect().toSeq
+    val processed = process(input, state, mode, orderCols, historyBound)
 
-    // Materialize before advancing the watermark: the plan reads the state
-    // table, which is rewritten below — a lazily returned frame would
-    // otherwise silently re-filter against the NEW watermark.
-    // localCheckpoint truncates the lineage (no re-eval hazard); the
-    // append and the watermark aggregate below read its blocks, not the
-    // input.
+    // Materialize once: the append, the new watermarks and the caller all
+    // read the processed rows, and each would otherwise re-run the scan,
+    // exchange and sort. localCheckpoint truncates the lineage, so the
+    // caller's frame never re-evaluates against a later watermark.
     val keyed = processed.withColumn("symbol_date_key",
       Clean.compositeKey(col("symbol"), col("trading_date"))).localCheckpoint(true)
     // At-least-once, like the reference's Mongo append (etl_job.py:389-394):
@@ -134,25 +195,22 @@ object Incremental {
     keyed.write.mode(SaveMode.Append).partitionBy("symbol").parquet(outDir)
 
     // keyed holds exactly the fresh rows, so its per-symbol max is the new
-    // watermark. One small collect replaces an emptiness probe plus a
-    // re-scan of the input; the rows go back into a frame with the
-    // aggregate's own schema so a TIMESTAMP_NTZ input keeps NTZ state.
-    val newWm = keyed.groupBy("symbol").agg(max("timestamp").as("last_processed_timestamp"))
-    val wmRows = newWm.collect()
-    if (wmRows.nonEmpty)
-      advanceWatermarks(spark, stateDir,
-        spark.createDataFrame(java.util.Arrays.asList(wmRows: _*), newWm.schema))
+    // watermark; it merges with the state collected above.
+    writeWatermarks(spark, stateDir, tsType, state, maxTimestamps(keyed))
     keyed
   }
 
-  /** The rows one run processes, with indicators, given the watermark
-    * state `wmState` (a `readWatermarks` frame). Lazy: one scan of
-    * `input`, and for OverlapReload one hash exchange on `symbol`.
+  /** The rows one run processes, with indicators, given the collected
+    * watermark `state` (`readWatermarks` rows). Lazy: one scan of `input`,
+    * and for OverlapReload one hash exchange on `symbol`. The watermarks
+    * are a literal of the plan, fixed when it is built.
     */
-  private[graft] def process(input: DataFrame, wmState: DataFrame, mode: BoundaryMode,
+  private[graft] def process(input: DataFrame, state: Seq[Row], mode: BoundaryMode,
       orderCols: Seq[String], historyBound: Option[org.apache.spark.sql.Column]): DataFrame = {
-    val wm = wmState.select(col("symbol"), col("last_processed_timestamp").as("_wm"))
-    val withWm = input.join(broadcast(wm), Seq("symbol"), "left")
+    // the cast types the map when the state is empty; a missing key is null
+    val wmMap = map(state.flatMap(r => Seq(lit(r.getString(0)), lit(r.get(1)))): _*)
+      .cast(MapType(StringType, input.schema("timestamp").dataType))
+    val withWm = input.withColumn("_wm", element_at(wmMap, col("symbol")))
     val isFresh = col("_wm").isNull || col("timestamp") > col("_wm")
 
     // orderCols must be a TOTAL order within each symbol or window results

@@ -2558,6 +2558,14 @@ object ScaleOps {
     * [[connectedComponents]]; on a real cluster you would additionally
     * bucket the edge list by `src` so the per-round join never reshuffles
     * the (static) big side.
+    *
+    * Contract: without `checkpointDir` the returned frame is LAZY. The
+    * lineage is cut every `UnrollBatch` rounds but not after the last
+    * round, so the frame carries up to `UnrollBatch`−1 unrolled rounds,
+    * and every action on it re-executes them. A caller taking more than
+    * one action should checkpoint (or persist) it first. With
+    * `checkpointDir` the frame reads the last round's parquet back and
+    * carries no round lineage.
     */
   def pageRankFixedPoint(nodes: DataFrame, edges: DataFrame,
       nodeCol: String = "node", srcCol: String = "src",

@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampNTZType
 import graft.operators.{Incremental, Indicators}
 
 class IncrementalSpec extends SparkSpec {
@@ -47,22 +48,26 @@ class IncrementalSpec extends SparkSpec {
 
   private def tsOf(day: Int) = lit(s"${day0.plusDays(day)} 00:00:00").cast("timestamp")
 
-  /** Input records read by every job `body` starts: the tasks of jobs
-    * carrying a local property set on this thread (inherited by the
-    * broadcast and stage threads). A tagged sentinel job flushes the
-    * listener bus before the total is read.
+  /** Jobs started by `body` and the input records their tasks read. */
+  private case class Work(jobs: Int, records: Long)
+
+  /** The jobs carrying a local property set on this thread (inherited by
+    * the broadcast and stage threads) and their tasks' input records. A
+    * tagged sentinel job flushes the listener bus before the totals are
+    * read.
     */
-  private def recordsRead(body: => Unit): Long = {
+  private def work(body: => Unit): Work = {
     val sc = spark.sparkContext
-    val tag = "graft.test.recordsRead"
+    val tag = "graft.test.work"
     val read = new AtomicLong
     val stages = ConcurrentHashMap.newKeySet[Int]()
+    val bodyJobs = ConcurrentHashMap.newKeySet[Int]()
     val sentinelJobs = ConcurrentHashMap.newKeySet[Int]()
     val flushed = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
-          case Some("body") => e.stageIds.foreach(stages.add)
+          case Some("body") => bodyJobs.add(e.jobId); e.stageIds.foreach(stages.add)
           case Some("sentinel") => sentinelJobs.add(e.jobId)
           case _ =>
         }
@@ -78,11 +83,22 @@ class IncrementalSpec extends SparkSpec {
       try body finally sc.setLocalProperty(tag, "sentinel")
       sc.parallelize(Seq(1), 1).count()
       assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      read.get
+      Work(bodyJobs.size, read.get)
     } finally {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Parquet input of two symbols × 300 days whose first 280 days are
+    * already processed: (input, state dir, output dir).
+    */
+  private def bootedIncrement(): (DataFrame, String, String) = {
+    val input = asParquet(series(Seq("A", "B"), 0 until 300))
+    val (st, out) = (tmp() + "/wm", tmp() + "/out")
+    Incremental.runIncremental(spark, input.filter(col("trading_date") < lit(day0.plusDays(280).toString)),
+      st, out, Incremental.OverlapReload, specOrd).unpersist()
+    (input, st, out)
   }
 
   test("two-batch overlap-reload run equals single-batch run") {
@@ -159,22 +175,64 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("an increment scans its input once: the append and watermarks read the checkpoint") {
-    val input = asParquet(series(Seq("A", "B"), 0 until 300))
-    val (st, out) = (tmp() + "/wm", tmp() + "/out")
-    Incremental.runIncremental(spark, input.filter(col("trading_date") < lit(day0.plusDays(280).toString)),
-      st, out, Incremental.OverlapReload, specOrd).unpersist()
+    val (input, st, out) = bootedIncrement()
     var inc: DataFrame = null
-    val read = recordsRead {
+    val read = work {
       inc = Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd)
-    }
+    }.records
     val outRows = inc.count()
     inc.unpersist()
     val stateRows = Incremental.readWatermarks(spark, st).count()
     assert(outRows == 40 && stateRows == 2)
-    // one input scan; the state is read for the join and for the merge;
-    // the checkpoint is read by the append and the watermark aggregate
-    val bound = 600 + 2 * stateRows + 2 * outRows
+    // one input scan and one state read; the checkpoint is read by the
+    // append and the watermark partials
+    val bound = 600 + stateRows + 2 * outRows
     assert(read <= bound, s"read $read input records, bound $bound (input 600, state $stateRows, out $outRows)")
+  }
+
+  test("an increment over existing state runs at most 6 jobs") {
+    val (input, st, out) = bootedIncrement()
+    var inc: DataFrame = null
+    val jobs = work {
+      inc = Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd)
+    }.jobs
+    assert(inc.count() == 40)
+    inc.unpersist()
+    // state read, checkpoint (shuffle map stage + result), append,
+    // watermark partials, state write
+    assert(jobs <= 6, s"runIncremental ran $jobs jobs")
+  }
+
+  test("TIMESTAMP_NTZ input keeps NTZ state and skips processed rows") {
+    def ntz(days: Range) = mkInput(days).withColumn("timestamp", col("trading_date").cast("timestamp_ntz"))
+    val (st, out) = (tmp() + "/wm", tmp() + "/out")
+    def stateType = spark.read.parquet(st).schema("last_processed_timestamp").dataType
+    Incremental.runIncremental(spark, ntz(1 to 12), st, out, Incremental.Truncated, specOrd).unpersist()
+    assert(stateType == TimestampNTZType)
+    val second = Incremental.runIncremental(spark, ntz(1 to 20), st, out, Incremental.Truncated, specOrd)
+    val days = second.select("trading_date").collect().map(_.getDate(0).toString).sorted.toSeq
+    second.unpersist()
+    assert(days == (13 to 20).map(i => f"2024-01-$i%02d"))
+    assert(stateType == TimestampNTZType)
+    val wm = spark.read.parquet(st).collect()
+    assert(wm.length == 1 && wm.head.getAs[java.time.LocalDateTime]("last_processed_timestamp") ==
+      java.time.LocalDateTime.parse("2024-01-20T00:00"))
+  }
+
+  test("a crash mid-swap leaves only <state>_bak: the next run resumes from it and promotes it") {
+    val (st, out) = (tmp() + "/wm", tmp() + "/out")
+    Incremental.runIncremental(spark, mkInput(1 to 12), st, out, Incremental.Truncated, specOrd).unpersist()
+    val (state, bak) = (java.nio.file.Paths.get(st), java.nio.file.Paths.get(st + "_bak"))
+    // the swap renamed <state> to <state>_bak, then died before the promote
+    Files.move(state, bak)
+    val second = Incremental.runIncremental(spark, mkInput(1 to 20), st, out, Incremental.Truncated, specOrd)
+    assert(second.count() == 8)
+    second.unpersist()
+    val keys = spark.read.parquet(out).select("symbol_date_key").collect().map(_.getString(0))
+    assert(keys.length == 20 && keys.distinct.length == 20, "a processed row was written twice")
+    assert(Files.isDirectory(state) && !Files.exists(bak), "<state> not promoted or _bak left behind")
+    val wm = Incremental.readWatermarks(spark, st).collect()
+    assert(wm.length == 1 && wm.head.getAs[java.sql.Timestamp]("last_processed_timestamp").toString.startsWith("2024-01-20"))
   }
 
   test("historyBound keeping >= maxFrame-1 rows per symbol leaves every indicator unchanged") {

@@ -1133,7 +1133,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import spark.implicits._
     import graft.operators.Incremental
     val dir = java.nio.file.Files.createTempDirectory("graft_plan_inc").toString
@@ -1151,15 +1151,20 @@ class PlanSpec extends SparkSpec {
       .unpersist()
     // the two-relation input of a daily increment (history ∪ landed day)
     val input = raw.unionByName(spark.read.parquet(s"$dir/landing"))
-    val p = physical(Incremental.process(input, Incremental.readWatermarks(spark, s"$dir/wm"),
+    val state = Incremental.readWatermarks(spark, s"$dir/wm").collect().toSeq
+    assert(state.size == 2)
+    val p = physical(Incremental.process(input, state,
       Incremental.OverlapReload, order, Some(col("timestamp") >= lit("2023-03-01").cast("timestamp"))))
 
     val hashed = collectAll(p) { case e: ShuffleExchangeExec => e.outputPartitioning }
       .collect { case h: HashPartitioning => h }
     assert(hashed.size == 1, s"expected one hash exchange, got ${hashed.size}:\n$p")
     assert(hashed.head.expressions.map(_.references.map(_.name).mkString) == Seq("symbol"))
-    // history, landing and the watermark state: each scanned exactly once
+    // the watermarks are a literal of the plan: no broadcast, no state scan
+    assert(collectAll(p) { case b: BroadcastExchangeExec => b }.isEmpty, s"broadcast in plan:\n$p")
+    // history and landing: each scanned exactly once
     val scans = collectAll(p) { case s: FileSourceScanExec => s.relation.location.rootPaths.mkString }
-    assert(scans.size == 3 && scans.distinct.size == 3, s"scans: ${scans.mkString(", ")}")
+    assert(scans.size == 2 && scans.distinct.size == 2, s"scans: ${scans.mkString(", ")}")
+    assert(!scans.exists(_.contains("/wm")), s"state scanned: ${scans.mkString(", ")}")
   }
 }
