@@ -1,12 +1,17 @@
 package graft.operators
 
-import scala.collection.mutable
+import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Incremental (watermark-bounded) batch processing — the reference's core
   * orchestration semantic (`etl_job.py:99-120,159-198,489-513`; SURVEY §2.8):
@@ -40,12 +45,13 @@ import org.apache.spark.sql.types._
   * OverlapReload keeps fresh rows and bounded history rows in one filter,
   * then ranks the history tail with running counts over the indicator
   * window itself, so one hash exchange and one sort serve both the tail
-  * selection and the indicators. The processed rows are checkpointed once;
-  * the append and the new watermarks both read the checkpoint, never the
-  * input. The new watermarks are max(timestamp) per symbol over the
-  * checkpointed rows (exactly the fresh rows in both modes): one partial
-  * max per partition, merged on the driver with the state already there,
-  * so no exchange and no second read of the state.
+  * selection and the indicators. The processed rows are checkpointed
+  * lazily: the append's job fills the checkpoint as it writes, and no job
+  * reads the checkpoint back. The same job carries the new watermarks as
+  * an observed metric (`Dataset.observe`): max(timestamp) per symbol over
+  * the appended rows (exactly the fresh rows in both modes), merged on the
+  * driver with the state already there, so no exchange, no extra job and
+  * no second read of the state.
   */
 object Incremental {
 
@@ -97,20 +103,81 @@ object Incremental {
 
   private def micros(ts: Any): Long = CatalystTypeConverters.convertToCatalyst(ts).asInstanceOf[Long]
 
-  /** Per-symbol max(timestamp) of `df` in epoch micros, nulls ignored: a
-    * partial max per partition, merged on the driver. One job with one
-    * task per partition; a `groupBy` would plan an exchange, since a
-    * checkpointed frame reports no partitioning.
+  /** Per-symbol max of `timestamp` in epoch micros, nulls ignored. The
+    * timestamp decodes to an `Instant` (TIMESTAMP) or a `LocalDateTime`
+    * (TIMESTAMP_NTZ), whose micros do not depend on the session time zone.
+    * `max` is idempotent, so a retried task cannot change the result.
     */
-  private def maxTimestamps(df: DataFrame): Map[String, Long] =
-    df.select("symbol", "timestamp").queryExecution.toRdd.mapPartitions { rows =>
-      val partial = mutable.HashMap.empty[String, Long]
-      for (r <- rows if !r.isNullAt(0) && !r.isNullAt(1)) {
-        val (s, t) = (r.getUTF8String(0).toString, r.getLong(1))
-        if (partial.get(s).forall(_ < t)) partial(s) = t
-      }
-      Iterator.single(partial.toMap)
-    }.collect().toSeq.flatten.groupMapReduce(_._1)(_._2)(math.max)
+  private final class MaxMicros[T] extends Aggregator[(String, T), Map[String, Long], Map[String, Long]] {
+    private def raise(m: Map[String, Long], s: String, t: Long) = if (m.get(s).forall(_ < t)) m.updated(s, t) else m
+    def zero: Map[String, Long] = Map.empty
+    def reduce(m: Map[String, Long], in: (String, T)): Map[String, Long] =
+      if (in._1 == null || in._2 == null) m else raise(m, in._1, micros(in._2))
+    def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
+      b.foldLeft(a) { case (m, (s, t)) => raise(m, s, t) }
+    def finish(m: Map[String, Long]): Map[String, Long] = m
+    def bufferEncoder: Encoder[Map[String, Long]] = ExpressionEncoder[Map[String, Long]]()
+    def outputEncoder: Encoder[Map[String, Long]] = ExpressionEncoder[Map[String, Long]]()
+  }
+
+  private val MaxTsMetric = "max_ts"
+
+  /** [[MaxMicros]] over (`symbol`, `timestamp`) of type `tsType`. */
+  private def maxMicros(tsType: DataType): Column = {
+    def over[T](ts: Encoder[T]) = udaf(new MaxMicros[T], Encoders.tuple(Encoders.STRING, ts))
+    val agg = if (tsType == TimestampNTZType) over(Encoders.LOCALDATETIME) else over(Encoders.INSTANT)
+    agg(col("symbol"), col("timestamp")).as(MaxTsMetric)
+  }
+
+  /** The observed per-symbol maxima, awaited at most `timeout`. A timeout, a
+    * failure or a missing metric throws and leaves the state untouched: an
+    * empty map in their place would keep the watermarks where they are, so
+    * the next run would append the same increment again.
+    */
+  private[graft] def observedMaxima(metrics: Future[Row], timeout: FiniteDuration,
+      stateDir: String): Map[String, Long] = {
+    def missing(why: String, cause: Throwable = null) = new IllegalStateException(
+      s"watermark metrics for $stateDir $why; the increment was appended, the state is unchanged", cause)
+    val row = try Await.result(metrics, timeout) catch {
+      case NonFatal(e) => throw missing(s"were not observed within $timeout", e)
+    }
+    val i = Option(row).flatMap(r => Option(r.schema)).map(_.fieldNames.indexOf(MaxTsMetric)).getOrElse(-1)
+    if (i < 0 || row.isNullAt(i)) throw missing(s"lack `$MaxTsMetric`")
+    row.getMap[String, Long](i).toMap
+  }
+
+  /** How long a run waits for the append's observed watermarks. */
+  private val ObservationTimeout = 60.seconds
+
+  /** Append `keyed` to `outDir` and return the per-symbol maxima its write
+    * job observed (see [[observedMaxima]]). The metric is named per call
+    * and taken from the write's `QueryExecution` by a listener scoped to
+    * this call, not through an `Observation`: in Spark 4.1 an
+    * `Observation` initializes a non-serializable field of the session, so
+    * every later task closure that captures the session (a Spark ML model
+    * carrying its training summary, for one) fails to serialize.
+    */
+  private def appendObserved(keyed: DataFrame, tsType: DataType, outDir: String,
+      stateDir: String): Map[String, Long] = {
+    val name = s"watermarks_${java.util.UUID.randomUUID()}"
+    val metrics = Promise[Row]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.observedMetrics.get(name).foreach(metrics.trySuccess)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val listeners = keyed.sparkSession.listenerManager
+    listeners.register(listener)
+    try {
+      // At-least-once, like the reference's Mongo append
+      // (etl_job.py:389-394): a crash between this append and the
+      // watermark advance duplicates the increment on retry;
+      // symbol_date_key lets downstream consumers dedup (the reference's
+      // ES-upsert semantics).
+      keyed.observe(name, maxMicros(tsType)).write.mode(SaveMode.Append).partitionBy("symbol").parquet(outDir)
+      observedMaxima(metrics.future, ObservationTimeout, stateDir)
+    } finally listeners.unregister(listener)
+  }
 
   /** Merge `maxima` into the collected `state` rows and write the result
     * when it changed. A symbol whose watermark rises (or is new) gets
@@ -182,21 +249,19 @@ object Incremental {
     val state = readWatermarks(spark, stateDir, tsType).collect().toSeq
     val processed = process(input, state, mode, orderCols, historyBound)
 
-    // Materialize once: the append, the new watermarks and the caller all
-    // read the processed rows, and each would otherwise re-run the scan,
-    // exchange and sort. localCheckpoint truncates the lineage, so the
-    // caller's frame never re-evaluates against a later watermark.
+    // Materialize once: the append and the caller both read the processed
+    // rows, and each would otherwise re-run the scan, exchange and sort.
+    // The checkpoint is lazy: building it runs the shuffle-map stages, and
+    // the append's job computes the result stage and fills the checkpoint
+    // as it writes, so no job reads it back. localCheckpoint truncates the
+    // lineage, so the caller's frame never re-evaluates against a later
+    // watermark.
     val keyed = processed.withColumn("symbol_date_key",
-      Clean.compositeKey(col("symbol"), col("trading_date"))).localCheckpoint(true)
-    // At-least-once, like the reference's Mongo append (etl_job.py:389-394):
-    // a crash between this append and the watermark advance duplicates the
-    // increment on retry; symbol_date_key lets downstream consumers dedup
-    // (the reference's ES-upsert semantics).
-    keyed.write.mode(SaveMode.Append).partitionBy("symbol").parquet(outDir)
-
+      Clean.compositeKey(col("symbol"), col("trading_date"))).localCheckpoint(false)
     // keyed holds exactly the fresh rows, so its per-symbol max is the new
-    // watermark; it merges with the state collected above.
-    writeWatermarks(spark, stateDir, tsType, state, maxTimestamps(keyed))
+    // watermark: the append observes it in the same job, and it merges
+    // with the state collected above.
+    writeWatermarks(spark, stateDir, tsType, state, appendObserved(keyed, tsType, outDir, stateDir))
     keyed
   }
 

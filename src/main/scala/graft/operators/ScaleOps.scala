@@ -251,6 +251,9 @@ object ScaleOps {
     *
     * Input: `(pid LONG, dh LONG)`; output: `(pid, rep)` for every
     * non-representative frame, `rep` = min pid of its merged cluster.
+    * The result is an eager local checkpoint: its blocks are held on the
+    * executors until released, and the caller owns them and should
+    * `unpersist()` it when done.
     */
   def dhashHammingClusters(frames: DataFrame, maxHamming: Int = 4): DataFrame = {
     // byHash is the SMALL post-collapse table (one row per distinct

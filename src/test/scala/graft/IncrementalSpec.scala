@@ -3,10 +3,14 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
+import scala.concurrent.{Future, Promise}
+import scala.concurrent.duration._
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampNTZType
+import org.apache.spark.sql.types._
 import graft.operators.{Incremental, Indicators}
 
 class IncrementalSpec extends SparkSpec {
@@ -40,8 +44,7 @@ class IncrementalSpec extends SparkSpec {
       .withColumn("timestamp", to_timestamp(col("d")))
       .drop("d")
 
-  private def asParquet(df: DataFrame): DataFrame = {
-    val dir = tmp() + "/in"
+  private def asParquet(df: DataFrame, dir: String = tmp() + "/in"): DataFrame = {
     df.write.parquet(dir)
     spark.read.parquet(dir)
   }
@@ -90,11 +93,11 @@ class IncrementalSpec extends SparkSpec {
     }
   }
 
-  /** Parquet input of two symbols × 300 days whose first 280 days are
-    * already processed: (input, state dir, output dir).
+  /** Parquet input in `inDir` of two symbols × 300 days whose first 280
+    * days are already processed: (input, state dir, output dir).
     */
-  private def bootedIncrement(): (DataFrame, String, String) = {
-    val input = asParquet(series(Seq("A", "B"), 0 until 300))
+  private def bootedIncrement(inDir: String = tmp() + "/in"): (DataFrame, String, String) = {
+    val input = asParquet(series(Seq("A", "B"), 0 until 300), inDir)
     val (st, out) = (tmp() + "/wm", tmp() + "/out")
     Incremental.runIncremental(spark, input.filter(col("trading_date") < lit(day0.plusDays(280).toString)),
       st, out, Incremental.OverlapReload, specOrd).unpersist()
@@ -174,7 +177,7 @@ class IncrementalSpec extends SparkSpec {
     assert(wm.head.getAs[java.sql.Timestamp]("last_processed_timestamp").toString.startsWith("2024-01-10"))
   }
 
-  test("an increment scans its input once: the append and watermarks read the checkpoint") {
+  test("an increment scans its input once and never reads its checkpoint back") {
     val (input, st, out) = bootedIncrement()
     var inc: DataFrame = null
     val read = work {
@@ -184,13 +187,13 @@ class IncrementalSpec extends SparkSpec {
     inc.unpersist()
     val stateRows = Incremental.readWatermarks(spark, st).count()
     assert(outRows == 40 && stateRows == 2)
-    // one input scan and one state read; the checkpoint is read by the
-    // append and the watermark partials
-    val bound = 600 + stateRows + 2 * outRows
-    assert(read <= bound, s"read $read input records, bound $bound (input 600, state $stateRows, out $outRows)")
+    // one input scan and one state read; the append fills the checkpoint
+    // and observes the watermarks, so nothing reads the checkpoint back
+    val bound = 600 + stateRows
+    assert(read <= bound, s"read $read input records, bound $bound (input 600, state $stateRows)")
   }
 
-  test("an increment over existing state runs at most 6 jobs") {
+  test("an increment over existing state runs at most 4 jobs") {
     val (input, st, out) = bootedIncrement()
     var inc: DataFrame = null
     val jobs = work {
@@ -198,9 +201,30 @@ class IncrementalSpec extends SparkSpec {
     }.jobs
     assert(inc.count() == 40)
     inc.unpersist()
-    // state read, checkpoint (shuffle map stage + result), append,
-    // watermark partials, state write
-    assert(jobs <= 6, s"runIncremental ran $jobs jobs")
+    // state read, the checkpoint's shuffle-map stage, the append (which
+    // fills the checkpoint and observes the watermarks), state write
+    assert(jobs <= 4, s"runIncremental ran $jobs jobs")
+  }
+
+  test("the returned increment is checkpointed: its lineage is cut and a later count reads no input") {
+    val inDir = tmp() + "/in"
+    val (input, st, out) = bootedIncrement(inDir)
+    val before = spark.read.parquet(out).count()
+    val inc = Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd)
+    val rdds = inc.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+    assert(rdds.nonEmpty && rdds.forall(_.isCheckpointed), "the append did not fill the checkpoint")
+    val written = spark.read.parquet(out).count() - before
+    // more files land in the input directory: a frame that still carried
+    // its lineage would rescan the directory and see them
+    series(Seq("A", "B", "C"), 300 until 310).write.mode("append").parquet(inDir)
+    assert(inc.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }.isEmpty)
+    var n = 0L
+    val w = work { n = inc.count() }
+    inc.unpersist()
+    // a checkpoint block read counts as input records: the count reads its
+    // own rows, not the 630 input rows a rescan would
+    assert(w.records == n, s"count read ${w.records} input records for $n rows")
+    assert(n == written && written == 40)
   }
 
   test("TIMESTAMP_NTZ input keeps NTZ state and skips processed rows") {
@@ -217,6 +241,74 @@ class IncrementalSpec extends SparkSpec {
     val wm = spark.read.parquet(st).collect()
     assert(wm.length == 1 && wm.head.getAs[java.time.LocalDateTime]("last_processed_timestamp") ==
       java.time.LocalDateTime.parse("2024-01-20T00:00"))
+  }
+
+  test("TIMESTAMP_NTZ watermarks keep their wall time under a non-UTC session time zone") {
+    val key = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(key)
+    // 02:30 on 2024-03-10 does not exist in New York (DST gap): a detour
+    // through the session zone would move it to 03:30
+    val gap = java.time.LocalDateTime.parse("2024-03-10T02:30")
+    def ntz(days: Range) = mkInput(days).withColumn("timestamp", col("trading_date").cast("timestamp_ntz"))
+    val (st, out) = (tmp() + "/wm", tmp() + "/out")
+    spark.conf.set(key, "America/New_York")
+    try {
+      Incremental.runIncremental(spark, ntz(1 to 12), st, out, Incremental.Truncated, specOrd).unpersist()
+      val late = ntz(10 to 10).withColumn("trading_date", lit(gap.toLocalDate)).withColumn("timestamp", lit(gap))
+      val second = Incremental.runIncremental(spark, ntz(1 to 12).unionByName(late), st, out,
+        Incremental.Truncated, specOrd)
+      assert(second.count() == 1)
+      second.unpersist()
+      val wm = spark.read.parquet(st).collect()
+      assert(wm.length == 1 && wm.head.getAs[java.time.LocalDateTime]("last_processed_timestamp") == gap)
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("a rerun with no fresh rows writes no state and runs at most 3 jobs") {
+    val (st, out) = (tmp() + "/wm", tmp() + "/out")
+    Incremental.runIncremental(spark, mkInput(1 to 10), st, out, Incremental.Truncated, specOrd).unpersist()
+    def files = Files.list(java.nio.file.Paths.get(st)).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p)).toMap
+    def state = Incremental.readWatermarks(spark, st).collect().toSeq
+    val (files0, state0) = (files, state)
+    var rerun: DataFrame = null
+    val jobs = work {
+      rerun = Incremental.runIncremental(spark, mkInput(1 to 10), st, out, Incremental.Truncated, specOrd)
+    }.jobs
+    assert(rerun.isEmpty)
+    rerun.unpersist()
+    // state read, the checkpoint's shuffle-map stage, the (empty) append
+    assert(jobs <= 3, s"a rerun ran $jobs jobs")
+    assert(files == files0, "the state directory was rewritten")
+    assert(state == state0, "updated_at or a watermark changed")
+  }
+
+  test("an increment leaves the session serializable (tasks that capture it still ship)") {
+    val (st, out) = (tmp() + "/wm", tmp() + "/out")
+    Incremental.runIncremental(spark, mkInput(1 to 10), st, out, Incremental.Truncated, specOrd).unpersist()
+    // Spark ML models keep their training summary, which holds the session,
+    // and their transform closures capture the model
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream).writeObject(spark)
+  }
+
+  test("missing watermark metrics fail the run loudly instead of standing in as an empty map") {
+    val st = "/state/of/this/table"
+    val timedOut = intercept[IllegalStateException] {
+      Incremental.observedMaxima(Promise[Row]().future, 50.millis, st)
+    }
+    assert(timedOut.getMessage.contains(st))
+    val failed = intercept[IllegalStateException] {
+      Incremental.observedMaxima(Future.failed(new RuntimeException("boom")), 1.second, st)
+    }
+    assert(failed.getMessage.contains(st))
+    val other = new GenericRowWithSchema(Array(1L), StructType(Seq(StructField("rows", LongType))))
+    Seq(Row.empty, other).foreach { row =>
+      val e = intercept[IllegalStateException](Incremental.observedMaxima(Future.successful(row), 1.second, st))
+      assert(e.getMessage.contains(st))
+    }
+    val present = new GenericRowWithSchema(Array(Map("A" -> 5L)),
+      StructType(Seq(StructField("max_ts", MapType(StringType, LongType)))))
+    assert(Incremental.observedMaxima(Future.successful(present), 1.second, st) == Map("A" -> 5L))
   }
 
   test("a crash mid-swap leaves only <state>_bak: the next run resumes from it and promotes it") {
