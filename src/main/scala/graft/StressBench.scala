@@ -181,12 +181,12 @@ object StressBench {
       val incOrd = Seq("trading_date", "l_orderkey", "l_linenumber",
         "l_partkey", "l_suppkey", "close", "volume", "open", "low")
       val incBase = java.nio.file.Files.createTempDirectory("graft_inc_stress").toString
-      import spark.implicits._
       def seedState(name: String): (String, String) = {
+        import graft.operators.Incremental.{micros, writeState, Mark, State}
         val state = s"$incBase/wm_$name"
-        graft.operators.Incremental.advanceWatermarks(spark, state,
-          Seq(("HOT", java.sql.Timestamp.valueOf(cutoff.toLocalDate.atStartOfDay())))
-            .toDF("symbol", "last_processed_timestamp"))
+        val mark = Mark(micros(java.sql.Timestamp.valueOf(cutoff.toLocalDate.atStartOfDay())),
+          micros(java.time.Instant.now()))
+        writeState(spark, state, State(1, org.apache.spark.sql.types.TimestampType, Map("HOT" -> mark), None))
         (state, s"$incBase/out_$name")
       }
       val incModes: Seq[(String, Option[org.apache.spark.sql.Column], graft.operators.Incremental.BoundaryMode)] = Seq(

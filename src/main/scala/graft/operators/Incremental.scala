@@ -4,12 +4,15 @@ import scala.concurrent.{Await, Future, Promise}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.WatermarkLookup
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -17,21 +20,43 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * orchestration semantic (`etl_job.py:99-120,159-198,489-513`; SURVEY §2.8):
   *
   *  - a per-symbol high watermark = max(timestamp) of the last processed
-  *    batch, persisted in a small state table. Like the reference's
-  *    `etl_watermarks` table, a run reads it once (one row per symbol,
-  *    collected to the driver) and upserts it once at the end;
+  *    batch, kept in a small state record. Like the reference's
+  *    `etl_watermarks` table, a run reads it once and upserts it once;
   *  - each run keeps only rows with timestamp > watermark, computes
   *    indicators, appends, advances the watermark. The watermarks enter
-  *    the plan as a map literal captured when the plan is built
-  *    (`element_at(map, symbol)`: no join, no broadcast). The filter is a
-  *    per-symbol lookup, so it cannot push into the source scan: every run
-  *    reads its whole input once. The lookup scans the map's keys, so its
-  *    per-row cost grows with the symbol count.
+  *    the plan as a hashed lookup captured when the plan is built
+  *    ([[WatermarkLookup]]: no join, no broadcast, one hash probe per
+  *    evaluation whatever the symbol count). The filter is a per-symbol
+  *    lookup, so it cannot push into the source scan: every run reads its
+  *    whole input once.
   *    `historyBound` sits in the same filter (fresh rows are exempt from
   *    it), so it cannot prune the scan either; it bounds the rows that
   *    reach the exchange and the sort;
   *  - late rows older than the watermark are silently skipped forever
   *    (documented reference behavior — no event-time lateness).
+  *
+  * Exactly-once. The reference appends, then upserts its watermarks, so a
+  * crash between the two appends the increment again on retry. A run here
+  * is four steps, and the state record is its commit point:
+  *
+  *  1. recover: a run whose record is committed but whose staged files
+  *     are still under `outDir/_staging/<runId>` has its moves finished;
+  *     any other staging directory was never committed and is deleted;
+  *  2. stage: the increment is appended, partitioned by `symbol`, into
+  *     `outDir/_staging/<runId>`. Spark's file index skips `_`-prefixed
+  *     directories, so no reader of `outDir` sees staged files;
+  *  3. commit: the merged watermarks and the `runId` are written as the
+  *     next record version (`_v<n>.tmp`, renamed to `v<n>.json`; readers
+  *     take the highest). A run with nothing staged commits nothing;
+  *  4. publish: each staged file is renamed to the same relative path
+  *     under `outDir`, skipping targets that exist, so a publish can be
+  *     re-run after a crash, and the staging directory is deleted.
+  *
+  * The state I/O runs on the driver with Hadoop FS calls, so it costs no
+  * Spark job. The protocol assumes ONE writer per `stateDir` (and its
+  * `outDir`): two concurrent runs would each discard the other's staging
+  * directory. On HDFS and local disks a rename is a metadata operation; on
+  * object stores it is a copy, so publishing there costs O(staged bytes).
   *
   * Window-boundary semantics (SURVEY §7.4.3): the reference computes
   * indicators over ONLY the new rows, so the first 199 rows of each
@@ -46,10 +71,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * then ranks the history tail with running counts over the indicator
   * window itself, so one hash exchange and one sort serve both the tail
   * selection and the indicators. The processed rows are checkpointed
-  * lazily: the append's job fills the checkpoint as it writes, and no job
-  * reads the checkpoint back. The same job carries the new watermarks as
-  * an observed metric (`Dataset.observe`): max(timestamp) per symbol over
-  * the appended rows (exactly the fresh rows in both modes), merged on the
+  * lazily: the staging append's job fills the checkpoint as it writes, and
+  * no job reads the checkpoint back. The same job carries the new
+  * watermarks as an observed metric: max(timestamp) per symbol over the
+  * appended rows (exactly the fresh rows in both modes), merged on the
   * driver with the state already there, so no exchange, no extra job and
   * no second read of the state.
   */
@@ -69,39 +94,119 @@ object Incremental {
     StructField("last_processed_timestamp", tsType),
     StructField("updated_at", TimestampType)))
 
-  /** Read the watermark state table: the state dir, else the `_bak` copy a
-    * crash mid-swap leaves, else an empty frame. The schema is given, so the
-    * read runs no schema-inference job; `tsType` is the input's `timestamp`
-    * type.
+  /** One symbol's watermark: `last_processed_timestamp` and `updated_at`,
+    * both in epoch micros.
+    */
+  private[graft] final case class Mark(micros: Long, updatedAt: Long)
+
+  /** The committed state: record `v<version>.json` (0 when there is none
+    * yet), the timestamp type its micros encode, the watermarks, and the
+    * `runId` of the last staged append.
+    */
+  private[graft] final case class State(version: Long, tsType: DataType, marks: Map[String, Mark],
+      runId: Option[String]) {
+    def micros: Map[String, Long] = marks.map { case (s, m) => s -> m.micros }
+  }
+
+  private val RecordName = """v(\d+)\.json""".r
+  private val Json = new ObjectMapper()
+
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Data and record files: not the `_`/`.`-prefixed temp and marker files. */
+  private def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+
+  /** The committed state of `stateDir`: its highest `v<n>.json` record, else
+    * the `_bak` copy's. A directory that holds the parquet table earlier
+    * versions wrote (or the `_bak` copy a crash mid-swap left) is read once
+    * through Spark as version 0; the next commit replaces it with a record.
+    * `tsType` types that table and an empty state.
+    */
+  private[graft] def readState(spark: SparkSession, stateDir: String,
+      tsType: DataType = TimestampType): State = {
+    val fs = fsOf(spark, stateDir)
+    def entries(dir: String) = {
+      val p = new Path(dir)
+      if (fs.exists(p)) fs.listStatus(p).map(_.getPath).filter(visible).toSeq else Nil
+    }
+    Seq(stateDir, stateDir + "_bak").map(d => d -> entries(d)).find(_._2.nonEmpty) match {
+      case None => State(0, tsType, Map.empty, None)
+      case Some((dir, files)) =>
+        val records = files.flatMap(p => p.getName match {
+          case RecordName(n) => Some(n.toLong -> p)
+          case _ => None
+        })
+        if (records.nonEmpty) {
+          val (n, p) = records.maxBy(_._1)
+          parseRecord(fs, p, n)
+        } else {
+          val marks = spark.read.schema(wmSchema(tsType)).parquet(dir).collect().toSeq
+            .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+            .map(r => r.getString(0) -> Mark(micros(r.get(1)), if (r.isNullAt(2)) 0L else micros(r.get(2))))
+          State(0, tsType, marks.toMap, None)
+        }
+    }
+  }
+
+  private def parseRecord(fs: FileSystem, file: Path, version: Long): State = {
+    def bad(why: String, cause: Throwable = null) = new IllegalStateException(s"watermark record $file $why", cause)
+    def field(n: JsonNode, name: String): JsonNode =
+      Option(n.get(name)).getOrElse(throw bad(s"lacks `$name`"))
+    val in = fs.open(file)
+    val root = try Json.readTree(in) catch { case NonFatal(e) => throw bad("is unreadable", e) } finally in.close()
+    val tsType = field(root, "timestamp_type").asText match {
+      case "timestamp" => TimestampType
+      case "timestamp_ntz" => TimestampNTZType
+      case t => throw bad(s"has timestamp_type `$t`")
+    }
+    val marks = field(root, "watermarks").properties().asScala.map { e =>
+      e.getKey -> Mark(field(e.getValue, "last_processed_timestamp").asLong,
+        field(e.getValue, "updated_at").asLong)
+    }.toMap
+    State(version, tsType, marks, Option(field(root, "run_id")).filterNot(_.isNull).map(_.asText))
+  }
+
+  /** Write `state` as record `v<state.version>.json` of `stateDir`: a temp
+    * file renamed to a name no record had, so no rename overwrites. Then
+    * everything else in `stateDir` (older records, the parquet table of
+    * earlier versions) and its `_bak`/`_tmp` siblings are deleted.
+    */
+  private[graft] def writeState(spark: SparkSession, stateDir: String, state: State): Unit = {
+    val fs = fsOf(spark, stateDir)
+    val root = Json.createObjectNode()
+    root.put("timestamp_type", state.tsType.typeName)
+    state.runId.fold(root.putNull("run_id"))(root.put("run_id", _))
+    val marks = root.putObject("watermarks")
+    state.marks.toSeq.sortBy(_._1).foreach { case (s, m) =>
+      marks.putObject(s).put("last_processed_timestamp", m.micros).put("updated_at", m.updatedAt)
+    }
+    val tmp = new Path(stateDir, s"_v${state.version}.tmp")
+    val record = new Path(stateDir, s"v${state.version}.json")
+    val out = fs.create(tmp, true)
+    try out.write(Json.writeValueAsBytes(root)) finally out.close()
+    require(!fs.exists(record) && fs.rename(tmp, record), s"watermark record rename failed: $tmp -> $record")
+    fs.listStatus(new Path(stateDir)).map(_.getPath).filter(_.getName != record.getName)
+      .foreach(fs.delete(_, true))
+    Seq("_bak", "_tmp").foreach(s => fs.delete(new Path(stateDir + s), true))
+  }
+
+  /** Read the watermark state as a frame (`symbol`, `last_processed_timestamp`,
+    * `updated_at`). It is a local relation built from the record, so it runs
+    * no job; `last_processed_timestamp` has the record's type, and `tsType`
+    * types only an empty state and a parquet table of earlier versions.
     */
   def readWatermarks(spark: SparkSession, stateDir: String,
       tsType: DataType = TimestampType): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def nonEmpty(dir: String) = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      fs.exists(p) && fs.listStatus(p).nonEmpty
+    val st = readState(spark, stateDir, tsType)
+    val rows = st.marks.toSeq.sortBy(_._1).map { case (s, m) =>
+      Row(s, CatalystTypeConverters.convertToScala(m.micros, st.tsType),
+        CatalystTypeConverters.convertToScala(m.updatedAt, TimestampType))
     }
-    val schema = wmSchema(tsType)
-    if (nonEmpty(stateDir)) spark.read.schema(schema).parquet(stateDir)
-    else if (nonEmpty(stateDir + "_bak")) spark.read.schema(schema).parquet(stateDir + "_bak")
-    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    spark.createDataFrame(rows.asJava, wmSchema(st.tsType))
   }
 
-  /** Upsert new per-symbol watermarks (keep the max per symbol) — the
-    * `etl_watermarks` upsert at `etl_job.py:110-120`. `newWm` is small
-    * (`symbol`, `last_processed_timestamp`) and is collected.
-    */
-  def advanceWatermarks(spark: SparkSession, stateDir: String, newWm: DataFrame): Unit = {
-    val tsType = newWm.schema("last_processed_timestamp").dataType
-    val maxima = newWm.select("symbol", "last_processed_timestamp").collect().toSeq
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .groupMapReduce(_.getString(0))(r => micros(r.get(1)))(math.max)
-    writeWatermarks(spark, stateDir, tsType,
-      readWatermarks(spark, stateDir, tsType).collect().toSeq, maxima)
-  }
-
-  private def micros(ts: Any): Long = CatalystTypeConverters.convertToCatalyst(ts).asInstanceOf[Long]
+  private[graft] def micros(ts: Any): Long = CatalystTypeConverters.convertToCatalyst(ts).asInstanceOf[Long]
 
   /** Per-symbol max of `timestamp` in epoch micros, nulls ignored. The
     * timestamp decodes to an `Instant` (TIMESTAMP) or a `LocalDateTime`
@@ -130,14 +235,14 @@ object Incremental {
   }
 
   /** The observed per-symbol maxima, awaited at most `timeout`. A timeout, a
-    * failure or a missing metric throws and leaves the state untouched: an
-    * empty map in their place would keep the watermarks where they are, so
-    * the next run would append the same increment again.
+    * failure or a missing metric throws before the commit: an empty map in
+    * their place would commit the increment with the watermarks where they
+    * are, so the next run would append the same rows again.
     */
   private[graft] def observedMaxima(metrics: Future[Row], timeout: FiniteDuration,
       stateDir: String): Map[String, Long] = {
     def missing(why: String, cause: Throwable = null) = new IllegalStateException(
-      s"watermark metrics for $stateDir $why; the increment was appended, the state is unchanged", cause)
+      s"watermark metrics for $stateDir $why; the increment was staged, not committed", cause)
     val row = try Await.result(metrics, timeout) catch {
       case NonFatal(e) => throw missing(s"were not observed within $timeout", e)
     }
@@ -149,7 +254,7 @@ object Incremental {
   /** How long a run waits for the append's observed watermarks. */
   private val ObservationTimeout = 60.seconds
 
-  /** Append `keyed` to `outDir` and return the per-symbol maxima its write
+  /** Append `keyed` to `dir` and return the per-symbol maxima its write
     * job observed (see [[observedMaxima]]). The metric is named per call
     * and taken from the write's `QueryExecution` by a listener scoped to
     * this call, not through an `Observation`: in Spark 4.1 an
@@ -157,7 +262,7 @@ object Incremental {
     * every later task closure that captures the session (a Spark ML model
     * carrying its training summary, for one) fails to serialize.
     */
-  private def appendObserved(keyed: DataFrame, tsType: DataType, outDir: String,
+  private def appendObserved(keyed: DataFrame, tsType: DataType, dir: String,
       stateDir: String): Map[String, Long] = {
     val name = s"watermarks_${java.util.UUID.randomUUID()}"
     val metrics = Promise[Row]()
@@ -169,61 +274,108 @@ object Incremental {
     val listeners = keyed.sparkSession.listenerManager
     listeners.register(listener)
     try {
-      // At-least-once, like the reference's Mongo append
-      // (etl_job.py:389-394): a crash between this append and the
-      // watermark advance duplicates the increment on retry;
-      // symbol_date_key lets downstream consumers dedup (the reference's
-      // ES-upsert semantics).
-      keyed.observe(name, maxMicros(tsType)).write.mode(SaveMode.Append).partitionBy("symbol").parquet(outDir)
+      keyed.observe(name, maxMicros(tsType)).write.mode(SaveMode.Append).partitionBy("symbol").parquet(dir)
       observedMaxima(metrics.future, ObservationTimeout, stateDir)
     } finally listeners.unregister(listener)
   }
 
-  /** Merge `maxima` into the collected `state` rows and write the result
-    * when it changed. A symbol whose watermark rises (or is new) gets
-    * `updated_at` = now; every other row is kept as it was.
+  /** A staged run: its id, its checkpointed rows, and the per-symbol
+    * maxima its append observed.
     */
-  private def writeWatermarks(spark: SparkSession, stateDir: String, tsType: DataType,
-      state: Seq[Row], maxima: Map[String, Long]): Unit = {
-    val old = state.map(r => r.getString(0) -> r).toMap
-    val now = java.time.Instant.now()
-    val raised = maxima.collect {
-      case (s, t) if old.get(s).forall(r => r.isNullAt(1) || micros(r.get(1)) < t) =>
-        s -> Row(s, CatalystTypeConverters.convertToScala(t, tsType), now)
+  private[graft] final case class Staged(runId: String, rows: DataFrame, maxima: Map[String, Long])
+
+  private def stagingDir(outDir: String, runId: String) = new Path(new Path(outDir, "_staging"), runId)
+
+  /** Step 1: read the committed state; finish the publish of the run it
+    * names if that run's staging directory is still there, and delete
+    * every other staging directory, whose run never committed.
+    */
+  private[graft] def recover(spark: SparkSession, stateDir: String, outDir: String,
+      tsType: DataType): State = {
+    val state = readState(spark, stateDir, tsType)
+    val fs = fsOf(spark, outDir)
+    val staging = new Path(outDir, "_staging")
+    if (fs.exists(staging)) fs.listStatus(staging).map(_.getPath).foreach { d =>
+      if (state.runId.contains(d.getName)) publish(spark, outDir, d.getName)
+      else fs.delete(d, true)
     }
-    if (raised.nonEmpty) swapIn(spark, stateDir,
-      spark.createDataFrame((old ++ raised).values.toSeq.asJava, wmSchema(tsType)))
+    state
   }
 
-  /** Write the small state table via `_tmp` and swap it in via a backup,
-    * so a crash mid-swap never loses the watermark table (readWatermarks
-    * falls back to the `_bak` copy). One job, one task, one file.
+  /** Step 2: process `input` against `state` and append the rows, with
+    * their `symbol_date_key`, under `outDir/_staging/<runId>`.
     */
-  private def swapIn(spark: SparkSession, stateDir: String, table: DataFrame): Unit = {
-    val tmp = stateDir + "_tmp"
-    table.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val state = new org.apache.hadoop.fs.Path(stateDir)
-    val bak = new org.apache.hadoop.fs.Path(stateDir + "_bak")
-    val fs = state.getFileSystem(conf)
-    // the backup must survive until the new state is promoted: a recovery
-    // run (only _bak present) goes straight to the promote step. Hadoop
-    // rename() reports failure via its return value — treat false as
-    // fatal or the delete below could destroy the only surviving copy.
-    def renameOrDie(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      require(fs.rename(src, dst), s"watermark state rename failed: $src -> $dst")
-    if (fs.exists(state)) {
-      fs.delete(bak, true)
-      renameOrDie(state, bak)
-    }
-    renameOrDie(new org.apache.hadoop.fs.Path(tmp), state)
-    fs.delete(bak, true)
+  private[graft] def stage(input: DataFrame, state: State, mode: BoundaryMode, orderCols: Seq[String],
+      historyBound: Option[Column], outDir: String, stateDir: String): Staged = {
+    // Materialize once: the append and the caller both read the processed
+    // rows, and each would otherwise re-run the scan, exchange and sort.
+    // The checkpoint is lazy: building it runs the shuffle-map stages, and
+    // the append's job computes the result stage and fills the checkpoint
+    // as it writes, so no job reads it back. localCheckpoint truncates the
+    // lineage, so the caller's frame never re-evaluates against a later
+    // watermark.
+    val keyed = process(input, state.micros, mode, orderCols, historyBound)
+      .withColumn("symbol_date_key", Clean.compositeKey(col("symbol"), col("trading_date")))
+      .localCheckpoint(false)
+    val runId = java.util.UUID.randomUUID().toString
+    // keyed holds exactly the fresh rows, so its per-symbol max is the new
+    // watermark: the append observes it in the same job
+    val tsType = input.schema("timestamp").dataType
+    Staged(runId, keyed, appendObserved(keyed, tsType, stagingDir(outDir, runId).toString, stateDir))
   }
 
-  /** One incremental run: filter past watermarks, compute indicators,
-    * append idempotently (dedup key), advance watermarks. Returns the
-    * newly processed frame, locally checkpointed: the caller owns its
-    * blocks and should `unpersist()` it when done.
+  /** Step 3: when the staged run wrote a data file, write the next record:
+    * `state` with the observed maxima merged in and the staged `runId`. A
+    * symbol whose watermark rises (or is new) gets `updated_at` = now. With
+    * nothing staged, nothing is committed and the staging directory is
+    * deleted. Returns whether the run committed.
+    */
+  private[graft] def commit(spark: SparkSession, stateDir: String, outDir: String, state: State,
+      staged: Staged): Boolean = {
+    val fs = fsOf(spark, outDir)
+    val dir = stagingDir(outDir, staged.runId)
+    if (!fs.exists(dir) || !holdsData(fs, dir)) {
+      fs.delete(dir, true)
+      false
+    } else {
+      val now = micros(java.time.Instant.now())
+      val raised = staged.maxima.collect {
+        case (s, t) if state.marks.get(s).forall(_.micros < t) => s -> Mark(t, now)
+      }
+      writeState(spark, stateDir, State(state.version + 1, staged.rows.schema("timestamp").dataType,
+        state.marks ++ raised, Some(staged.runId)))
+      true
+    }
+  }
+
+  // listStatus, not listFiles: the located status of a local file forks a
+  // shell to read its permissions, once per file
+  private def holdsData(fs: FileSystem, dir: Path): Boolean =
+    fs.listStatus(dir).exists(s => if (s.isDirectory) holdsData(fs, s.getPath) else visible(s.getPath))
+
+  /** Step 4: move everything `runId` staged to the same relative path under
+    * `outDir`, then delete the staging directory. Like the job commit of
+    * Hadoop's `FileOutputCommitter`, a directory whose target does not
+    * exist moves in one rename, and one whose target exists is merged
+    * entry by entry. A file whose target exists was moved before a crash
+    * (staged file names are unique per run) and is skipped, so a publish
+    * can be re-run. Targets are built by name under `outDir`, never by
+    * relativizing listed paths against it.
+    */
+  private[graft] def publish(spark: SparkSession, outDir: String, runId: String): Unit = {
+    val fs = fsOf(spark, outDir)
+    def move(src: Path, dst: Path): Unit =
+      if (!fs.exists(dst)) require(fs.rename(src, dst), s"publish rename failed: $src -> $dst")
+      else if (fs.getFileStatus(src).isDirectory)
+        fs.listStatus(src).foreach(c => move(c.getPath, new Path(dst, c.getPath.getName)))
+    val dir = stagingDir(outDir, runId)
+    move(dir, new Path(outDir))
+    fs.delete(dir, true)
+  }
+
+  /** One incremental run: recover, stage, commit, publish (see the object
+    * doc). Returns the newly processed frame, locally checkpointed: the
+    * caller owns its blocks and should `unpersist()` it when done.
     */
   // orderCols has NO default on purpose: it must be a total order on the
   // caller's data (Queries.tieCols for the OHLCV testdata) and no single
@@ -242,40 +394,28 @@ object Incremental {
     */
   def runIncremental(spark: SparkSession, input: DataFrame, stateDir: String,
       outDir: String, mode: BoundaryMode, orderCols: Seq[String],
-      historyBound: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      historyBound: Option[Column] = None): DataFrame = {
     val tsType = input.schema("timestamp").dataType
     require(tsType == TimestampType || tsType == TimestampNTZType,
       s"runIncremental needs a TIMESTAMP or TIMESTAMP_NTZ `timestamp` column, got $tsType")
-    val state = readWatermarks(spark, stateDir, tsType).collect().toSeq
-    val processed = process(input, state, mode, orderCols, historyBound)
-
-    // Materialize once: the append and the caller both read the processed
-    // rows, and each would otherwise re-run the scan, exchange and sort.
-    // The checkpoint is lazy: building it runs the shuffle-map stages, and
-    // the append's job computes the result stage and fills the checkpoint
-    // as it writes, so no job reads it back. localCheckpoint truncates the
-    // lineage, so the caller's frame never re-evaluates against a later
-    // watermark.
-    val keyed = processed.withColumn("symbol_date_key",
-      Clean.compositeKey(col("symbol"), col("trading_date"))).localCheckpoint(false)
-    // keyed holds exactly the fresh rows, so its per-symbol max is the new
-    // watermark: the append observes it in the same job, and it merges
-    // with the state collected above.
-    writeWatermarks(spark, stateDir, tsType, state, appendObserved(keyed, tsType, outDir, stateDir))
-    keyed
+    val state = recover(spark, stateDir, outDir, tsType)
+    require(state.marks.isEmpty || state.tsType == tsType,
+      s"$stateDir holds ${state.tsType.sql} watermarks, the input's `timestamp` is ${tsType.sql}")
+    val staged = stage(input, state, mode, orderCols, historyBound, outDir, stateDir)
+    if (commit(spark, stateDir, outDir, state, staged)) publish(spark, outDir, staged.runId)
+    staged.rows
   }
 
-  /** The rows one run processes, with indicators, given the collected
-    * watermark `state` (`readWatermarks` rows). Lazy: one scan of `input`,
-    * and for OverlapReload one hash exchange on `symbol`. The watermarks
-    * are a literal of the plan, fixed when it is built.
+  /** The rows one run processes, with indicators, given the committed
+    * `watermarks` (epoch micros per symbol). Lazy: one scan of `input`, and
+    * for OverlapReload one hash exchange on `symbol`. The watermarks are a
+    * constant of the plan, fixed when it is built.
     */
-  private[graft] def process(input: DataFrame, state: Seq[Row], mode: BoundaryMode,
-      orderCols: Seq[String], historyBound: Option[org.apache.spark.sql.Column]): DataFrame = {
-    // the cast types the map when the state is empty; a missing key is null
-    val wmMap = map(state.flatMap(r => Seq(lit(r.getString(0)), lit(r.get(1)))): _*)
-      .cast(MapType(StringType, input.schema("timestamp").dataType))
-    val withWm = input.withColumn("_wm", element_at(wmMap, col("symbol")))
+  private[graft] def process(input: DataFrame, watermarks: Map[String, Long], mode: BoundaryMode,
+      orderCols: Seq[String], historyBound: Option[Column]): DataFrame = {
+    // a symbol without a watermark looks up null: all its rows are fresh
+    val withWm = input.withColumn("_wm",
+      WatermarkLookup.column(col("symbol"), watermarks, input.schema("timestamp").dataType))
     val isFresh = col("_wm").isNull || col("timestamp") > col("_wm")
 
     // orderCols must be a TOTAL order within each symbol or window results

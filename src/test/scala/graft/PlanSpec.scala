@@ -1151,7 +1151,7 @@ class PlanSpec extends SparkSpec {
       .unpersist()
     // the two-relation input of a daily increment (history ∪ landed day)
     val input = raw.unionByName(spark.read.parquet(s"$dir/landing"))
-    val state = Incremental.readWatermarks(spark, s"$dir/wm").collect().toSeq
+    val state = Incremental.readState(spark, s"$dir/wm").micros
     assert(state.size == 2)
     val p = physical(Incremental.process(input, state,
       Incremental.OverlapReload, order, Some(col("timestamp") >= lit("2023-03-01").cast("timestamp"))))
