@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -34,7 +34,7 @@ import graft.operators.ScaleOps
   */
 object AnnStress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cpus = GraftSession.cpus
     val n = sys.env.getOrElse("SPARK_GRAFT_ANN_VECS", "1000000").toLong
     val coarseK = sys.env.getOrElse("SPARK_GRAFT_ANN_K", "64").toInt
     val nProbe = sys.env.getOrElse("SPARK_GRAFT_ANN_PROBES", "8").toInt
@@ -43,14 +43,7 @@ object AnnStress {
     val pqm = sys.env.getOrElse("SPARK_GRAFT_ANN_PQM", "8").toInt
     val trainN = sys.env.getOrElse("SPARK_GRAFT_ANN_TRAIN", "100000").toLong
     val dim = 64
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     import spark.implicits._
 
     // clustered corpus: center(label, d) in [-1, 1] plus per-vector

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
 
@@ -18,17 +17,10 @@ import graft.operators.ScaleOps
   */
 object AudioStress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cpus = GraftSession.cpus
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_AUDIO_DOCS", "50000").toLong
     val frames = sys.env.getOrElse("SPARK_GRAFT_AUDIO_FRAMES", "4096").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     val ids = spark.range(0, nDocs).select(col("id"))
     def stats(payload: org.apache.spark.sql.Column) =
       ScaleOps.pcmChannelStats(ScaleOps.pcmDecode(payload)).as("s")

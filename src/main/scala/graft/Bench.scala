@@ -1,22 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     // JVM/codegen warm-up outside the timed loop so the first query isn't
     // charged for classloading + whole-stage-codegen compilation
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // warm timings: run each query REPS times, report the fastest — the
     // first execution pays per-query whole-stage-codegen compilation,
     // which is amortized noise on any long-lived cluster
@@ -52,7 +45,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       def once(): Double = {
         val t0 = System.nanoTime()
-        spark.range(0, 8000, 1, cpus.toInt)
+        spark.range(0, 8000, 1, cpus)
           .select(operators.ScaleOps.imageDecode(
             operators.ScaleOps.synthPng(lit(64), lit(64), col("id"), 3))
             .getField("width").as("w"))
@@ -77,7 +70,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       def once(): Double = {
         val t0 = System.nanoTime()
-        spark.range(0, 4L * 1000 * 1000, 1, cpus.toInt)
+        spark.range(0, 4L * 1000 * 1000, 1, cpus)
           .select(((col("id") * 2654435761L) % 262144).as("k"))
           .groupBy("k").agg(count(lit(1)).as("c"))
           .agg(sum("c")).collect()
@@ -92,7 +85,10 @@ object Bench {
       val times = (1 to reps).flatMap { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable => None }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          None
+        }
       }
       name -> (if (times.isEmpty) -1.0 else times.min)
     }.toMap
@@ -153,7 +149,7 @@ object Bench {
       // NonFatal, not just IOException: Paths.get throws InvalidPathException
       // (a RuntimeException) for malformed env values — any write failure
       // must stay a warning
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] WARN could not write $outFile: $e")
     }
     spark.stop()

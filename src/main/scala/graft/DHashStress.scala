@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
 
@@ -21,18 +20,12 @@ import graft.operators.ScaleOps
   */
 object DHashStress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cpus = GraftSession.cpus
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_DHASH_DOCS", "1000000").toLong
     val dim = sys.env.getOrElse("SPARK_GRAFT_DHASH_DIM", "32").toLong
     require(nDocs % 2 == 0, "docs must be even: content pairs are planted")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus * 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus * 2)
 
     def pipeline(n: Long) = {
       val t = spark.range(0, n).select(col("id").as("doc_id"),

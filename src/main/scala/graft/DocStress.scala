@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
 
@@ -27,16 +26,9 @@ import graft.operators.ScaleOps
   */
 object DocStress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cpus = GraftSession.cpus
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_DOC_DOCS", "40000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     val ids = spark.range(0, nDocs).select(col("id"))
     val fields = collection.mutable.ArrayBuffer(
       s""""docs":$nDocs""", s""""cpus":$cpus""")

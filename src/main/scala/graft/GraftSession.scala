@@ -1,10 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftnative.GraftExtensions
 
-/** Session factory with the engine's recommended defaults. Local mode for
+/** The engine's only session factory: every main, the test suite and
+  * finbench build their session here, so the config the oracle gate and
+  * the tests check is the config the engine ships. Local mode for
   * tests/bench; the same knobs transfer to cluster submissions (where
   * shuffle.partitions should track total cores and AQE coalesces the rest).
+  * Harness-only settings (a stress lane's shuffle width) are runtime SQL
+  * confs the caller sets on the returned session.
   */
 object GraftSession {
 
@@ -25,9 +30,16 @@ object GraftSession {
   val ExcludedRules =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
+  /** Local cores for a main: `SPARK_GRAFT_CPUS` when set, else every
+    * processor (the same default as [[local]]). */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def builder(cores: Int = Runtime.getRuntime.availableProcessors())
       : SparkSession.Builder =
     SparkSession.builder()
+      // SQL functions only (dot_f, word_shingles, the decoders); no rules
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.optimizer.excludedRules", ExcludedRules)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the iterative/analytic graph family (connected
@@ -29,7 +28,7 @@ import org.apache.spark.sql.functions._
   */
 object GraphStress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cpus = GraftSession.cpus
     val n = sys.env.getOrElse("SPARK_GRAFT_GRAPH_NODES", "2000000").toLong
     val ops = sys.env.getOrElse("SPARK_GRAFT_GRAPH_OPS", "cc,pr")
       .split(",").map(_.trim).toSet
@@ -48,15 +47,9 @@ object GraphStress {
     // recorded probe knob: AQE can flip a mid-size degree frame into a
     // multi-million-row broadcast build — "-1" disables to test that
     val autoBc = sys.env.getOrElse("SPARK_GRAFT_AUTOBC", "10485760")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.autoBroadcastJoinThreshold", autoBc)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", shuffleParts)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoBc)
 
     // chain i -> i+1 (long diameter) + hub i -> i % hubs (heavy skew);
     // self-loops from the hub rule are dropped by the operators

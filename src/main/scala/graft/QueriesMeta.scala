@@ -853,7 +853,7 @@ object QueriesMeta {
       // Measured at sf0.1 (fresh sweep, round 8): 8 partitions is the
       // minimum (4: 3.4s, 8: 3.2s, 16: 4.3s, 32: 4.2s). Round 9
       // profiled the residual ~2.3s to the state-store ops themselves
-      // via graft.SessionProbe's per-batch progress log: batch 0 inserts
+      // via per-batch progress logs (OPTIMIZATION_r16 §2): batch 0 inserts
       // all 95k sessions (allUpdatesTimeMs ≈ 1.3s + commit 0.8s), the
       // mandatory no-data batch 1 evicts them all (removals 1.2s +
       // commit 1.4s, summed across partitions) — with a 0s watermark

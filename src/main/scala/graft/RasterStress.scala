@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
 
@@ -16,17 +15,10 @@ import graft.operators.ScaleOps
   */
 object RasterStress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cpus = GraftSession.cpus
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_RASTER_DOCS", "100000").toLong
     val dim = sys.env.getOrElse("SPARK_GRAFT_RASTER_DIM", "32").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     val ids = spark.range(0, nDocs).select(col("id"))
     // warm-up: codegen + classloading outside the timed runs
     ids.limit(1000).select(ScaleOps.rasterChannelSums(ScaleOps.imageDecode(

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline ANN recall probe: runs the approximate ladder (LSH, IVF-flat,
   * IVF-trained, PQ, IVF-PQ, and the persisted IVF-PQ serving read)
   * against the exact brute-force `similarity_topk` truth at a given SF
@@ -17,15 +15,7 @@ import org.apache.spark.sql.SparkSession
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     def pairs(key: String): Set[(Long, Long)] =
       Queries.all(key).fn(spark, sfDir)
         .select("q_id", "vec_id").collect()

@@ -1,21 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke main mirroring the driver's t1 check: SparkEntry.entry
   * must return rows > 0 on sf0.001.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new org.apache.spark.sql.graftnative.GraftExtensions)
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     // extensions must make dot_f available to plain SQL (fresh JVM only —
     // extensions bind at session instantiation)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AsOfJoin, Indicators}
@@ -29,17 +29,8 @@ object StressBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // .toInt up front: fail fast on a non-integer env value rather than
-    // emitting malformed (unquoted-string) JSON at the end of the run
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
 
     // ONE symbol's entire history: the skew case the chunked family exists
     // for. The sf frame alone (~600k rows) still single-task-sorts in

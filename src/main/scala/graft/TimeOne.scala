@@ -1,40 +1,49 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev utility: time (and optionally explain) a single query key in
-  * isolation — `runMain graft.TimeOne <key> [sfDir] [reps] [explain]`.
-  * Same session config as [[Bench]] so numbers are comparable.
+import java.nio.file.{Files, Paths}
+
+/** Dev utility for single query keys, in the session [[Bench]] and
+  * [[Verify]] use. Two modes:
+  *
+  *  - `runMain graft.TimeOne <key>[,key...] [sfDir] [reps] [explain]` times
+  *    each key's `count()` `reps` times (default 2) and prints the best;
+  *    `explain` prints the formatted physical plan first.
+  *  - `runMain graft.TimeOne <key>[,key...] [sfDir] plan [outDir]` dumps
+  *    each key's formatted plan WITHOUT executing it, to `<outDir>/<key>.txt`
+  *    (stdout when no outDir).
+  *
+  * Comma-separated keys run in sequence in ONE session — reproduces
+  * cross-query interactions (broadcast/GC state) the per-key isolation of
+  * a fresh JVM would hide. `SPARK_GRAFT_LOG` overrides the WARN log level.
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
-    val key = args(0)
+    val keys = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val reps = if (args.length > 2) args(2).toInt else 2
-    val doExplain = args.contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
-    // comma-separated keys run in sequence in ONE session — reproduces
-    // cross-query interactions (broadcast/GC state) the per-key isolation
-    // of a fresh JVM would hide
-    key.split(",").foreach { k =>
-      val fn = SparkEntry.queries(k)
-      if (doExplain) fn(spark, sfDir).explain("formatted")
-      val times = (1 to reps).map { i =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"[timeone] $k rep$i: $s%.3f s ($n rows)")
-        s
+    val mode = args.drop(2)
+    val spark = GraftSession.local(GraftSession.cpus)
+    sys.env.get("SPARK_GRAFT_LOG").foreach(spark.sparkContext.setLogLevel)
+    def plan(k: String): String = SparkEntry.queries(k)(spark, sfDir)
+      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    keys.foreach { k =>
+      if (mode.headOption.contains("plan")) mode.lift(1) match {
+        case Some(d) =>
+          val p = Files.createDirectories(Paths.get(d)).resolve(s"$k.txt")
+          Files.writeString(p, plan(k))
+          println(s"[timeone] wrote $p")
+        case None => println(s"===== $k =====\n" + plan(k))
+      } else {
+        if (mode.contains("explain")) println(plan(k))
+        val times = (1 to mode.headOption.flatMap(_.toIntOption).getOrElse(2)).map { i =>
+          spark.catalog.clearCache()
+          val t0 = System.nanoTime()
+          val n = SparkEntry.queries(k)(spark, sfDir).count()
+          val s = (System.nanoTime() - t0) / 1e9
+          println(f"[timeone] $k rep$i: $s%.3f s ($n rows)")
+          s
+        }
+        println(f"[timeone] $k best: ${times.min}%.3f s")
       }
-      println(f"[timeone] $k best: ${times.min}%.3f s")
     }
     spark.stop()
   }

@@ -8,12 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * expressions for SQL users, so `SELECT dot_f(a, b)` works in plain
   * `spark.sql` (and in thrift/connect frontends that honor extensions).
   *
-  * Wire up with:
-  * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)          // programmatic
-  *   // or spark.sql.extensions=org.apache.spark.sql.graftnative.GraftExtensions
-  * }}}
+  * Every `graft.GraftSession` session installs it. External frontends
+  * wire it up with
+  * `spark.sql.extensions=org.apache.spark.sql.graftnative.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -3,18 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session; suites grab
-  * the active one if it exists).
+/** Shared local session for all suites: the engine's own session
+  * ([[GraftSession]]), one per JVM; suites grab the active one if it exists.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.optimizer.excludedRules", GraftSession.ExcludedRules)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   def sf0001 = "/root/testdata/sf0.001"
 }
