@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
+import org.apache.spark.sql.graftnative.{FlacSynthFunctions, Mp3PcmFunctions,
+  PcmFunctions, VorbisFunctions}
 
 /** Throughput probe for the compressed-audio decode path — the FLAC lane
   * the raster codecs already have (STRESS_RASTER): synthesize-and-decode
@@ -23,9 +25,9 @@ object AudioStress {
     val spark = GraftSession.local(cpus)
     val ids = spark.range(0, nDocs).select(col("id"))
     def stats(payload: org.apache.spark.sql.Column) =
-      ScaleOps.pcmChannelStats(ScaleOps.pcmDecode(payload)).as("s")
+      PcmFunctions.pcm_channel_stats(PcmFunctions.pcm_decode(payload)).as("s")
     // warm-up: codegen + classloading outside the timed runs
-    ids.limit(500).select(stats(ScaleOps.synthFlac(lit(1L), lit(8000L),
+    ids.limit(500).select(stats(FlacSynthFunctions.synth_flac(lit(1L), lit(8000L),
         lit(256L), col("id"), 8)))
       .agg(sum(element_at(col("s.sums"), 1))).head()
     // decoded-PCM volume: channels alternate 1/2, widths 8/16 → average
@@ -43,9 +45,9 @@ object AudioStress {
             lit(8000L), 16, lit(frames), s))),
       "flac" -> ((s: org.apache.spark.sql.Column) =>
         when(col("id") % 2 === 0,
-          ScaleOps.synthFlac(lit(1L) + col("id") % 2, lit(8000L),
+          FlacSynthFunctions.synth_flac(lit(1L) + col("id") % 2, lit(8000L),
             lit(frames), s, 8))
-          .otherwise(ScaleOps.synthFlac(lit(1L) + col("id") % 2,
+          .otherwise(FlacSynthFunctions.synth_flac(lit(1L) + col("id") % 2,
             lit(8000L), lit(frames), s, 16)))
     ).foreach { case (fmt, synth) =>
       val t0 = System.nanoTime()
@@ -73,7 +75,7 @@ object AudioStress {
       val mp3Ids = spark.range(0, mp3Docs).select(col("id"))
       val mp3Mb = mp3Docs * 3.0 * 1152 * 1.5 * 2 / 1e6
       val t0 = System.nanoTime()
-      val r = mp3Ids.select(stats(ScaleOps.synthMp3Pcm(col("id"))))
+      val r = mp3Ids.select(stats(Mp3PcmFunctions.synth_mp3_pcm(col("id"))))
         .agg(sum(element_at(col("s.sums"), 1)).as("c0"),
           count(col("s")).as("n"))
         .head()
@@ -95,7 +97,7 @@ object AudioStress {
       val vIds = spark.range(0, vDocs).select(col("id"))
       val vMb = vDocs * 2.0 * 128 * 1.5 * 2 / 1e6
       val t0 = System.nanoTime()
-      val r = vIds.select(stats(ScaleOps.synthOggVorbis(col("id"))))
+      val r = vIds.select(stats(VorbisFunctions.synth_ogg_vorbis(col("id"))))
         .agg(sum(element_at(col("s.sums"), 1)).as("c0"),
           count(col("s")).as("n"))
         .head()

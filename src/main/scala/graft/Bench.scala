@@ -1,5 +1,6 @@
 package graft
 import scala.util.control.NonFatal
+import org.apache.spark.sql.graftnative.{RasterFunctions, RasterSynthFunctions}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -9,7 +10,7 @@ object Bench {
     // charged for classloading + whole-stage-codegen compilation
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
-    catch { case NonFatal(_) => () }
+    catch { case NonFatal(e) => System.err.println(s"[bench] warm-up failed: $e") }
     // warm timings: run each query REPS times, report the fastest — the
     // first execution pays per-query whole-stage-codegen compilation,
     // which is amortized noise on any long-lived cluster
@@ -46,8 +47,8 @@ object Bench {
       def once(): Double = {
         val t0 = System.nanoTime()
         spark.range(0, 8000, 1, cpus)
-          .select(operators.ScaleOps.imageDecode(
-            operators.ScaleOps.synthPng(lit(64), lit(64), col("id"), 3))
+          .select(RasterFunctions.image_decode(
+            RasterSynthFunctions.synth_png(lit(64), lit(64), col("id"), 3))
             .getField("width").as("w"))
           .agg(sum("w")).collect()
         (System.nanoTime() - t0) / 1e9

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
+import org.apache.spark.sql.graftnative.{RasterFunctions, RasterSynthFunctions}
 
 /** Scale probe for the IMAGE near-dup family: `SPARK_GRAFT_DHASH_DOCS`
   * images (high-entropy hash-content PPMs, so fingerprints are
@@ -29,10 +30,9 @@ object DHashStress {
 
     def pipeline(n: Long) = {
       val t = spark.range(0, n).select(col("id").as("doc_id"),
-          ScaleOps.rasterDHash(ScaleOps.imageDecode(
-            org.apache.spark.sql.graftnative.RasterSynthFunctions
-              .synth_ppm_hash(lit(dim), lit(dim),
-                shiftright(col("id"), 1)))).as("dh"))
+          RasterFunctions.raster_dhash(RasterFunctions.image_decode(
+            RasterSynthFunctions.synth_ppm_hash(lit(dim), lit(dim),
+              shiftright(col("id"), 1)))).as("dh"))
         .select(col("doc_id"),
           col("dh").bitwiseAND(lit(0xFFFFFFFFL)).as("lo"),
           shiftrightunsigned(col("dh"), 32).as("hi"))

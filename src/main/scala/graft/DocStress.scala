@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.ScaleOps
+import org.apache.spark.sql.graftnative.{Bzip2Functions, DocxFunctions,
+  EmlFunctions, EpubFunctions, HtmlFunctions, JsonlFunctions, PdfFunctions,
+  RasterFunctions, RobotsFunctions, TarFunctions, WarcFunctions,
+  WikiFunctions, XlsxFunctions, ZipFunctions}
 
 /** Throughput probe for the document/container surface (round 14,
   * office/eml lanes added round 15) — the STRESS_AUDIO/STRESS_RASTER
@@ -35,14 +38,14 @@ object DocStress {
 
     // warm-up outside the timed lanes
     ids.limit(200)
-      .select(ScaleOps.pdfText(ScaleOps.synthPdf(col("id"))).as("d"))
+      .select(PdfFunctions.pdf_text(PdfFunctions.synth_pdf(col("id"))).as("d"))
       .agg(sum(col("d.n_pages"))).head()
 
     // ---- pdf
     locally {
       val t0 = System.nanoTime()
       val r = ids
-        .select(ScaleOps.pdfText(ScaleOps.synthPdf(col("id"))).as("d"))
+        .select(PdfFunctions.pdf_text(PdfFunctions.synth_pdf(col("id"))).as("d"))
         .select(col("d.n_pages").as("np"), explode(col("d.pages")).as("p"))
         .agg(count(lit(1)).as("pages"), sum(length(col("p.text"))).as("chars"))
         .head()
@@ -59,7 +62,7 @@ object DocStress {
     locally {
       val t0 = System.nanoTime()
       val r = ids
-        .select(ScaleOps.tarMembers(ScaleOps.synthTar(col("id"))).as("t"))
+        .select(TarFunctions.tar_members(TarFunctions.synth_tar(col("id"))).as("t"))
         .select(explode(col("t.members")).as("m"))
         .agg(count(lit(1)).as("members"), sum(col("m.size")).as("bytes"))
         .head()
@@ -75,7 +78,7 @@ object DocStress {
     locally {
       val t0 = System.nanoTime()
       val r = ids
-        .select(ScaleOps.zipEntries(ScaleOps.synthZip(col("id"))).as("z"))
+        .select(ZipFunctions.zip_entries(ZipFunctions.synth_zip(col("id"))).as("z"))
         .select(explode(col("z.entries")).as("e"))
         .agg(count(lit(1)).as("entries"), sum(col("e.usize")).as("bytes"))
         .head()
@@ -93,11 +96,11 @@ object DocStress {
       val wdsIds = spark.range(0, wdsDocs).select(col("id"))
       val t0 = System.nanoTime()
       val r = wdsIds
-        .select(col("id"), ScaleOps.synthTarWds(col("id")).as("t"))
+        .select(col("id"), TarFunctions.synth_tar_wds(col("id")).as("t"))
         .select(col("id"), col("t"),
-          explode(ScaleOps.tarMembers(col("t")).getField("members")).as("m"))
+          explode(TarFunctions.tar_members(col("t")).getField("members")).as("m"))
         .filter(col("m.name").endsWith(".jpg"))
-        .select(ScaleOps.imageDecode(expr(
+        .select(RasterFunctions.image_decode(expr(
           "substring(t, CAST(m.offset + 1 AS INT), CAST(m.size AS INT))"))
           .as("r"))
         .agg(count(col("r.width")).as("decoded")).head()
@@ -113,15 +116,15 @@ object DocStress {
     locally {
       val t0 = System.nanoTime()
       val r = ids
-        .select(ScaleOps.warcRecords(
-          ScaleOps.synthWarcHtmlGz(col("id"))).as("w"))
+        .select(WarcFunctions.warc_records(
+          WarcFunctions.synth_warc_html_gz(col("id"))).as("w"))
         .select(explode(col("w.records")).as("r"))
         .filter(col("r.rec_type") === "response")
         .select(col("r.body").as("body"))
         .select(col("body")
           .substr(locate("\r\n\r\n", col("body")) + 4, length(col("body")))
           .as("html"))
-        .select(ScaleOps.htmlText(col("html")).as("h"))
+        .select(HtmlFunctions.html_text(col("html")).as("h"))
         .agg(count(col("h.text")).as("n"),
           sum(length(col("h.text"))).as("chars"))
         .head()
@@ -135,10 +138,10 @@ object DocStress {
     locally {
       val t0 = System.nanoTime()
       val r = ids
-        .select(ScaleOps.zipTexts(
-          ScaleOps.synthEpub(col("id")), ".xhtml").as("z"))
+        .select(EpubFunctions.zip_texts(
+          EpubFunctions.synth_epub(col("id")), ".xhtml").as("z"))
         .select(explode(col("z.texts")).as("t"))
-        .select(ScaleOps.htmlText(col("t.text")).as("h"))
+        .select(HtmlFunctions.html_text(col("t.text")).as("h"))
         .agg(count(col("h.text")).as("chapters"),
           sum(length(col("h.text"))).as("chars"))
         .head()
@@ -155,7 +158,7 @@ object DocStress {
         .fromDDL("id BIGINT, lang STRING, text STRING")
       val t0 = System.nanoTime()
       val r = ids
-        .select(ScaleOps.gzipText(ScaleOps.synthJsonlGz(col("id"))).as("t"))
+        .select(JsonlFunctions.gzip_text(JsonlFunctions.synth_jsonl_gz(col("id"))).as("t"))
         .select(explode(filter(split(col("t"), "\n"),
           x => x =!= lit(""))).as("line"))
         .select(from_json(col("line"), lineSchema).as("j"))
@@ -174,7 +177,7 @@ object DocStress {
     locally {
       val t0 = System.nanoTime()
       val r = ids
-        .select(ScaleOps.docxText(ScaleOps.synthDocx(col("id"))).as("d"))
+        .select(DocxFunctions.docx_text(DocxFunctions.synth_docx(col("id"))).as("d"))
         .agg(sum(col("d.n_paragraphs")).as("paras"),
           sum(length(col("d.text"))).as("chars"))
         .head()
@@ -191,7 +194,7 @@ object DocStress {
     locally {
       val t0 = System.nanoTime()
       val r = ids
-        .select(ScaleOps.xlsxCells(ScaleOps.synthXlsx(col("id"))).as("d"))
+        .select(XlsxFunctions.xlsx_cells(XlsxFunctions.synth_xlsx(col("id"))).as("d"))
         .agg(sum(col("d.n_cells")).as("cells")).head()
       val sec = (System.nanoTime() - t0) / 1e9
       val expCells = (0L until nDocs).map(d => (2 + d % 3) * 4 + d % 2).sum
@@ -205,7 +208,7 @@ object DocStress {
     locally {
       val t0 = System.nanoTime()
       val r = ids
-        .select(ScaleOps.emlMessage(ScaleOps.synthEml(col("id"))).as("d"))
+        .select(EmlFunctions.eml_message(EmlFunctions.synth_eml(col("id"))).as("d"))
         .agg(sum(col("d.n_parts")).as("parts")).head()
       val sec = (System.nanoTime() - t0) / 1e9
       val expParts = (0L until nDocs).map(d => (d % 4) match {
@@ -222,10 +225,10 @@ object DocStress {
       val wikiIds = spark.range(0, wikiDocs).select(col("id"))
       val t0 = System.nanoTime()
       val r = wikiIds
-        .select(ScaleOps.mediawikiPages(
-          ScaleOps.bzip2Text(ScaleOps.synthWikiDumpBz2(col("id")))).as("d"))
+        .select(WikiFunctions.mediawiki_pages(
+          Bzip2Functions.bzip2_text(Bzip2Functions.synth_wiki_dump_bz2(col("id")))).as("d"))
         .select(explode(col("d.pages")).as("p"))
-        .select(ScaleOps.wikitextStrip(col("p.text")).as("t"))
+        .select(WikiFunctions.wikitext_strip(col("p.text")).as("t"))
         .agg(count(lit(1)).as("pages"), sum(length(col("t"))).as("chars"))
         .head()
       val sec = (System.nanoTime() - t0) / 1e9
@@ -241,10 +244,10 @@ object DocStress {
     locally {
       val t0 = System.nanoTime()
       val r = ids
-        .select(col("id"), ScaleOps.synthRobots(col("id")).as("robots"))
+        .select(col("id"), RobotsFunctions.synth_robots(col("id")).as("robots"))
         .select(col("id"), col("robots"),
           explode(sequence(lit(0L), lit(7L))).as("u"))
-        .select(ScaleOps.robotsAllowed(col("robots"), lit("graftbot"),
+        .select(RobotsFunctions.robots_allowed(col("robots"), lit("graftbot"),
           concat(lit("/p"), col("u"), lit("/x"))).as("d"))
         .agg(count(col("d.allowed")).as("n"),
           sum(when(col("d.allowed"), 1L).otherwise(0L)).as("ok"))

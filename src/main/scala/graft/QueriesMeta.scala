@@ -56,11 +56,8 @@ object QueriesMeta {
   private def streamStateSession(sOuter: SparkSession, dir: String,
       table: String): SparkSession = {
     val s = sOuter.newSession()
-    val parts = streamStatePartitions(table, s.sparkContext.defaultParallelism) {
-      val hp = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getContentSummary(hp).getLength
-    }
+    val parts = streamStatePartitions(table, s.sparkContext.defaultParallelism)(
+      Tables.inputBytes(s, s"$dir/$table.parquet"))
     s.conf.set("spark.sql.shuffle.partitions", parts.toString)
     s
   }

@@ -7,7 +7,18 @@ import org.apache.spark.sql.types._
 
 import Queries.Q
 import graft.operators.ScaleOps
-import org.apache.spark.sql.graftnative.PqExpressions
+import org.apache.spark.sql.graftnative.{AviFunctions, Bzip2Functions,
+  DocxFunctions, EmlFunctions, EpubFunctions, ExifFunctions, FeedFunctions,
+  FlacSynthFunctions, HtmlFunctions, Id3Functions, JpegSynthFunctions,
+  JsonlFunctions, MarkdownFunctions, MediaExpressions, Mp3Functions,
+  Mp3PcmFunctions, Mp4FragFunctions, Mp4TrackFunctions, OdtFunctions,
+  OggFunctions, OpusFunctions, PcmEnergyFunctions, PcmFunctions, PdfFunctions,
+  PptxFunctions, PqExpressions, RasterFunctions, RasterSynthFunctions,
+  RobotsFunctions, RtfFunctions, SitemapFunctions, SubtitleFunctions,
+  TarFunctions, TextExpressions, TiffFunctions, UrlFunctions,
+  VectorExpressions, VideoDhashFunctions, VorbisFunctions, Vp8SynthFunctions,
+  WarcFunctions, WebpAnimFunctions, WebpSynthFunctions, WikiFunctions,
+  XlsxFunctions, ZipFunctions}
 
 /** LLM-data-pipeline query keys over `documents` / `embeddings`
   * (SURVEY §7.1 step 8). Oracle SQL mirrors every Spark expression; md5 and
@@ -217,9 +228,9 @@ object QueriesScale {
     (s, dir) => {
       Tables.documents(s, dir)
         .withColumn("md5_full", md5(col("text")))
-        .withColumn("_sh", ScaleOps.textShingles(col("text")))
+        .withColumn("_sh", TextExpressions.word_shingles(col("text")))
         .withColumn("min_shingle_hash", ScaleOps.minhashComponent(col("_sh"), 1))
-        .withColumn("rolling_hash", ScaleOps.rollingHashNative(col("text")))
+        .withColumn("rolling_hash", TextExpressions.rolling_hash(col("text")))
         .select(col("doc_id"), col("md5_full"), col("min_shingle_hash"), col("rolling_hash"))
         .orderBy(col("doc_id"))
     },
@@ -373,7 +384,7 @@ object QueriesScale {
     val cands = minhashPairsFromBuckets(minhashBandBuckets(sig))
       .select("id1", "id2")
     val sets = corpus.select(col("doc_id"),
-      array_distinct(ScaleOps.textShingles(col("text"))).as("sh"))
+      array_distinct(TextExpressions.word_shingles(col("text"))).as("sh"))
     cands
       .hint("shuffle_hash")
       .join(sets.select(col("doc_id").as("id1"), col("sh").as("sh1")), "id1")
@@ -514,9 +525,9 @@ object QueriesScale {
       val cands = newBands.join(oldIndex, Seq("band_idx", "bk"))
         .select(col("new_id"), col("old_id")).distinct()
       val setsOld = history.select(col("doc_id").as("old_id"),
-        array_distinct(ScaleOps.textShingles(col("text"))).as("sh_o"))
+        array_distinct(TextExpressions.word_shingles(col("text"))).as("sh_o"))
       val setsNew = incoming.select(col("doc_id").as("new_id"),
-        array_distinct(ScaleOps.textShingles(col("text"))).as("sh_n"))
+        array_distinct(TextExpressions.word_shingles(col("text"))).as("sh_n"))
       val verified = cands
         .hint("shuffle_hash").join(setsNew, "new_id")
         .hint("shuffle_hash").join(setsOld, "old_id")
@@ -1159,7 +1170,7 @@ object QueriesScale {
         .when(col("doc_id") % 4 === 2, ScaleOps.synthGifHeader(w, h))
         .otherwise(ScaleOps.synthWebpHeader(w, h))
       Tables.documentSeedsPlain(s, dir)
-        .select(col("doc_id"), ScaleOps.imageMeta(payload).as("m"))
+        .select(col("doc_id"), MediaExpressions.image_meta(payload).as("m"))
         .select(col("doc_id"), col("m.format").as("format"),
           col("m.width").as("width"), col("m.height").as("height"))
         .orderBy("doc_id")
@@ -1192,15 +1203,15 @@ object QueriesScale {
       val payload = when(col("doc_id") % 2 === 0,
           ScaleOps.synthPpm(w, h, col("doc_id")))
         .otherwise(ScaleOps.synthBmp(w, h, col("doc_id")))
-      val raster = ScaleOps.imageDecode(payload)
+      val raster = RasterFunctions.image_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
           col("r.format").as("format"),
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("s").getItem(0).as("r_sum"),
           col("s").getItem(1).as("g_sum"),
@@ -1246,9 +1257,9 @@ object QueriesScale {
       val w = lit(4L) + col("doc_id") % 9
       val h = lit(5L) + col("doc_id") % 7
       val payload = when(col("doc_id") % 3 === 0,
-          ScaleOps.synthPng(w, h, col("doc_id"), channels = 1))
-        .otherwise(ScaleOps.synthPng(w, h, col("doc_id"), channels = 3))
-      val raster = ScaleOps.imageDecode(payload)
+          RasterSynthFunctions.synth_png(w, h, col("doc_id"), channels = 1))
+        .otherwise(RasterSynthFunctions.synth_png(w, h, col("doc_id"), channels = 3))
+      val raster = RasterFunctions.image_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
@@ -1256,8 +1267,8 @@ object QueriesScale {
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
           col("r.channels").cast(LongType).as("channels"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("channels"),
           col("s").getItem(0).as("y_sum"),
@@ -1290,16 +1301,16 @@ object QueriesScale {
     (s, dir) => {
       val w = lit(3L) + col("doc_id") % 10
       val h = lit(3L) + col("doc_id") % 8
-      val raster = ScaleOps.imageDecode(
-        ScaleOps.synthGif(w, h, col("doc_id")))
+      val raster = RasterFunctions.image_decode(
+        RasterSynthFunctions.synth_gif(w, h, col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
           col("r.format").as("format"),
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("s").getItem(0).as("r_sum"),
           col("s").getItem(1).as("g_sum"),
@@ -1353,11 +1364,11 @@ object QueriesScale {
       val w = lit(16L) * (lit(1L) + col("doc_id") % 3)
       val h = lit(16L) * (lit(1L) + col("doc_id") % 2)
       val payload = when(col("doc_id") % 3 === 0,
-          ScaleOps.synthJpeg(w, h, col("doc_id"), mode = 0))
+          JpegSynthFunctions.synth_jpeg(w, h, col("doc_id"), mode = 0))
         .when(col("doc_id") % 3 === 1,
-          ScaleOps.synthJpeg(w, h, col("doc_id"), mode = 1))
-        .otherwise(ScaleOps.synthJpeg(w, h, col("doc_id"), mode = 2))
-      val raster = ScaleOps.imageDecode(payload)
+          JpegSynthFunctions.synth_jpeg(w, h, col("doc_id"), mode = 1))
+        .otherwise(JpegSynthFunctions.synth_jpeg(w, h, col("doc_id"), mode = 2))
+      val raster = RasterFunctions.image_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
@@ -1365,8 +1376,8 @@ object QueriesScale {
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
           col("r.channels").cast(LongType).as("channels"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("channels"),
           col("s").getItem(0).as("y_sum"),
@@ -1426,21 +1437,21 @@ object QueriesScale {
       val w = lit(16L) * (lit(1L) + col("doc_id") % 3)
       val h = lit(16L) * (lit(1L) + col("doc_id") % 2)
       val payload = when(col("doc_id") % 4 === 0,
-          ScaleOps.synthJpeg(w, h, col("doc_id"), mode = 6))
+          JpegSynthFunctions.synth_jpeg(w, h, col("doc_id"), mode = 6))
         .when(col("doc_id") % 4 === 1,
-          ScaleOps.synthJpeg(w, h, col("doc_id"), mode = 7))
+          JpegSynthFunctions.synth_jpeg(w, h, col("doc_id"), mode = 7))
         .when(col("doc_id") % 4 === 2,
-          ScaleOps.synthJpeg(w, h, col("doc_id"), mode = 8))
-        .otherwise(ScaleOps.synthJpeg(w, h, col("doc_id"), mode = 9))
-      val raster = ScaleOps.imageDecode(payload)
+          JpegSynthFunctions.synth_jpeg(w, h, col("doc_id"), mode = 8))
+        .otherwise(JpegSynthFunctions.synth_jpeg(w, h, col("doc_id"), mode = 9))
+      val raster = RasterFunctions.image_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
           col("r.format").as("format"),
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("s").getItem(0).as("r_sum"),
           col("s").getItem(1).as("g_sum"),
@@ -1497,11 +1508,11 @@ object QueriesScale {
       val w = lit(16L) * (lit(1L) + col("doc_id") % 3)
       val h = lit(16L) * (lit(1L) + col("doc_id") % 2)
       val payload = when(col("doc_id") % 3 === 0,
-          ScaleOps.synthJpeg(w, h, col("doc_id"), mode = 3))
+          JpegSynthFunctions.synth_jpeg(w, h, col("doc_id"), mode = 3))
         .when(col("doc_id") % 3 === 1,
-          ScaleOps.synthJpeg(w, h, col("doc_id"), mode = 4))
-        .otherwise(ScaleOps.synthJpeg(w, h, col("doc_id"), mode = 5))
-      val raster = ScaleOps.imageDecode(payload)
+          JpegSynthFunctions.synth_jpeg(w, h, col("doc_id"), mode = 4))
+        .otherwise(JpegSynthFunctions.synth_jpeg(w, h, col("doc_id"), mode = 5))
+      val raster = RasterFunctions.image_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
@@ -1509,8 +1520,8 @@ object QueriesScale {
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
           col("r.channels").cast(LongType).as("channels"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("channels"),
           col("s").getItem(0).as("y_sum"),
@@ -1555,16 +1566,16 @@ object QueriesScale {
     (s, dir) => {
       val w = lit(3L) + col("doc_id") % 11
       val h = lit(3L) + col("doc_id") % 9
-      val raster = ScaleOps.imageDecode(
-        ScaleOps.synthWebpLPred(w, h, col("doc_id")))
+      val raster = RasterFunctions.image_decode(
+        WebpSynthFunctions.synth_webpl_pred(w, h, col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
           col("r.format").as("format"),
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("s").getItem(0).as("r_sum"),
           col("s").getItem(1).as("g_sum"),
@@ -1605,19 +1616,19 @@ object QueriesScale {
       val w = lit(3L) + col("doc_id") % 13
       val h = lit(3L) + col("doc_id") % 7
       val payload = when(col("doc_id") % 7 === 0,
-          ScaleOps.synthPngExt(w, h, col("doc_id"), 0))
+          RasterSynthFunctions.synth_png_ext(w, h, col("doc_id"), 0))
         .when(col("doc_id") % 7 === 1,
-          ScaleOps.synthPngExt(w, h, col("doc_id"), 1))
+          RasterSynthFunctions.synth_png_ext(w, h, col("doc_id"), 1))
         .when(col("doc_id") % 7 === 2,
-          ScaleOps.synthPngExt(w, h, col("doc_id"), 2))
+          RasterSynthFunctions.synth_png_ext(w, h, col("doc_id"), 2))
         .when(col("doc_id") % 7 === 3,
-          ScaleOps.synthPngExt(w, h, col("doc_id"), 3))
+          RasterSynthFunctions.synth_png_ext(w, h, col("doc_id"), 3))
         .when(col("doc_id") % 7 === 4,
-          ScaleOps.synthPngExt(w, h, col("doc_id"), 4))
+          RasterSynthFunctions.synth_png_ext(w, h, col("doc_id"), 4))
         .when(col("doc_id") % 7 === 5,
-          ScaleOps.synthPngExt(w, h, col("doc_id"), 5))
-        .otherwise(ScaleOps.synthPngExt(w, h, col("doc_id"), 6))
-      val raster = ScaleOps.imageDecode(payload)
+          RasterSynthFunctions.synth_png_ext(w, h, col("doc_id"), 5))
+        .otherwise(RasterSynthFunctions.synth_png_ext(w, h, col("doc_id"), 6))
+      val raster = RasterFunctions.image_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
@@ -1625,8 +1636,8 @@ object QueriesScale {
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
           col("r.channels").cast(LongType).as("channels"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("channels"),
           col("s").getItem(0).as("c0_sum"),
@@ -1682,16 +1693,16 @@ object QueriesScale {
     (s, dir) => {
       val w = lit(3L) + col("doc_id") % 11
       val h = lit(3L) + col("doc_id") % 9
-      val raster = ScaleOps.imageDecode(
-        ScaleOps.synthWebpLPalette(w, h, col("doc_id")))
+      val raster = RasterFunctions.image_decode(
+        WebpSynthFunctions.synth_webpl_palette(w, h, col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
           col("r.format").as("format"),
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("s").getItem(0).as("r_sum"),
           col("s").getItem(1).as("g_sum"),
@@ -1722,16 +1733,16 @@ object QueriesScale {
     (s, dir) => {
       val w = lit(3L) + col("doc_id") % 11
       val h = lit(3L) + col("doc_id") % 9
-      val raster = ScaleOps.imageDecode(
-        ScaleOps.synthWebpL(w, h, col("doc_id")))
+      val raster = RasterFunctions.image_decode(
+        WebpSynthFunctions.synth_webpl(w, h, col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
           col("r.format").as("format"),
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("s").getItem(0).as("r_sum"),
           col("s").getItem(1).as("g_sum"),
@@ -1781,17 +1792,17 @@ object QueriesScale {
       val w = lit(16L) * (lit(1L) + col("doc_id") % 3)
       val h = lit(16L) * (lit(1L) + shiftright(col("doc_id"), 1) % 2)
       val payload = when(col("doc_id") % 2 === 0,
-          ScaleOps.synthVp8(w, h, col("doc_id"), mode = 0))
-        .otherwise(ScaleOps.synthVp8(w, h, col("doc_id"), mode = 1))
-      val raster = ScaleOps.imageDecode(payload)
+          Vp8SynthFunctions.synth_vp8(w, h, col("doc_id"), mode = 0))
+        .otherwise(Vp8SynthFunctions.synth_vp8(w, h, col("doc_id"), mode = 1))
+      val raster = RasterFunctions.image_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
           col("r.format").as("format"),
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("s").getItem(0).as("r_sum"),
           col("s").getItem(1).as("g_sum"),
@@ -1842,18 +1853,18 @@ object QueriesScale {
     (s, dir) => {
       val w = lit(16L) * (lit(1L) + col("doc_id") % 2)
       val h = lit(16L)
-      val payload = ScaleOps.synthJpegExif(w, h, col("doc_id"), mode = 2)
-      val oriented = ScaleOps.rasterOrient(
-        ScaleOps.imageDecode(payload), ScaleOps.exifOrientation(payload))
+      val payload = ExifFunctions.synth_jpeg_exif(w, h, col("doc_id"), mode = 2)
+      val oriented = ExifFunctions.raster_orient(
+        RasterFunctions.image_decode(payload), ExifFunctions.exif_orientation(payload))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"),
-          ScaleOps.exifOrientation(payload).cast(LongType).as("orientation"),
+          ExifFunctions.exif_orientation(payload).cast(LongType).as("orientation"),
           oriented.as("r"))
         .select(col("doc_id"), col("orientation"),
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("orientation"), col("width"), col("height"),
           col("s").getItem(0).as("r_sum"),
           col("s").getItem(1).as("g_sum"),
@@ -1915,9 +1926,9 @@ object QueriesScale {
   // zero shuffle.
   private val exifMetaQ = Q(
     (s, dir) => {
-      val payload = ScaleOps.synthJpegExifMeta(lit(16L), lit(16L), col("doc_id"), mode = 2)
+      val payload = ExifFunctions.synth_jpeg_exif_meta(lit(16L), lit(16L), col("doc_id"), mode = 2)
       Tables.documentSeedsPlain(s, dir)
-        .select(col("doc_id"), ScaleOps.exifMeta(payload).as("m"))
+        .select(col("doc_id"), ExifFunctions.exif_meta(payload).as("m"))
         .select(col("doc_id"),
           col("m.make").as("make"),
           col("m.model").as("model"),
@@ -1960,13 +1971,13 @@ object QueriesScale {
       val w = lit(3L) + col("doc_id") % 13
       val h = lit(3L) + col("doc_id") % 7
       val payload = when(col("doc_id") % 4 === 0,
-          ScaleOps.synthTiff(w, h, col("doc_id"), 0))
+          TiffFunctions.synth_tiff(w, h, col("doc_id"), 0))
         .when(col("doc_id") % 4 === 1,
-          ScaleOps.synthTiff(w, h, col("doc_id"), 1))
+          TiffFunctions.synth_tiff(w, h, col("doc_id"), 1))
         .when(col("doc_id") % 4 === 2,
-          ScaleOps.synthTiff(w, h, col("doc_id"), 2))
-        .otherwise(ScaleOps.synthTiff(w, h, col("doc_id"), 3))
-      val raster = ScaleOps.imageDecode(payload)
+          TiffFunctions.synth_tiff(w, h, col("doc_id"), 2))
+        .otherwise(TiffFunctions.synth_tiff(w, h, col("doc_id"), 3))
+      val raster = RasterFunctions.image_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
@@ -1974,8 +1985,8 @@ object QueriesScale {
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
           col("r.channels").cast(LongType).as("channels"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("channels"),
           col("s").getItem(0).as("y_sum"),
@@ -2028,12 +2039,12 @@ object QueriesScale {
       val w = lit(3L) + col("doc_id") % 13
       val h = lit(3L) + col("doc_id") % 7
       val m = col("doc_id") % 5
-      val payload = when(m === 0, ScaleOps.synthTiff(w, h, col("doc_id"), 4))
-        .when(m === 1, ScaleOps.synthTiff(w, h, col("doc_id"), 5))
-        .when(m === 2, ScaleOps.synthTiff(w, h, col("doc_id"), 6))
-        .when(m === 3, ScaleOps.synthTiff(w, h, col("doc_id"), 7))
-        .otherwise(ScaleOps.synthTiff(w, h, col("doc_id"), 8))
-      val raster = ScaleOps.imageDecode(payload)
+      val payload = when(m === 0, TiffFunctions.synth_tiff(w, h, col("doc_id"), 4))
+        .when(m === 1, TiffFunctions.synth_tiff(w, h, col("doc_id"), 5))
+        .when(m === 2, TiffFunctions.synth_tiff(w, h, col("doc_id"), 6))
+        .when(m === 3, TiffFunctions.synth_tiff(w, h, col("doc_id"), 7))
+        .otherwise(TiffFunctions.synth_tiff(w, h, col("doc_id"), 8))
+      val raster = RasterFunctions.image_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
@@ -2041,8 +2052,8 @@ object QueriesScale {
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
           col("r.channels").cast(LongType).as("channels"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("channels"),
           col("s").getItem(0).as("y_sum"),
@@ -2105,9 +2116,9 @@ object QueriesScale {
       val w = lit(3L) + col("doc_id") % 29
       val h = lit(3L) + col("doc_id") % 23
       val payload = when(col("doc_id") % 2 === 0,
-          ScaleOps.synthTiff(w, h, col("doc_id"), 9))
-        .otherwise(ScaleOps.synthTiff(w, h, col("doc_id"), 10))
-      val raster = ScaleOps.imageDecode(payload)
+          TiffFunctions.synth_tiff(w, h, col("doc_id"), 9))
+        .otherwise(TiffFunctions.synth_tiff(w, h, col("doc_id"), 10))
+      val raster = RasterFunctions.image_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), raster.as("r"))
         .select(col("doc_id"),
@@ -2115,8 +2126,8 @@ object QueriesScale {
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
           col("r.channels").cast(LongType).as("channels"),
-          ScaleOps.rasterChannelSums(
-            ScaleOps.imageResizeNN(col("r"), 4, 4)).as("s"))
+          RasterFunctions.raster_channel_sums(
+            RasterFunctions.image_resize_nn(col("r"), 4, 4)).as("s"))
         .select(col("doc_id"), col("format"), col("width"), col("height"),
           col("channels"),
           col("s").getItem(0).as("y_sum"),
@@ -2173,7 +2184,7 @@ object QueriesScale {
   // decoded-PCM-derived, not metadata. Per-row, zero shuffle.
   private val mp3PcmQ = Q(
     (s, dir) => {
-      val d = ScaleOps.mp3Decode(ScaleOps.synthMp3Pcm(col("doc_id")))
+      val d = Mp3PcmFunctions.mp3_decode(Mp3PcmFunctions.synth_mp3_pcm(col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"),
@@ -2263,7 +2274,7 @@ object QueriesScale {
   // until the explode.
   private val mp4TracksQ = Q(
     (s, dir) => {
-      val m = ScaleOps.mp4Tracks(ScaleOps.synthMp4Tracks(col("doc_id")))
+      val m = Mp4TrackFunctions.mp4_tracks(Mp4TrackFunctions.synth_mp4_tracks(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), m.as("m"))
         .select(col("doc_id"), col("m.brand").as("brand"),
@@ -2322,7 +2333,7 @@ object QueriesScale {
   // shuffle.
   private val vorbisPcmQ = Q(
     (s, dir) => {
-      val d = ScaleOps.vorbisDecode(ScaleOps.synthOggVorbis(col("doc_id")))
+      val d = VorbisFunctions.vorbis_decode(VorbisFunctions.synth_ogg_vorbis(col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"),
@@ -2389,7 +2400,7 @@ object QueriesScale {
   // the explode; the pairing groupBy keys on compact strings.
   private val tarMembersQ = Q(
     (s, dir) => {
-      val t = ScaleOps.tarMembers(ScaleOps.synthTar(col("doc_id")))
+      val t = TarFunctions.tar_members(TarFunctions.synth_tar(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), t.as("t"))
         .select(col("doc_id"), posexplode(col("t.members")).as(Seq("m_idx", "m")))
@@ -2445,21 +2456,21 @@ object QueriesScale {
   // zero shuffle until the explode.
   private val webdatasetImageStatsQ = Q(
     (s, dir) => {
-      val shard = ScaleOps.synthTarWds(col("doc_id"))
+      val shard = TarFunctions.synth_tar_wds(col("doc_id"))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), shard.as("t"))
         .select(col("doc_id"), col("t"),
-          posexplode(ScaleOps.tarMembers(col("t")).getField("members"))
+          posexplode(TarFunctions.tar_members(col("t")).getField("members"))
             .as(Seq("m_idx", "m")))
         .filter(col("m.name").endsWith(".jpg"))
         .select(col("doc_id"), (col("m_idx") / 2).cast(LongType).as("sample_idx"),
-          ScaleOps.imageDecode(expr(
+          RasterFunctions.image_decode(expr(
             "substring(t, CAST(m.offset + 1 AS INT), CAST(m.size AS INT))"))
             .as("r"))
         .select(col("doc_id"), col("sample_idx"),
           col("r.width").cast(LongType).as("width"),
           col("r.height").cast(LongType).as("height"),
-          ScaleOps.rasterChannelSums(col("r")).as("s"))
+          RasterFunctions.raster_channel_sums(col("r")).as("s"))
         .select(col("doc_id"), col("sample_idx"), col("width"), col("height"),
           col("s").getItem(0).as("r_sum"),
           col("s").getItem(1).as("g_sum"),
@@ -2501,7 +2512,7 @@ object QueriesScale {
   // explode.
   private val zipEntriesQ = Q(
     (s, dir) => {
-      val z = ScaleOps.zipEntries(ScaleOps.synthZip(col("doc_id")))
+      val z = ZipFunctions.zip_entries(ZipFunctions.synth_zip(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), z.as("z"))
         .select(col("doc_id"), posexplode(col("z.entries")).as(Seq("e_idx", "e")))
@@ -2548,7 +2559,7 @@ object QueriesScale {
     (s, dir) => {
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"),
-          ScaleOps.synthRobots(col("doc_id")).as("robots"),
+          RobotsFunctions.synth_robots(col("doc_id")).as("robots"),
           (col("doc_id") % 5).as("k"), (col("doc_id") % 3).as("j"))
         .select(col("doc_id"), col("robots"), col("k"), col("j"),
           explode(sequence(lit(0L), lit(7L))).as("u"))
@@ -2566,7 +2577,7 @@ object QueriesScale {
             .otherwise(lit("/")))
         .select(col("doc_id"), col("u").cast(LongType).as("url_idx"),
           col("path"),
-          ScaleOps.robotsAllowed(col("robots"), lit("graftbot"), col("path"))
+          RobotsFunctions.robots_allowed(col("robots"), lit("graftbot"), col("path"))
             .as("d"))
         .select(col("doc_id"), col("url_idx"), col("path"),
           col("d.allowed").as("allowed"), col("d.rule_path").as("rule_path"))
@@ -2611,7 +2622,7 @@ object QueriesScale {
   // point. Per-row decode, zero shuffle until the explode.
   private val jsonlCorpusQ = Q(
     (s, dir) => {
-      val txt = ScaleOps.gzipText(ScaleOps.synthJsonlGz(col("doc_id")))
+      val txt = JsonlFunctions.gzip_text(JsonlFunctions.synth_jsonl_gz(col("doc_id")))
       val lineSchema = org.apache.spark.sql.types.StructType
         .fromDDL("id BIGINT, lang STRING, text STRING")
       Tables.documentSeeds(s, dir)
@@ -2658,14 +2669,14 @@ object QueriesScale {
   // explode.
   private val epubTextQ = Q(
     (s, dir) => {
-      val z = ScaleOps.zipTexts(ScaleOps.synthEpub(col("doc_id")), ".xhtml")
+      val z = EpubFunctions.zip_texts(EpubFunctions.synth_epub(col("doc_id")), ".xhtml")
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), z.as("z"))
         .select(col("doc_id"),
           posexplode(col("z.texts")).as(Seq("chapter_idx", "t")))
         .select(col("doc_id"),
           col("chapter_idx").cast(LongType).as("chapter_idx"),
-          ScaleOps.htmlText(col("t.text")).as("h"))
+          HtmlFunctions.html_text(col("t.text")).as("h"))
         .select(col("doc_id"), col("chapter_idx"),
           col("h.title").as("title"), col("h.text").as("text"))
         .orderBy("doc_id", "chapter_idx")
@@ -2684,7 +2695,7 @@ object QueriesScale {
   // -------------------------------------- WebDataset sample assembly
   private val webdatasetPairsQ = Q(
     (s, dir) => {
-      val t = ScaleOps.tarMembers(ScaleOps.synthTar(col("doc_id")))
+      val t = TarFunctions.tar_members(TarFunctions.synth_tar(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), t.as("t"))
         .select(col("doc_id"), explode(col("t.members")).as("m"))
@@ -2732,7 +2743,7 @@ object QueriesScale {
   // Per-row, zero shuffle until the explode.
   private val pdfTextQ = Q(
     (s, dir) => {
-      val d = ScaleOps.pdfText(ScaleOps.synthPdf(col("doc_id")))
+      val d = PdfFunctions.pdf_text(PdfFunctions.synth_pdf(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"),
@@ -2776,9 +2787,9 @@ object QueriesScale {
     (s, dir) => {
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), explode(array(
-          ScaleOps.synthUrl(col("doc_id"), 0),
-          ScaleOps.synthUrl(col("doc_id"), 1))).as("url"))
-        .select(col("doc_id"), ScaleOps.urlCanonical(col("url")).as("canonical"))
+          UrlFunctions.synth_url(col("doc_id"), 0),
+          UrlFunctions.synth_url(col("doc_id"), 1))).as("url"))
+        .select(col("doc_id"), UrlFunctions.url_canonical(col("url")).as("canonical"))
         .groupBy("canonical")
         .agg(count(lit(1)).as("n_spellings"),
           min(col("doc_id")).as("first_doc"))
@@ -2805,7 +2816,7 @@ object QueriesScale {
   // in closed form. Per-row, zero shuffle.
   private val mainContentQ = Q(
     (s, dir) => {
-      val m = ScaleOps.mainContent(ScaleOps.synthMainHtml(col("doc_id")))
+      val m = HtmlFunctions.main_content(HtmlFunctions.synth_main_html(col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), m.as("m"))
         .select(col("doc_id"), col("m.text").as("text"),
@@ -2843,7 +2854,7 @@ object QueriesScale {
   // paragraph lines in closed form. Per-row, zero shuffle.
   private val docxTextQ = Q(
     (s, dir) => {
-      val d = ScaleOps.docxText(ScaleOps.synthDocx(col("doc_id")))
+      val d = DocxFunctions.docx_text(DocxFunctions.synth_docx(col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"),
@@ -2885,7 +2896,7 @@ object QueriesScale {
   // header across lines. Per-row, zero shuffle until the explode.
   private val emlMessageQ = Q(
     (s, dir) => {
-      val d = ScaleOps.emlMessage(ScaleOps.synthEml(col("doc_id")))
+      val d = EmlFunctions.eml_message(EmlFunctions.synth_eml(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"),
@@ -2975,7 +2986,7 @@ object QueriesScale {
   /** Dump XML (already decoded) -> per-page stripped articles. */
   private def wikiPagesToArticles(xml: org.apache.spark.sql.Column,
       s: SparkSession, dir: String) = {
-    val d = ScaleOps.mediawikiPages(xml)
+    val d = WikiFunctions.mediawiki_pages(xml)
     Tables.documentSeeds(s, dir)
       .select(col("doc_id"), d.as("d"))
       .select(col("doc_id"),
@@ -2985,7 +2996,7 @@ object QueriesScale {
         col("p.redirect_to").as("redirect_to"),
         col("p.timestamp").as("timestamp"),
         when(col("p.redirect_to").isNotNull, lit(""))
-          .otherwise(ScaleOps.wikitextStrip(col("p.text"))).as("text"))
+          .otherwise(WikiFunctions.wikitext_strip(col("p.text"))).as("text"))
       .orderBy("doc_id", "page_idx")
   }
 
@@ -3001,7 +3012,7 @@ object QueriesScale {
     (s, dir) => {
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"),
-          ScaleOps.bzip2Text(ScaleOps.synthBzip2(col("doc_id"))).as("text"))
+          Bzip2Functions.bzip2_text(Bzip2Functions.synth_bzip2(col("doc_id"))).as("text"))
         .orderBy("doc_id")
     },
     Some(
@@ -3028,12 +3039,12 @@ object QueriesScale {
   // ANY layer flips the hash).
   private val wikiDumpBz2Q = Q(
     (s, dir) => wikiPagesToArticles(
-      ScaleOps.bzip2Text(ScaleOps.synthWikiDumpBz2(col("doc_id"))), s, dir),
+      Bzip2Functions.bzip2_text(Bzip2Functions.synth_wiki_dump_bz2(col("doc_id"))), s, dir),
     Some(wikiArticlesOracle))
 
   private val wikiArticlesQ = Q(
     (s, dir) => wikiPagesToArticles(
-      ScaleOps.synthWikiDump(col("doc_id")), s, dir),
+      WikiFunctions.synth_wiki_dump(col("doc_id")), s, dir),
     Some(wikiArticlesOracle))
 
   // ------------------------------------------- mbox → eml composition
@@ -3046,7 +3057,7 @@ object QueriesScale {
   // explode.
   private val mboxMessagesQ = Q(
     (s, dir) => {
-      val m = ScaleOps.mboxSplit(ScaleOps.synthMbox(col("doc_id")))
+      val m = EmlFunctions.mbox_split(EmlFunctions.synth_mbox(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), m.as("m"))
         .select(col("doc_id"),
@@ -3054,7 +3065,7 @@ object QueriesScale {
           posexplode(col("m.messages")).as(Seq("msg_idx", "msg")))
         .select(col("doc_id"), col("n_messages"),
           col("msg_idx").cast(LongType).as("msg_idx"),
-          ScaleOps.emlMessage(col("msg")).as("e"))
+          EmlFunctions.eml_message(col("msg")).as("e"))
         .select(col("doc_id"), col("n_messages"), col("msg_idx"),
           col("e.subject").as("subject"),
           col("e.n_parts").cast(LongType).as("n_parts"),
@@ -3093,7 +3104,7 @@ object QueriesScale {
     (s, dir) => {
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), posexplode(
-          ScaleOps.robotsSitemaps(ScaleOps.synthRobots(col("doc_id"))))
+          RobotsFunctions.robots_sitemaps(RobotsFunctions.synth_robots(col("doc_id"))))
           .as(Seq("sm_idx", "sitemap_url")))
         .select(col("doc_id"), col("sm_idx").cast(LongType).as("sm_idx"),
           col("sitemap_url"))
@@ -3122,7 +3133,7 @@ object QueriesScale {
     (s, dir) => {
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"),
-          ScaleOps.markdownText(ScaleOps.synthMarkdown(col("doc_id")))
+          MarkdownFunctions.markdown_text(MarkdownFunctions.synth_markdown(col("doc_id")))
             .as("text"))
         .orderBy("doc_id")
     },
@@ -3160,7 +3171,7 @@ object QueriesScale {
   // result text stays. Per-row, zero shuffle.
   private val rtfTextQ = Q(
     (s, dir) => {
-      val d = ScaleOps.rtfText(ScaleOps.synthRtf(col("doc_id")))
+      val d = RtfFunctions.rtf_text(RtfFunctions.synth_rtf(col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"), col("d.text").as("text"))
@@ -3194,7 +3205,7 @@ object QueriesScale {
   // leaking. Closed-form oracle; per-row, zero shuffle.
   private val odtTextQ = Q(
     (s, dir) => {
-      val d = ScaleOps.odtText(ScaleOps.synthOdt(col("doc_id")))
+      val d = OdtFunctions.odt_text(OdtFunctions.synth_odt(col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"),
@@ -3234,7 +3245,7 @@ object QueriesScale {
   // explode.
   private val pptxTextQ = Q(
     (s, dir) => {
-      val d = ScaleOps.pptxText(ScaleOps.synthPptx(col("doc_id")))
+      val d = PptxFunctions.pptx_text(PptxFunctions.synth_pptx(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"),
@@ -3267,7 +3278,7 @@ object QueriesScale {
   // the explode.
   private val xlsxCellsQ = Q(
     (s, dir) => {
-      val d = ScaleOps.xlsxCells(ScaleOps.synthXlsx(col("doc_id")))
+      val d = XlsxFunctions.xlsx_cells(XlsxFunctions.synth_xlsx(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"), explode(col("d.cells")).as("c"))
@@ -3310,7 +3321,7 @@ object QueriesScale {
   // the explode.
   private val sitemapUrlsQ = Q(
     (s, dir) => {
-      val d = ScaleOps.sitemapUrls(ScaleOps.synthSitemap(col("doc_id")))
+      val d = SitemapFunctions.sitemap_urls(SitemapFunctions.synth_sitemap(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"), col("d.kind").as("kind"),
@@ -3350,7 +3361,7 @@ object QueriesScale {
   // enclosure link. Per-row, zero shuffle until the explode.
   private val feedEntriesQ = Q(
     (s, dir) => {
-      val d = ScaleOps.feedEntries(ScaleOps.synthFeed(col("doc_id")))
+      val d = FeedFunctions.feed_entries(FeedFunctions.synth_feed(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"), col("d.format").as("format"),
@@ -3395,7 +3406,7 @@ object QueriesScale {
   // zero shuffle until the explode.
   private val opusPacketsQ = Q(
     (s, dir) => {
-      val o = ScaleOps.opusPackets(ScaleOps.synthOggOpus(col("doc_id")))
+      val o = OpusFunctions.opus_packets(OpusFunctions.synth_ogg_opus(col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), o.as("o"))
         .select(col("doc_id"),
@@ -3459,7 +3470,7 @@ object QueriesScale {
   // zero shuffle until the explode.
   private val mp4SamplesQ = Q(
     (s, dir) => {
-      val m = ScaleOps.mp4Samples(ScaleOps.synthMp4Samples(col("doc_id")))
+      val m = Mp4TrackFunctions.mp4_samples(Mp4TrackFunctions.synth_mp4_samples(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), m.as("m"))
         .select(col("doc_id"), posexplode(col("m.tracks")).as(Seq("trk", "t")))
@@ -3517,7 +3528,7 @@ object QueriesScale {
   // explode.
   private val mp4FragSamplesQ = Q(
     (s, dir) => {
-      val m = ScaleOps.mp4FragSamples(ScaleOps.synthMp4Frag(col("doc_id")))
+      val m = Mp4FragFunctions.mp4_frag_samples(Mp4FragFunctions.synth_mp4_frag(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), m.as("m"))
         .select(col("doc_id"), posexplode(col("m.tracks")).as(Seq("trk", "t")))
@@ -3582,7 +3593,7 @@ object QueriesScale {
   // until the explode.
   private val subtitleTextQ = Q(
     (s, dir) => {
-      val c = ScaleOps.subtitleCues(ScaleOps.synthSubtitle(col("doc_id")))
+      val c = SubtitleFunctions.subtitle_cues(SubtitleFunctions.synth_subtitle(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), c.as("c"))
         .select(col("doc_id"), col("c.format").as("format"),
@@ -3619,7 +3630,7 @@ object QueriesScale {
   // the oracle replays it with a generate_series list comprehension.
   private val subtitleFramePairingQ = Q(
     (s, dir) => {
-      val c = ScaleOps.subtitleCues(ScaleOps.synthSubtitle(col("doc_id")))
+      val c = SubtitleFunctions.subtitle_cues(SubtitleFunctions.synth_subtitle(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), c.as("c"),
           (lit(10L) + col("doc_id") % 20).as("nv"))
@@ -3662,8 +3673,8 @@ object QueriesScale {
       val w = lit(16L) * (lit(1L) + col("doc_id") % 2)
       val h = lit(16L)
       val frames = lit(3L) + col("doc_id") % 4
-      val v = ScaleOps.mp4MjpegFrames(
-        ScaleOps.synthMp4Mjpeg(w, h, frames, col("doc_id")), 2)
+      val v = Mp4TrackFunctions.mp4_mjpeg_frames(
+        Mp4TrackFunctions.synth_mp4_mjpeg(w, h, frames, col("doc_id")), 2)
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), v.as("v"))
         .select(col("doc_id"),
@@ -3719,7 +3730,7 @@ object QueriesScale {
   // shuffle.
   private val htmlTextQ = Q(
     (s, dir) => {
-      val h = ScaleOps.htmlText(ScaleOps.synthHtml(col("doc_id")))
+      val h = HtmlFunctions.html_text(HtmlFunctions.synth_html(col("doc_id")))
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), h.as("h"))
         .select(col("doc_id"),
@@ -3763,7 +3774,7 @@ object QueriesScale {
   // docs; the oracle replays extraction output in closed form and the
   // full md5-minhash machinery in SQL.
   private def crawlCorpus(s: SparkSession, dir: String): DataFrame = {
-    val w = ScaleOps.warcRecords(ScaleOps.synthWarcHtmlGz(col("doc_id")))
+    val w = WarcFunctions.warc_records(WarcFunctions.synth_warc_html_gz(col("doc_id")))
     Tables.documentSeeds(s, dir)
       .select(col("doc_id"), w.as("w"))
       .select(col("doc_id"), explode(col("w.records")).as("r"))
@@ -3772,7 +3783,7 @@ object QueriesScale {
       .select(col("doc_id"), col("body")
         .substr(locate("\r\n\r\n", col("body")) + 4, length(col("body")))
         .as("html"))
-      .select(col("doc_id"), ScaleOps.htmlText(col("html")).as("h"))
+      .select(col("doc_id"), HtmlFunctions.html_text(col("html")).as("h"))
       .select(col("doc_id"), col("h.text").as("text"))
   }
 
@@ -3839,7 +3850,7 @@ object QueriesScale {
   // Per-row, zero shuffle until the explode.
   private val warcRecordsQ = Q(
     (s, dir) => {
-      val w = ScaleOps.warcRecords(ScaleOps.synthWarcGz(col("doc_id")))
+      val w = WarcFunctions.warc_records(WarcFunctions.synth_warc_gz(col("doc_id")))
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), w.as("w"))
         .select(col("doc_id"),
@@ -3882,10 +3893,10 @@ object QueriesScale {
   // frames behind the tag (n_samples column). Per-row, zero shuffle.
   private val id3MetaQ = Q(
     (s, dir) => {
-      val payload = ScaleOps.synthMp3Id3(col("doc_id"))
+      val payload = Id3Functions.synth_mp3_id3(col("doc_id"))
       Tables.documentSeedsPlain(s, dir)
-        .select(col("doc_id"), ScaleOps.id3Meta(payload).as("m"),
-          ScaleOps.mp3Meta(payload).as("w"))
+        .select(col("doc_id"), Id3Functions.id3_meta(payload).as("m"),
+          Mp3Functions.mp3_meta(payload).as("w"))
         .select(col("doc_id"),
           col("m.version").cast(LongType).as("version"),
           col("m.title").as("title"),
@@ -3928,11 +3939,11 @@ object QueriesScale {
       val payload = when(col("doc_id") % 3 === 0,
           ScaleOps.synthWavPcm(ch, rate, 8, frames, col("doc_id")))
         .otherwise(ScaleOps.synthWavPcm(ch, rate, 16, frames, col("doc_id")))
-      val d = ScaleOps.pcmDecode(payload)
+      val d = PcmFunctions.pcm_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"), col("d"),
-          ScaleOps.pcmChannelStats(col("d")).as("st"))
+          PcmFunctions.pcm_channel_stats(col("d")).as("st"))
         .select(col("doc_id"), col("d"), col("st"),
           posexplode(col("st.sums")).as(Seq("channel", "amp_sum")))
         .select(col("doc_id"),
@@ -3997,13 +4008,13 @@ object QueriesScale {
       val rate = lit(8000L) + (col("doc_id") * 441) % 8000
       val frames = lit(50L) + col("doc_id") % 150
       val payload = when(col("doc_id") % 3 === 0,
-          ScaleOps.synthFlac(ch, rate, frames, col("doc_id"), bits = 8))
-        .otherwise(ScaleOps.synthFlac(ch, rate, frames, col("doc_id"), bits = 16))
-      val d = ScaleOps.pcmDecode(payload)
+          FlacSynthFunctions.synth_flac(ch, rate, frames, col("doc_id"), bits = 8))
+        .otherwise(FlacSynthFunctions.synth_flac(ch, rate, frames, col("doc_id"), bits = 16))
+      val d = PcmFunctions.pcm_decode(payload)
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"), col("d"),
-          ScaleOps.pcmChannelStats(col("d")).as("st"))
+          PcmFunctions.pcm_channel_stats(col("d")).as("st"))
         .select(col("doc_id"), col("d"), col("st"),
           posexplode(col("st.sums")).as(Seq("channel", "amp_sum")))
         .select(col("doc_id"),
@@ -4068,7 +4079,7 @@ object QueriesScale {
       val payload = when(col("doc_id") % 2 === 0,
           ScaleOps.synthY4m(w, h, frames, col("doc_id"), "mono"))
         .otherwise(ScaleOps.synthY4m(w, h, frames, col("doc_id"), "420jpeg"))
-      val v = ScaleOps.y4mFrameLuma(payload, 2)
+      val v = PcmFunctions.y4m_frame_luma(payload, 2)
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), v.as("v"))
         .select(col("doc_id"),
@@ -4124,13 +4135,13 @@ object QueriesScale {
         .when(col("doc_id") % 3 === 1,
           ScaleOps.synthWavPcm(ch, rate, 16, frames, col("doc_id")))
         .when(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 0,
-          ScaleOps.synthMp3Pcm(col("doc_id") * 5))
-        .otherwise(ScaleOps.synthOggVorbis(col("doc_id") * 5))
-      val d = ScaleOps.pcmDecode(payload)
+          Mp3PcmFunctions.synth_mp3_pcm(col("doc_id") * 5))
+        .otherwise(VorbisFunctions.synth_ogg_vorbis(col("doc_id") * 5))
+      val d = PcmFunctions.pcm_decode(payload)
       Tables.documentSeedsPlain(s, dir)
         .select(col("doc_id"), d.as("d"))
         .select(col("doc_id"), col("d"),
-          ScaleOps.pcmEnergyWindows(col("d"), 16).as("e"))
+          PcmEnergyFunctions.pcm_energy_windows(col("d"), 16).as("e"))
         .select(col("doc_id"),
           col("d.channels").cast(LongType).as("channels"),
           col("d.n_frames").cast(LongType).as("n_frames"),
@@ -4200,8 +4211,8 @@ object QueriesScale {
       val w = lit(16L) * (lit(1L) + col("doc_id") % 2)
       val h = lit(16L)
       val frames = lit(3L) + col("doc_id") % 4
-      val v = ScaleOps.aviMjpegFrames(
-        ScaleOps.synthAvi(w, h, frames, col("doc_id")), 2)
+      val v = AviFunctions.avi_mjpeg_frames(
+        AviFunctions.synth_avi(w, h, frames, col("doc_id")), 2)
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), v.as("v"))
         .select(col("doc_id"),
@@ -4256,8 +4267,8 @@ object QueriesScale {
       val w = lit(4L) + (col("doc_id") % 4) * 2
       val h = lit(4L) + (col("doc_id") % 3) * 2
       val frames = lit(2L) + col("doc_id") % 5
-      val v = ScaleOps.gifFrames(
-        ScaleOps.synthGifAnim(w, h, frames, col("doc_id")), 2)
+      val v = RasterFunctions.gif_frames(
+        RasterSynthFunctions.synth_gif_anim(w, h, frames, col("doc_id")), 2)
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), v.as("v"))
         .select(col("doc_id"),
@@ -4308,8 +4319,8 @@ object QueriesScale {
       val w = lit(16L) * (lit(1L) + col("doc_id") % 2)
       val h = lit(16L)
       val frames = lit(2L) + col("doc_id") % 4
-      val v = ScaleOps.webpAnimFrames(
-        ScaleOps.synthWebpAnim(w, h, frames, col("doc_id")), 2)
+      val v = WebpAnimFunctions.webp_anim_frames(
+        WebpAnimFunctions.synth_webp_anim(w, h, frames, col("doc_id")), 2)
       Tables.documentSeeds(s, dir)
         .select(col("doc_id"), v.as("v"))
         .select(col("doc_id"),
@@ -4374,7 +4385,7 @@ object QueriesScale {
     (s, dir) => {
       Tables.documents(s, dir)
         .filter(length(col("text")) > 0)
-        .withColumn("cuts", ScaleOps.cdcCuts(col("text"), cdcWindow, cdcMask))
+        .withColumn("cuts", TextExpressions.cdc_cuts(col("text"), cdcWindow, cdcMask))
         .withColumn("starts",
           concat(array(lit(1)), transform(col("cuts"), c => c + 1)))
         .withColumn("ends", concat(col("cuts"), array(length(col("text")))))
@@ -4452,7 +4463,7 @@ object QueriesScale {
           ScaleOps.synthWavHeader(ch, rate, bits, frames))
         .otherwise(ScaleOps.synthFlacHeader(ch, rate, bits, frames))
       Tables.documentSeedsPlain(s, dir)
-        .select(col("doc_id"), ScaleOps.audioMeta(payload).as("m"))
+        .select(col("doc_id"), MediaExpressions.audio_meta(payload).as("m"))
         .select(col("doc_id"), col("m.format").as("format"),
           col("m.channels").as("channels"),
           col("m.sample_rate").as("sample_rate"),
@@ -4484,10 +4495,10 @@ object QueriesScale {
       val rate = lit(8000L) + (col("doc_id") * 441) % 40000
       val frames = lit(1000L) + (col("doc_id") * 17) % 100000
       val payload = when(col("doc_id") % 2 === 0,
-          ScaleOps.synthOgg(ch, rate, frames, mode = 0))
-        .otherwise(ScaleOps.synthOgg(ch, rate, frames, mode = 1))
+          OggFunctions.synth_ogg(ch, rate, frames, mode = 0))
+        .otherwise(OggFunctions.synth_ogg(ch, rate, frames, mode = 1))
       Tables.documentSeedsPlain(s, dir)
-        .select(col("doc_id"), ScaleOps.oggMeta(payload).as("m"))
+        .select(col("doc_id"), OggFunctions.ogg_meta(payload).as("m"))
         .select(col("doc_id"), col("m.format").as("format"),
           col("m.channels").as("channels"),
           col("m.sample_rate").as("sample_rate"),
@@ -4517,14 +4528,14 @@ object QueriesScale {
       val srIdx = col("doc_id") % 3
       val frames = lit(5L) + col("doc_id") % 40
       val payload = when(col("doc_id") % 4 === 0,
-          ScaleOps.synthMp3(ch, srIdx, frames, mode = 0))
+          Mp3Functions.synth_mp3(ch, srIdx, frames, mode = 0))
         .when(col("doc_id") % 4 === 1,
-          ScaleOps.synthMp3(ch, srIdx, frames, mode = 1))
+          Mp3Functions.synth_mp3(ch, srIdx, frames, mode = 1))
         .when(col("doc_id") % 4 === 2,
-          ScaleOps.synthMp3(ch, srIdx, frames, mode = 2))
-        .otherwise(ScaleOps.synthMp3(ch, srIdx, frames, mode = 3))
+          Mp3Functions.synth_mp3(ch, srIdx, frames, mode = 2))
+        .otherwise(Mp3Functions.synth_mp3(ch, srIdx, frames, mode = 3))
       Tables.documentSeedsPlain(s, dir)
-        .select(col("doc_id"), ScaleOps.mp3Meta(payload).as("m"))
+        .select(col("doc_id"), Mp3Functions.mp3_meta(payload).as("m"))
         .select(col("doc_id"), col("m.format").as("format"),
           col("m.channels").as("channels"),
           col("m.sample_rate").as("sample_rate"),
@@ -4550,7 +4561,7 @@ object QueriesScale {
       val dur = (col("doc_id") * 997) % 10000000L
       val payload = ScaleOps.synthMp4Header(ts, dur, (col("doc_id") % 2).cast("int"))
       Tables.documentSeedsPlain(s, dir)
-        .select(col("doc_id"), ScaleOps.mp4Meta(payload).as("m"))
+        .select(col("doc_id"), MediaExpressions.mp4_meta(payload).as("m"))
         .select(col("doc_id"), col("m.brand").as("brand"),
           col("m.timescale").as("timescale"),
           col("m.duration").as("duration"))
@@ -4657,7 +4668,7 @@ object QueriesScale {
     val w = lit(18L) + (pairSeed % 3) * 9
     val t = Tables.documentSeeds(s, dir)
       .select(col("doc_id"),
-        ScaleOps.rasterDHash(ScaleOps.imageDecode(
+        RasterFunctions.raster_dhash(RasterFunctions.image_decode(
           ScaleOps.synthPpmKeyed(w, lit(16L), pairSeed))).as("dh"))
       .select(col("doc_id"),
         col("dh").bitwiseAND(lit(0xFFFFFFFFL)).as("lo"),
@@ -4773,11 +4784,11 @@ object QueriesScale {
       // single-row-group scan each container's decode ran as ONE task
       val docs = Tables.documentSeeds(s, dir)
       val avi = docs.select((col("doc_id") * 2).as("vid"),
-        ScaleOps.videoFrameDhashes(
-          ScaleOps.synthAvi(w, h, frames, col("doc_id")), 1).as("v"))
+        VideoDhashFunctions.video_frame_dhashes(
+          AviFunctions.synth_avi(w, h, frames, col("doc_id")), 1).as("v"))
       val mp4 = docs.select((col("doc_id") * 2 + 1).as("vid"),
-        ScaleOps.videoFrameDhashes(
-          ScaleOps.synthMp4Mjpeg(w, h, frames, col("doc_id")), 1).as("v"))
+        VideoDhashFunctions.video_frame_dhashes(
+          Mp4TrackFunctions.synth_mp4_mjpeg(w, h, frames, col("doc_id")), 1).as("v"))
       val pids = avi.unionAll(mp4)
         .select(col("vid"), posexplode(arrays_zip(col("v.frame_idx").as("fi"),
           col("v.dhash").as("dh"))).as(Seq("_p", "z")))
@@ -5091,7 +5102,7 @@ object QueriesScale {
   private def spanDedupPlan(s: SparkSession, dir: String,
       h: Column => Column): DataFrame = {
     val spans = Tables.documents(s, dir).select(col("doc_id"),
-        explode(ScaleOps.textShingles(col("text"), spanW)).as("span"))
+        explode(TextExpressions.word_shingles(col("text"), spanW)).as("span"))
       .select(col("doc_id"), h(col("span")).as("sh"))
     val counts = spans.groupBy("sh").agg(count(lit(1)).as("n_occ"))
     spans.join(counts.hint("shuffle_hash"), "sh")
@@ -5866,7 +5877,7 @@ object QueriesScale {
     (s, dir) => {
       val bi = Tables.documents(s, dir)
         .select(col("lang"),
-          explode(ScaleOps.textShingles(col("text"), k = 2)).as("bigram"))
+          explode(TextExpressions.word_shingles(col("text"), k = 2)).as("bigram"))
       val counted = bi.groupBy("lang", "bigram").agg(count(lit(1)).as("n"))
         .withColumn("salt", pmod(xxhash64(col("bigram")), lit(32L)))
       val saltW = Window.partitionBy("lang", "salt").orderBy(col("n").desc, col("bigram"))
@@ -5914,7 +5925,7 @@ object QueriesScale {
     (s, dir) => {
       val bi = Tables.documents(s, dir)
         .select(col("lang"),
-          explode(ScaleOps.textShingles(col("text"), k = 2)).as("bigram"))
+          explode(TextExpressions.word_shingles(col("text"), k = 2)).as("bigram"))
       val mg = udaf(new graft.functions.MisraGriesAgg(2048),
         org.apache.spark.sql.Encoders.STRING)
       val candidates = bi.groupBy("lang").agg(mg(col("bigram")).as("sketch"))
@@ -6703,7 +6714,7 @@ object QueriesScale {
   private val dupNgramQ = Q(
     (s, dir) => {
       val sh = dupedDocs(s, dir).select(col("doc_id"),
-        explode(array_distinct(ScaleOps.textShingles(col("text"), dupNgramK))).as("sh"))
+        explode(array_distinct(TextExpressions.word_shingles(col("text"), dupNgramK))).as("sh"))
       // df per shingle = docs containing it (rows are distinct per doc).
       // shuffle_hash: both sides share the shingle partitioning; a sort
       // for SMJ would order the whole exploded corpus for no benefit.
@@ -6740,7 +6751,7 @@ object QueriesScale {
     (s, dir) => {
       val sh = dupedDocs(s, dir).select(col("doc_id"),
         explode(array_distinct(transform(
-          ScaleOps.textShingles(col("text"), dupNgramK), x => xxhash64(x)))).as("sh"))
+          TextExpressions.word_shingles(col("text"), dupNgramK), x => xxhash64(x)))).as("sh"))
       val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
       sh.join(dfreq.hint("shuffle_hash"), Seq("sh"))
         .groupBy("doc_id")
@@ -6973,7 +6984,7 @@ object QueriesScale {
     (s, dir) => {
       val planes = ScaleOps.lshPlanes(dim = 64, tables = 1, bits = 16, seed = 7L)(0)
       val projCols = planes.zipWithIndex.map { case (p, i) =>
-        ScaleOps.dotD(col("embedding"), typedlit(p)).as(f"p_$i%02d")
+        VectorExpressions.dot_f(col("embedding"), typedlit(p)).as(f"p_$i%02d")
       }
       Tables.embeddings(s, dir)
         .select(col("vec_id") +: projCols: _*)
@@ -7007,7 +7018,7 @@ object QueriesScale {
   // an empty doc has no explode/oracle counterpart.
   private val charEntropyQ = Q(
     (s, dir) => {
-      val e = org.apache.spark.sql.graftnative.TextExpressions
+      val e = TextExpressions
         .char_entropy(col("text"))
       Tables.documents(s, dir)
         .filter(length(col("text")) > 0)

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.ScaleOps
+import org.apache.spark.sql.graftnative.{JpegSynthFunctions, RasterFunctions,
+  RasterSynthFunctions, TiffFunctions, Vp8SynthFunctions, WebpSynthFunctions}
 
 /** Throughput probe for the compressed-raster decode path (PNG inflate +
   * unfilter, GIF LZW): synthesize-and-decode `SPARK_GRAFT_RASTER_DOCS`
@@ -21,8 +22,8 @@ object RasterStress {
     val spark = GraftSession.local(cpus)
     val ids = spark.range(0, nDocs).select(col("id"))
     // warm-up: codegen + classloading outside the timed runs
-    ids.limit(1000).select(ScaleOps.rasterChannelSums(ScaleOps.imageDecode(
-      ScaleOps.synthPng(lit(dim), lit(dim), col("id"), 3))).as("s"))
+    ids.limit(1000).select(RasterFunctions.raster_channel_sums(RasterFunctions.image_decode(
+      RasterSynthFunctions.synth_png(lit(dim), lit(dim), col("id"), 3))).as("s"))
       .agg(sum(element_at(col("s"), 1))).head()
     val rawMb = nDocs * dim * dim * 3 / 1e6
     val fields = collection.mutable.ArrayBuffer(
@@ -30,36 +31,36 @@ object RasterStress {
       f""""raster_mb":$rawMb%.1f""")
     Seq(
       "png" -> ((w: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column)
-        => ScaleOps.synthPng(w, w, s, 3)),
+        => RasterSynthFunctions.synth_png(w, w, s, 3)),
       "gif" -> ((w: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column)
-        => ScaleOps.synthGif(w, w, s)),
+        => RasterSynthFunctions.synth_gif(w, w, s)),
       // 4:2:0 YCbCr — the dominant web JPEG shape (dim must stay a
       // multiple of 16 for the fixture's exactness contract)
       "jpeg" -> ((w: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column)
-        => ScaleOps.synthJpeg(w, w, s, mode = 1)),
+        => JpegSynthFunctions.synth_jpeg(w, w, s, mode = 1)),
       "webp" -> ((w: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column)
-        => ScaleOps.synthWebpL(w, w, s)),
+        => WebpSynthFunctions.synth_webpl(w, w, s)),
       // round-11 lanes: progressive JPEG (multi-scan coefficient
       // accumulation) and predictor+meta-Huffman WebP
       "jpeg_prog" -> ((w: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column)
-        => ScaleOps.synthJpeg(w, w, s, mode = 4)),
+        => JpegSynthFunctions.synth_jpeg(w, w, s, mode = 4)),
       "webp_pred" -> ((w: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column)
-        => ScaleOps.synthWebpLPred(w, w, s)),
+        => WebpSynthFunctions.synth_webpl_pred(w, w, s)),
       // lossy VP8 key frames, both fixture shapes (B_PRED and 16x16/Y2)
       "vp8" -> ((w: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column)
-        => when(s % 2 === 0, ScaleOps.synthVp8(w, w, s, mode = 0))
-          .otherwise(ScaleOps.synthVp8(w, w, s, mode = 1))),
+        => when(s % 2 === 0, Vp8SynthFunctions.synth_vp8(w, w, s, mode = 0))
+          .otherwise(Vp8SynthFunctions.synth_vp8(w, w, s, mode = 1))),
       // baseline TIFF, PackBits RGB (the compressed path)
       "tiff" -> ((w: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column)
-        => ScaleOps.synthTiff(w, w, s, 3)),
+        => TiffFunctions.synth_tiff(w, w, s, 3)),
       // round-12 TIFF: LZW + horizontal predictor RGB — the classic
       // scanner output, pricing the real §13 dictionary decode
       "tiff_lzw" -> ((w: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column)
-        => ScaleOps.synthTiff(w, w, s, 5))
+        => TiffFunctions.synth_tiff(w, w, s, 5))
     ).foreach { case (fmt, synth) =>
       val t0 = System.nanoTime()
       val r = ids
-        .select(ScaleOps.rasterChannelSums(ScaleOps.imageDecode(
+        .select(RasterFunctions.raster_channel_sums(RasterFunctions.image_decode(
           synth(lit(dim), col("id")))).as("s"))
         .agg(sum(element_at(col("s"), 1)).as("r"),
           sum(element_at(col("s"), 2)).as("g"),

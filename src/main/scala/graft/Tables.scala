@@ -53,27 +53,42 @@ object Tables {
     * extra AQE stage per scan (~0.3-0.5 s each) while most of those
     * scans feed a shuffle within milliseconds anyway. Fan out where the
     * map stage is the cost, never blanket.
+    *
+    * A failed size probe logs the path and the exception class and fans
+    * out: the safe fallback is parallel, not one silent task.
     */
   def fanOut(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
     val p = spark.sparkContext.defaultParallelism
     if (p <= 1) return df
-    // getContentSummary sums LEAF file bytes (one RPC, recursive), so a
-    // directory-layout parquet reports its real data size; the former
-    // getFileStatus returned the directory entry's own length (~0) for
-    // multi-file tables, which would mis-read a huge table as "one
-    // split" and add a full-input round-robin shuffle at exactly the
-    // scale where the fan-out must self-disable
     val bytes =
-      try {
-        val hp = new org.apache.hadoop.fs.Path(path)
-        hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getContentSummary(hp).getLength
-      } catch { case scala.util.control.NonFatal(_) => return df }
+      try inputBytes(spark, path)
+      catch { case scala.util.control.NonFatal(e) =>
+        // an unknown size must not pin the per-row work to one task:
+        // fan out as for any small input, and say so
+        log.warn(s"size probe of $path failed (${e.getClass.getName}); " +
+          s"fanning out to $p partitions")
+        0L
+      }
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
     val naturalSplits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
     if (naturalSplits < p) df.repartition(p) else df
   }
+
+  /** Bytes of every leaf file under `path`: the input-size probe behind
+    * [[fanOut]] and the stateful-stream partition count. One recursive
+    * `getContentSummary` RPC, so a directory-layout parquet reports its
+    * real data size; `getFileStatus` would return the directory entry's
+    * own length (~0) and mis-read a huge table as one split. Throws when
+    * the path cannot be read; each caller picks its logged fallback.
+    */
+  private[graft] def inputBytes(spark: SparkSession, path: String): Long = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(hp).getLength
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** doc_id seed frame for the per-row synth-decode lanes, fanned out
     * across cores: those lanes derive their entire payload from the seed

@@ -12,13 +12,19 @@ import java.nio.file.{Files, Paths}
   *    each key's formatted plan WITHOUT executing it, to `<outDir>/<key>.txt`
   *    (stdout when no outDir).
   *
+  * `all` as the key list means every key in [[SparkEntry.queries]], in
+  * name order: `TimeOne all <sfDir> plan <outDir>` dumps the whole
+  * registry, so two builds' plans can be diffed key by key.
+  *
   * Comma-separated keys run in sequence in ONE session — reproduces
   * cross-query interactions (broadcast/GC state) the per-key isolation of
   * a fresh JVM would hide. `SPARK_GRAFT_LOG` overrides the WARN log level.
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
-    val keys = args(0).split(",").map(_.trim).filter(_.nonEmpty)
+    val keys =
+      if (args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
+      else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val mode = args.drop(2)
     val spark = GraftSession.local(GraftSession.cpus)

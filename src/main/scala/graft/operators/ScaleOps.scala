@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftnative.{ImageDecode, ImageResizeNN,
+  PcmFunctions, TextExpressions, VectorExpressions}
 
 /** LLM-training-data pipeline operators (SURVEY §7.1 step 8 / BASELINE
   * north star): dedup, fingerprinting, text analysis, similarity search,
@@ -30,17 +32,6 @@ object ScaleOps {
         i => concat_ws(" ", slice(toks, i, lit(k)))))
       .otherwise(array().cast(ArrayType(StringType)))
 
-  /** Native word k-shingles straight from the text column — output
-    * identical to `shingles(tokens(text), k)` (equivalence pinned in
-    * ScaleOpsSpec) via a codegen'd one-pass byte scan
-    * ([[org.apache.spark.sql.graftnative.WordShingles]]). The HOF form
-    * above is kept as the executable spec; every hot path uses this one,
-    * because `transform`/`concat_ws`/`split` evaluate interpreted
-    * (CodegenFallback) and dominate signature-stage CPU.
-    */
-  def textShingles(text: Column, k: Int = 3): Column =
-    org.apache.spark.sql.graftnative.TextExpressions.word_shingles(text, k)
-
   /** One MinHash signature component: lexicographic min of md5 over salted
     * shingles. K independent salts → K-component signature, all computed
     * per-row (no shuffle).
@@ -52,7 +43,7 @@ object ScaleOps {
     * Per-row array form; see [[minhashSignatureTable]] for the bulk path.
     */
   def withMinhashSignature(df: DataFrame, textCol: String, k: Int = 8): DataFrame = {
-    val sh = textShingles(col(textCol))
+    val sh = TextExpressions.word_shingles(col(textCol))
     (1 to k).foldLeft(df.withColumn("_sh", sh)) { (d, i) =>
       d.withColumn(s"sig_$i", minhashComponent(col("_sh"), i))
     }.drop("_sh")
@@ -78,7 +69,7 @@ object ScaleOps {
     */
   def minhashSignatureTable(df: DataFrame, idCol: String, textCol: String, k: Int = 8): DataFrame = {
     val sh = df.select(col(idCol),
-      explode(textShingles(col(textCol))).as("_sh"))
+      explode(TextExpressions.word_shingles(col(textCol))).as("_sh"))
     val aggs = (1 to k).map { i =>
       val digest = md5(concat(lit(s"${(i + 1) / 2}|"), col("_sh")))
       val off = if (i % 2 == 1) 1 else 17
@@ -106,7 +97,7 @@ object ScaleOps {
         conv(substring(md5(concat(lit(s"${(i + 1) / 2}|"), x)), off, 15), 16, 10)
           .cast(LongType))).as(s"sig_$i")
     }
-    df.withColumn("_sh", textShingles(col(textCol)))
+    df.withColumn("_sh", TextExpressions.word_shingles(col(textCol)))
       .filter(size(col("_sh")) > 0)
       .select(col(idCol) +: sigs: _*)
   }
@@ -126,7 +117,7 @@ object ScaleOps {
   def minhashSignatureTableXx(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8): DataFrame = {
     val sh = df.select(col(idCol),
-      explode(textShingles(col(textCol))).as("_sh"))
+      explode(TextExpressions.word_shingles(col(textCol))).as("_sh"))
     val aggs = (1 to k).map(i => min(xxhash64(lit(i), col("_sh"))).as(s"sig_$i"))
     sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
@@ -144,7 +135,7 @@ object ScaleOps {
       k: Int = 8): DataFrame = {
     val sigs = (1 to k).map(i =>
       array_min(transform(col("_sh"), x => xxhash64(lit(i), x))).as(s"sig_$i"))
-    df.withColumn("_sh", textShingles(col(textCol)))
+    df.withColumn("_sh", TextExpressions.word_shingles(col(textCol)))
       .filter(size(col("_sh")) > 0)
       .select(col(idCol) +: sigs: _*)
   }
@@ -343,27 +334,18 @@ object ScaleOps {
     */
   val DriverCcEdgeCap: Long = 2L << 20
 
-  /** Exact double-precision dot product of two float vectors with a fixed
-    * left-to-right fold — deterministic across engines (see Queries
-    * scaladoc). Backed by the native codegen expression
-    * [[org.apache.spark.sql.graftnative.DotProductFloat]]; [[dotHof]] is
-    * the built-in-only formulation (bit-identical, slower).
-    */
-  def dotD(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftnative.VectorExpressions.dot_f(a, b)
-
   /** Higher-order-function dot product: same sequential fold semantics as
-    * [[dotD]], used to cross-check the native expression.
+    * `VectorExpressions.dot_f`, used to cross-check the native expression.
     */
   def dotHof(a: Column, b: Column): Column =
     aggregate(
       zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
       lit(0.0), (acc, x) => acc + x)
 
-  def l2norm(a: Column): Column = sqrt(dotD(a, a))
+  def l2norm(a: Column): Column = sqrt(VectorExpressions.dot_f(a, a))
 
   def cosine(a: Column, b: Column, na: Column, nb: Column): Column =
-    dotD(a, b) / (na * nb)
+    VectorExpressions.dot_f(a, b) / (na * nb)
 
   // ------------------------------------------------- LSH-bucketed ANN
 
@@ -381,7 +363,8 @@ object ScaleOps {
     val planes = lshPlanes(dim, tables, bits, seed)
     (0 until tables).map { t =>
       val planeBits = (0 until bits).map { p =>
-        when(dotD(emb, typedlit(planes(t)(p))) > 0, lit(1 << p)).otherwise(lit(0))
+        when(VectorExpressions.dot_f(emb, typedlit(planes(t)(p))) > 0, lit(1 << p))
+          .otherwise(lit(0))
       }
       planeBits.reduce(_ + _).as(s"bucket_$t")
     }
@@ -399,7 +382,7 @@ object ScaleOps {
   def lshBucketsFused(emb: Column, dim: Int, tables: Int = 4, bits: Int = 4,
       seed: Long = 42L): Column = {
     val flat = lshPlanes(dim, tables, bits, seed).flatten.flatMap(_.toSeq).toArray
-    org.apache.spark.sql.graftnative.VectorExpressions.lsh_buckets(
+    VectorExpressions.lsh_buckets(
       emb, flat, dim, tables, bits)
   }
 
@@ -458,7 +441,7 @@ object ScaleOps {
           col("n_words").cast(DoubleType))
       .withColumn("stopword_frac",
         stopwordCount(toks).cast(DoubleType) / col("n_words").cast(DoubleType))
-      .withColumn("_bi", textShingles(col(textCol), k = 2))
+      .withColumn("_bi", TextExpressions.word_shingles(col(textCol), k = 2))
       .withColumn("distinct_bigram_ratio",
         when(size(col("_bi")) > 0,
           size(array_distinct(col("_bi"))).cast(DoubleType) /
@@ -520,7 +503,7 @@ object ScaleOps {
       when(n === 0, lit(0.0))
         .otherwise(least(lit(1.0), cover.cast(DoubleType) / n.cast(DoubleType)))
     df.withColumn("_rep",
-        org.apache.spark.sql.graftnative.TextExpressions.ngram_repetition(col(textCol)))
+        TextExpressions.ngram_repetition(col(textCol)))
       .withColumn("top2_cover", col("_rep.top_a_cover"))
       .withColumn("top3_cover", col("_rep.top_b_cover"))
       .withColumn("dup5_cover", col("_rep.dup_cover"))
@@ -551,7 +534,7 @@ object ScaleOps {
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, idCol: String,
       textCol: String = "text", k: Int = 3,
       broadcastBenchmark: Boolean = true): DataFrame = {
-    def distinctShingles(c: Column) = array_distinct(textShingles(c, k))
+    def distinctShingles(c: Column) = array_distinct(TextExpressions.word_shingles(c, k))
     val benchSet0 = benchmark
       .select(explode(distinctShingles(col(textCol))).as("_bsh")).distinct()
     val benchSet = if (broadcastBenchmark) broadcast(benchSet0) else benchSet0
@@ -981,7 +964,7 @@ object ScaleOps {
   def withBigramLogProb(docs: DataFrame, idCol: String,
       textCol: String = "text", headSize: Int = 1024): DataFrame = {
     val bigrams = docs
-      .select(col(idCol), explode(textShingles(col(textCol), 2)).as("bg"))
+      .select(col(idCol), explode(TextExpressions.word_shingles(col(textCol), 2)).as("bg"))
       .withColumn("w1", split(col("bg"), " ").getItem(0))
       .withColumn("w2", split(col("bg"), " ").getItem(1))
     val bgFreq = bigrams.groupBy("bg").agg(count(lit(1)).as("_cnt"))
@@ -1025,7 +1008,7 @@ object ScaleOps {
   def withBigramLogProbXx(docs: DataFrame, idCol: String,
       textCol: String = "text", headSize: Int = 1024): DataFrame = {
     val bigrams = docs
-      .select(col(idCol), explode(textShingles(col(textCol), 2)).as("bg"))
+      .select(col(idCol), explode(TextExpressions.word_shingles(col(textCol), 2)).as("bg"))
       .withColumn("hb", xxhash64(col("bg")))
       .withColumn("h1", xxhash64(split(col("bg"), " ").getItem(0)))
       .withColumn("h2", xxhash64(split(col("bg"), " ").getItem(1)))
@@ -1068,7 +1051,7 @@ object ScaleOps {
     * so concat cannot annihilate the unigrams.
     */
   def hashedNgramFeats(text: Column): Column =
-    concat(textShingles(text, 1), textShingles(text, 2))
+    concat(TextExpressions.word_shingles(text, 1), TextExpressions.word_shingles(text, 2))
 
   /** md5-derived feature bucket in [0, nBuckets): the fixed hash both
     * engines share (oracle-mirrorable like every md5 key in this repo);
@@ -1338,24 +1321,18 @@ object ScaleOps {
       lit(7L),
       (acc, c) => (acc * lit(31L) + c) % lit(2147483647L))
 
-  /** Native twin of [[rollingHash]] (equivalence pinned in ScaleOpsSpec):
-    * one codegen'd code-point walk instead of a per-character string
-    * array folded through interpreted lambdas — the fingerprint hot path.
-    */
-  def rollingHashNative(text: Column): Column =
-    org.apache.spark.sql.graftnative.TextExpressions.rolling_hash(text)
-
   // --------------------------------------------------- multimodal columns
 
   /** Multimodal column plumbing: the engine treats image/audio/video as
     * opaque binary + typed metadata. Container METADATA decode is real —
-    * [[imageMeta]] parses format/width/height from PNG/JPEG/GIF header
-    * bytes natively, no codec needed — and so is pixel/sample decode for
-    * the codec-free-payload formats: [[imageDecode]] inverts PPM/PGM/BMP
-    * rasters (and, since round 9, inflates + unfilters real PNG and
-    * LZW-decodes real GIF), [[pcmDecode]] inverts WAV linear PCM, and
-    * [[y4mFrameLuma]] walks Y4M frames — all natively, no image/audio
-    * library. [[decodeBatches]] feeds those real rasters through the
+    * `MediaExpressions.image_meta` parses format/width/height from
+    * PNG/JPEG/GIF header bytes natively, no codec needed — and so is
+    * pixel/sample decode for the codec-free-payload formats:
+    * `RasterFunctions.image_decode` inverts PPM/PGM/BMP rasters (and,
+    * since round 9, inflates + unfilters real PNG and LZW-decodes real
+    * GIF), `PcmFunctions.pcm_decode` inverts WAV linear PCM, and
+    * `PcmFunctions.y4m_frame_luma` walks Y4M frames — all natively, no
+    * image/audio library. [[decodeBatches]] feeds those real rasters through the
     * mapPartitions batch path; only compressed codecs with no pure-JDK
     * path (JPEG, H.264 — no libs in this container) fall back to a
     * clearly-marked deterministic byte-sampling featurizer.
@@ -1366,16 +1343,6 @@ object ScaleOps {
       .withColumn("media_meta", struct(
         lit("application/octet-stream").as("mime"),
         octet_length(col("payload")).as("size_bytes")))
-
-  /** Native image-container metadata `struct(format, width, height)`
-    * parsed from the payload's header bytes — the real decode step of
-    * the metadata stage (see
-    * [[org.apache.spark.sql.graftnative.ImageMeta]]): one codegen'd
-    * bounded byte walk per row, zero shuffle, u32-safe longs, unknown or
-    * corrupt containers yield `('unknown', NULL, NULL)`.
-    */
-  def imageMeta(payload: Column): Column =
-    org.apache.spark.sql.graftnative.MediaExpressions.image_meta(payload)
 
   // Fixture encoders for the header parser: build VALID container headers
   // from (width, height) columns with pure byte arithmetic, so the
@@ -1446,26 +1413,6 @@ object ScaleOps {
   // bottom-up row order, BGR sample order, and 4-byte row padding —
   // end-to-end on every row.
 
-  /** Native raster decode `struct(format, width, height, channels,
-    * pixels)` — normalized row-major top-down RGB regardless of source
-    * container (see [[org.apache.spark.sql.graftnative.ImageDecode]]).
-    */
-  def imageDecode(payload: Column): Column =
-    org.apache.spark.sql.graftnative.RasterFunctions.image_decode(payload)
-
-  /** Nearest-neighbor resize of a decoded raster to fixed target dims
-    * (see [[org.apache.spark.sql.graftnative.ImageResizeNN]]).
-    */
-  def imageResizeNN(raster: Column, targetW: Int, targetH: Int): Column =
-    org.apache.spark.sql.graftnative.RasterFunctions
-      .image_resize_nn(raster, targetW, targetH)
-
-  /** Per-channel integer sample sums of a decoded raster
-    * (see [[org.apache.spark.sql.graftnative.RasterChannelSums]]).
-    */
-  def rasterChannelSums(raster: Column): Column =
-    org.apache.spark.sql.graftnative.RasterFunctions.raster_channel_sums(raster)
-
   /** Deterministic fixture sample: the byte at logical row-major RGB
     * index `idx` of image `seed` is `(seed·31 + idx·7) mod 256` — the
     * generative formula the oracle mirrors.
@@ -1528,618 +1475,6 @@ object ScaleOps {
       body)
   }
 
-  /** Complete valid PNG fixture from `(w, h, seed)` — real Deflater
-    * zlib, per-row filter cycling through all five spec filters, CRC'd
-    * chunks (see [[org.apache.spark.sql.graftnative.SynthPng]]). The
-    * pixel formula is the shared [[pixByte]] one the oracles replay.
-    */
-  /** Extended PNG fixture: `variant` 0 = RGBA, 1 = palette, 2 =
-    * gray+alpha, 3 = RGB Adam7, 4 = RGBA Adam7
-    * (see [[org.apache.spark.sql.graftnative.SynthPngExt]]).
-    */
-  def synthPngExt(w: Column, h: Column, seed: Column, variant: Int): Column =
-    org.apache.spark.sql.graftnative.RasterSynthFunctions
-      .synth_png_ext(w, h, seed, variant)
-
-  def synthPng(w: Column, h: Column, seed: Column, channels: Int = 3): Column =
-    org.apache.spark.sql.graftnative.RasterSynthFunctions
-      .synth_png(w, h, seed, channels)
-
-  /** Complete valid GIF89a fixture from `(w, h, seed)` — real LZW
-    * compression, 256-entry three-ramp palette
-    * (see [[org.apache.spark.sql.graftnative.SynthGif]]).
-    */
-  def synthGif(w: Column, h: Column, seed: Column): Column =
-    org.apache.spark.sql.graftnative.RasterSynthFunctions.synth_gif(w, h, seed)
-
-  /** Complete valid lossless WebP (VP8L) fixture from `(w, h, seed)` —
-    * real Huffman construction over the subtract-green channel
-    * histograms, real code-length coding, LSB-first VP8L bitstream
-    * (see [[org.apache.spark.sql.graftnative.SynthWebpL]]).
-    */
-  def synthWebpL(w: Column, h: Column, seed: Column): Column =
-    org.apache.spark.sql.graftnative.WebpSynthFunctions.synth_webpl(w, h, seed)
-
-  /** Predictor-transform + meta-Huffman lossless WebP fixture from
-    * `(w, h, seed)` — same generative pixels as [[synthWebpL]], stream
-    * built through the predictor/entropy-image machinery
-    * (see [[org.apache.spark.sql.graftnative.SynthWebpLPred]]).
-    */
-  def synthWebpLPred(w: Column, h: Column, seed: Column): Column =
-    org.apache.spark.sql.graftnative.WebpSynthFunctions.synth_webpl_pred(w, h, seed)
-
-  /** Color-indexing (palette) lossless WebP fixture from `(w, h, seed)` —
-    * delta-coded palette sub-image + pixel-bundled packed indices
-    * (see [[org.apache.spark.sql.graftnative.SynthWebpLPalette]]).
-    */
-  def synthWebpLPalette(w: Column, h: Column, seed: Column): Column =
-    org.apache.spark.sql.graftnative.WebpSynthFunctions.synth_webpl_palette(w, h, seed)
-
-  /** Complete valid baseline JFIF JPEG fixture from `(w, h, seed)` —
-    * real Annex-K Huffman entropy coding, DC-diff + run-length AC
-    * coding, byte stuffing; content chosen where the DCT round trip is
-    * exact so the decode is oracle-replayable
-    * (see [[org.apache.spark.sql.graftnative.SynthJpeg]]).
-    * `mode`: 0 = grayscale, 1 = YCbCr 4:2:0, 2 = YCbCr 4:4:4.
-    */
-  def synthJpeg(w: Column, h: Column, seed: Column, mode: Int): Column =
-    org.apache.spark.sql.graftnative.JpegSynthFunctions.synth_jpeg(w, h, seed, mode)
-
-  /** Complete valid LOSSY WebP fixture (one VP8 key frame, RFC 6386)
-    * from `(w, h, seed)` — real boolean arithmetic coding of modes and
-    * DCT tokens; content chosen where the transform is exact (constant
-    * 4×4 blocks) so the decode is oracle-replayable
-    * (see [[org.apache.spark.sql.graftnative.SynthVp8]]).
-    * `mode`: 0 = all-B_PRED, 1 = 16×16 modes through the Y2/WHT path.
-    */
-  def synthVp8(w: Column, h: Column, seed: Column, mode: Int): Column =
-    org.apache.spark.sql.graftnative.Vp8SynthFunctions.synth_vp8(w, h, seed, mode)
-
-  /** Ogg page-walk metadata (RFC 3533) with Vorbis/Opus identification
-    * headers and REAL page-CRC verification
-    * (see [[org.apache.spark.sql.graftnative.OggMeta]]).
-    */
-  def oggMeta(payload: Column): Column =
-    org.apache.spark.sql.graftnative.OggFunctions.ogg_meta(payload)
-
-  /** Complete valid two-page Ogg stream from `(ch, rate, frames)`;
-    * `mode`: 0 = Vorbis, 1 = Opus
-    * (see [[org.apache.spark.sql.graftnative.OggSynth]]).
-    */
-  def synthOgg(ch: Column, rate: Column, frames: Column, mode: Int): Column =
-    org.apache.spark.sql.graftnative.OggFunctions.synth_ogg(ch, rate, frames, mode)
-
-  /** Animated-WebP fixture of real lossy VP8 key frames
-    * (see [[org.apache.spark.sql.graftnative.WebpAnimSynth]]).
-    */
-  def synthWebpAnim(w: Column, h: Column, frames: Column, seed: Column): Column =
-    org.apache.spark.sql.graftnative.WebpAnimFunctions
-      .synth_webp_anim(w, h, frames, seed)
-
-  /** Stride-sampled animated-WebP frame statistics — nested VP8/VP8L
-    * chunks decoded through the still-image codecs
-    * (see [[org.apache.spark.sql.graftnative.WebpAnimFrames]]).
-    */
-  def webpAnimFrames(payload: Column, stride: Int): Column =
-    org.apache.spark.sql.graftnative.WebpAnimFunctions
-      .webp_anim_frames(payload, stride)
-
-  /** Fixed-window energy/peak features over decoded PCM — the
-    * featurize-after-decode step
-    * (see [[org.apache.spark.sql.graftnative.PcmEnergyWindows]]).
-    */
-  def pcmEnergyWindows(pcm: Column, windowFrames: Int): Column =
-    org.apache.spark.sql.graftnative.PcmEnergyFunctions
-      .pcm_energy_windows(pcm, windowFrames)
-
-  /** EXIF orientation (1-8) from a JPEG's APP1 segment — null when
-    * absent (see [[org.apache.spark.sql.graftnative.ExifOrientation]]).
-    */
-  def exifOrientation(payload: Column): Column =
-    org.apache.spark.sql.graftnative.ExifFunctions.exif_orientation(payload)
-
-  /** Apply an EXIF orientation to a decoded raster: exact flip /
-    * rotation index remaps, dims swap for 5-8
-    * (see [[org.apache.spark.sql.graftnative.RasterOrient]]).
-    */
-  def rasterOrient(raster: Column, orientation: Column): Column =
-    org.apache.spark.sql.graftnative.ExifFunctions.raster_orient(raster, orientation)
-
-  /** EXIF metadata struct (make/model/datetime_original/orientation/
-    * gps_lat/gps_lon) from a JPEG's APP1 segment
-    * (see [[org.apache.spark.sql.graftnative.ExifMeta]]).
-    */
-  def exifMeta(payload: Column): Column =
-    org.apache.spark.sql.graftnative.ExifFunctions.exif_meta(payload)
-
-  /** Baseline JPEG fixture with a FULL APP1 Exif block (IFD0 + Exif
-    * sub-IFD + GPS IFD, both byte orders by seed parity)
-    * (see [[org.apache.spark.sql.graftnative.ExifMetaSynth]]).
-    */
-  def synthJpegExifMeta(w: Column, h: Column, seed: Column, mode: Int): Column =
-    org.apache.spark.sql.graftnative.ExifFunctions.synth_jpeg_exif_meta(w, h, seed, mode)
-
-  /** Full MPEG-1 Layer III PCM decode
-    * (see [[org.apache.spark.sql.graftnative.Mp3L3Codec]]).
-    */
-  def mp3Decode(payload: Column): Column =
-    org.apache.spark.sql.graftnative.Mp3PcmFunctions.mp3_decode(payload)
-
-  /** Formula-spectrum Layer III fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.Mp3PcmSynth]]).
-    */
-  def synthMp3Pcm(doc: Column): Column =
-    org.apache.spark.sql.graftnative.Mp3PcmFunctions.synth_mp3_pcm(doc)
-
-  /** ID3v2 text-frame metadata (title/artist/album/year, v2.3 + v2.4)
-    * (see [[org.apache.spark.sql.graftnative.Id3Meta]]).
-    */
-  def id3Meta(payload: Column): Column =
-    org.apache.spark.sql.graftnative.Id3Functions.id3_meta(payload)
-
-  /** Full Ogg Vorbis PCM decode
-    * (see [[org.apache.spark.sql.graftnative.VorbisCodec]]).
-    */
-  def vorbisDecode(payload: Column): Column =
-    org.apache.spark.sql.graftnative.VorbisFunctions.vorbis_decode(payload)
-
-  /** Formula-spectrum Ogg Vorbis fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.VorbisSynth]]).
-    */
-  def synthOggVorbis(doc: Column): Column =
-    org.apache.spark.sql.graftnative.VorbisFunctions.synth_ogg_vorbis(doc)
-
-  /** ID3v2-tagged Layer III fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.Id3Synth]]).
-    */
-  def synthMp3Id3(doc: Column): Column =
-    org.apache.spark.sql.graftnative.Id3Functions.synth_mp3_id3(doc)
-
-  /** WARC records from concatenated gzip members (CRC-32/ISIZE
-    * verified) (see [[org.apache.spark.sql.graftnative.WarcRecords]]).
-    */
-  def warcRecords(payload: Column): Column =
-    org.apache.spark.sql.graftnative.WarcFunctions.warc_records(payload)
-
-  /** WET-style WARC-in-gzip fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.WarcSynth]]).
-    */
-  def synthWarcGz(doc: Column): Column =
-    org.apache.spark.sql.graftnative.WarcFunctions.synth_warc_gz(doc)
-
-  /** Crawl-shaped WARC-in-gzip fixture: HTTP response records carrying
-    * dup-group HTML pages (see
-    * [[org.apache.spark.sql.graftnative.WarcSynth.warcHtmlGzBytes]]).
-    */
-  def synthWarcHtmlGz(doc: Column): Column =
-    org.apache.spark.sql.graftnative.WarcFunctions.synth_warc_html_gz(doc)
-
-  /** HTML visible-text extraction with fixed engine-agnostic rules
-    * (see [[org.apache.spark.sql.graftnative.HtmlTextExtract]]).
-    */
-  def htmlText(payload: Column): Column =
-    org.apache.spark.sql.graftnative.HtmlFunctions.html_text(payload)
-
-  /** Formula-text HTML fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.HtmlSynth]]).
-    */
-  def synthHtml(doc: Column): Column =
-    org.apache.spark.sql.graftnative.HtmlFunctions.synth_html(doc)
-
-  /** jusText-style main-content (boilerplate) extraction
-    * (see [[org.apache.spark.sql.graftnative.MainContent]]).
-    */
-  def mainContent(payload: Column): Column =
-    org.apache.spark.sql.graftnative.HtmlFunctions.main_content(payload)
-
-  /** Chrome-laden page fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.MainSynth]]).
-    */
-  def synthMainHtml(doc: Column): Column =
-    org.apache.spark.sql.graftnative.HtmlFunctions.synth_main_html(doc)
-
-  /** MP4 per-track sample tables (stsd/stsz/stts walk)
-    * (see [[org.apache.spark.sql.graftnative.Mp4Tracks]]).
-    */
-  def mp4Tracks(payload: Column): Column =
-    org.apache.spark.sql.graftnative.Mp4TrackFunctions.mp4_tracks(payload)
-
-  /** ftyp+moov fixture with real sample tables from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.Mp4TracksSynth]]).
-    */
-  def synthMp4Tracks(doc: Column): Column =
-    org.apache.spark.sql.graftnative.Mp4TrackFunctions.synth_mp4_tracks(doc)
-
-  /** MP4 per-sample byte ranges: stsc/stco/co64 resolved against stsz
-    * (see [[org.apache.spark.sql.graftnative.Mp4Samples]]).
-    */
-  def mp4Samples(payload: Column): Column =
-    org.apache.spark.sql.graftnative.Mp4TrackFunctions.mp4_samples(payload)
-
-  /** Chunk-layout MP4 fixture with a real mdat from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.Mp4SamplesSynth]]).
-    */
-  def synthMp4Samples(doc: Column): Column =
-    org.apache.spark.sql.graftnative.Mp4TrackFunctions.synth_mp4_samples(doc)
-
-  /** ZIP entry extraction with decode-proof digests
-    * (see [[org.apache.spark.sql.graftnative.ZipEntries]]).
-    */
-  def zipEntries(payload: Column): Column =
-    org.apache.spark.sql.graftnative.ZipFunctions.zip_entries(payload)
-
-  /** Two-method ZIP fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.ZipSynth]]).
-    */
-  def synthZip(doc: Column): Column =
-    org.apache.spark.sql.graftnative.ZipFunctions.synth_zip(doc)
-
-  /** RFC 9309 robots.txt allow/deny decision
-    * (see [[org.apache.spark.sql.graftnative.RobotsAllowed]]).
-    */
-  def robotsAllowed(robots: Column, agent: Column, path: Column): Column =
-    org.apache.spark.sql.graftnative.RobotsFunctions
-      .robots_allowed(robots, agent, path)
-
-  /** Two-group robots.txt fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.RobotsSynth]]).
-    */
-  def synthRobots(doc: Column): Column =
-    org.apache.spark.sql.graftnative.RobotsFunctions.synth_robots(doc)
-
-  /** Concatenated-gzip shard to UTF-8 text
-    * (see [[org.apache.spark.sql.graftnative.GzipText]]).
-    */
-  def gzipText(payload: Column): Column =
-    org.apache.spark.sql.graftnative.JsonlFunctions.gzip_text(payload)
-
-  /** jsonl.gz corpus-shard fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.JsonlSynth]]).
-    */
-  def synthJsonlGz(doc: Column): Column =
-    org.apache.spark.sql.graftnative.JsonlFunctions.synth_jsonl_gz(doc)
-
-  /** Decoded text members of a ZIP by name suffix
-    * (see [[org.apache.spark.sql.graftnative.ZipTexts]]).
-    */
-  def zipTexts(payload: Column, suffix: String): Column =
-    org.apache.spark.sql.graftnative.EpubFunctions.zip_texts(payload, suffix)
-
-  /** OCF/EPUB-shaped fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.EpubSynth]]).
-    */
-  def synthEpub(doc: Column): Column =
-    org.apache.spark.sql.graftnative.EpubFunctions.synth_epub(doc)
-
-  /** TAR/WebDataset member extraction (ustar + GNU longname + PAX)
-    * (see [[org.apache.spark.sql.graftnative.TarMembers]]).
-    */
-  def tarMembers(payload: Column): Column =
-    org.apache.spark.sql.graftnative.TarFunctions.tar_members(payload)
-
-  /** WebDataset-style tar fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.TarSynth]]).
-    */
-  def synthTar(doc: Column): Column =
-    org.apache.spark.sql.graftnative.TarFunctions.synth_tar(doc)
-
-  /** Multimodal WebDataset fixture (real JPEG members) from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.TarWdsSynth]]).
-    */
-  def synthTarWds(doc: Column): Column =
-    org.apache.spark.sql.graftnative.TarFunctions.synth_tar_wds(doc)
-
-  /** PDF page-text extraction (classic xref, FlateDecode, BT/ET text)
-    * (see [[org.apache.spark.sql.graftnative.PdfText]]).
-    */
-  def pdfText(payload: Column): Column =
-    org.apache.spark.sql.graftnative.PdfFunctions.pdf_text(payload)
-
-  /** Structured-PDF fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.PdfSynth]]).
-    */
-  def synthPdf(doc: Column): Column =
-    org.apache.spark.sql.graftnative.PdfFunctions.synth_pdf(doc)
-
-  /** RFC 3986 URL canonicalization
-    * (see [[org.apache.spark.sql.graftnative.UrlCanonical]]).
-    */
-  def urlCanonical(url: Column): Column =
-    org.apache.spark.sql.graftnative.UrlFunctions.url_canonical(url)
-
-  /** Messy-URL fixture from a doc seed, two spellings per resource
-    * (see [[org.apache.spark.sql.graftnative.UrlSynth]]).
-    */
-  def synthUrl(doc: Column, variant: Int): Column =
-    org.apache.spark.sql.graftnative.UrlFunctions.synth_url(doc, variant)
-
-  /** DOCX (WordprocessingML-in-OPC) text extraction
-    * (see [[org.apache.spark.sql.graftnative.DocxText]]).
-    */
-  def docxText(payload: Column): Column =
-    org.apache.spark.sql.graftnative.DocxFunctions.docx_text(payload)
-
-  /** OPC/DOCX fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.DocxSynth]]).
-    */
-  def synthDocx(doc: Column): Column =
-    org.apache.spark.sql.graftnative.DocxFunctions.synth_docx(doc)
-
-  /** RFC 5322 + MIME email parsing
-    * (see [[org.apache.spark.sql.graftnative.EmlMessage]]).
-    */
-  def emlMessage(payload: Column): Column =
-    org.apache.spark.sql.graftnative.EmlFunctions.eml_message(payload)
-
-  /** Four-shape email fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.EmlSynth]]).
-    */
-  def synthEml(doc: Column): Column =
-    org.apache.spark.sql.graftnative.EmlFunctions.synth_eml(doc)
-
-  /** bzip2 decompression to UTF-8 text
-    * (see [[org.apache.spark.sql.graftnative.Bzip2Codec]]).
-    */
-  def bzip2Text(payload: Column): Column =
-    org.apache.spark.sql.graftnative.Bzip2Functions.bzip2_text(payload)
-
-  /** bzip2 fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.Bzip2Synth]]).
-    */
-  def synthBzip2(doc: Column): Column =
-    org.apache.spark.sql.graftnative.Bzip2Functions.synth_bzip2(doc)
-
-  /** bz2-compressed MediaWiki dump fixture from a doc seed. */
-  def synthWikiDumpBz2(doc: Column): Column =
-    org.apache.spark.sql.graftnative.Bzip2Functions.synth_wiki_dump_bz2(doc)
-
-  /** MediaWiki dump page extraction
-    * (see [[org.apache.spark.sql.graftnative.MediawikiPages]]).
-    */
-  def mediawikiPages(xml: Column): Column =
-    org.apache.spark.sql.graftnative.WikiFunctions.mediawiki_pages(xml)
-
-  /** Wikitext → plain-text stripping
-    * (see [[org.apache.spark.sql.graftnative.WikitextStrip]]).
-    */
-  def wikitextStrip(text: Column): Column =
-    org.apache.spark.sql.graftnative.WikiFunctions.wikitext_strip(text)
-
-  /** MediaWiki dump fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.WikiSynth]]).
-    */
-  def synthWikiDump(doc: Column): Column =
-    org.apache.spark.sql.graftnative.WikiFunctions.synth_wiki_dump(doc)
-
-  /** mboxrd container splitting
-    * (see [[org.apache.spark.sql.graftnative.MboxSplit]]).
-    */
-  def mboxSplit(payload: Column): Column =
-    org.apache.spark.sql.graftnative.EmlFunctions.mbox_split(payload)
-
-  /** mbox shard fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.MboxSynth]]).
-    */
-  def synthMbox(doc: Column): Column =
-    org.apache.spark.sql.graftnative.EmlFunctions.synth_mbox(doc)
-
-  /** Sitemap-directive collection from robots.txt
-    * (see [[org.apache.spark.sql.graftnative.RobotsSitemaps]]).
-    */
-  def robotsSitemaps(robots: Column): Column =
-    org.apache.spark.sql.graftnative.RobotsFunctions.robots_sitemaps(robots)
-
-  /** Markdown → text stripping
-    * (see [[org.apache.spark.sql.graftnative.MarkdownText]]).
-    */
-  def markdownText(md: Column): Column =
-    org.apache.spark.sql.graftnative.MarkdownFunctions.markdown_text(md)
-
-  /** README-shaped Markdown fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.MarkdownSynth]]).
-    */
-  def synthMarkdown(doc: Column): Column =
-    org.apache.spark.sql.graftnative.MarkdownFunctions.synth_markdown(doc)
-
-  /** RTF text extraction
-    * (see [[org.apache.spark.sql.graftnative.RtfText]]).
-    */
-  def rtfText(payload: Column): Column =
-    org.apache.spark.sql.graftnative.RtfFunctions.rtf_text(payload)
-
-  /** Word-shaped RTF fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.RtfSynth]]).
-    */
-  def synthRtf(doc: Column): Column =
-    org.apache.spark.sql.graftnative.RtfFunctions.synth_rtf(doc)
-
-  /** ODT (OpenDocument text) extraction
-    * (see [[org.apache.spark.sql.graftnative.OdtText]]).
-    */
-  def odtText(payload: Column): Column =
-    org.apache.spark.sql.graftnative.OdtFunctions.odt_text(payload)
-
-  /** ODF/ODT fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.OdtSynth]]).
-    */
-  def synthOdt(doc: Column): Column =
-    org.apache.spark.sql.graftnative.OdtFunctions.synth_odt(doc)
-
-  /** PPTX (PresentationML) slide-text extraction
-    * (see [[org.apache.spark.sql.graftnative.PptxText]]).
-    */
-  def pptxText(payload: Column): Column =
-    org.apache.spark.sql.graftnative.PptxFunctions.pptx_text(payload)
-
-  /** PresentationML fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.PptxSynth]]).
-    */
-  def synthPptx(doc: Column): Column =
-    org.apache.spark.sql.graftnative.PptxFunctions.synth_pptx(doc)
-
-  /** XLSX (SpreadsheetML) cell extraction
-    * (see [[org.apache.spark.sql.graftnative.XlsxCells]]).
-    */
-  def xlsxCells(payload: Column): Column =
-    org.apache.spark.sql.graftnative.XlsxFunctions.xlsx_cells(payload)
-
-  /** SpreadsheetML fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.XlsxSynth]]).
-    */
-  def synthXlsx(doc: Column): Column =
-    org.apache.spark.sql.graftnative.XlsxFunctions.synth_xlsx(doc)
-
-  /** sitemaps.org urlset/sitemapindex parsing
-    * (see [[org.apache.spark.sql.graftnative.SitemapUrls]]).
-    */
-  def sitemapUrls(xml: Column): Column =
-    org.apache.spark.sql.graftnative.SitemapFunctions.sitemap_urls(xml)
-
-  /** Sitemap fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.SitemapSynth]]).
-    */
-  def synthSitemap(doc: Column): Column =
-    org.apache.spark.sql.graftnative.SitemapFunctions.synth_sitemap(doc)
-
-  /** RSS 2.0 / Atom feed-entry extraction
-    * (see [[org.apache.spark.sql.graftnative.FeedEntries]]).
-    */
-  def feedEntries(xml: Column): Column =
-    org.apache.spark.sql.graftnative.FeedFunctions.feed_entries(xml)
-
-  /** Two-dialect feed fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.FeedSynth]]).
-    */
-  def synthFeed(doc: Column): Column =
-    org.apache.spark.sql.graftnative.FeedFunctions.synth_feed(doc)
-
-  /** Ogg Opus packet inventory (RFC 7845 framing + RFC 6716 TOC)
-    * (see [[org.apache.spark.sql.graftnative.OpusPackets]]).
-    */
-  def opusPackets(payload: Column): Column =
-    org.apache.spark.sql.graftnative.OpusFunctions.opus_packets(payload)
-
-  /** Formula-lattice Ogg Opus fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.OpusSynth]]).
-    */
-  def synthOggOpus(doc: Column): Column =
-    org.apache.spark.sql.graftnative.OpusFunctions.synth_ogg_opus(doc)
-
-  /** Per-frame dHash over MJPEG video in either container
-    * (see [[org.apache.spark.sql.graftnative.VideoFrameDhashes]]).
-    */
-  def videoFrameDhashes(payload: Column, stride: Int): Column =
-    org.apache.spark.sql.graftnative.VideoDhashFunctions
-      .video_frame_dhashes(payload, stride)
-
-  /** SRT/WebVTT subtitle cue extraction
-    * (see [[org.apache.spark.sql.graftnative.SubtitleCues]]).
-    */
-  def subtitleCues(payload: Column): Column =
-    org.apache.spark.sql.graftnative.SubtitleFunctions.subtitle_cues(payload)
-
-  /** Deterministic SRT/WebVTT fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.SubtitleSynth]]).
-    */
-  def synthSubtitle(doc: Column): Column =
-    org.apache.spark.sql.graftnative.SubtitleFunctions.synth_subtitle(doc)
-
-  /** Fragmented-MP4 (moof/traf/trun) per-sample byte ranges — the
-    * DASH/CMAF shape (see
-    * [[org.apache.spark.sql.graftnative.Mp4FragSamples]]).
-    */
-  def mp4FragSamples(payload: Column): Column =
-    org.apache.spark.sql.graftnative.Mp4FragFunctions.mp4_frag_samples(payload)
-
-  /** Fragmented twin of the chunked MP4 fixture from a doc seed
-    * (see [[org.apache.spark.sql.graftnative.Mp4FragSynth]]).
-    */
-  def synthMp4Frag(doc: Column): Column =
-    org.apache.spark.sql.graftnative.Mp4FragFunctions.synth_mp4_frag(doc)
-
-  /** MJPEG-in-MP4 stride-sampled frame statistics — the MP4 twin of
-    * [[aviMjpegFrames]] (see
-    * [[org.apache.spark.sql.graftnative.Mp4MjpegFrames]]).
-    */
-  def mp4MjpegFrames(payload: Column, stride: Int): Column =
-    org.apache.spark.sql.graftnative.Mp4TrackFunctions
-      .mp4_mjpeg_frames(payload, stride)
-
-  /** MJPEG-in-MP4 fixture carrying the SAME JpegSynth frames as
-    * [[synthAvi]] (see [[org.apache.spark.sql.graftnative.Mp4SamplesSynth]]).
-    */
-  def synthMp4Mjpeg(w: Column, h: Column, frames: Column, seed: Column): Column =
-    org.apache.spark.sql.graftnative.Mp4TrackFunctions
-      .synth_mp4_mjpeg(w, h, frames, seed)
-
-  /** Baseline JPEG fixture wrapped with an APP1 Exif segment carrying
-    * orientation `1 + (seed mod 8)`
-    * (see [[org.apache.spark.sql.graftnative.ExifSynth]]).
-    */
-  def synthJpegExif(w: Column, h: Column, seed: Column, mode: Int): Column =
-    org.apache.spark.sql.graftnative.ExifFunctions.synth_jpeg_exif(w, h, seed, mode)
-
-  /** Multi-frame GIF89a fixture from `(w, h, frames, seed)` — looping
-    * extension, per-frame GCE + full-canvas LZW image
-    * (see [[org.apache.spark.sql.graftnative.GifAnimSynth]]).
-    */
-  def synthGifAnim(w: Column, h: Column, frames: Column, seed: Column): Column =
-    org.apache.spark.sql.graftnative.RasterSynthFunctions
-      .synth_gif_anim(w, h, frames, seed)
-
-  /** Stride-sampled animated-GIF frame statistics: every `stride`-th
-    * frame is LZW-decoded and palette-mapped, the rest skipped by their
-    * sub-block lengths (see [[org.apache.spark.sql.graftnative.GifFrames]]).
-    */
-  def gifFrames(payload: Column, stride: Int): Column =
-    org.apache.spark.sql.graftnative.RasterFunctions.gif_frames(payload, stride)
-
-  /** 64-bit perceptual difference hash of a decoded raster — the image
-    * analogue of MinHash for near-dup dedup
-    * (see [[org.apache.spark.sql.graftnative.RasterDHash]]).
-    */
-  def rasterDHash(raster: Column): Column =
-    org.apache.spark.sql.graftnative.RasterFunctions.raster_dhash(raster)
-
-  /** MP3 frame-walk metadata: ID3v2 skip, every frame header parsed
-    * through the published bitrate/sample-rate tables and per-layer
-    * length arithmetic (see [[org.apache.spark.sql.graftnative.Mp3Meta]]).
-    */
-  def mp3Meta(payload: Column): Column =
-    org.apache.spark.sql.graftnative.Mp3Functions.mp3_meta(payload)
-
-  /** Complete valid MP3 from `(ch, srIdx, frames)`; `mode` bit 0 adds
-    * an ID3v2 head, bit 1 an ID3v1 trailer
-    * (see [[org.apache.spark.sql.graftnative.Mp3Synth]]).
-    */
-  def synthMp3(ch: Column, srIdx: Column, frames: Column, mode: Int): Column =
-    org.apache.spark.sql.graftnative.Mp3Functions.synth_mp3(ch, srIdx, frames, mode)
-
-  /** Complete valid baseline TIFF fixture from `(w, h, seed)` — both
-    * byte orders, multi-strip, uncompressed or really PackBits-coded
-    * (see [[org.apache.spark.sql.graftnative.SynthTiff]]).
-    * `mode`: 0 = II none RGB, 1 = MM none RGB, 2 = II PackBits gray,
-    * 3 = MM PackBits RGB.
-    */
-  def synthTiff(w: Column, h: Column, seed: Column, mode: Int): Column =
-    org.apache.spark.sql.graftnative.TiffFunctions.synth_tiff(w, h, seed, mode)
-
-  /** Complete valid AVI/MJPEG fixture: every `00dc` chunk is a REAL
-    * baseline 4:2:0 JPEG (frame f at seed `seed + 131·f`), plus proper
-    * hdrl headers and idx1
-    * (see [[org.apache.spark.sql.graftnative.AviSynth]]).
-    */
-  def synthAvi(w: Column, h: Column, frames: Column, seed: Column): Column =
-    org.apache.spark.sql.graftnative.AviFunctions.synth_avi(w, h, frames, seed)
-
-  /** Sampled MJPEG frame statistics from an AVI payload: every
-    * `stride`-th frame is JPEG-decoded (unsampled frames are skipped by
-    * length, never parsed) and per-channel sums are emitted
-    * (see [[org.apache.spark.sql.graftnative.AviMjpegFrames]]).
-    */
-  def aviMjpegFrames(payload: Column, stride: Int): Column =
-    org.apache.spark.sql.graftnative.AviFunctions.avi_mjpeg_frames(payload, stride)
-
   // ------------------------------------------------- real sample decode
   // The audio/video analogues of the raster path: WAV linear PCM and Y4M
   // raw video are the codec-free containers whose payloads ARE the
@@ -2149,33 +1484,6 @@ object ScaleOps {
   // from doc_id, so the DuckDB oracles recompute the decoded statistics
   // from the same formulas. Hash matches on `audio_pcm`/`video_frames`
   // prove the decoders invert the real encodings end-to-end per row.
-
-  /** Native content-defined-chunking cut positions (see
-    * [[org.apache.spark.sql.graftnative.CdcCuts]]): 1-based code-point
-    * positions after which a chunk boundary falls.
-    */
-  def cdcCuts(text: Column, window: Int = 16, mask: Int = 63): Column =
-    org.apache.spark.sql.graftnative.TextExpressions.cdc_cuts(text, window, mask)
-
-  /** Native WAV PCM sample decode `struct(format, channels, sample_rate,
-    * bits, n_frames, samples)` — samples normalized to signed ints,
-    * frame-major interleaved
-    * (see [[org.apache.spark.sql.graftnative.PcmDecode]]).
-    */
-  def pcmDecode(payload: Column): Column =
-    org.apache.spark.sql.graftnative.PcmFunctions.pcm_decode(payload)
-
-  /** Per-channel `(sums, peaks, zero_crossings)` of a decoded PCM
-    * struct (see [[org.apache.spark.sql.graftnative.PcmChannelStats]]).
-    */
-  def pcmChannelStats(decoded: Column): Column =
-    org.apache.spark.sql.graftnative.PcmFunctions.pcm_channel_stats(decoded)
-
-  /** Every `stride`-th frame's integer luma sum from a Y4M stream
-    * (see [[org.apache.spark.sql.graftnative.Y4mFrameLuma]]).
-    */
-  def y4mFrameLuma(payload: Column, stride: Int): Column =
-    org.apache.spark.sql.graftnative.PcmFunctions.y4m_frame_luma(payload, stride)
 
   /** Complete valid PCM WAV — [[synthWavHeader]]'s canonical header plus
     * every sample byte of the `(seed·13 + k·7) mod 2^bits` waveform
@@ -2190,8 +1498,7 @@ object ScaleOps {
     // round 12: native encoder, byte-identical to the former per-byte
     // hex-string Catalyst construction — which made the WAV stress
     // lane price string plumbing instead of PCM (the r11 "anomaly")
-    org.apache.spark.sql.graftnative.PcmFunctions.synth_wav_pcm(
-      channels, rate, frames, seed, bits.toInt)
+    PcmFunctions.synth_wav_pcm(channels, rate, frames, seed, bits.toInt)
   }
 
   /** Deterministic fixture luma/chroma byte: offset `o` of frame `f` in
@@ -2232,33 +1539,6 @@ object ScaleOps {
         concat(lit("4652414d450a"), inner) // hex("FRAME\n") + payload
       }), "")))
   }
-
-  /** Complete valid FLAC fixture from `(channels, rate, frames, seed)` —
-    * real FIXED-predictor residuals, real Rice coding, CRC-8/16 gates;
-    * samples are the SAME generative formula as [[synthWavPcm]] (FLAC is
-    * lossless, so the oracle replays the WAV formula while the engine
-    * runs real decompression). `bits` is a literal 8 or 16
-    * (see [[org.apache.spark.sql.graftnative.SynthFlac]]).
-    */
-  def synthFlac(channels: Column, rate: Column, frames: Column,
-      seed: Column, bits: Int): Column =
-    org.apache.spark.sql.graftnative.FlacSynthFunctions
-      .synth_flac(channels, rate, frames, seed, bits)
-
-  /** Native audio-container metadata `struct(format, channels,
-    * sample_rate, bits_per_sample, n_frames)` — WAV chunk walk + FLAC
-    * STREAMINFO bit unpack, same codegen'd zero-shuffle stance as
-    * [[imageMeta]] (see [[org.apache.spark.sql.graftnative.AudioMeta]]).
-    */
-  def audioMeta(payload: Column): Column =
-    org.apache.spark.sql.graftnative.MediaExpressions.audio_meta(payload)
-
-  /** Native ISO BMFF (MP4/MOV) metadata `struct(brand, timescale,
-    * duration)` via the box-tree walk
-    * (see [[org.apache.spark.sql.graftnative.Mp4Meta]]).
-    */
-  def mp4Meta(payload: Column): Column =
-    org.apache.spark.sql.graftnative.MediaExpressions.mp4_meta(payload)
 
   private def leU32Col(v: Column): Column = concat(
     unhex(lpad(hex(v.bitwiseAND(255L)), 2, "0")),
@@ -2378,13 +1658,11 @@ object ScaleOps {
     ds.mapPartitions { rows =>
       rows.grouped(batchSize).flatMap { batch =>
         batch.iterator.map { m =>
-          val raster = org.apache.spark.sql.graftnative.ImageDecode
-            .compute(m.payload)
+          val raster = ImageDecode.compute(m.payload)
           if (!raster.isNullAt(4)) {
             // real raster: decode → NN-resize to dim×dim → per-channel
             // mean features (padded to the fixed dim width)
-            val resized = org.apache.spark.sql.graftnative.ImageResizeNN
-              .compute(raster, dim, dim)
+            val resized = ImageResizeNN.compute(raster, dim, dim)
             val ch = resized.getInt(3)
             val px = resized.getBinary(4)
             val sums = new Array[Long](ch)

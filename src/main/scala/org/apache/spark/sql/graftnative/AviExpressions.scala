@@ -335,11 +335,18 @@ case class SynthAvi(first: Expression, second: Expression, third: Expression,
 }
 
 object AviFunctions {
-  /** Column API: sampled MJPEG frame statistics from an AVI payload. */
+  /** Column API: sampled MJPEG frame statistics from an AVI payload: every
+    * `stride`-th frame is JPEG-decoded (unsampled frames are skipped by
+    * length, never parsed) and per-channel sums are emitted (see
+    * [[AviMjpegFrames]]).
+    */
   def avi_mjpeg_frames(payload: Column, stride: Int): Column =
     ExpressionUtils.column(AviMjpegFrames(ExpressionUtils.expression(payload), stride))
 
-  /** Column API: complete valid AVI/MJPEG fixture. */
+  /** Column API: complete valid AVI/MJPEG fixture: every `00dc` chunk is a
+    * real baseline 4:2:0 JPEG (frame f at seed `seed + 131·f`), plus proper
+    * hdrl headers and idx1 (see [[AviSynth]]).
+    */
   def synth_avi(w: Column, h: Column, frames: Column, seed: Column): Column =
     ExpressionUtils.column(SynthAvi(ExpressionUtils.expression(w),
       ExpressionUtils.expression(h), ExpressionUtils.expression(frames),

@@ -577,20 +577,37 @@ case class SynthJpegExifMeta(first: Expression, second: Expression,
 }
 
 object ExifFunctions {
+  /** Column API: EXIF orientation (1-8) from a JPEG's APP1 segment; null
+    * when absent (see [[ExifOrientation]]).
+    */
   def exif_orientation(payload: Column): Column =
     ExpressionUtils.column(ExifOrientation(ExpressionUtils.expression(payload)))
 
+  /** Column API: EXIF metadata struct (make/model/datetime_original/
+    * orientation/gps_lat/gps_lon) from a JPEG's APP1 segment (see
+    * [[ExifMeta]]).
+    */
   def exif_meta(payload: Column): Column =
     ExpressionUtils.column(ExifMeta(ExpressionUtils.expression(payload)))
 
+  /** Column API: baseline JPEG fixture with a full APP1 Exif block (IFD0 +
+    * Exif sub-IFD + GPS IFD, both byte orders by seed parity) (see
+    * [[ExifMetaSynth]]).
+    */
   def synth_jpeg_exif_meta(w: Column, h: Column, seed: Column, mode: Int): Column =
     ExpressionUtils.column(SynthJpegExifMeta(ExpressionUtils.expression(w),
       ExpressionUtils.expression(h), ExpressionUtils.expression(seed), mode))
 
+  /** Column API: apply an EXIF orientation to a decoded raster: exact flip
+    * / rotation index remaps, dims swap for 5-8 (see [[RasterOrient]]).
+    */
   def raster_orient(raster: Column, orientation: Column): Column =
     ExpressionUtils.column(RasterOrient(ExpressionUtils.expression(raster),
       ExpressionUtils.expression(orientation)))
 
+  /** Column API: baseline JPEG fixture wrapped with an APP1 Exif segment
+    * carrying orientation `1 + (seed mod 8)` (see [[ExifSynth]]).
+    */
   def synth_jpeg_exif(w: Column, h: Column, seed: Column, mode: Int): Column =
     ExpressionUtils.column(SynthJpegExif(ExpressionUtils.expression(w),
       ExpressionUtils.expression(h), ExpressionUtils.expression(seed), mode))

@@ -629,7 +629,11 @@ object FlacSynth {
 
 object FlacSynthFunctions {
   /** Column API: complete valid FLAC stream from
-    * `(channels, rate, frames, seed)` at a literal 8 or 16 bits.
+    * `(channels, rate, frames, seed)` at a literal 8 or 16 bits: real
+    * FIXED-predictor residuals, real Rice coding, CRC-8/16 gates (see
+    * [[SynthFlac]]). Samples are the same generative formula as
+    * `PcmFunctions.synth_wav_pcm` (FLAC is lossless, so the oracle replays
+    * the WAV formula while the engine runs real decompression).
     */
   def synth_flac(channels: Column, rate: Column, frames: Column,
       seed: Column, bits: Int): Column =

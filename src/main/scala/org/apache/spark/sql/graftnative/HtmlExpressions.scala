@@ -620,9 +620,15 @@ case class SynthHtml(child: Expression)
 }
 
 object HtmlFunctions {
+  /** Column API: HTML visible-text extraction with fixed engine-agnostic
+    * rules (see [[HtmlTextExtract]]).
+    */
   def html_text(payload: Column): Column =
     ExpressionUtils.column(HtmlTextExtract(ExpressionUtils.expression(payload)))
 
+  /** Column API: formula-text HTML fixture from a doc seed (see
+    * [[HtmlSynth]]).
+    */
   def synth_html(doc: Column): Column =
     ExpressionUtils.column(SynthHtml(ExpressionUtils.expression(doc)))
 

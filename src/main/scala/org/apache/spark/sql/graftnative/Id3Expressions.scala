@@ -253,9 +253,15 @@ case class SynthMp3Id3(child: Expression)
 }
 
 object Id3Functions {
+  /** Column API: ID3v2 text-frame metadata (title/artist/album/year, v2.3
+    * + v2.4) (see [[Id3Meta]]).
+    */
   def id3_meta(payload: Column): Column =
     ExpressionUtils.column(Id3Meta(ExpressionUtils.expression(payload)))
 
+  /** Column API: ID3v2-tagged Layer III fixture from a doc seed (see
+    * [[Id3Synth]]).
+    */
   def synth_mp3_id3(doc: Column): Column =
     ExpressionUtils.column(SynthMp3Id3(ExpressionUtils.expression(doc)))
 }

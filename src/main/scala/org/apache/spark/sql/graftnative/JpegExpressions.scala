@@ -1490,7 +1490,10 @@ object JpegSynth {
 }
 
 object JpegSynthFunctions {
-  /** Column API: complete valid baseline JFIF JPEG from `(w, h, seed)`.
+  /** Column API: complete valid baseline JFIF JPEG from `(w, h, seed)`:
+    * real Annex-K Huffman coding, DC-diff + run-length AC coding, byte
+    * stuffing; content chosen where the DCT round trip is exact, so the
+    * decode is oracle-replayable (see [[SynthJpeg]]).
     * `mode`: 0 = grayscale, 1 = YCbCr 4:2:0, 2 = YCbCr 4:4:4.
     */
   def synth_jpeg(w: Column, h: Column, seed: Column, mode: Int): Column =

@@ -432,7 +432,8 @@ object Mp4Meta {
 object MediaExpressions {
   /** Column-level API: native image-container metadata
     * `struct(format, width, height)` parsed from a binary column (see
-    * [[ImageMeta]]).
+    * [[ImageMeta]]): one bounded byte walk per row, u32-safe longs; unknown
+    * or corrupt containers yield `('unknown', NULL, NULL)`.
     */
   def image_meta(payload: Column): Column =
     ExpressionUtils.column(ImageMeta(ExpressionUtils.expression(payload)))

@@ -218,11 +218,16 @@ case class SynthMp3(first: Expression, second: Expression, third: Expression,
 }
 
 object Mp3Functions {
-  /** Column API: MP3 frame-walk metadata. */
+  /** Column API: MP3 frame-walk metadata: ID3v2 skip, every frame header
+    * parsed through the published bitrate/sample-rate tables and per-layer
+    * length arithmetic (see [[Mp3Meta]]).
+    */
   def mp3_meta(payload: Column): Column =
     ExpressionUtils.column(Mp3MetaExpr(ExpressionUtils.expression(payload)))
 
-  /** Column API: complete valid MP3 from `(ch, srIdx, frames)`. */
+  /** Column API: complete valid MP3 from `(ch, srIdx, frames)`; `mode` bit
+    * 0 adds an ID3v2 head, bit 1 an ID3v1 trailer (see [[Mp3Synth]]).
+    */
   def synth_mp3(ch: Column, srIdx: Column, frames: Column, mode: Int): Column =
     ExpressionUtils.column(SynthMp3(ExpressionUtils.expression(ch),
       ExpressionUtils.expression(srIdx), ExpressionUtils.expression(frames), mode))

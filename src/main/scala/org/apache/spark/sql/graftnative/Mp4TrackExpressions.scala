@@ -869,22 +869,40 @@ case class SynthMp4Mjpeg(first: Expression, second: Expression,
 }
 
 object Mp4TrackFunctions {
+  /** Column API: MP4 per-track sample tables (stsd/stsz/stts walk) (see
+    * [[Mp4Tracks]]).
+    */
   def mp4_tracks(payload: Column): Column =
     ExpressionUtils.column(Mp4Tracks(ExpressionUtils.expression(payload)))
 
+  /** Column API: ftyp+moov fixture with real sample tables from a doc seed
+    * (see [[Mp4TracksSynth]]).
+    */
   def synth_mp4_tracks(doc: Column): Column =
     ExpressionUtils.column(SynthMp4Tracks(ExpressionUtils.expression(doc)))
 
+  /** Column API: MP4 per-sample byte ranges: stsc/stco/co64 resolved
+    * against stsz (see [[Mp4Samples]]).
+    */
   def mp4_samples(payload: Column): Column =
     ExpressionUtils.column(Mp4Samples(ExpressionUtils.expression(payload)))
 
+  /** Column API: chunk-layout MP4 fixture with a real mdat from a doc seed
+    * (see [[Mp4SamplesSynth]]).
+    */
   def synth_mp4_samples(doc: Column): Column =
     ExpressionUtils.column(SynthMp4Samples(ExpressionUtils.expression(doc)))
 
+  /** Column API: MJPEG-in-MP4 stride-sampled frame statistics, the MP4 twin
+    * of `AviFunctions.avi_mjpeg_frames` (see [[Mp4MjpegFrames]]).
+    */
   def mp4_mjpeg_frames(payload: Column, stride: Int): Column =
     ExpressionUtils.column(
       Mp4MjpegFrames(ExpressionUtils.expression(payload), stride))
 
+  /** Column API: MJPEG-in-MP4 fixture carrying the same JpegSynth frames as
+    * `AviFunctions.synth_avi`.
+    */
   def synth_mp4_mjpeg(w: Column, h: Column, frames: Column,
       seed: Column): Column =
     ExpressionUtils.column(SynthMp4Mjpeg(ExpressionUtils.expression(w),

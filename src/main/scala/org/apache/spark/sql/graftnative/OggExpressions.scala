@@ -255,11 +255,15 @@ case class SynthOgg(first: Expression, second: Expression, third: Expression,
 }
 
 object OggFunctions {
-  /** Column API: Ogg page-walk metadata (Vorbis/Opus id headers). */
+  /** Column API: Ogg page-walk metadata (RFC 3533) with Vorbis/Opus
+    * identification headers and real page-CRC verification (see [[OggMeta]]).
+    */
   def ogg_meta(payload: Column): Column =
     ExpressionUtils.column(OggMetaExpr(ExpressionUtils.expression(payload)))
 
-  /** Column API: complete valid Ogg stream from `(ch, rate, frames)`. */
+  /** Column API: complete valid two-page Ogg stream from
+    * `(ch, rate, frames)`; `mode`: 0 = Vorbis, 1 = Opus (see [[OggSynth]]).
+    */
   def synth_ogg(ch: Column, rate: Column, frames: Column, mode: Int): Column =
     ExpressionUtils.column(SynthOgg(ExpressionUtils.expression(ch),
       ExpressionUtils.expression(rate), ExpressionUtils.expression(frames), mode))

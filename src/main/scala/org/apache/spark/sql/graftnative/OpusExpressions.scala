@@ -245,7 +245,9 @@ case class SynthOggOpus(child: Expression)
 }
 
 object OpusFunctions {
-  /** Column API: Ogg Opus packet inventory. */
+  /** Column API: Ogg Opus packet inventory (RFC 7845 framing + RFC 6716
+    * TOC).
+    */
   def opus_packets(payload: Column): Column =
     ExpressionUtils.column(OpusPackets(ExpressionUtils.expression(payload)))
 

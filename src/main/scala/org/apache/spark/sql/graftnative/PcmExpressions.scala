@@ -477,7 +477,8 @@ object PcmFunctions {
       ExpressionUtils.expression(rate), ExpressionUtils.expression(frames),
       ExpressionUtils.expression(seed), bits))
   /** Column API: decode WAV PCM bytes to the normalized
-    * `(format, channels, sample_rate, bits, n_frames, samples)` struct.
+    * `(format, channels, sample_rate, bits, n_frames, samples)` struct:
+    * samples normalized to signed ints, frame-major interleaved.
     */
   def pcm_decode(payload: Column): Column =
     ExpressionUtils.column(PcmDecode(ExpressionUtils.expression(payload)))

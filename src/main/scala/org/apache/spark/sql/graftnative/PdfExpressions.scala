@@ -1572,7 +1572,9 @@ case class SynthPdf(child: Expression)
 }
 
 object PdfFunctions {
-  /** Column API: PDF page-text extraction. */
+  /** Column API: PDF page-text extraction (classic xref, FlateDecode,
+    * BT/ET text).
+    */
   def pdf_text(payload: Column): Column =
     ExpressionUtils.column(PdfText(ExpressionUtils.expression(payload)))
 

@@ -953,8 +953,9 @@ object RasterDHash {
 }
 
 object RasterFunctions {
-  /** Column API: decode PPM/PGM/BMP bytes to the normalized raster
-    * struct `(format, width, height, channels, pixels)`.
+  /** Column API: decode a raster payload to the normalized struct
+    * `(format, width, height, channels, pixels)`: pixels row-major,
+    * top-down RGB regardless of the source container (see [[ImageDecode]]).
     */
   def image_decode(payload: Column): Column =
     ExpressionUtils.column(ImageDecode(ExpressionUtils.expression(payload)))
@@ -964,13 +965,22 @@ object RasterFunctions {
     ExpressionUtils.column(
       ImageResizeNN(ExpressionUtils.expression(raster), targetW, targetH))
 
-  /** Column API: per-channel sample sums (`array<bigint>`). */
+  /** Column API: stride-sampled animated-GIF frame statistics: every
+    * `stride`-th frame is LZW-decoded and palette-mapped, the rest skipped
+    * by their sub-block lengths (see [[GifFrames]]).
+    */
   def gif_frames(payload: Column, stride: Int): Column =
     ExpressionUtils.column(GifFrames(ExpressionUtils.expression(payload), stride))
 
+  /** Column API: 64-bit perceptual difference hash of a decoded raster,
+    * the image analogue of MinHash for near-dup dedup (see [[RasterDHash]]).
+    */
   def raster_dhash(raster: Column): Column =
     ExpressionUtils.column(RasterDHash(ExpressionUtils.expression(raster)))
 
+  /** Column API: per-channel integer sample sums (`array<bigint>`) of a
+    * decoded raster.
+    */
   def raster_channel_sums(raster: Column): Column =
     ExpressionUtils.column(
       RasterChannelSums(ExpressionUtils.expression(raster)))

@@ -614,17 +614,19 @@ case class SynthGifAnim(first: Expression, second: Expression,
 }
 
 object RasterSynthFunctions {
-  /** Column API: complete valid PNG from `(w, h, seed)` — grayscale
-    * (`channels = 1`) or truecolor RGB (`channels = 3`).
-    */
-  /** Column API: extended PNG fixture (RGBA / palette / gray+alpha /
-    * Adam7 interlace), see [[SynthPngExt]].
+  /** Column API: extended PNG fixture: `variant` 0 = RGBA, 1 = palette,
+    * 2 = gray+alpha, 3 = RGB Adam7, 4 = RGBA Adam7 (see [[SynthPngExt]]).
     */
   def synth_png_ext(w: Column, h: Column, seed: Column, variant: Int): Column =
     ExpressionUtils.column(SynthPngExt(ExpressionUtils.expression(w),
       ExpressionUtils.expression(h), ExpressionUtils.expression(seed), variant))
 
-  def synth_png(w: Column, h: Column, seed: Column, channels: Int): Column =
+  /** Column API: complete valid PNG from `(w, h, seed)`, grayscale
+    * (`channels = 1`) or truecolor RGB (`channels = 3`): real Deflater zlib,
+    * per-row filter cycling through all five spec filters, CRC'd chunks
+    * (see [[SynthPng]]).
+    */
+  def synth_png(w: Column, h: Column, seed: Column, channels: Int = 3): Column =
     ExpressionUtils.column(SynthPng(ExpressionUtils.expression(w),
       ExpressionUtils.expression(h), ExpressionUtils.expression(seed), channels))
 
@@ -640,7 +642,9 @@ object RasterSynthFunctions {
       ExpressionUtils.expression(h), ExpressionUtils.expression(frames),
       ExpressionUtils.expression(seed)))
 
-  /** Column API: complete valid GIF89a from `(w, h, seed)`. */
+  /** Column API: complete valid GIF89a from `(w, h, seed)`: real LZW
+    * compression, 256-entry three-ramp palette (see [[SynthGif]]).
+    */
   def synth_gif(w: Column, h: Column, seed: Column): Column =
     ExpressionUtils.column(SynthGif(ExpressionUtils.expression(w),
       ExpressionUtils.expression(h), ExpressionUtils.expression(seed)))

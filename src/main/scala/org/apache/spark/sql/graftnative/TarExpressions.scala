@@ -454,7 +454,9 @@ case class SynthTar(child: Expression)
 }
 
 object TarFunctions {
-  /** Column API: tar/WebDataset member extraction. */
+  /** Column API: tar/WebDataset member extraction (ustar + GNU longname +
+    * PAX).
+    */
   def tar_members(payload: Column): Column =
     ExpressionUtils.column(TarMembers(ExpressionUtils.expression(payload)))
 

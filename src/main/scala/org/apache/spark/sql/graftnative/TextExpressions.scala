@@ -447,15 +447,19 @@ object CdcCuts {
 
 object TextExpressions {
   /** Column-level API: native word k-shingles of a text column (see
-    * [[WordShingles]]).
+    * [[WordShingles]]). Output is identical to
+    * `graft.operators.ScaleOps.shingles(tokens(text), k)`, the executable
+    * spec (equivalence pinned in ScaleOpsSpec); every hot path uses this
+    * form because the HOF chain evaluates interpreted (CodegenFallback).
     */
-  def word_shingles(text: Column, k: Int): Column =
+  def word_shingles(text: Column, k: Int = 3): Column =
     ExpressionUtils.column(WordShingles(ExpressionUtils.expression(text), k))
 
-  /** Column-level API: native content-defined-chunking cut positions
-    * (see [[CdcCuts]]).
+  /** Column-level API: native content-defined-chunking cut positions (see
+    * [[CdcCuts]]): 1-based code-point positions after which a chunk boundary
+    * falls.
     */
-  def cdc_cuts(text: Column, window: Int, mask: Int): Column =
+  def cdc_cuts(text: Column, window: Int = 16, mask: Int = 63): Column =
     ExpressionUtils.column(CdcCuts(ExpressionUtils.expression(text), window, mask))
 
   /** Column-level API: native per-document character entropy (see
@@ -465,7 +469,9 @@ object TextExpressions {
     ExpressionUtils.column(CharEntropyStats(ExpressionUtils.expression(text)))
 
   /** Column-level API: native polynomial rolling hash (see
-    * [[PolyRollingHash]]).
+    * [[PolyRollingHash]]), the twin of `graft.operators.ScaleOps.rollingHash`
+    * (equivalence pinned in ScaleOpsSpec): one codegen'd code-point walk
+    * instead of a per-character array folded through interpreted lambdas.
     */
   def rolling_hash(text: Column): Column =
     ExpressionUtils.column(PolyRollingHash(ExpressionUtils.expression(text)))

@@ -818,7 +818,11 @@ case class SynthTiff(first: Expression, second: Expression, third: Expression,
 }
 
 object TiffFunctions {
-  /** Column API: complete valid baseline TIFF from `(w, h, seed)`. */
+  /** Column API: complete valid baseline TIFF from `(w, h, seed)`: both
+    * byte orders, multi-strip, uncompressed or really PackBits-coded (see
+    * [[SynthTiff]]). `mode`: 0 = II none RGB, 1 = MM none RGB, 2 = II
+    * PackBits gray, 3 = MM PackBits RGB.
+    */
   def synth_tiff(w: Column, h: Column, seed: Column, mode: Int): Column =
     ExpressionUtils.column(SynthTiff(ExpressionUtils.expression(w),
       ExpressionUtils.expression(h), ExpressionUtils.expression(seed), mode))

@@ -269,7 +269,9 @@ object UrlFunctions {
   def url_canonical(url: Column): Column =
     ExpressionUtils.column(UrlCanonical(ExpressionUtils.expression(url)))
 
-  /** Column API: messy-URL fixture from a doc seed (variant 0 or 1). */
+  /** Column API: messy-URL fixture from a doc seed, two spellings per
+    * resource (variant 0 or 1).
+    */
   def synth_url(doc: Column, variant: Int): Column =
     ExpressionUtils.column(SynthUrl(ExpressionUtils.expression(doc), variant))
 }

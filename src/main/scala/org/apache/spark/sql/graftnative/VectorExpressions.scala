@@ -191,7 +191,11 @@ case class LshBucketsFloat(child: Expression, planesFlat: Array[Float],
 }
 
 object VectorExpressions {
-  /** Column-level API: exact sequential-fold dot product of two float arrays. */
+  /** Column-level API: exact double-precision dot product of two float
+    * arrays with a fixed left-to-right fold, deterministic across engines
+    * (see [[DotProductFloat]]). `graft.operators.ScaleOps.dotHof` is the
+    * built-in-only formulation (bit-identical, slower).
+    */
   def dot_f(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProductFloat(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))

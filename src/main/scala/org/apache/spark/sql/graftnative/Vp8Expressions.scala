@@ -1662,8 +1662,11 @@ case class SynthVp8(first: Expression, second: Expression, third: Expression,
 }
 
 object Vp8SynthFunctions {
-  /** Column API: complete valid lossy-WebP VP8 key frame from
-    * `(w, h, seed)`. `mode`: 0 = B_PRED, 1 = 16×16 via Y2/WHT.
+  /** Column API: complete valid lossy-WebP VP8 key frame (RFC 6386) from
+    * `(w, h, seed)`: real boolean arithmetic coding of modes and DCT tokens;
+    * content chosen where the transform is exact (constant 4×4 blocks), so
+    * the decode is oracle-replayable (see [[SynthVp8]]).
+    * `mode`: 0 = all-B_PRED, 1 = 16×16 modes through the Y2/WHT path.
     */
   def synth_vp8(w: Column, h: Column, seed: Column, mode: Int): Column =
     ExpressionUtils.column(SynthVp8(ExpressionUtils.expression(w),
@@ -2165,7 +2168,10 @@ case class SynthWebpAnim(first: Expression, second: Expression,
 }
 
 object WebpAnimFunctions {
-  /** Column API: sampled frame statistics from an animated WebP. */
+  /** Column API: stride-sampled frame statistics from an animated WebP:
+    * nested VP8/VP8L chunks decoded through the still-image codecs (see
+    * [[WebpAnimFrames]]).
+    */
   def webp_anim_frames(payload: Column, stride: Int): Column =
     ExpressionUtils.column(WebpAnimFrames(ExpressionUtils.expression(payload), stride))
 

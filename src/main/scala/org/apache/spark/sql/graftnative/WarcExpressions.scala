@@ -480,12 +480,21 @@ case class SynthWarcHtmlGz(child: Expression)
 }
 
 object WarcFunctions {
+  /** Column API: WARC records from concatenated gzip members (CRC-32/ISIZE
+    * verified) (see [[WarcRecords]]).
+    */
   def warc_records(payload: Column): Column =
     ExpressionUtils.column(WarcRecords(ExpressionUtils.expression(payload)))
 
+  /** Column API: WET-style WARC-in-gzip fixture from a doc seed (see
+    * [[WarcSynth]]).
+    */
   def synth_warc_gz(doc: Column): Column =
     ExpressionUtils.column(SynthWarcGz(ExpressionUtils.expression(doc)))
 
+  /** Column API: crawl-shaped WARC-in-gzip fixture: HTTP response records
+    * carrying dup-group HTML pages (see [[WarcSynth.warcHtmlGzBytes]]).
+    */
   def synth_warc_html_gz(doc: Column): Column =
     ExpressionUtils.column(SynthWarcHtmlGz(ExpressionUtils.expression(doc)))
 }

@@ -1712,17 +1712,26 @@ case class SynthWebpLPalette(first: Expression, second: Expression,
 }
 
 object WebpSynthFunctions {
-  /** Column API: complete valid lossless WebP from `(w, h, seed)`. */
+  /** Column API: complete valid lossless WebP (VP8L) from `(w, h, seed)`:
+    * real Huffman construction over the subtract-green channel histograms,
+    * real code-length coding, LSB-first bitstream (see [[SynthWebpL]]).
+    */
   def synth_webpl(w: Column, h: Column, seed: Column): Column =
     ExpressionUtils.column(SynthWebpL(ExpressionUtils.expression(w),
       ExpressionUtils.expression(h), ExpressionUtils.expression(seed)))
 
-  /** Column API: predictor + meta-Huffman lossless WebP fixture. */
+  /** Column API: predictor + meta-Huffman lossless WebP fixture: the same
+    * generative pixels as `synth_webpl`, built through the
+    * predictor/entropy-image machinery (see [[SynthWebpLPred]]).
+    */
   def synth_webpl_pred(w: Column, h: Column, seed: Column): Column =
     ExpressionUtils.column(SynthWebpLPred(ExpressionUtils.expression(w),
       ExpressionUtils.expression(h), ExpressionUtils.expression(seed)))
 
-  /** Column API: color-indexing (palette) lossless WebP fixture. */
+  /** Column API: color-indexing (palette) lossless WebP fixture:
+    * delta-coded palette sub-image + pixel-bundled packed indices (see
+    * [[SynthWebpLPalette]]).
+    */
   def synth_webpl_palette(w: Column, h: Column, seed: Column): Column =
     ExpressionUtils.column(SynthWebpLPalette(ExpressionUtils.expression(w),
       ExpressionUtils.expression(h), ExpressionUtils.expression(seed)))

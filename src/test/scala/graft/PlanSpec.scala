@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.graftnative.WarcFunctions
 
 /** Physical-plan shape assertions — the 100 TB design contract:
   * filters/projections reach the parquet scan, small dims broadcast,
@@ -354,8 +355,8 @@ class PlanSpec extends SparkSpec {
     }
     assert(globalSorts.size == 1, s"${globalSorts.size} global sorts")
     // and the extraction stage alone never shuffles: per-row decode
-    val w = graft.operators.ScaleOps.warcRecords(
-      graft.operators.ScaleOps.synthWarcHtmlGz(
+    val w = WarcFunctions.warc_records(
+      WarcFunctions.synth_warc_html_gz(
         org.apache.spark.sql.functions.col("doc_id")))
     val corpus = Tables.documents(spark, sf0001)
       .select(org.apache.spark.sql.functions.col("doc_id"), w.as("w"))
@@ -1127,6 +1128,19 @@ class PlanSpec extends SparkSpec {
     val p2 = physical(Tables.documentSeeds(s2, sf0001))
     assert(collectAll(p2) { case e: Exchange => e }.isEmpty,
       "fan-out must not engage when the scan already has enough splits")
+  }
+
+  test("scan fan-out: a failed size probe fans out instead of staying one task") {
+    // a path the probe cannot read must neither throw nor leave the
+    // per-row work above the scan on one task
+    val df = Tables.documents(spark, sf0001).select("doc_id")
+    val p = physical(Tables.fanOut(spark, df, s"$sf0001/no_such_table.parquet"))
+    val rr = collectAll(p) { case e: Exchange => e }.filter(
+      _.outputPartitioning.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning])
+    assert(rr.size == 1, s"expected the fallback fan-out exchange, got ${rr.size}")
+    assert(rr.head.outputPartitioning.numPartitions ==
+      spark.sparkContext.defaultParallelism)
   }
 
   test("incremental OverlapReload: one scan per input relation, one hash exchange on symbol") {

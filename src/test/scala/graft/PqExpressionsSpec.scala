@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftnative.PqExpressions
+import org.apache.spark.sql.graftnative.{PqExpressions, VectorExpressions}
 import org.apache.spark.sql.types._
 
 /** Contracts for the reference-object PQ kernels (round 11): the fused
@@ -57,7 +57,7 @@ class PqExpressionsSpec extends SparkSpec {
       val scores = array((0 until cb(mi).length).map { ki =>
         val c = cb(mi)(ki)
         val halfNorm = c.map(x => x.toDouble * x.toDouble).sum / 2.0
-        val base = graft.operators.ScaleOps.dotD(
+        val base = VectorExpressions.dot_f(
           slice(col("embedding"), mi * sub + 1, sub), typedlit(c)) / col("_nv")
         offTable match {
           case Some(off) =>

@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
+import org.apache.spark.sql.graftnative.{AviFunctions, ExifFunctions,
+  FlacSynthFunctions, JpegSynthFunctions, MediaExpressions, Mp4TrackFunctions,
+  PcmFunctions, RasterFunctions, RasterSynthFunctions, TextExpressions,
+  VectorExpressions, VideoDhashFunctions, WebpSynthFunctions}
 
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -19,10 +23,10 @@ class ScaleOpsSpec extends SparkSpec {
     // raster must be the UNCHANGED decode, not null — otherwise every
     // EXIF-less crawl image silently drops out of resize/hash/dedup.
     val df = Seq(7L).toDF("seed")
-      .withColumn("payload", ScaleOps.synthJpeg(lit(16L), lit(16L), col("seed"), 2))
-      .withColumn("r", ScaleOps.imageDecode(col("payload")))
-      .withColumn("o", ScaleOps.exifOrientation(col("payload")))
-      .withColumn("oriented", ScaleOps.rasterOrient(col("r"), col("o")))
+      .withColumn("payload", JpegSynthFunctions.synth_jpeg(lit(16L), lit(16L), col("seed"), 2))
+      .withColumn("r", RasterFunctions.image_decode(col("payload")))
+      .withColumn("o", ExifFunctions.exif_orientation(col("payload")))
+      .withColumn("oriented", ExifFunctions.raster_orient(col("r"), col("o")))
       .select(col("o"), col("r.pixels").as("p0"), col("oriented.pixels").as("p1"))
     val row = df.collect()(0)
     assert(row.isNullAt(0), "plain fixture JPEG has no EXIF")
@@ -58,7 +62,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("dotD / l2norm / cosine on known vectors") {
     val df = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f))).toDF("a", "b")
-      .withColumn("dot", ScaleOps.dotD(col("a"), col("b")))
+      .withColumn("dot", VectorExpressions.dot_f(col("a"), col("b")))
       .withColumn("na", ScaleOps.l2norm(col("a")))
       .withColumn("cos", ScaleOps.cosine(col("a"), col("b"),
         ScaleOps.l2norm(col("a")), ScaleOps.l2norm(col("b"))))
@@ -89,7 +93,7 @@ class ScaleOpsSpec extends SparkSpec {
     Seq(2, 3, 5).foreach { k =>
       val both = df.select(col("id"),
         graft.operators.ScaleOps.shingles(graft.operators.ScaleOps.tokens(col("text")), k).as("hof"),
-        graft.operators.ScaleOps.textShingles(col("text"), k).as("native"))
+        TextExpressions.word_shingles(col("text"), k).as("native"))
       val bad = both.filter(not(col("hof") <=> col("native"))).count()
       assert(bad == 0, s"k=$k: $bad rows differ between HOF and native shingles")
     }
@@ -98,7 +102,7 @@ class ScaleOpsSpec extends SparkSpec {
     val nullDf = Seq((1L, Option.empty[String]), (2L, Some("x y z w"))).toDF("id", "text")
     val r = nullDf.select(col("id"),
       graft.operators.ScaleOps.shingles(graft.operators.ScaleOps.tokens(col("text"))).as("hof"),
-      graft.operators.ScaleOps.textShingles(col("text")).as("native"))
+      TextExpressions.word_shingles(col("text")).as("native"))
       .filter(not(col("hof") <=> col("native"))).count()
     assert(r == 0, "null-text semantics differ")
   }
@@ -137,7 +141,7 @@ class ScaleOpsSpec extends SparkSpec {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     def specCover(n: Int, dup: Boolean): Map[Long, Long] = {
       val counts = df
-        .select(col("doc_id"), explode(ScaleOps.textShingles(col("text"), n)).as("g"))
+        .select(col("doc_id"), explode(TextExpressions.word_shingles(col("text"), n)).as("g"))
         .groupBy("doc_id", "g").count()
       val agg = if (dup)
         counts.filter(col("count") >= 2).groupBy("doc_id")
@@ -164,13 +168,13 @@ class ScaleOpsSpec extends SparkSpec {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val bad = df.select(
       graft.operators.ScaleOps.rollingHash(col("text")).as("hof"),
-      graft.operators.ScaleOps.rollingHashNative(col("text")).as("native"))
+      TextExpressions.rolling_hash(col("text")).as("native"))
       .filter(not(col("hof") <=> col("native"))).count()
     assert(bad == 0, "native rolling hash differs from HOF fold")
     // null text → null on both
     val nulls = Seq((1L, Option.empty[String])).toDF("id", "text").select(
       graft.operators.ScaleOps.rollingHash(col("text")).as("hof"),
-      graft.operators.ScaleOps.rollingHashNative(col("text")).as("native")).head
+      TextExpressions.rolling_hash(col("text")).as("native")).head
     assert(nulls.isNullAt(0) && nulls.isNullAt(1), "null semantics differ")
   }
 
@@ -362,7 +366,7 @@ class ScaleOpsSpec extends SparkSpec {
     val dims = Seq((1L, 1L), (16L, 16L), (640L, 480L), (65535L, 65535L))
     val df = dims.toDF("w", "h")
     def roundTrip(payload: org.apache.spark.sql.Column) =
-      df.select(col("w"), col("h"), ScaleOps.imageMeta(payload).as("m"))
+      df.select(col("w"), col("h"), MediaExpressions.image_meta(payload).as("m"))
         .select(col("m.format"), col("m.width") === col("w"),
           col("m.height") === col("h"))
         .as[(String, Boolean, Boolean)].collect()
@@ -374,13 +378,13 @@ class ScaleOpsSpec extends SparkSpec {
       .forall(r => r == (("gif", true, true))))
     // PNG width/height are u32: a dimension no u16 container can hold
     val big = Seq((70000L, 123456L)).toDF("w", "h")
-      .select(ScaleOps.imageMeta(
+      .select(MediaExpressions.image_meta(
         ScaleOps.synthPngHeader(col("w"), col("h"))).as("m"))
       .select(col("m.width"), col("m.height")).as[(Long, Long)].head()
     assert(big == ((70000L, 123456L)))
     // NULL payload -> NULL struct (null-intolerant expression)
     val n = Seq(Tuple1(Option.empty[Array[Byte]])).toDF("p")
-      .select(ScaleOps.imageMeta(col("p")).as("m")).head()
+      .select(MediaExpressions.image_meta(col("p")).as("m")).head()
     assert(n.isNullAt(0))
   }
 
@@ -388,7 +392,7 @@ class ScaleOpsSpec extends SparkSpec {
     // VP8L packs (w−1, h−1) in 14 bits each — 16384 is the format max
     val dims = Seq((1L, 1L), (16L, 16L), (640L, 480L), (16384L, 16384L))
     val rt = dims.toDF("w", "h").select(col("w"), col("h"),
-        ScaleOps.imageMeta(ScaleOps.synthWebpHeader(col("w"), col("h"))).as("m"))
+        MediaExpressions.image_meta(ScaleOps.synthWebpHeader(col("w"), col("h"))).as("m"))
       .select(col("m.format"), col("m.width") === col("w"),
         col("m.height") === col("h"))
       .as[(String, Boolean, Boolean)].collect()
@@ -397,7 +401,7 @@ class ScaleOpsSpec extends SparkSpec {
     def le24(v: Int) = le16(v) ++ Array[Byte](((v >> 16) & 0xFF).toByte)
     def le32(v: Int) = le24(v) ++ Array[Byte](((v >> 24) & 0xFF).toByte)
     def parse(bytes: Array[Byte]) = Seq(Tuple1(bytes)).toDF("p")
-      .select(ScaleOps.imageMeta(col("p")).as("m"))
+      .select(MediaExpressions.image_meta(col("p")).as("m"))
       .select(col("m.format"), col("m.width"), col("m.height"))
       .collect().map(r => (r.getString(0), r.get(1), r.get(2))).head
     // lossy VP8: frame tag, 9D 01 2A start code, u16-le dims whose two
@@ -425,7 +429,7 @@ class ScaleOpsSpec extends SparkSpec {
       (8L, 192000L, 32L, 123456L), (4L, 1048575L, 24L, 100000007L))
     val df = specs.toDF("ch", "rate", "bits", "frames")
     def roundTrip(payload: org.apache.spark.sql.Column) =
-      df.select(ScaleOps.audioMeta(payload).as("m"),
+      df.select(MediaExpressions.audio_meta(payload).as("m"),
           col("ch"), col("rate"), col("bits"), col("frames"))
         .select(col("m.format"), col("m.channels") === col("ch"),
           col("m.sample_rate") === col("rate"),
@@ -441,14 +445,14 @@ class ScaleOpsSpec extends SparkSpec {
     // FLAC's 36-bit total-samples field holds counts past u32
     val bigFlac = Seq((2L, 48000L, 16L, 68719476735L)) // 2^36 - 1
       .toDF("ch", "rate", "bits", "frames")
-      .select(ScaleOps.audioMeta(ScaleOps.synthFlacHeader(col("ch"),
+      .select(MediaExpressions.audio_meta(ScaleOps.synthFlacHeader(col("ch"),
         col("rate"), col("bits"), col("frames"))).as("m"))
       .select(col("m.n_frames")).as[Long].head()
     assert(bigFlac == 68719476735L)
     // MP4: both mvhd versions; v1 exercises a >u32 duration
     val mp4 = Seq((600L, 12345L, 0), (90000L, 5000000000L, 1))
       .toDF("ts", "dur", "ver")
-      .select(ScaleOps.mp4Meta(
+      .select(MediaExpressions.mp4_meta(
           ScaleOps.synthMp4Header(col("ts"), col("dur"), col("ver"))).as("m"),
         col("ts"), col("dur"))
       .select(col("m.brand"), col("m.timescale") === col("ts"),
@@ -457,8 +461,8 @@ class ScaleOpsSpec extends SparkSpec {
     assert(mp4.forall(_ == (("isom", true, true))))
     // NULL payloads -> NULL structs
     val n = Seq(Tuple1(Option.empty[Array[Byte]])).toDF("p")
-      .select(ScaleOps.audioMeta(col("p")).as("a"),
-        ScaleOps.mp4Meta(col("p")).as("v")).head()
+      .select(MediaExpressions.audio_meta(col("p")).as("a"),
+        MediaExpressions.mp4_meta(col("p")).as("v")).head()
     assert(n.isNullAt(0) && n.isNullAt(1))
   }
 
@@ -538,7 +542,7 @@ class ScaleOpsSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001).limit(50)
     val pairs = emb.select(col("vec_id").as("id1"), col("embedding").as("e1"))
       .crossJoin(emb.select(col("vec_id").as("id2"), col("embedding").as("e2")))
-      .withColumn("d_native", ScaleOps.dotD(col("e1"), col("e2")))
+      .withColumn("d_native", VectorExpressions.dot_f(col("e1"), col("e2")))
       .withColumn("d_hof", ScaleOps.dotHof(col("e1"), col("e2")))
     val mismatches = pairs.filter(col("d_native") =!= col("d_hof")).count()
     assert(mismatches == 0)
@@ -639,7 +643,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   private def decodeRaster(b: Array[Byte]) =
     Seq(Tuple1(b)).toDF("p")
-      .select(ScaleOps.imageDecode(col("p")).as("r"))
+      .select(RasterFunctions.image_decode(col("p")).as("r"))
       .select(col("r.format"), col("r.width"), col("r.height"),
         col("r.channels"), col("r.pixels"))
       .collect().map(r => (r.getString(0), r.get(1), r.get(2), r.get(3),
@@ -828,11 +832,11 @@ class ScaleOpsSpec extends SparkSpec {
     val rows = Seq((6L, 7L, 123L), (5L, 5L, 4L), (9L, 8L, 77L))
       .toDF("w", "h", "seed")
     val dec = rows.select(col("seed"),
-        ScaleOps.imageDecode(ScaleOps.synthPng(col("w"), col("h"),
+        RasterFunctions.image_decode(RasterSynthFunctions.synth_png(col("w"), col("h"),
           col("seed"), channels = 3)).as("r"),
-        ScaleOps.imageDecode(ScaleOps.synthPng(col("w"), col("h"),
+        RasterFunctions.image_decode(RasterSynthFunctions.synth_png(col("w"), col("h"),
           col("seed"), channels = 1)).as("g"),
-        ScaleOps.imageDecode(ScaleOps.synthGif(col("w"), col("h"),
+        RasterFunctions.image_decode(RasterSynthFunctions.synth_gif(col("w"), col("h"),
           col("seed"))).as("f"),
         col("w"), col("h"))
       .collect()
@@ -863,7 +867,7 @@ class ScaleOpsSpec extends SparkSpec {
     }
     // a wide GIF forces the LZW dictionary through a code-width change
     val wide = Seq((200L, 30L, 9L)).toDF("w", "h", "seed")
-      .select(ScaleOps.imageDecode(ScaleOps.synthGif(col("w"), col("h"),
+      .select(RasterFunctions.image_decode(RasterSynthFunctions.synth_gif(col("w"), col("h"),
         col("seed"))).as("f"))
       .select(col("f.width"), col("f.pixels")).head()
     assert(wide.getInt(0) == 200)
@@ -882,7 +886,7 @@ class ScaleOpsSpec extends SparkSpec {
       (16L, 32L, 3L), (32L, 32L, 5L), (48L, 16L, 6L)).toDF("w", "h", "seed")
     for (mode <- 0 to 2) {
       val dec = rows.select(col("seed"), col("w"), col("h"),
-        ScaleOps.imageDecode(ScaleOps.synthJpeg(col("w"), col("h"),
+        RasterFunctions.image_decode(JpegSynthFunctions.synth_jpeg(col("w"), col("h"),
           col("seed"), mode)).as("r")).collect()
       dec.foreach { r =>
         val seed = r.getLong(0)
@@ -919,7 +923,7 @@ class ScaleOpsSpec extends SparkSpec {
     }
     // non-MCU-multiple dims violate the fixture's exactness contract: null
     assert(rows.limit(1)
-      .select(ScaleOps.synthJpeg(lit(12L), lit(16L), lit(1L), 0).isNull)
+      .select(JpegSynthFunctions.synth_jpeg(lit(12L), lit(16L), lit(1L), 0).isNull)
       .head().getBoolean(0))
   }
 
@@ -932,7 +936,7 @@ class ScaleOpsSpec extends SparkSpec {
       (16L, 32L, 3L), (32L, 32L, 5L), (48L, 16L, 6L)).toDF("w", "h", "seed")
     for (mode <- 3 to 5) {
       val dec = rows.select(col("seed"), col("w"), col("h"),
-        ScaleOps.imageDecode(ScaleOps.synthJpeg(col("w"), col("h"),
+        RasterFunctions.image_decode(JpegSynthFunctions.synth_jpeg(col("w"), col("h"),
           col("seed"), mode)).as("r")).collect()
       dec.foreach { r =>
         val seed = r.getLong(0)
@@ -968,11 +972,11 @@ class ScaleOpsSpec extends SparkSpec {
     // a TRUNCATED progressive stream (EOI before any scan data, or a
     // scan cut mid-entropy-data) rejects — never partial pixels
     val full = rows.limit(1)
-      .select(ScaleOps.synthJpeg(lit(16L), lit(16L), lit(1L), 4))
+      .select(JpegSynthFunctions.synth_jpeg(lit(16L), lit(16L), lit(1L), 4))
       .head().getAs[Array[Byte]](0)
     def decBytes(b: Array[Byte]): String =
       Seq(Tuple1(b)).toDF("p")
-        .select(ScaleOps.imageDecode(col("p")).as("r"))
+        .select(RasterFunctions.image_decode(col("p")).as("r"))
         .select(col("r.format")).head().getString(0)
     assert(decBytes(full) == "jpeg")
     // drop the EOI plus some scan tail
@@ -1033,7 +1037,7 @@ class ScaleOpsSpec extends SparkSpec {
     }
     def decodePx(b: Array[Byte]): (String, Seq[Byte]) = {
       val st = Seq(Tuple1(b)).toDF("p")
-        .select(ScaleOps.imageDecode(col("p")).as("r"))
+        .select(RasterFunctions.image_decode(col("p")).as("r"))
         .select(col("r.format"), col("r.pixels")).head()
       (st.getString(0),
         Option(st.get(1)).map(_.asInstanceOf[Array[Byte]].toSeq).orNull)
@@ -1144,7 +1148,7 @@ class ScaleOpsSpec extends SparkSpec {
     // reject matrix: header-only (no scan), progressive SOF2, truncated
     // entropy data, nonzero restart interval, 12-bit precision
     val headerOnly = Seq(Tuple1(1L)).toDF("i")
-      .select(ScaleOps.imageDecode(
+      .select(RasterFunctions.image_decode(
         ScaleOps.synthJpegHeader(lit(64L), lit(48L))).getField("format"))
       .head().getString(0)
     assert(headerOnly == "unknown")
@@ -1196,7 +1200,7 @@ class ScaleOpsSpec extends SparkSpec {
     val rows = Seq((1L, 1L, 0L), (5L, 3L, 1L), (13L, 11L, 7L), (8L, 9L, 42L),
       (16L, 16L, 1L), (16L, 16L, 2L), (32L, 32L, 3L)).toDF("w", "h", "seed")
     val dec = rows.select(col("seed"), col("w"), col("h"),
-      ScaleOps.imageDecode(ScaleOps.synthWebpL(col("w"), col("h"),
+      RasterFunctions.image_decode(WebpSynthFunctions.synth_webpl(col("w"), col("h"),
         col("seed"))).as("r")).collect()
     dec.foreach { r =>
       val seed = r.getLong(0)
@@ -1614,7 +1618,7 @@ class ScaleOpsSpec extends SparkSpec {
     Seq(0x24, 0x01, 0x92, 0x03).foreach(s => bw2.code(gc(s), 2))
     bw2.flush()
     val st = Seq(Tuple1(riff(bw2.out.toSeq))).toDF("p")
-      .select(ScaleOps.imageDecode(col("p")).as("r"))
+      .select(RasterFunctions.image_decode(col("p")).as("r"))
       .select(col("r.format"), col("r.width"), col("r.height"), col("r.pixels"))
       .head()
     assert((st.getString(0), st.getInt(1), st.getInt(2)) == (("webp", 5, 2)))
@@ -1639,7 +1643,7 @@ class ScaleOpsSpec extends SparkSpec {
     simpleOne(bw3, 0)
     bw3.flush()
     assert(Seq(Tuple1(riff(bw3.out.toSeq))).toDF("p")
-      .select(ScaleOps.imageDecode(col("p")).as("r"))
+      .select(RasterFunctions.image_decode(col("p")).as("r"))
       .select(col("r.format")).head().getString(0) == "unknown")
   }
 
@@ -1649,7 +1653,7 @@ class ScaleOpsSpec extends SparkSpec {
       (3 + seed % 11, 3 + seed % 9, seed)
     }.toDF("w", "h", "seed")
     val got = rows.select(col("seed"),
-      ScaleOps.imageDecode(ScaleOps.synthWebpLPalette(
+      RasterFunctions.image_decode(WebpSynthFunctions.synth_webpl_palette(
         col("w"), col("h"), col("seed"))).as("r"))
       .select(col("seed"), col("r.format"), col("r.width"), col("r.height"),
         col("r.pixels"))
@@ -1680,7 +1684,7 @@ class ScaleOpsSpec extends SparkSpec {
       (3 + seed % 11, 3 + seed % 9, seed)
     }.toDF("w", "h", "seed")
     val got = rows.select(col("seed"),
-      ScaleOps.imageDecode(ScaleOps.synthWebpLPred(
+      RasterFunctions.image_decode(WebpSynthFunctions.synth_webpl_pred(
         col("w"), col("h"), col("seed"))).as("r"))
       .select(col("seed"), col("r.format"), col("r.width"), col("r.height"),
         col("r.pixels"))
@@ -1898,8 +1902,8 @@ class ScaleOpsSpec extends SparkSpec {
     val pgm = "P5\n4 2\n255\n".getBytes("US-ASCII") ++
       Array.tabulate(8)(_.toByte)
     val resized = Seq(Tuple1(pgm)).toDF("p")
-      .select(ScaleOps.imageResizeNN(
-        ScaleOps.imageDecode(col("p")), 2, 2).as("r"))
+      .select(RasterFunctions.image_resize_nn(
+        RasterFunctions.image_decode(col("p")), 2, 2).as("r"))
       .select(col("r.width"), col("r.height"), col("r.pixels")).head()
     assert(resized.getInt(0) == 2 && resized.getInt(1) == 2)
     assert(resized.getAs[Array[Byte]](2).toSeq == Seq[Byte](0, 2, 4, 6))
@@ -1907,15 +1911,15 @@ class ScaleOpsSpec extends SparkSpec {
     val data = Array[Byte](10, 20, 30, 40, 50, 60, 70, 80, 90, 100, 110, 120)
     val ppm = "P6\n2 2\n255\n".getBytes("US-ASCII") ++ data
     val sums = Seq(Tuple1(ppm)).toDF("p")
-      .select(ScaleOps.rasterChannelSums(
-        ScaleOps.imageDecode(col("p"))).as("s"))
+      .select(RasterFunctions.raster_channel_sums(
+        RasterFunctions.image_decode(col("p"))).as("s"))
       .as[Seq[Long]].head()
     assert(sums == Seq(220L, 260L, 300L))
     // unknown raster: resize passes through, sums are NULL
     val unk = Seq(Tuple1("nope".getBytes)).toDF("p")
-      .select(ScaleOps.imageResizeNN(
-          ScaleOps.imageDecode(col("p")), 2, 2).as("r"),
-        ScaleOps.rasterChannelSums(ScaleOps.imageDecode(col("p"))).as("s"))
+      .select(RasterFunctions.image_resize_nn(
+          RasterFunctions.image_decode(col("p")), 2, 2).as("r"),
+        RasterFunctions.raster_channel_sums(RasterFunctions.image_decode(col("p"))).as("s"))
       .select(col("r.format"), col("s")).head()
     assert(unk.getString(0) == "unknown" && unk.isNullAt(1))
   }
@@ -1925,8 +1929,8 @@ class ScaleOpsSpec extends SparkSpec {
     // container encodings, identical decoded pixel arrays
     val df = Seq((5L, 4L, 3L), (8L, 3L, 17L), (4L, 6L, 42L)).toDF("w", "h", "seed")
     val both = df.select(
-        ScaleOps.imageDecode(ScaleOps.synthPpm(col("w"), col("h"), col("seed"))).as("p"),
-        ScaleOps.imageDecode(ScaleOps.synthBmp(col("w"), col("h"), col("seed"))).as("b"),
+        RasterFunctions.image_decode(ScaleOps.synthPpm(col("w"), col("h"), col("seed"))).as("p"),
+        RasterFunctions.image_decode(ScaleOps.synthBmp(col("w"), col("h"), col("seed"))).as("b"),
         col("w"), col("h"), col("seed"))
       .collect()
     both.foreach { r =>
@@ -2042,7 +2046,7 @@ class ScaleOpsSpec extends SparkSpec {
       (1L, Seq(1.0f, 2.0f), Seq(3.0f, 4.0f)),        // ok
       (2L, Seq(1.0f, 2.0f, 3.0f), Seq(3.0f, 4.0f)))  // truncated right side
       .toDF("id", "a", "b")
-    val r = df.withColumn("dn", ScaleOps.dotD(col("a"), col("b")))
+    val r = df.withColumn("dn", VectorExpressions.dot_f(col("a"), col("b")))
       .withColumn("dh", ScaleOps.dotHof(col("a"), col("b")))
       .select("id", "dn", "dh").orderBy("id").collect()
     assert(r(0).getDouble(1) == 11.0 && r(0).getDouble(2) == 11.0)
@@ -2661,7 +2665,7 @@ class ScaleOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val corpus = Tables.documents(spark, sf0001).select("doc_id", "text")
     Seq(crafted, corpus).foreach { docs =>
-      val e = org.apache.spark.sql.graftnative.TextExpressions
+      val e = TextExpressions
         .char_entropy(col("text"))
       val native = docs.filter(length(col("text")) > 0)
         .select(col("doc_id"),
@@ -2674,7 +2678,7 @@ class ScaleOpsSpec extends SparkSpec {
     }
     // known values: uniform over k symbols = quantized ln(k); constant = 0
     val row = crafted.limit(2)
-      .select(org.apache.spark.sql.graftnative.TextExpressions
+      .select(TextExpressions
         .char_entropy(col("text")).as("e"))
       .select(col("e.n_distinct_chars"), col("e.entropy_nats"))
       .collect().sortBy(_.getLong(0))
@@ -3305,7 +3309,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   private def cdcCutsOf(s: String, w: Int = 16, mask: Int = 15): Seq[Int] =
     Seq(Tuple1(s)).toDF("t")
-      .select(ScaleOps.cdcCuts(col("t"), w, mask).as("c"))
+      .select(TextExpressions.cdc_cuts(col("t"), w, mask).as("c"))
       .head().getSeq[Int](0).toSeq
 
   test("CdcCuts: rolling hash equals the explicit polynomial reference; code-point semantics; edges") {
@@ -3323,7 +3327,7 @@ class ScaleOpsSpec extends SparkSpec {
     assert(cdcCutsOf("abcdefghijklmnop") == Seq())
     // null text: empty, not null
     val nullRow = Seq[Option[String]](None).toDF("t")
-      .select(ScaleOps.cdcCuts(col("t"), 16, 15).as("c")).head()
+      .select(TextExpressions.cdc_cuts(col("t"), 16, 15).as("c")).head()
     assert(!nullRow.isNullAt(0) && nullRow.getSeq[Int](0).isEmpty)
   }
 
@@ -3377,7 +3381,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   private def decodePcm(b: Array[Byte]) =
     Seq(Tuple1(b)).toDF("p")
-      .select(ScaleOps.pcmDecode(col("p")).as("d"))
+      .select(PcmFunctions.pcm_decode(col("p")).as("d"))
       .select(col("d.format"), col("d.channels"), col("d.n_frames"),
         col("d.samples"), col("d"))
       .head()
@@ -3389,7 +3393,7 @@ class ScaleOpsSpec extends SparkSpec {
     assert(r.getString(0) == "wav" && r.getInt(1) == 2 && r.getInt(2) == 3)
     assert(r.getSeq[Int](3) == Seq(100, -200, -1, 32767, -32768, 0))
     val st = Seq(Tuple1(wavBytes(2, 8000, 16, data))).toDF("p")
-      .select(ScaleOps.pcmChannelStats(ScaleOps.pcmDecode(col("p"))).as("s"))
+      .select(PcmFunctions.pcm_channel_stats(PcmFunctions.pcm_decode(col("p"))).as("s"))
       .select(col("s.sums"), col("s.peaks"), col("s.zero_crossings")).head()
     // ch0: 100, -1, -32768 (one + -> - flip); ch1: -200, 32767, 0 (one - -> + flip)
     assert(st.getSeq[Long](0) == Seq(-32669L, 32567L))
@@ -3403,7 +3407,7 @@ class ScaleOpsSpec extends SparkSpec {
     assert(r.getSeq[Int](3) == Seq(0, -1, 1, -128))
     val st = Seq(Tuple1(wavBytes(1, 8000, 8, Array[Byte](128.toByte, 127, 129.toByte, 0))))
       .toDF("p")
-      .select(ScaleOps.pcmChannelStats(ScaleOps.pcmDecode(col("p"))).as("s"))
+      .select(PcmFunctions.pcm_channel_stats(PcmFunctions.pcm_decode(col("p"))).as("s"))
       .select(col("s.sums"), col("s.peaks"), col("s.zero_crossings")).head()
     assert(st.getSeq[Long](0) == Seq(-128L))
     assert(st.getSeq[Long](1) == Seq(128L))
@@ -3425,13 +3429,13 @@ class ScaleOpsSpec extends SparkSpec {
     assert(decodePcm("not audio".getBytes).getString(0) == "unknown")
     // stats on an unknown decode: NULL through
     val unk = Seq(Tuple1("nope".getBytes)).toDF("p")
-      .select(ScaleOps.pcmChannelStats(ScaleOps.pcmDecode(col("p"))).as("s")).head()
+      .select(PcmFunctions.pcm_channel_stats(PcmFunctions.pcm_decode(col("p"))).as("s")).head()
     assert(unk.isNullAt(0))
   }
 
   private def y4m(b: Array[Byte], stride: Int) =
     Seq(Tuple1(b)).toDF("p")
-      .select(ScaleOps.y4mFrameLuma(col("p"), stride).as("v"))
+      .select(PcmFunctions.y4m_frame_luma(col("p"), stride).as("v"))
       .select(col("v.width"), col("v.height"), col("v.colorspace"),
         col("v.n_frames"), col("v.frame_idx"), col("v.y_sums"))
       .head()
@@ -3478,7 +3482,7 @@ class ScaleOpsSpec extends SparkSpec {
       (1L, 44100L, 64L, 2L), (2L, 16000L, 130L, 7L)).toDF("ch", "rate", "fr", "seed")
     for (bits <- Seq(8, 16)) {
       val dec = rows.select(col("ch"), col("fr"), col("seed"),
-        ScaleOps.pcmDecode(ScaleOps.synthFlac(col("ch"), col("rate"),
+        PcmFunctions.pcm_decode(FlacSynthFunctions.synth_flac(col("ch"), col("rate"),
           col("fr"), col("seed"), bits)).as("d")).collect()
       dec.foreach { r =>
         val ch = r.getLong(0).toInt; val fr = r.getLong(1).toInt
@@ -3537,7 +3541,7 @@ class ScaleOpsSpec extends SparkSpec {
     }
     def decode(ints: Seq[Int]) = {
       val st = Seq(Tuple1(ints.map(_.toByte).toArray)).toDF("b")
-        .select(ScaleOps.pcmDecode(col("b")).as("d")).head().getStruct(0)
+        .select(PcmFunctions.pcm_decode(col("b")).as("d")).head().getStruct(0)
       (st.getString(0), if (st.isNullAt(5)) null else st.getSeq[Int](5))
     }
     def const(bw: BW, v: Int, bits: Int): Unit = {
@@ -3583,7 +3587,7 @@ class ScaleOpsSpec extends SparkSpec {
     val big = FlacSynth.flacBytes(1, 8000, 8, frames, seed = 3L)
     assert(big != null)
     val st = Seq(Tuple1(big)).toDF("b")
-      .select(ScaleOps.pcmDecode(col("b")).as("d")).head().getStruct(0)
+      .select(PcmFunctions.pcm_decode(col("b")).as("d")).head().getStruct(0)
     assert(st.getString(0) == "flac", "boundary stream must decode")
     assert(st.getInt(4) == frames.toInt)
     val samples = st.getSeq[Int](5)
@@ -3636,7 +3640,7 @@ class ScaleOpsSpec extends SparkSpec {
     }
     def decode(ints: Seq[Int]) = {
       val st = Seq(Tuple1(ints.map(_.toByte).toArray)).toDF("b")
-        .select(ScaleOps.pcmDecode(col("b")).as("d")).head().getStruct(0)
+        .select(PcmFunctions.pcm_decode(col("b")).as("d")).head().getStruct(0)
       (st.getString(0), if (st.isNullAt(5)) null else st.getSeq[Int](5))
     }
     // CONSTANT subframe, value 5: pad 0, type 000000, wasted 0, 8-bit 5
@@ -3684,7 +3688,7 @@ class ScaleOpsSpec extends SparkSpec {
     // the audio_pcm fixture contract: container value (seed*13 + k*7)
     // mod 2^bits, frame-major interleave
     val wav16 = Seq(Tuple1(7L)).toDF("seed")
-      .select(ScaleOps.pcmDecode(ScaleOps.synthWavPcm(
+      .select(PcmFunctions.pcm_decode(ScaleOps.synthWavPcm(
         lit(2L), lit(8000L), 16, lit(5L), col("seed"))).as("d"))
       .select(col("d.channels"), col("d.n_frames"), col("d.samples")).head()
     assert(wav16.getInt(0) == 2 && wav16.getInt(1) == 5)
@@ -3694,7 +3698,7 @@ class ScaleOpsSpec extends SparkSpec {
     }
     assert(wav16.getSeq[Int](2) == want16)
     val wav8 = Seq(Tuple1(3L)).toDF("seed")
-      .select(ScaleOps.pcmDecode(ScaleOps.synthWavPcm(
+      .select(PcmFunctions.pcm_decode(ScaleOps.synthWavPcm(
         lit(1L), lit(8000L), 8, lit(4L), col("seed"))).as("d"))
       .select(col("d.samples")).head()
     assert(wav8.getSeq[Int](0) ==
@@ -3703,9 +3707,9 @@ class ScaleOpsSpec extends SparkSpec {
     // SAME luma sums — chroma planes change the walk, not the signal
     val vids = Seq(Tuple1(11L)).toDF("seed")
       .select(
-        ScaleOps.y4mFrameLuma(ScaleOps.synthY4m(
+        PcmFunctions.y4m_frame_luma(ScaleOps.synthY4m(
           lit(4L), lit(4L), lit(3L), col("seed"), "mono"), 1).as("m"),
-        ScaleOps.y4mFrameLuma(ScaleOps.synthY4m(
+        PcmFunctions.y4m_frame_luma(ScaleOps.synthY4m(
           lit(4L), lit(4L), lit(3L), col("seed"), "420jpeg"), 1).as("c"))
       .select(col("m.y_sums"), col("c.y_sums"), col("m.n_frames")).head()
     val wantLuma = (0 until 3).map { f =>
@@ -3718,7 +3722,7 @@ class ScaleOpsSpec extends SparkSpec {
     // arithmetic as the parser, so the stream decodes instead of
     // silently yielding NULL from a payload-size disagreement
     val odd = Seq(Tuple1(5L)).toDF("seed")
-      .select(ScaleOps.y4mFrameLuma(ScaleOps.synthY4m(
+      .select(PcmFunctions.y4m_frame_luma(ScaleOps.synthY4m(
         lit(3L), lit(5L), lit(2L), col("seed"), "420jpeg"), 1).as("v"))
       .select(col("v.n_frames"), col("v.y_sums")).head()
     assert(odd.getInt(0) == 2)
@@ -3795,11 +3799,11 @@ class ScaleOpsSpec extends SparkSpec {
     val h = lit(32L)
     val frames = lit(3L) + col("doc_id") % 4
     val pids = docs.select(
-        ScaleOps.videoFrameDhashes(
-          ScaleOps.synthAvi(w, h, frames, col("doc_id")), 1).as("v"))
+        VideoDhashFunctions.video_frame_dhashes(
+          AviFunctions.synth_avi(w, h, frames, col("doc_id")), 1).as("v"))
       .unionAll(docs.select(
-        ScaleOps.videoFrameDhashes(
-          ScaleOps.synthMp4Mjpeg(w, h, frames, col("doc_id")), 1).as("v")))
+        VideoDhashFunctions.video_frame_dhashes(
+          Mp4TrackFunctions.synth_mp4_mjpeg(w, h, frames, col("doc_id")), 1).as("v")))
       .select(explode(col("v.dhash")).as("dh"))
     val nFrames = pids.count()
     val nReps = pids.distinct().count()
