@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,7 +21,8 @@ import graft.operators.ScaleOps
   * measures the shipped plan. Reports recall@10 vs exact brute force,
   * the measured per-query scan fraction (probed-cell mass / corpus),
   * and the filtered-ANN variant (label-gated ADC against label-filtered
-  * truth). Fresh-JVM quiet-box methodology as the other stress mains.
+  * truth). Run with `runMain graft.Bench stress ann` (fresh JVM, quiet
+  * box, as every stress lane).
   *
   * Knobs: `SPARK_GRAFT_ANN_VECS` (default 1M), `SPARK_GRAFT_ANN_K`
   * (coarse cells, default 64), `SPARK_GRAFT_ANN_PROBES` (default 8),
@@ -33,7 +34,7 @@ import graft.operators.ScaleOps
   * reference-array codebooks compile at any size since round 11).
   */
 object AnnStress {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession): String = {
     val cpus = GraftSession.cpus
     val n = sys.env.getOrElse("SPARK_GRAFT_ANN_VECS", "1000000").toLong
     val coarseK = sys.env.getOrElse("SPARK_GRAFT_ANN_K", "64").toInt
@@ -43,7 +44,6 @@ object AnnStress {
     val pqm = sys.env.getOrElse("SPARK_GRAFT_ANN_PQM", "8").toInt
     val trainN = sys.env.getOrElse("SPARK_GRAFT_ANN_TRAIN", "100000").toLong
     val dim = 64
-    val spark = GraftSession.local(cpus)
     import spark.implicits._
 
     // clustered corpus: center(label, d) in [-1, 1] plus per-vector
@@ -239,29 +239,27 @@ object AnnStress {
         .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
         .map { case (q, ps) => q -> ps.map(_._2).toSet }
     }
-    val t0 = System.nanoTime()
-    val brutePlain = bruteTopK(filtered = false)
-    val bruteSec = (System.nanoTime() - t0) / 1e9
+    val (bruteSec, brutePlain) = Bench.best(spark, 1)(bruteTopK(filtered = false))
     val bruteFiltered = bruteTopK(filtered = true)
 
     // offline index build on a bounded sample (the production stance:
     // centroid quality converges far below corpus size)
     val sample = corpus.filter(
       pmod(col("vec_id"), lit(math.max(1L, n / trainN))) === 0)
-    val t1 = System.nanoTime()
-    val cents = ml.IvfCodebook.train(sample, "embedding", coarseK)
-    val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("c_id", "c_emb")
-      .select(col("c_id"), col("c_emb").cast(ArrayType(FloatType)).as("c_emb"))
     // random init for big books: the probe's m·k can reach 8192
     // centroids across m sequential fits — k-means|| init alone would
     // dominate the offline build (measured: >90 min at m=32, k=256)
     val initMode = sys.env.getOrElse("SPARK_GRAFT_ANN_INIT",
       if (pqm.toLong * pqk > 2048) "random" else "k-means||")
-    val cb = ml.IvfCodebook.trainPqResidual(sample, "embedding", centsDf,
-      dim, m = pqm, k = pqk, seed = 1042L, maxIter = 20,
-      initMode = initMode)
-    val trainSec = (System.nanoTime() - t1) / 1e9
+    val (trainSec, (centsDf, cb)) = Bench.best(spark, 1) {
+      val cents = ml.IvfCodebook.train(sample, "embedding", coarseK)
+      val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("c_id", "c_emb")
+        .select(col("c_id"), col("c_emb").cast(ArrayType(FloatType)).as("c_emb"))
+      (centsDf, ml.IvfCodebook.trainPqResidual(sample, "embedding", centsDf,
+        dim, m = pqm, k = pqk, seed = 1042L, maxIter = 20,
+        initMode = initMode))
+    }
 
     def recallOf(result: DataFrame, truth: Map[Long, Set[Long]]): Double = {
       val got = result.select("q_id", "vec_id").collect()
@@ -273,12 +271,12 @@ object AnnStress {
     }
 
     // plain IVF-PQ through the shipped plan
-    val t2 = System.nanoTime()
-    val (plain, probeCells, coded) = QueriesScale.ivfPqServeFrom(
-      spark, corpus, centsDf, cb, qBatch, nProbe, refine,
-      materializeIndex = true)
-    val plainRecall = recallOf(plain, brutePlain)
-    val serveSec = (System.nanoTime() - t2) / 1e9
+    val (serveSec, (plainRecall, probeCells, coded)) = Bench.best(spark, 1) {
+      val (plain, probeCells, coded) = QueriesScale.ivfPqServeFrom(
+        spark, corpus, centsDf, cb, qBatch, nProbe, refine,
+        materializeIndex = true)
+      (recallOf(plain, brutePlain), probeCells, coded)
+    }
     // measured scan fraction: probed-cell mass per query / corpus size
     val cellSizes = coded.groupBy("c_id").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -294,7 +292,7 @@ object AnnStress {
       materializeIndex = true)
     val filteredRecall = recallOf(filtered, bruteFiltered)
 
-    println(Seq(
+    Seq(
       s""""vectors":$n""", s""""dim":$dim""", s""""cpus":$cpus""",
       s""""corpus":"$corpusMode"""", s""""rot":"$rotMode"""",
       s""""coarse_k":$coarseK""", s""""n_probe":$nProbe""",
@@ -305,7 +303,6 @@ object AnnStress {
       f""""ivfpq_recall_at10":$plainRecall%.4f""",
       f""""filtered_recall_at10":$filteredRecall%.4f""",
       f""""scan_fraction":$scanFrac%.4f""")
-      .mkString("""{"metric":"ann_stress",""", ",", "}"))
-    spark.stop()
+      .mkString("""{"metric":"ann_stress",""", ",", "}")
   }
 }

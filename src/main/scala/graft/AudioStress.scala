@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
 import org.apache.spark.sql.graftnative.{FlacSynthFunctions, Mp3PcmFunctions,
@@ -15,14 +16,14 @@ import org.apache.spark.sql.graftnative.{FlacSynthFunctions, Mp3PcmFunctions,
   * the final scalar aggregate), so the number prices the whole
   * encode+decode round trip, exactly like RasterStress. Alternating
   * mono/stereo and 8/16-bit rows keep all four sample layouts in the
-  * loop. Fresh-JVM quiet-box methodology as the other stress mains.
+  * loop. Run with `runMain graft.Bench stress audio` (fresh JVM, quiet
+  * box, as every stress lane).
   */
 object AudioStress {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession): String = {
     val cpus = GraftSession.cpus
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_AUDIO_DOCS", "50000").toLong
     val frames = sys.env.getOrElse("SPARK_GRAFT_AUDIO_FRAMES", "4096").toLong
-    val spark = GraftSession.local(cpus)
     val ids = spark.range(0, nDocs).select(col("id"))
     def stats(payload: org.apache.spark.sql.Column) =
       PcmFunctions.pcm_channel_stats(PcmFunctions.pcm_decode(payload)).as("s")
@@ -50,14 +51,12 @@ object AudioStress {
           .otherwise(FlacSynthFunctions.synth_flac(lit(1L) + col("id") % 2,
             lit(8000L), lit(frames), s, 16)))
     ).foreach { case (fmt, synth) =>
-      val t0 = System.nanoTime()
-      val r = ids.select(stats(synth(col("id"))))
+      val (sec, r) = Bench.best(spark, 1)(ids.select(stats(synth(col("id"))))
         .agg(sum(element_at(col("s.sums"), 1)).as("c0"),
           // count the NON-NULL stats: a decode regression ('unknown' →
           // null stats) must not silently inflate docs/s
           count(col("s")).as("n"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       require(r.getLong(1) == nDocs && !r.isNullAt(0),
         s"$fmt: decoded ${r.getLong(1)} of $nDocs (every row must decode)")
       fields += f""""${fmt}_sec":$sec%.2f"""
@@ -74,12 +73,10 @@ object AudioStress {
       val mp3Docs = math.max(1000L, nDocs / 10) // ~40x the PCM per doc
       val mp3Ids = spark.range(0, mp3Docs).select(col("id"))
       val mp3Mb = mp3Docs * 3.0 * 1152 * 1.5 * 2 / 1e6
-      val t0 = System.nanoTime()
-      val r = mp3Ids.select(stats(Mp3PcmFunctions.synth_mp3_pcm(col("id"))))
+      val (sec, r) = Bench.best(spark, 1)(mp3Ids.select(stats(Mp3PcmFunctions.synth_mp3_pcm(col("id"))))
         .agg(sum(element_at(col("s.sums"), 1)).as("c0"),
           count(col("s")).as("n"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       require(r.getLong(1) == mp3Docs,
         s"mp3: decoded ${r.getLong(1)} of $mp3Docs (every row must decode)")
       fields += s""""mp3_docs":$mp3Docs"""
@@ -96,12 +93,10 @@ object AudioStress {
       val vDocs = math.max(1000L, nDocs / 10)
       val vIds = spark.range(0, vDocs).select(col("id"))
       val vMb = vDocs * 2.0 * 128 * 1.5 * 2 / 1e6
-      val t0 = System.nanoTime()
-      val r = vIds.select(stats(VorbisFunctions.synth_ogg_vorbis(col("id"))))
+      val (sec, r) = Bench.best(spark, 1)(vIds.select(stats(VorbisFunctions.synth_ogg_vorbis(col("id"))))
         .agg(sum(element_at(col("s.sums"), 1)).as("c0"),
           count(col("s")).as("n"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       require(r.getLong(1) == vDocs,
         s"vorbis: decoded ${r.getLong(1)} of $vDocs (every row must decode)")
       fields += s""""vorbis_docs":$vDocs"""
@@ -109,7 +104,6 @@ object AudioStress {
       fields += f""""vorbis_docs_per_s":${vDocs / sec}%.0f"""
       fields += f""""vorbis_pcm_mb_per_s":${vMb / sec}%.1f"""
     }
-    println(fields.mkString("""{"metric":"audio_stress",""", ",", "}"))
-    spark.stop()
+    fields.mkString("""{"metric":"audio_stress",""", ",", "}")
   }
 }

@@ -1,34 +1,186 @@
 package graft
+import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftnative.{RasterFunctions, RasterSynthFunctions}
+
+/** The engine's one measurement runner. Every mode shares one key
+  * selector ([[selectKeys]]), one session and warm-up ([[withSession]]),
+  * one best-of-REPS timer ([[best]]) and one JSON-line writer ([[emit]]).
+  *
+  *  - `runMain graft.Bench`: the suite bench. Times every key of
+  *    [[SparkEntry.queries]] (or `SPARK_GRAFT_BENCH_KEYS`) at
+  *    `SPARK_GRAFT_SF_DIR`, prints the `total` and `total_summary` lines
+  *    and copies the first to `SPARK_GRAFT_BENCH_OUT`.
+  *  - `time <keys> [sfDir]`: times the keys, in the given order, in one
+  *    session and prints one `{"metric":"time",...}` line.
+  *  - `explain <keys> [sfDir]`: `time`, printing each formatted plan first.
+  *  - `plan <keys> [sfDir] [outDir]`: each key's formatted plan, NOT
+  *    executed, to `<outDir>/<key>.txt` (stdout without outDir). `plan
+  *    all <sfDir> <outDir>` dumps the whole registry, so two builds'
+  *    plans can be diffed key by key.
+  *  - `recall [sfDir]`: ANN recall@10 per rung ([[RecallProbe]]).
+  *  - `stress <lane> [sfDir]`: one stress lane (see [[lanes]]); the line
+  *    is copied to `SPARK_GRAFT_STRESS_OUT` when set.
+  *
+  * `<keys>` is `all` or a comma list. Each key is the best of
+  * `SPARK_GRAFT_BENCH_REPS` (default 2) runs of its `count()`; sfDir
+  * defaults to `SPARK_GRAFT_SF_DIR`; `SPARK_GRAFT_LOG` overrides the WARN
+  * log level.
+  */
 object Bench {
+  private val Usage = "usage: graft.Bench [time|explain <keys> [sfDir] | " +
+    "plan <keys> [sfDir] [outDir] | recall [sfDir] | stress <lane> [sfDir]]"
+
+  /** The stress lanes, by `stress <lane>` name. Each runs its own
+    * pipeline and require gates and returns its JSON line. */
+  def lanes(sfDir: String): Map[String, SparkSession => String] = Map(
+    "skew" -> (SkewStress.run(_, sfDir)),
+    "raster" -> RasterStress.run,
+    "audio" -> AudioStress.run,
+    "doc" -> DocStress.run,
+    "dhash" -> DHashStress.run,
+    "graph" -> GraphStress.run,
+    "ann" -> AnnStress.run)
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    def sf(opt: List[String]) = opt.headOption
+      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    args.toList match {
+      case Nil =>
+        val keys = sys.env.get("SPARK_GRAFT_BENCH_KEYS")
+          .fold(SparkEntry.queries.keys.toSeq)(selectKeys(_))
+        withSession(sf(Nil))(suite(_, sf(Nil), keys.sorted))
+      case (mode @ ("time" | "explain")) :: spec :: opt if opt.size <= 1 =>
+        val (keys, sfDir) = (selectKeys(spec), sf(opt))
+        withSession(sfDir) { spark =>
+          val times = keys.map { k =>
+            if (mode == "explain") println(plan(spark, sfDir, k))
+            k -> timeKey(spark, sfDir, k)
+          }
+          emit(s"""{"metric":"time","queries":${queriesJson(times)},"sf":"$sfDir"}""", None)
+        }
+      case "plan" :: spec :: opt if opt.size <= 2 =>
+        val (keys, sfDir) = (selectKeys(spec), sf(opt))
+        withSession(sfDir) { spark =>
+          keys.foreach { k =>
+            opt.lift(1) match {
+              case Some(d) =>
+                val p = Files.createDirectories(Paths.get(d)).resolve(s"$k.txt")
+                Files.writeString(p, plan(spark, sfDir, k))
+                println(s"[bench] wrote $p")
+              case None => println(s"===== $k =====\n" + plan(spark, sfDir, k))
+            }
+          }
+        }
+      case "recall" :: opt if opt.size <= 1 =>
+        withSession(sf(opt))(spark => emit(RecallProbe.run(spark, sf(opt)), None))
+      case "stress" :: lane :: opt if opt.size <= 1 =>
+        val byName = lanes(sf(opt))
+        val run = byName.getOrElse(lane, throw new IllegalArgumentException(
+          s"unknown stress lane $lane; one of ${byName.keys.toSeq.sorted.mkString(",")}"))
+        withSession(sf(opt))(spark => emit(run(spark), sys.env.get("SPARK_GRAFT_STRESS_OUT")))
+      case _ => throw new IllegalArgumentException(Usage)
+    }
+  }
+
+  /** Resolves a key list against `known`: `all` is every known name in
+    * name order; anything else is a comma list, trimmed, with empty and
+    * repeated entries dropped, kept in the given order. Unknown names
+    * and an empty selection fail here, before any session starts.
+    */
+  def selectKeys(spec: String, known: Iterable[String] = SparkEntry.queries.keys,
+      what: String = "key"): Seq[String] = {
+    val knownSet = known.toSet
+    val names = spec.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq
+    if (names == Seq("all")) knownSet.toSeq.sorted
+    else {
+      val unknown = names.filterNot(knownSet).sorted
+      require(unknown.isEmpty, s"unknown $what(s): ${unknown.mkString(",")}")
+      require(names.nonEmpty, s"no $what selected by '$spec'")
+      names
+    }
+  }
+
+  /** Runs `body` in one engine session, after a JVM/codegen warm-up that
+    * keeps classloading and whole-stage-codegen compilation out of every
+    * timed run. A failed warm-up is logged and the run continues. */
+  def withSession[T](sfDir: String)(body: SparkSession => T): T = {
+    val spark = GraftSession.local(GraftSession.cpus)
+    sys.env.get("SPARK_GRAFT_LOG").foreach(spark.sparkContext.setLogLevel)
+    try {
+      try spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .groupBy("l_returnflag").count().count()
+      catch { case NonFatal(e) => System.err.println(s"[bench] warm-up failed: $e") }
+      body(spark)
+    } finally spark.stop()
+  }
+
+  /** Wall seconds of the fastest of `reps` runs of `run`, with the last
+    * run's result. The cache is cleared and a GC run once, before the
+    * first run, so nothing an earlier measurement left behind is charged
+    * to this one. Warm timings: the first run pays per-query
+    * whole-stage-codegen compilation, which is amortized noise on any
+    * long-lived cluster. */
+  def best[T](spark: SparkSession, reps: Int)(run: => T): (Double, T) = {
+    require(reps >= 1, s"reps must be >= 1, got $reps")
+    spark.catalog.clearCache()
+    System.gc()
+    val runs = Seq.fill(reps) {
+      val t0 = System.nanoTime()
+      val r = run
+      ((System.nanoTime() - t0) / 1e9, r)
+    }
+    (runs.map(_._1).min, runs.last._2)
+  }
+
+  /** Runs per measurement: `SPARK_GRAFT_BENCH_REPS`, default 2. */
+  def reps: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
+
+  /** The timed action for one registered key: best-of-[[reps]] seconds
+    * of its `count()`, or -1 when it throws. */
+  def timeKey(spark: SparkSession, sfDir: String, k: String): Double = {
+    val fn = SparkEntry.queries(k)
+    try best(spark, reps)(fn(spark, sfDir).count())._1
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $k failed: $e")
+      -1.0
+    }
+  }
+
+  private def plan(spark: SparkSession, sfDir: String, k: String): String =
+    SparkEntry.queries(k)(spark, sfDir).queryExecution.explainString(FormattedMode)
+
+  // per-key values rounded to ms: the driver captures only a bounded
+  // stdout TAIL, and full-precision doubles pushed the one-line JSON
+  // past that window at 132 keys (BENCH_r07 "parsed": null)
+  private def queriesJson(times: Seq[(String, Double)]): String =
+    times.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+
+  /** Prints one JSON line and copies it to `out`, best-effort: stdout is
+    * wrapped in sbt `[info]` prefixes that break machine parsing, so the
+    * bare line also goes to a file. An unwritable path must not turn a
+    * successful run into a nonzero exit (the line is already on stdout). */
+  def emit(json: String, out: Option[String]): Unit = {
+    println(json)
+    out.foreach { f =>
+      try {
+        val p = Paths.get(f)
+        Option(p.getParent).foreach(Files.createDirectories(_))
+        Files.write(p, (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        ()
+      } catch {
+        // NonFatal, not just IOException: Paths.get throws
+        // InvalidPathException (a RuntimeException) for malformed values
+        case NonFatal(e) => System.err.println(s"[bench] WARN could not write $f: $e")
+      }
+    }
+  }
+
+  private def suite(spark: SparkSession, sfDir: String, keys: Seq[String]): Unit = {
+    import org.apache.spark.sql.functions._
     val cpus = GraftSession.cpus
-    val spark = GraftSession.local(cpus)
-    // JVM/codegen warm-up outside the timed loop so the first query isn't
-    // charged for classloading + whole-stage-codegen compilation
-    try spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().count()
-    catch { case NonFatal(e) => System.err.println(s"[bench] warm-up failed: $e") }
-    // warm timings: run each query REPS times, report the fastest — the
-    // first execution pays per-query whole-stage-codegen compilation,
-    // which is amortized noise on any long-lived cluster
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    // optional subset (comma-separated keys): targeted re-benches — e.g.
-    // the streaming family on a quiet box with a canary key — without
-    // paying the full 160-key sweep. Unknown keys fail loudly.
-    val subset = sys.env.get("SPARK_GRAFT_BENCH_KEYS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    subset.foreach { ks =>
-      val unknown = ks -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown SPARK_GRAFT_BENCH_KEYS: ${unknown.mkString(",")}")
-    }
-    val selected = subset match {
-      case Some(ks) => SparkEntry.queries.filter { case (k, _) => ks(k) }
-      case None => SparkEntry.queries
-    }
     // ---- control lane: a fixed CPU-bound workload (PNG synth+decode,
     // zero shuffle, no parquet) measured in the same JVM. Its time
     // quantifies BOX DRIFT between rounds: two rounds of judge-observed
@@ -42,20 +194,22 @@ object Bench {
     // control_ratio 1.0 means "the round-13 box"; >1 means the box got
     // slower and total_normalized discounts it
     val ControlBaselineSec = 0.295
-    val controlSec = {
-      import org.apache.spark.sql.functions._
-      def once(): Double = {
+    // best of two runs after one warm-up run (codegen for the control
+    // plan itself), with no cache clear or GC before them: the pins below
+    // were measured that way
+    def control(run: => Unit): Double = {
+      run
+      Seq.fill(2) {
         val t0 = System.nanoTime()
-        spark.range(0, 8000, 1, cpus)
-          .select(RasterFunctions.image_decode(
-            RasterSynthFunctions.synth_png(lit(64), lit(64), col("id"), 3))
-            .getField("width").as("w"))
-          .agg(sum("w")).collect()
+        run
         (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm codegen for the control plan itself
-      math.min(once(), once())
+      }.min
     }
+    val controlSec = control(spark.range(0, 8000, 1, cpus)
+      .select(RasterFunctions.image_decode(
+        RasterSynthFunctions.synth_png(lit(64), lit(64), col("id"), 3))
+        .getField("width").as("w"))
+      .agg(sum("w")).collect())
     // ---- second control lane: a fixed SHUFFLE-bound workload (hash
     // exchange of 4M synthetic rows over 256k keys, no parquet, no
     // decode). The CPU lane cannot attribute drift in the
@@ -67,45 +221,18 @@ object Bench {
     // ControlBaselineSec; the two ratios together separate
     // compute-drift from shuffle-drift).
     val ShuffleControlBaselineSec = 0.678
-    val shuffleControlSec = {
-      import org.apache.spark.sql.functions._
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        spark.range(0, 4L * 1000 * 1000, 1, cpus)
-          .select(((col("id") * 2654435761L) % 262144).as("k"))
-          .groupBy("k").agg(count(lit(1)).as("c"))
-          .agg(sum("c")).collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm codegen for the control plan itself
-      math.min(once(), once())
-    }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      spark.catalog.clearCache() // isolate queries from lingering cache/GC state
-      System.gc()
-      val times = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case NonFatal(e) =>
-          System.err.println(s"[bench] $name failed: $e")
-          None
-        }
-      }
-      name -> (if (times.isEmpty) -1.0 else times.min)
-    }.toMap
-    // per-key values rounded to ms: the driver captures only a bounded
-    // stdout TAIL, and full-precision doubles pushed the one-line JSON
-    // past that window at 132 keys (BENCH_r07 "parsed": null) — 3
-    // decimals keeps the whole line comfortably inside it
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
+    val shuffleControlSec = control(spark.range(0, 4L * 1000 * 1000, 1, cpus)
+      .select(((col("id") * 2654435761L) % 262144).as("k"))
+      .groupBy("k").agg(count(lit(1)).as("c"))
+      .agg(sum("c")).collect())
+    val results = keys.map(k => k -> timeKey(spark, sfDir, k))
     // failed queries report -1 individually but must not deflate the total
-    val total = results.values.filter(_ >= 0).sum
+    val total = results.map(_._2).filter(_ >= 0).sum
     val controlRatio = controlSec / ControlBaselineSec
     val totalNorm = total / controlRatio
     val shuffleControlRatio = shuffleControlSec / ShuffleControlBaselineSec
-    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","control_sec":$controlSec%.3f,"control_ratio":$controlRatio%.3f,"shuffle_control_sec":$shuffleControlSec%.3f,"shuffle_control_ratio":$shuffleControlRatio%.3f,"total_normalized":$totalNorm%.3f,"queries":$qs,"sf":"$sfDir"}"""
-    println(json)
+    emit(f"""{"metric":"total","value":$total%.3f,"unit":"sec","control_sec":$controlSec%.3f,"control_ratio":$controlRatio%.3f,"shuffle_control_sec":$shuffleControlSec%.3f,"shuffle_control_ratio":$shuffleControlRatio%.3f,"total_normalized":$totalNorm%.3f,"queries":${queriesJson(results)},"sf":"$sfDir"}""",
+      Some(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")))
     // the driver captures only the last ~2000 chars of stdout; at 134
     // keys the full per-key line is ~3 KB, so whatever precision it uses
     // its head gets cut and the capture records "parsed": null
@@ -120,7 +247,7 @@ object Bench {
     // captured set really is "failures + the slowest N" (a greedy
     // keep-scanning fill would backfill cheap short-named keys past an
     // expensive long-named one and make "elided" mean nothing)
-    val byCost = results.toSeq.sortBy { case (_, v) => (v >= 0, -v) }
+    val byCost = results.sortBy { case (_, v) => (v >= 0, -v) }
     val budget = 1400
     val picked = scala.collection.mutable.ListBuffer.empty[String]
     var used = 0
@@ -131,28 +258,9 @@ object Bench {
         picked += frag; used += frag.length + 1
       } else full = true
     }
-    val nFailed = results.values.count(_ < 0)
+    val nFailed = results.count(_._2 < 0)
     // a DISTINCT metric name: a consumer matching "total" must never pick
     // this truncated per-key set over the full line above
     println(f"""{"metric":"total_summary","value":$total%.3f,"unit":"sec","control_ratio":$controlRatio%.3f,"shuffle_control_ratio":$shuffleControlRatio%.3f,"total_normalized":$totalNorm%.3f,"n_queries":${results.size},"n_failed":$nFailed,"elided":${results.size - picked.size},"queries":${picked.mkString("{", ",", "}")},"sf":"$sfDir"}""")
-    // stdout is wrapped in sbt [info] prefixes that break machine parsing —
-    // also drop the bare JSON line to a file for the harness. Best-effort:
-    // an unwritable path must not turn a fully-successful bench run into a
-    // nonzero exit (the JSON is already on stdout)
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try {
-      val p = java.nio.file.Paths.get(outFile)
-      Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(p,
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      ()
-    } catch {
-      // NonFatal, not just IOException: Paths.get throws InvalidPathException
-      // (a RuntimeException) for malformed env values — any write failure
-      // must stay a warning
-      case NonFatal(e) =>
-        System.err.println(s"[bench] WARN could not write $outFile: $e")
-    }
-    spark.stop()
   }
 }

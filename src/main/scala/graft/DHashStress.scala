@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.ScaleOps
 import org.apache.spark.sql.graftnative.{RasterFunctions, RasterSynthFunctions}
@@ -16,16 +17,16 @@ import org.apache.spark.sql.graftnative.{RasterFunctions, RasterSynthFunctions}
   * the 65536-bucket space; 21-bit bands keep occupancy low) — and
   * asserts it stays ≥ 0.99,
   * reporting wall seconds and images/s for the whole
-  * synthesize→decode→hash→dedup pipeline. Fresh-JVM quiet-box
-  * methodology as the other stress mains.
+  * synthesize→decode→hash→dedup pipeline. Run it with
+  * `runMain graft.Bench stress dhash`, alone in a fresh JVM on a quiet box,
+  * as every stress lane.
   */
 object DHashStress {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession): String = {
     val cpus = GraftSession.cpus
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_DHASH_DOCS", "1000000").toLong
     val dim = sys.env.getOrElse("SPARK_GRAFT_DHASH_DIM", "32").toLong
     require(nDocs % 2 == 0, "docs must be even: content pairs are planted")
-    val spark = GraftSession.local(cpus)
     spark.conf.set("spark.sql.shuffle.partitions", cpus * 2)
 
     def pipeline(n: Long) = {
@@ -62,20 +63,18 @@ object DHashStress {
     // warm-up outside the timed run
     pipeline(2000).count()
 
-    val t0 = System.nanoTime()
-    val pairs = pipeline(nDocs).cache()
-    val total = pairs.count()
-    val planted = pairs
-      .filter(col("id2") === col("id1") + 1 && col("id1") % 2 === 0)
-      .count()
-    val sec = (System.nanoTime() - t0) / 1e9
+    val (sec, (total, planted)) = Bench.best(spark, 1) {
+      val pairs = pipeline(nDocs).cache()
+      (pairs.count(), pairs
+        .filter(col("id2") === col("id1") + 1 && col("id1") % 2 === 0)
+        .count())
+    }
     val recall = planted.toDouble / (nDocs / 2)
     require(recall >= 0.99,
       s"planted-pair recall $recall below 0.99 ($planted of ${nDocs / 2})")
-    println(s"""{"metric":"dhash_stress","docs":$nDocs,"dim":$dim,""" +
+    s"""{"metric":"dhash_stress","docs":$nDocs,"dim":$dim,""" +
       s""""cpus":$cpus,"sec":${f"$sec%.1f"},"pairs":$total,""" +
       s""""planted_pairs":$planted,"recall":${f"$recall%.4f"},""" +
-      s""""img_per_s":${f"${nDocs / sec}%.0f"}}""")
-    spark.stop()
+      s""""img_per_s":${f"${nDocs / sec}%.0f"}}"""
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.{Bzip2Functions, DocxFunctions,
   EmlFunctions, EpubFunctions, HtmlFunctions, JsonlFunctions, PdfFunctions,
@@ -24,14 +25,13 @@ import org.apache.spark.sql.graftnative.{Bzip2Functions, DocxFunctions,
   *    (the per-row stage of crawl_dedup_pipeline), docs/s.
   *
   * Every lane gates on full decode counts (a regression to
-  * null/unknown must not inflate throughput). Fresh-JVM quiet-box
-  * methodology as the other stress mains; one JSON line on stdout.
+  * null/unknown must not inflate throughput). Run with `runMain
+  * graft.Bench stress doc` (fresh JVM, quiet box, as every stress lane).
   */
 object DocStress {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession): String = {
     val cpus = GraftSession.cpus
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_DOC_DOCS", "40000").toLong
-    val spark = GraftSession.local(cpus)
     val ids = spark.range(0, nDocs).select(col("id"))
     val fields = collection.mutable.ArrayBuffer(
       s""""docs":$nDocs""", s""""cpus":$cpus""")
@@ -43,13 +43,11 @@ object DocStress {
 
     // ---- pdf
     locally {
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(PdfFunctions.pdf_text(PdfFunctions.synth_pdf(col("id"))).as("d"))
         .select(col("d.n_pages").as("np"), explode(col("d.pages")).as("p"))
         .agg(count(lit(1)).as("pages"), sum(length(col("p.text"))).as("chars"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       val expPages = (0L until nDocs).map(d => 1 + d % 3).sum
       require(r.getLong(0) == expPages,
         s"pdf: ${r.getLong(0)} pages of $expPages (every page must extract)")
@@ -60,13 +58,11 @@ object DocStress {
 
     // ---- tar (inventory walk)
     locally {
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(TarFunctions.tar_members(TarFunctions.synth_tar(col("id"))).as("t"))
         .select(explode(col("t.members")).as("m"))
         .agg(count(lit(1)).as("members"), sum(col("m.size")).as("bytes"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       val expMembers = (0L until nDocs).map(d => 2 * (2 + d % 3)).sum
       require(r.getLong(0) == expMembers, s"tar: ${r.getLong(0)} members")
       fields += f""""tar_sec":$sec%.2f"""
@@ -76,13 +72,11 @@ object DocStress {
 
     // ---- zip (full inflate + CRC per member)
     locally {
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(ZipFunctions.zip_entries(ZipFunctions.synth_zip(col("id"))).as("z"))
         .select(explode(col("z.entries")).as("e"))
         .agg(count(lit(1)).as("entries"), sum(col("e.usize")).as("bytes"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       val expEntries = (0L until nDocs).map(d => 2 * (2 + d % 3)).sum
       require(r.getLong(0) == expEntries, s"zip: ${r.getLong(0)} entries")
       fields += f""""zip_sec":$sec%.2f"""
@@ -94,8 +88,7 @@ object DocStress {
     locally {
       val wdsDocs = math.max(1000L, nDocs / 4) // each doc decodes 2-4 JPEGs
       val wdsIds = spark.range(0, wdsDocs).select(col("id"))
-      val t0 = System.nanoTime()
-      val r = wdsIds
+      val (sec, r) = Bench.best(spark, 1)(wdsIds
         .select(col("id"), TarFunctions.synth_tar_wds(col("id")).as("t"))
         .select(col("id"), col("t"),
           explode(TarFunctions.tar_members(col("t")).getField("members")).as("m"))
@@ -103,8 +96,7 @@ object DocStress {
         .select(RasterFunctions.image_decode(expr(
           "substring(t, CAST(m.offset + 1 AS INT), CAST(m.size AS INT))"))
           .as("r"))
-        .agg(count(col("r.width")).as("decoded")).head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .agg(count(col("r.width")).as("decoded")).head())
       val expSamples = (0L until wdsDocs).map(d => 2 + d % 3).sum
       require(r.getLong(0) == expSamples, s"wds: ${r.getLong(0)} samples")
       fields += s""""wds_docs":$wdsDocs"""
@@ -114,8 +106,7 @@ object DocStress {
 
     // ---- crawl (WARC → HTTP strip → HTML extract)
     locally {
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(WarcFunctions.warc_records(
           WarcFunctions.synth_warc_html_gz(col("id"))).as("w"))
         .select(explode(col("w.records")).as("r"))
@@ -127,8 +118,7 @@ object DocStress {
         .select(HtmlFunctions.html_text(col("html")).as("h"))
         .agg(count(col("h.text")).as("n"),
           sum(length(col("h.text"))).as("chars"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       require(r.getLong(0) == nDocs, s"crawl: ${r.getLong(0)} of $nDocs")
       fields += f""""crawl_sec":$sec%.2f"""
       fields += f""""crawl_docs_per_s":${nDocs / sec}%.0f"""
@@ -136,16 +126,14 @@ object DocStress {
 
     // ---- epub (zip walk + per-chapter HTML extraction)
     locally {
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(EpubFunctions.zip_texts(
           EpubFunctions.synth_epub(col("id")), ".xhtml").as("z"))
         .select(explode(col("z.texts")).as("t"))
         .select(HtmlFunctions.html_text(col("t.text")).as("h"))
         .agg(count(col("h.text")).as("chapters"),
           sum(length(col("h.text"))).as("chars"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       val expChapters = (0L until nDocs).map(d => 1 + d % 3).sum
       require(r.getLong(0) == expChapters, s"epub: ${r.getLong(0)} chapters")
       fields += f""""epub_sec":$sec%.2f"""
@@ -156,14 +144,12 @@ object DocStress {
     locally {
       val lineSchema = org.apache.spark.sql.types.StructType
         .fromDDL("id BIGINT, lang STRING, text STRING")
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(JsonlFunctions.gzip_text(JsonlFunctions.synth_jsonl_gz(col("id"))).as("t"))
         .select(explode(filter(split(col("t"), "\n"),
           x => x =!= lit(""))).as("line"))
         .select(from_json(col("line"), lineSchema).as("j"))
-        .agg(count(col("j.id")).as("n")).head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .agg(count(col("j.id")).as("n")).head())
       val expLines = (0L until nDocs).map { d =>
         (0 until (2 + d % 3).toInt).map(m => 1 + (d + m) % 3).sum
       }.sum
@@ -175,13 +161,11 @@ object DocStress {
 
     // ---- docx (zip walk + WML text assembly) — r15's office family
     locally {
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(DocxFunctions.docx_text(DocxFunctions.synth_docx(col("id"))).as("d"))
         .agg(sum(col("d.n_paragraphs")).as("paras"),
           sum(length(col("d.text"))).as("chars"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       val expParas = (0L until nDocs).map(d => 11 + d % 3).sum
       require(r.getLong(0) == expParas,
         s"docx: ${r.getLong(0)} paragraphs of $expParas")
@@ -192,11 +176,9 @@ object DocStress {
 
     // ---- xlsx (zip walk + shared strings + cell resolution)
     locally {
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(XlsxFunctions.xlsx_cells(XlsxFunctions.synth_xlsx(col("id"))).as("d"))
-        .agg(sum(col("d.n_cells")).as("cells")).head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .agg(sum(col("d.n_cells")).as("cells")).head())
       val expCells = (0L until nDocs).map(d => (2 + d % 3) * 4 + d % 2).sum
       require(r.getLong(0) == expCells, s"xlsx: ${r.getLong(0)} cells")
       fields += f""""xlsx_sec":$sec%.2f"""
@@ -206,11 +188,9 @@ object DocStress {
 
     // ---- eml (headers + RFC 2047 + multipart + QP/base64 decode)
     locally {
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(EmlFunctions.eml_message(EmlFunctions.synth_eml(col("id"))).as("d"))
-        .agg(sum(col("d.n_parts")).as("parts")).head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .agg(sum(col("d.n_parts")).as("parts")).head())
       val expParts = (0L until nDocs).map(d => (d % 4) match {
         case 2 => 2L; case 3 => 3L; case _ => 1L
       }).sum
@@ -223,15 +203,13 @@ object DocStress {
     locally {
       val wikiDocs = math.max(1000L, nDocs / 4) // 3 decode layers per doc
       val wikiIds = spark.range(0, wikiDocs).select(col("id"))
-      val t0 = System.nanoTime()
-      val r = wikiIds
+      val (sec, r) = Bench.best(spark, 1)(wikiIds
         .select(WikiFunctions.mediawiki_pages(
           Bzip2Functions.bzip2_text(Bzip2Functions.synth_wiki_dump_bz2(col("id")))).as("d"))
         .select(explode(col("d.pages")).as("p"))
         .select(WikiFunctions.wikitext_strip(col("p.text")).as("t"))
         .agg(count(lit(1)).as("pages"), sum(length(col("t"))).as("chars"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       val expPages = (0L until wikiDocs).map(d => 1 + d % 3).sum
       require(r.getLong(0) == expPages, s"wikibz2: ${r.getLong(0)} pages")
       fields += s""""wikibz2_docs":$wikiDocs"""
@@ -242,8 +220,7 @@ object DocStress {
 
     // ---- robots (parse + 8 decisions per doc)
     locally {
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(col("id"), RobotsFunctions.synth_robots(col("id")).as("robots"))
         .select(col("id"), col("robots"),
           explode(sequence(lit(0L), lit(7L))).as("u"))
@@ -251,14 +228,12 @@ object DocStress {
           concat(lit("/p"), col("u"), lit("/x"))).as("d"))
         .agg(count(col("d.allowed")).as("n"),
           sum(when(col("d.allowed"), 1L).otherwise(0L)).as("ok"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       require(r.getLong(0) == nDocs * 8, s"robots: ${r.getLong(0)} decisions")
       fields += f""""robots_sec":$sec%.2f"""
       fields += f""""robots_decisions_per_s":${r.getLong(0) / sec}%.0f"""
     }
 
-    println(fields.mkString("{", ",", "}"))
-    spark.stop()
+    fields.mkString("{", ",", "}")
   }
 }

@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the iterative/analytic graph family (connected
   * components, fixed-point PageRank, triangle counting, bounded BFS) on
   * a synthetic graph far beyond the fixture's verified-pair graphs —
-  * the same fresh-JVM methodology as [[StressBench]] (run alone;
-  * co-resident JVMs inflate timings, measured up to 3.8×).
+  * run as `runMain graft.Bench stress graph`, alone in a fresh JVM like
+  * every stress lane (co-resident JVMs inflate timings, measured up to
+  * 3.8×).
   *
   * Graph shape is chosen adversarially: a long chain (diameter stress —
   * CC needs O(log d) star rounds) plus hub edges every node → node%H
@@ -27,16 +29,12 @@ import org.apache.spark.sql.functions._
   * checkpointed edge frames and shuffle state live in this one heap.
   */
 object GraphStress {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession): String = {
     val cpus = GraftSession.cpus
     val n = sys.env.getOrElse("SPARK_GRAFT_GRAPH_NODES", "2000000").toLong
-    val ops = sys.env.getOrElse("SPARK_GRAFT_GRAPH_OPS", "cc,pr")
-      .split(",").map(_.trim).toSet
-    val known = Set("cc", "pr", "pri", "tri", "bfs", "lpa", "lpac", "sssp",
-      "ssspc")
-    require((ops -- known).isEmpty,
-      s"unknown SPARK_GRAFT_GRAPH_OPS ${(ops -- known).mkString(",")}; " +
-        s"valid: ${known.mkString(",")}")
+    val ops = Bench.selectKeys(sys.env.getOrElse("SPARK_GRAFT_GRAPH_OPS", "cc,pr"),
+      Seq("cc", "pr", "pri", "tri", "bfs", "lpa", "lpac", "sssp", "ssspc"),
+      "SPARK_GRAFT_GRAPH_OPS op").toSet
     val hubs = 1000L
     // shuffle width is a 100 TB tuning knob, not a constant: the triangle
     // closure join shuffles O(wedges) rows, so partitions must scale with
@@ -47,7 +45,6 @@ object GraphStress {
     // recorded probe knob: AQE can flip a mid-size degree frame into a
     // multi-million-row broadcast build — "-1" disables to test that
     val autoBc = sys.env.getOrElse("SPARK_GRAFT_AUTOBC", "10485760")
-    val spark = GraftSession.local(cpus)
     spark.conf.set("spark.sql.shuffle.partitions", shuffleParts)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoBc)
 
@@ -70,13 +67,12 @@ object GraphStress {
       s""""auto_bc":"$autoBc"""")
 
     if (ops("cc")) {
-      val t0 = System.nanoTime()
-      val reps = operators.ScaleOps.connectedComponents(edges, "src", "dst")
-      val nComponents = ids
-        .join(reps.withColumnRenamed("node", "id"), Seq("id"), "left")
-        .select(coalesce(col("rep"), col("id")).as("rep"))
-        .distinct().count()
-      val ccSec = (System.nanoTime() - t0) / 1e9
+      val (ccSec, nComponents) = Bench.best(spark, 1) {
+        val reps = operators.ScaleOps.connectedComponents(edges, "src", "dst")
+        ids.join(reps.withColumnRenamed("node", "id"), Seq("id"), "left")
+          .select(coalesce(col("rep"), col("id")).as("rep"))
+          .distinct().count()
+      }
       fields += f""""cc_sec":$ccSec%.2f"""
       fields += s""""cc_components":$nComponents"""
     }
@@ -84,11 +80,9 @@ object GraphStress {
     if (ops("pr")) {
       val both = edges.unionAll(
         edges.select(col("dst").as("src"), col("src").as("dst")))
-      val t1 = System.nanoTime()
-      val ranks = operators.ScaleOps.pageRankFixedPoint(
+      val (prSec, r) = Bench.best(spark, 1)(operators.ScaleOps.pageRankFixedPoint(
         ids.withColumnRenamed("id", "node"), both, iterations = 5)
-      val r = ranks.agg(count(lit(1)), max(col("rank"))).head()
-      val prSec = (System.nanoTime() - t1) / 1e9
+        .agg(count(lit(1)), max(col("rank"))).head())
       fields += f""""pagerank_sec":$prSec%.2f"""
       fields += s""""pagerank_iters":5,"ranked":${r.getLong(0)},"max_rank":${r.getLong(1)}"""
     }
@@ -104,10 +98,8 @@ object GraphStress {
         .localCheckpoint(true)
       val nodesDf = ids.withColumnRenamed("id", "node")
       val tol = 1000000000000L / n / 20
-      val t0 = System.nanoTime()
-      val (rBase, kBase) = operators.ScaleOps.pageRankConverge(
-        nodesDf, both, tol = tol)
-      val baseSec = (System.nanoTime() - t0) / 1e9
+      val (baseSec, (rBase, kBase)) = Bench.best(spark, 1)(
+        operators.ScaleOps.pageRankConverge(nodesDf, both, tol = tol))
       val delta = ids.filter(col("id") % 97 === 0)
         .select(col("id").as("src"), ((col("id") * 31) % n).as("dst"))
         .filter(col("src") =!= col("dst"))
@@ -115,14 +107,10 @@ object GraphStress {
         .unionAll(delta)
         .unionAll(delta.select(col("dst").as("src"), col("src").as("dst")))
         .localCheckpoint(true)
-      val t1 = System.nanoTime()
-      val (rCold, kCold) = operators.ScaleOps.pageRankConverge(
-        nodesDf, full, tol = tol)
-      val coldSec = (System.nanoTime() - t1) / 1e9
-      val t2 = System.nanoTime()
-      val (rWarm, kWarm) = operators.ScaleOps.pageRankConverge(
-        nodesDf, full, tol = tol, init = Some(rBase))
-      val warmSec = (System.nanoTime() - t2) / 1e9
+      val (coldSec, (rCold, kCold)) = Bench.best(spark, 1)(
+        operators.ScaleOps.pageRankConverge(nodesDf, full, tol = tol))
+      val (warmSec, (rWarm, kWarm)) = Bench.best(spark, 1)(
+        operators.ScaleOps.pageRankConverge(nodesDf, full, tol = tol, init = Some(rBase)))
       val maxDiff = rWarm.withColumnRenamed("rank", "w")
         .join(rCold.withColumnRenamed("rank", "c"), "node")
         .agg(max(abs(col("w") - col("c")))).head().getLong(0)
@@ -140,9 +128,7 @@ object GraphStress {
     }
 
     if (ops("tri")) {
-      val t2 = System.nanoTime()
-      val row = operators.ScaleOps.triangleCount(withSkip).head()
-      val triSec = (System.nanoTime() - t2) / 1e9
+      val (triSec, row) = Bench.best(spark, 1)(operators.ScaleOps.triangleCount(withSkip).head())
       val expected = n - 2
       require(row.getLong(2) == expected,
         s"triangle self-check failed: got ${row.getLong(2)}, want $expected")
@@ -154,11 +140,10 @@ object GraphStress {
       // deterministic LPA on the chain+hub+skip graph; communities are
       // data-dependent, so the self-check is structural: every node
       // labeled, labels drawn from the node id space
-      val t4 = System.nanoTime()
-      val labels = operators.ScaleOps.labelPropagation(withSkip, iterations = 4)
-      val stats = labels.agg(count(lit(1)), countDistinct(col("label")),
-        min(col("label")), max(col("label"))).head()
-      val lpaSec = (System.nanoTime() - t4) / 1e9
+      val (lpaSec, stats) = Bench.best(spark, 1)(operators.ScaleOps
+        .labelPropagation(withSkip, iterations = 4)
+        .agg(count(lit(1)), countDistinct(col("label")),
+          min(col("label")), max(col("label"))).head())
       require(stats.getLong(0) == n,
         s"lpa labeled ${stats.getLong(0)} of $n nodes")
       require(stats.getLong(2) >= 0 && stats.getLong(3) < n,
@@ -187,11 +172,11 @@ object GraphStress {
           ((col("b") + 1) * k).as("dst"))
       val commEdges = cliqueEdges.unionAll(bridges).localCheckpoint(true)
       val nCommEdges = commEdges.count()
-      val t5 = System.nanoTime()
-      val (labels, rounds) = operators.ScaleOps
-        .labelPropagationConverged(commEdges, maxIterations = 12)
-      val stats = labels.agg(count(lit(1)), countDistinct(col("label"))).head()
-      val lpacSec = (System.nanoTime() - t5) / 1e9
+      val (lpacSec, (rounds, stats)) = Bench.best(spark, 1) {
+        val (labels, rounds) = operators.ScaleOps
+          .labelPropagationConverged(commEdges, maxIterations = 12)
+        (rounds, labels.agg(count(lit(1)), countDistinct(col("label"))).head())
+      }
       require(rounds < 12, s"lpac failed to converge within 12 rounds")
       require(stats.getLong(0) == n,
         s"lpac labeled ${stats.getLong(0)} of $n nodes")
@@ -206,13 +191,13 @@ object GraphStress {
       // distinct parity paths make the min nontrivial. Self-check:
       // seeds at 0, all distances within rounds × max-weight.
       val rounds = 8
-      val t6 = System.nanoTime()
-      val weighted = withSkip
-        .withColumn("weight", lit(1L) + (col("src") + col("dst")) % 7)
-      val seeds = spark.range(0, 1).select(col("id").as("node"))
-      val dist = operators.ScaleOps.ssspWeighted(weighted, seeds, rounds)
-      val r = dist.agg(count(lit(1)), max(col("dist")), min(col("dist"))).head()
-      val ssspSec = (System.nanoTime() - t6) / 1e9
+      val (ssspSec, r) = Bench.best(spark, 1) {
+        val weighted = withSkip
+          .withColumn("weight", lit(1L) + (col("src") + col("dst")) % 7)
+        val seeds = spark.range(0, 1).select(col("id").as("node"))
+        operators.ScaleOps.ssspWeighted(weighted, seeds, rounds)
+          .agg(count(lit(1)), max(col("dist")), min(col("dist"))).head()
+      }
       require(r.getLong(2) == 0L, "sssp seed must sit at distance 0")
       require(r.getLong(1) <= rounds.toLong * 7,
         s"sssp max dist ${r.getLong(1)} exceeds the ${rounds}×7 bound")
@@ -233,10 +218,10 @@ object GraphStress {
         .withColumn("weight", lit(1L) + (col("src") + col("dst")) % 7)
         .localCheckpoint(true)
       val seeds = spark.range(0, 1).select(col("id").as("node"))
-      val t7 = System.nanoTime()
-      val (dist, rounds) = operators.ScaleOps.ssspConverged(treeChain, seeds)
-      val r = dist.agg(count(lit(1)), max(col("dist")), min(col("dist"))).head()
-      val ssspcSec = (System.nanoTime() - t7) / 1e9
+      val (ssspcSec, (rounds, r)) = Bench.best(spark, 1) {
+        val (dist, rounds) = operators.ScaleOps.ssspConverged(treeChain, seeds)
+        (rounds, dist.agg(count(lit(1)), max(col("dist")), min(col("dist"))).head())
+      }
       require(rounds < 64, s"ssspc failed to converge within 64 rounds")
       require(r.getLong(0) == n, s"ssspc reached ${r.getLong(0)} of $n nodes")
       require(r.getLong(2) == 0L, "ssspc seed must sit at distance 0")
@@ -245,16 +230,15 @@ object GraphStress {
     }
 
     if (ops("bfs")) {
-      val t3 = System.nanoTime()
-      val seeds = spark.range(0, 1).select(col("id").as("node"))
-      val lv = operators.ScaleOps.bfsLevels(withSkip, seeds, maxLevel = 3)
-      val r = lv.agg(count(lit(1)), max(col("level"))).head()
-      val bfsSec = (System.nanoTime() - t3) / 1e9
+      val (bfsSec, r) = Bench.best(spark, 1) {
+        val seeds = spark.range(0, 1).select(col("id").as("node"))
+        operators.ScaleOps.bfsLevels(withSkip, seeds, maxLevel = 3)
+          .agg(count(lit(1)), max(col("level"))).head()
+      }
       fields += f""""bfs_sec":$bfsSec%.2f"""
       fields += s""""bfs_reached":${r.getLong(0)},"bfs_max_level":${r.getInt(1)}"""
     }
 
-    println(fields.mkString("""{"metric":"graph_stress",""", ",", "}"))
-    spark.stop()
+    fields.mkString("""{"metric":"graph_stress",""", ",", "}")
   }
 }

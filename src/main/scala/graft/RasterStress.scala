@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.{JpegSynthFunctions, RasterFunctions,
   RasterSynthFunctions, TiffFunctions, Vp8SynthFunctions, WebpSynthFunctions}
@@ -7,19 +8,19 @@ import org.apache.spark.sql.graftnative.{JpegSynthFunctions, RasterFunctions,
 /** Throughput probe for the compressed-raster decode path (PNG inflate +
   * unfilter, GIF LZW): synthesize-and-decode `SPARK_GRAFT_RASTER_DOCS`
   * images of `SPARK_GRAFT_RASTER_DIM`² RGB pixels per format and report
-  * wall seconds, images/s, and raster MB/s. Fresh-JVM quiet-box
-  * methodology as the other stress mains. The timed pipeline is
-  * synthesize → decode → per-channel sums (one codegen'd per-row stage,
-  * zero shuffle until the final scalar aggregate), so the number prices
-  * the whole encode+decode round trip — a decode-only figure would need
-  * pre-materialized files and measure parquet IO instead.
+  * wall seconds, images/s, and raster MB/s (`runMain graft.Bench stress
+  * raster`, fresh JVM, quiet box, as every stress lane). The timed
+  * pipeline is synthesize → decode → per-channel sums (one codegen'd
+  * per-row stage, zero shuffle until the final scalar aggregate), so the
+  * number prices the whole encode+decode round trip — a decode-only
+  * figure would need pre-materialized files and measure parquet IO
+  * instead.
   */
 object RasterStress {
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession): String = {
     val cpus = GraftSession.cpus
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_RASTER_DOCS", "100000").toLong
     val dim = sys.env.getOrElse("SPARK_GRAFT_RASTER_DIM", "32").toLong
-    val spark = GraftSession.local(cpus)
     val ids = spark.range(0, nDocs).select(col("id"))
     // warm-up: codegen + classloading outside the timed runs
     ids.limit(1000).select(RasterFunctions.raster_channel_sums(RasterFunctions.image_decode(
@@ -58,8 +59,7 @@ object RasterStress {
       "tiff_lzw" -> ((w: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column)
         => TiffFunctions.synth_tiff(w, w, s, 5))
     ).foreach { case (fmt, synth) =>
-      val t0 = System.nanoTime()
-      val r = ids
+      val (sec, r) = Bench.best(spark, 1)(ids
         .select(RasterFunctions.raster_channel_sums(RasterFunctions.image_decode(
           synth(lit(dim), col("id")))).as("s"))
         .agg(sum(element_at(col("s"), 1)).as("r"),
@@ -69,15 +69,13 @@ object RasterStress {
           // decode failed ('unknown' → null sums) and a partial decode
           // regression would silently inflate the reported images/s
           count(col("s")).as("n"))
-        .head()
-      val sec = (System.nanoTime() - t0) / 1e9
+        .head())
       require(r.getLong(3) == nDocs && !r.isNullAt(0),
         s"$fmt: decoded ${r.getLong(3)} of $nDocs (every row must decode)")
       fields += f""""${fmt}_sec":$sec%.2f"""
       fields += f""""${fmt}_img_per_s":${nDocs / sec}%.0f"""
       fields += f""""${fmt}_mb_per_s":${rawMb / sec}%.1f"""
     }
-    println(fields.mkString("""{"metric":"raster_stress",""", ",", "}"))
-    spark.stop()
+    fields.mkString("""{"metric":"raster_stress",""", ",", "}")
   }
 }

@@ -3,19 +3,17 @@ package graft
 /** Offline ANN recall probe: runs the approximate ladder (LSH, IVF-flat,
   * IVF-trained, PQ, IVF-PQ, and the persisted IVF-PQ serving read)
   * against the exact brute-force `similarity_topk` truth at a given SF
-  * dir, printing one JSON line of recall@10 per rung. The ScalaTest
+  * dir, returning one JSON line of recall@10 per rung. The ScalaTest
   * recall floors are pinned at sf0.001/0.01; fixed-parameter LSH/IVF
   * recall typically degrades as the corpus grows around the same
   * bucket/cell structure, so this is the tool that answers "do the knobs
   * still hold at 10×?" before anything ships — measured numbers live in
   * ARCHITECTURE.md's ⊘-key registry.
   *
-  * Usage: `runMain graft.RecallProbe /root/testdata/sf0.1`
+  * Usage: `runMain graft.Bench recall /root/testdata/sf0.1`
   */
 object RecallProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val spark = GraftSession.local(GraftSession.cpus)
+  def run(spark: org.apache.spark.sql.SparkSession, sfDir: String): String = {
     def pairs(key: String): Set[(Long, Long)] =
       Queries.all(key).fn(spark, sfDir)
         .select("q_id", "vec_id").collect()
@@ -63,8 +61,7 @@ object RecallProbe {
       perQ.map { case (q, r) =>
         f""""q$q(l${qLabels(q)}%d,n${labelCounts(qLabels(q))}%d)": $r%.4f""" } :+
       f""""rarest_label_q$rarestQ": ${perQ.toMap.apply(rarestQ)}%.4f"""
-    println((entries ++ filteredEntries)
-      .mkString(s"""{"sf_dir": "$sfDir", """, ", ", "}"))
-    spark.stop()
+    (entries ++ filteredEntries)
+      .mkString(s"""{"sf_dir": "$sfDir", """, ", ", "}")
   }
 }

@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AsOfJoin, Indicators}
 
-/** Hot-key stress bench — the measurement behind the engine's central
-  * 100× claim. The reference partitions every window by symbol alone
+/** Hot-key stress lane (`runMain graft.Bench stress skew [sfDir]`) — the
+  * measurement behind the engine's central 100× claim. The reference partitions every window by symbol alone
   * (`/root/reference/spark-job/etl_job.py:267`), so ONE symbol's whole
   * history lands in ONE task: the plain paths here are that wall,
   * reproduced by overwriting `symbol` with a single constant so the full
@@ -16,21 +16,15 @@ import graft.operators.{AsOfJoin, Indicators}
   * for as-of) split that partition into bounded (symbol, chunk) tasks —
   * result-identical (pinned by ChunkedSpec/AsOfJoinSpec) but parallel.
   *
-  * Prints one JSON line:
+  * Returns one JSON line:
   *   {"metric":"stress","rows":N,"cpus":C,"pairs":{"indicators":{"plain":s,
   *    "chunked":s},...}}
-  * and appends nothing else to stdout that starts with '{'.
-  *
-  * Usage: runMain graft.StressBench [sfDir]  (env SPARK_GRAFT_CPUS,
-  * SPARK_GRAFT_STRESS_OUT for the JSON file copy).
+  * Each side of a pair is the best of `SPARK_GRAFT_BENCH_REPS` runs.
   */
-object StressBench {
+object SkewStress {
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  def run(spark: SparkSession, sfDir: String): String = {
     val cpus = GraftSession.cpus
-    val spark = GraftSession.local(cpus)
 
     // ONE symbol's entire history: the skew case the chunked family exists
     // for. The sf frame alone (~600k rows) still single-task-sorts in
@@ -113,32 +107,13 @@ object StressBench {
     // lets targeted reruns (x20 scale on just the previously-weak pairs)
     // skip the quarter-hour indicators pair
     val only = sys.env.get("SPARK_GRAFT_STRESS_PAIRS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // fail fast on a typo'd pair name (same stance as the .toInt above):
-    // a filter that silently selects nothing publishes an empty result
-    // after a quarter-hour run
-    only.foreach { names =>
-      val known = pairs.map(_._1).toSet
-      require(names.nonEmpty && names.subsetOf(known),
-        s"SPARK_GRAFT_STRESS_PAIRS must name pairs from $known, got $names")
-    }
-    val selected = only.fold(pairs)(names => pairs.filter(p => names(p._1)))
+      .map(Bench.selectKeys(_, pairs.map(_._1), "SPARK_GRAFT_STRESS_PAIRS pair"))
+    val selected = only.fold(pairs)(names => pairs.filter(p => names.contains(p._1)))
 
-    // warm-up (codegen + classloading outside timed runs)
-    spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
-
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     def force(mk: () => DataFrame, chk: org.apache.spark.sql.Column): Double =
       mk().select(sum(chk)).head.getDouble(0)
-    def time(mk: () => DataFrame, chk: org.apache.spark.sql.Column): Double = {
-      val ts = (1 to reps).map { _ =>
-        spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        force(mk, chk)
-        (System.nanoTime() - t0) / 1e9
-      }
-      ts.min
-    }
+    def time(mk: () => DataFrame, chk: org.apache.spark.sql.Column): Double =
+      Bench.best(spark, Bench.reps)(force(mk, chk))._1
 
     val results = selected.map { case (name, plain, chunked, chk) =>
       val (sp, sc) = (force(plain, chk), force(chunked, chk))
@@ -191,12 +166,12 @@ object StressBench {
           graft.operators.Incremental.OverlapReload))
       incModes.map { case (name, bound, mode) =>
         val (state, out) = seedState(name)
-        spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        val done = graft.operators.Incremental.runIncremental(
-          spark, incInput, state, out, mode, incOrd, bound)
-        val n = done.count()
-        val t = (System.nanoTime() - t0) / 1e9
+        val (t, (done, n)) = Bench.best(spark, 1) {
+          val d = graft.operators.Incremental.runIncremental(
+            spark, incInput, state, out, mode, incOrd, bound)
+          (d, d.count())
+        }
+        graft.operators.Incremental.release(done)
         println(f"[stress] incremental/$name%-18s $t%6.2fs  ($n rows)")
         name -> t
       }
@@ -207,15 +182,6 @@ object StressBench {
     val qs = results.map { case (n, (tp, tc)) =>
       s""""$n":{"plain":$tp,"chunked":$tc}"""
     }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"stress","rows":$nRows,"cpus":$cpus,"sf":"$sfDir","pairs":$qs,"incremental":$incJson}"""
-    println(json)
-    sys.env.get("SPARK_GRAFT_STRESS_OUT").foreach { f =>
-      try java.nio.file.Files.write(java.nio.file.Paths.get(f),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[stress] WARN could not write $f: $e") }
-    }
-    spark.stop()
+    s"""{"metric":"stress","rows":$nRows,"cpus":$cpus,"sf":"$sfDir","pairs":$qs,"incremental":$incJson}"""
   }
 }

@@ -88,13 +88,22 @@ object Smoke {
     val half = base.filter(org.apache.spark.sql.functions.col("timestamp") <
       org.apache.spark.sql.functions.lit("1995-01-01"))
     val ord = Queries.tieCols // canonical total order on this data
-    operators.Incremental.runIncremental(spark, half, s"$tmp/wm", s"$tmp/out", operators.Incremental.Truncated, ord)
-    operators.Incremental.runIncremental(spark, base, s"$tmp/wm", s"$tmp/out", operators.Incremental.Truncated, ord)
-    val rerun = operators.Incremental.runIncremental(spark, base, s"$tmp/wm", s"$tmp/out", operators.Incremental.Truncated, ord)
+    // each run returns a checkpoint the caller owns: every block must be
+    // released once the section is done, not whenever GC next runs
+    val heldBefore = spark.sparkContext.getPersistentRDDs.size
+    def inc(input: org.apache.spark.sql.DataFrame) = operators.Incremental.runIncremental(
+      spark, input, s"$tmp/wm", s"$tmp/out", operators.Incremental.Truncated, ord)
+    operators.Incremental.release(inc(half))
+    operators.Incremental.release(inc(base))
+    val rerun = inc(base)
     val written = spark.read.parquet(s"$tmp/out").count()
     println(s"[smoke] incremental written=$written rerun_new=${rerun.count()}")
     assert(written == n, s"incremental total $written != $n")
     assert(rerun.isEmpty, "re-run was not idempotent")
+    operators.Incremental.release(rerun)
+    val held = spark.sparkContext.getPersistentRDDs.size
+    println(s"[smoke] incremental held RDDs before=$heldBefore after=$held")
+    assert(held == heldBefore, s"incremental left ${held - heldBefore} checkpoint(s) held")
 
     // ML parity end-to-end on real testdata: indicators -> future target ->
     // train -> registry -> predict latest

@@ -6,18 +6,12 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: comma-separated key subset (dev runs / splitting
-    // a long sf0.1 verify into halves); oracle_sql.json is filtered to
-    // match so check_oracle.py compares exactly the dumped keys
-    val keyFilter: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // fail fast on typo'd key names: a silently-dropped filter entry
+    // optional third arg: `all` or a comma-separated key subset (dev runs
+    // / splitting a long sf0.1 verify into halves); oracle_sql.json is
+    // filtered to match so check_oracle.py compares exactly the dumped
+    // keys. A typo'd name fails here: a silently-dropped filter entry
     // would dump nothing and leave the downstream gate vacuously green
-    keyFilter.foreach { f =>
-      val unknown = f.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"[verify] unknown key(s): ${unknown.toSeq.sorted.mkString(",")}")
-    }
+    val keyFilter = args.lift(2).map(Bench.selectKeys(_).toSet)
     def keep(name: String): Boolean = keyFilter.forall(_.contains(name))
     val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()

@@ -117,12 +117,11 @@ object MicroBatch {
   }
 
   /** Idempotent keyed sink: dedup on the deterministic key, then append
-    * partitioned by symbol. With `statefulDedup` (default) the dedup is
-    * Spark's stateful streaming `dropDuplicates` — duplicates are removed
-    * ACROSS micro-batches (checkpointed key state), matching the
-    * reference's ES upsert-by-id semantics over all time; without it only
-    * within-batch duplicates collapse. At-least-once delivery + keyed
-    * dedup = effective exactly-once.
+    * partitioned by symbol. The dedup is Spark's stateful streaming
+    * `dropDuplicates` — duplicates are removed ACROSS micro-batches
+    * (checkpointed key state), matching the reference's ES upsert-by-id
+    * semantics over all time. At-least-once delivery + keyed dedup =
+    * effective exactly-once.
     *
     * Scale note: plain `dropDuplicates` keeps one state entry per distinct
     * key FOREVER — unbounded on an unbounded key space. Pass
@@ -135,7 +134,6 @@ object MicroBatch {
     */
   def idempotentSink(df: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      statefulDedup: Boolean = true,
       dedupWatermark: Option[(String, String)] = None): StreamingQuery = {
     // batch ids are scoped to the checkpoint: restarting with a FRESH
     // checkpoint against a populated outDir would re-number from 0 and
@@ -149,26 +147,22 @@ object MicroBatch {
       s"outDir $outDir already has data but checkpoint $checkpointDir is fresh - " +
         "batch ids would restart at 0 and overwrite history; use the original " +
         "checkpoint or a new outDir")
-    require(statefulDedup || dedupWatermark.isEmpty,
-      "dedupWatermark implies stateful dedup - statefulDedup=false contradicts it")
     val keyed = df.withColumn("es_id", concat_ws("_", col("ticker"), col("date")))
     val deduped = dedupWatermark match {
       case Some((eventCol, delay)) =>
         keyed.withWatermark(eventCol, delay).dropDuplicatesWithinWatermark("es_id")
-      case None if statefulDedup => keyed.dropDuplicates("es_id")
-      case None => keyed
+      case None => keyed.dropDuplicates("es_id")
     }
     deduped.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = if (statefulDedup) batch else batch.dropDuplicates("es_id")
         // foreachBatch is at-least-once: a crash after the files commit but
         // before the streaming commit log records the batch replays it.
         // Writing each batch into its own batch_id partition with overwrite
         // makes a replay rewrite the same path instead of appending
         // duplicates -> genuinely idempotent.
-        b.write.mode("overwrite").partitionBy("ticker")
+        batch.write.mode("overwrite").partitionBy("ticker")
           .parquet(s"$outDir/batch_id=$batchId")
         ()
       }

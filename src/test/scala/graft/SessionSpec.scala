@@ -3,8 +3,9 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The test suite runs under the engine's own session config, and
-  * [[GraftSession]] stays the only place that builds a session.
+/** The test suite runs under the engine's own session config,
+  * [[GraftSession]] stays the only place that builds a session, and
+  * [[Bench]] stays the one measurement runner.
   */
 class SessionSpec extends SparkSpec {
 
@@ -21,17 +22,27 @@ class SessionSpec extends SparkSpec {
     assert(d == 11.0)
   }
 
-  test("no source file but GraftSession.scala builds a SparkSession") {
-    // split so this file does not match its own search
-    val needle = "SparkSession" + ".builder("
-    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
-    roots.foreach(r => assert(Files.isDirectory(r), s"$r not found from ${Paths.get("").toAbsolutePath}"))
-    val offenders = roots.flatMap { r =>
+  /** Scala sources under `roots` whose text contains `needle`, except
+    * the files named in `allowed`. */
+  private def offenders(roots: Seq[String], needle: String, allowed: Set[String]): Seq[Path] =
+    roots.map(Paths.get(_)).flatMap { r =>
+      assert(Files.isDirectory(r), s"$r not found from ${Paths.get("").toAbsolutePath}")
       val files = Files.walk(r)
       try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally files.close()
-    }.filter((p: Path) => p.getFileName.toString != "GraftSession.scala" &&
+    }.filter((p: Path) => !allowed(p.getFileName.toString) &&
       Files.readString(p).contains(needle))
-    assert(offenders.isEmpty, s"build sessions through GraftSession: ${offenders.mkString(", ")}")
+
+  test("no source file but GraftSession.scala builds a SparkSession") {
+    // split so this file does not match its own search
+    val found = offenders(Seq("src/main/scala", "src/test/scala"),
+      "SparkSession" + ".builder(", Set("GraftSession.scala"))
+    assert(found.isEmpty, s"build sessions through GraftSession: ${found.mkString(", ")}")
+  }
+
+  test("only Bench, Verify and Smoke define a main") {
+    val found = offenders(Seq("src/main/scala"), "def main(",
+      Set("Bench.scala", "Verify.scala", "Smoke.scala"))
+    assert(found.isEmpty, s"add a mode to graft.Bench instead: ${found.mkString(", ")}")
   }
 }
