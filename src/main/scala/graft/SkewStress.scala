@@ -171,7 +171,7 @@ object SkewStress {
             spark, incInput, state, out, mode, incOrd, bound)
           (d, d.count())
         }
-        graft.operators.Incremental.release(done)
+        graft.operators.Checkpoints.release(done)
         println(f"[stress] incremental/$name%-18s $t%6.2fs  ($n rows)")
         name -> t
       }

@@ -93,14 +93,14 @@ object Smoke {
     val heldBefore = spark.sparkContext.getPersistentRDDs.size
     def inc(input: org.apache.spark.sql.DataFrame) = operators.Incremental.runIncremental(
       spark, input, s"$tmp/wm", s"$tmp/out", operators.Incremental.Truncated, ord)
-    operators.Incremental.release(inc(half))
-    operators.Incremental.release(inc(base))
+    operators.Checkpoints.release(inc(half))
+    operators.Checkpoints.release(inc(base))
     val rerun = inc(base)
     val written = spark.read.parquet(s"$tmp/out").count()
     println(s"[smoke] incremental written=$written rerun_new=${rerun.count()}")
     assert(written == n, s"incremental total $written != $n")
     assert(rerun.isEmpty, "re-run was not idempotent")
-    operators.Incremental.release(rerun)
+    operators.Checkpoints.release(rerun)
     val held = spark.sparkContext.getPersistentRDDs.size
     println(s"[smoke] incremental held RDDs before=$heldBefore after=$held")
     assert(held == heldBefore, s"incremental left ${held - heldBefore} checkpoint(s) held")

@@ -1,6 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -16,7 +18,7 @@ object Verify {
     val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try naiveTimestamps(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>
         // the class too: getMessage alone can be null
@@ -40,4 +42,17 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** `df` with each TIMESTAMP column cast to TIMESTAMP_NTZ, the type the
+    * oracle's DuckDB TIMESTAMP compares equal to. The session writes a
+    * TIMESTAMP as INT64 micros adjusted to UTC, which DuckDB reads as
+    * TIMESTAMPTZ; an NTZ column is written unadjusted and read as
+    * TIMESTAMP. The session time zone is UTC, so every value keeps its
+    * wall time.
+    */
+  private[graft] def naiveTimestamps(df: DataFrame): DataFrame =
+    df.withColumns(df.schema.fields.collect {
+      case f if f.dataType == TimestampType =>
+        f.name -> df.col(s"`${f.name.replace("`", "``")}`").cast(TimestampNTZType)
+    }.toMap)
 }

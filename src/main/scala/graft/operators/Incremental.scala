@@ -375,7 +375,7 @@ object Incremental {
 
   /** One incremental run: recover, stage, commit, publish (see the object
     * doc). Returns the newly processed frame, locally checkpointed: the
-    * caller owns its blocks and should [[release]] it when done.
+    * caller owns its blocks and should [[Checkpoints.release]] it when done.
     */
   // orderCols has NO default on purpose: it must be a total order on the
   // caller's data (Queries.tieCols for the OHLCV testdata) and no single
@@ -404,16 +404,6 @@ object Incremental {
     val staged = stage(input, state, mode, orderCols, historyBound, outDir, stateDir)
     if (commit(spark, stateDir, outDir, state, staged)) publish(spark, outDir, staged.runId)
     staged.rows
-  }
-
-  /** Releases the blocks of a frame [[runIncremental]] returned.
-    * `Dataset.unpersist()` does not: it drops cache-manager entries only,
-    * and a local checkpoint's blocks belong to the RDD under the frame's
-    * `LogicalRDD`.
-    */
-  def release(rows: DataFrame): Unit = rows.queryExecution.logical.foreach {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
   }
 
   /** The rows one run processes, with indicators, given the committed

@@ -244,7 +244,8 @@ object ScaleOps {
     * non-representative frame, `rep` = min pid of its merged cluster.
     * The result is an eager local checkpoint: its blocks are held on the
     * executors until released, and the caller owns them and should
-    * `unpersist()` it when done.
+    * [[Checkpoints.release]] it when done (`unpersist()` does not free a
+    * local checkpoint).
     */
   def dhashHammingClusters(frames: DataFrame, maxHamming: Int = 4): DataFrame = {
     // byHash is the SMALL post-collapse table (one row per distinct

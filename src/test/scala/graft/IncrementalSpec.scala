@@ -5,15 +5,21 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 import scala.concurrent.{Future, Promise}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{ElementAt, GenericRowWithSchema, Literal}
 import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftnative.WatermarkLookup
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.{Clean, Incremental, Indicators}
+import graft.operators.{Checkpoints, Clean, Incremental, Indicators}
+import graft.streaming.MicroBatch
 
 class IncrementalSpec extends SparkSpec {
   import spark.implicits._
@@ -101,8 +107,9 @@ class IncrementalSpec extends SparkSpec {
   private def bootedIncrement(inDir: String = tmp() + "/in"): (DataFrame, String, String) = {
     val input = asParquet(series(Seq("A", "B"), 0 until 300), inDir)
     val (st, out) = (tmp() + "/wm", tmp() + "/out")
-    Incremental.runIncremental(spark, input.filter(col("trading_date") < lit(day0.plusDays(280).toString)),
-      st, out, Incremental.OverlapReload, specOrd).unpersist()
+    Checkpoints.release(Incremental.runIncremental(spark,
+      input.filter(col("trading_date") < lit(day0.plusDays(280).toString)),
+      st, out, Incremental.OverlapReload, specOrd))
     (input, st, out)
   }
 
@@ -186,7 +193,7 @@ class IncrementalSpec extends SparkSpec {
       inc = Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd)
     }.records
     val outRows = inc.count()
-    inc.unpersist()
+    Checkpoints.release(inc)
     val stateRows = Incremental.readWatermarks(spark, st).count()
     assert(outRows == 40 && stateRows == 2)
     // one input scan; the state is a driver-side record, and the append
@@ -203,7 +210,7 @@ class IncrementalSpec extends SparkSpec {
       inc = Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd)
     }.jobs
     assert(inc.count() == 40)
-    inc.unpersist()
+    Checkpoints.release(inc)
     // the checkpoint's shuffle-map stage and the staging append (which
     // fills the checkpoint and observes the watermarks); the state read
     // and the commit are driver-side file I/O
@@ -224,7 +231,7 @@ class IncrementalSpec extends SparkSpec {
     assert(inc.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }.isEmpty)
     var n = 0L
     val w = work { n = inc.count() }
-    inc.unpersist()
+    Checkpoints.release(inc)
     // a checkpoint block read counts as input records: the count reads its
     // own rows, not the 630 input rows a rescan would
     assert(w.records == n, s"count read ${w.records} input records for $n rows")
@@ -235,11 +242,11 @@ class IncrementalSpec extends SparkSpec {
     def ntz(days: Range) = mkInput(days).withColumn("timestamp", col("trading_date").cast("timestamp_ntz"))
     val (st, out) = (tmp() + "/wm", tmp() + "/out")
     def stateType = Incremental.readWatermarks(spark, st).schema("last_processed_timestamp").dataType
-    Incremental.runIncremental(spark, ntz(1 to 12), st, out, Incremental.Truncated, specOrd).unpersist()
+    Checkpoints.release(Incremental.runIncremental(spark, ntz(1 to 12), st, out, Incremental.Truncated, specOrd))
     assert(stateType == TimestampNTZType)
     val second = Incremental.runIncremental(spark, ntz(1 to 20), st, out, Incremental.Truncated, specOrd)
     val days = second.select("trading_date").collect().map(_.getDate(0).toString).sorted.toSeq
-    second.unpersist()
+    Checkpoints.release(second)
     assert(days == (13 to 20).map(i => f"2024-01-$i%02d"))
     assert(stateType == TimestampNTZType)
     val wm = Incremental.readWatermarks(spark, st).collect()
@@ -257,12 +264,12 @@ class IncrementalSpec extends SparkSpec {
     val (st, out) = (tmp() + "/wm", tmp() + "/out")
     spark.conf.set(key, "America/New_York")
     try {
-      Incremental.runIncremental(spark, ntz(1 to 12), st, out, Incremental.Truncated, specOrd).unpersist()
+      Checkpoints.release(Incremental.runIncremental(spark, ntz(1 to 12), st, out, Incremental.Truncated, specOrd))
       val late = ntz(10 to 10).withColumn("trading_date", lit(gap.toLocalDate)).withColumn("timestamp", lit(gap))
       val second = Incremental.runIncremental(spark, ntz(1 to 12).unionByName(late), st, out,
         Incremental.Truncated, specOrd)
       assert(second.count() == 1)
-      second.unpersist()
+      Checkpoints.release(second)
       val state = Incremental.readWatermarks(spark, st)
       assert(state.schema("last_processed_timestamp").dataType == TimestampNTZType)
       val wm = state.collect()
@@ -272,7 +279,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("a rerun with no fresh rows writes no state and runs at most 1 job") {
     val (st, out) = (tmp() + "/wm", tmp() + "/out")
-    Incremental.runIncremental(spark, mkInput(1 to 10), st, out, Incremental.Truncated, specOrd).unpersist()
+    Checkpoints.release(Incremental.runIncremental(spark, mkInput(1 to 10), st, out, Incremental.Truncated, specOrd))
     def files = Files.list(java.nio.file.Paths.get(st)).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
       .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p)).toMap
     def state = Incremental.readWatermarks(spark, st).collect().toSeq
@@ -282,7 +289,7 @@ class IncrementalSpec extends SparkSpec {
       rerun = Incremental.runIncremental(spark, mkInput(1 to 10), st, out, Incremental.Truncated, specOrd)
     }.jobs
     assert(rerun.isEmpty)
-    rerun.unpersist()
+    Checkpoints.release(rerun)
     // the (empty) staging append: the local input filters to nothing, so
     // no shuffle runs, and nothing is committed
     assert(jobs <= 1, s"a rerun ran $jobs jobs")
@@ -292,7 +299,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("an increment leaves the session serializable (tasks that capture it still ship)") {
     val (st, out) = (tmp() + "/wm", tmp() + "/out")
-    Incremental.runIncremental(spark, mkInput(1 to 10), st, out, Incremental.Truncated, specOrd).unpersist()
+    Checkpoints.release(Incremental.runIncremental(spark, mkInput(1 to 10), st, out, Incremental.Truncated, specOrd))
     // Spark ML models keep their training summary, which holds the session,
     // and their transform closures capture the model
     new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream).writeObject(spark)
@@ -320,13 +327,13 @@ class IncrementalSpec extends SparkSpec {
 
   test("a crash mid-swap leaves only <state>_bak: the next run resumes from it and promotes it") {
     val (st, out) = (tmp() + "/wm", tmp() + "/out")
-    Incremental.runIncremental(spark, mkInput(1 to 12), st, out, Incremental.Truncated, specOrd).unpersist()
+    Checkpoints.release(Incremental.runIncremental(spark, mkInput(1 to 12), st, out, Incremental.Truncated, specOrd))
     val (state, bak) = (java.nio.file.Paths.get(st), java.nio.file.Paths.get(st + "_bak"))
     // the swap renamed <state> to <state>_bak, then died before the promote
     Files.move(state, bak)
     val second = Incremental.runIncremental(spark, mkInput(1 to 20), st, out, Incremental.Truncated, specOrd)
     assert(second.count() == 8)
-    second.unpersist()
+    Checkpoints.release(second)
     val keys = spark.read.parquet(out).select("symbol_date_key").collect().map(_.getString(0))
     assert(keys.length == 20 && keys.distinct.length == 20, "a processed row was written twice")
     assert(Files.isDirectory(state) && !Files.exists(bak), "<state> not promoted or _bak left behind")
@@ -339,11 +346,11 @@ class IncrementalSpec extends SparkSpec {
     val boot = input.filter(col("trading_date") < lit(day0.plusDays(300).toString))
     def run(bound: Option[org.apache.spark.sql.Column]) = {
       val (st, out) = (tmp() + "/wm", tmp() + "/out")
-      Incremental.runIncremental(spark, boot, st, out, Incremental.OverlapReload, specOrd).unpersist()
+      Checkpoints.release(Incremental.runIncremental(spark, boot, st, out, Incremental.OverlapReload, specOrd))
       val inc = Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd, bound)
       val rows = inc.select((Seq("symbol_date_key") ++ Indicators.indicatorCols).map(col): _*)
         .orderBy("symbol_date_key").collect().toSeq
-      inc.unpersist()
+      Checkpoints.release(inc)
       rows
     }
     val unbounded = run(None)
@@ -360,12 +367,13 @@ class IncrementalSpec extends SparkSpec {
   test("historyBound: late rows are never written; fresh rows older than the bound are") {
     val (st, out) = (tmp() + "/wm", tmp() + "/out")
     val boot = series(Seq("A"), (0 until 250).filter(_ != 120))
-    Incremental.runIncremental(spark, asParquet(boot), st, out, Incremental.OverlapReload, specOrd).unpersist()
+    Checkpoints.release(
+      Incremental.runIncremental(spark, asParquet(boot), st, out, Incremental.OverlapReload, specOrd))
     // day 120 of A lands late (before A's watermark, inside the bound);
     // symbol N is new, and all its rows predate the bound
     val next = asParquet(series(Seq("A"), 0 until 260).unionByName(series(Seq("N"), 0 until 30)))
-    Incremental.runIncremental(spark, next, st, out, Incremental.OverlapReload, specOrd,
-      Some(col("timestamp") >= tsOf(40))).unpersist()
+    Checkpoints.release(Incremental.runIncremental(spark, next, st, out, Incremental.OverlapReload, specOrd,
+      Some(col("timestamp") >= tsOf(40))))
     val keys = spark.read.parquet(out).select("symbol_date_key").collect().map(_.getString(0)).toSet
     assert(!keys.contains(s"A_${day0.plusDays(120)}"), "late row was written")
     assert(keys.size == 249 + 10 + 30)
@@ -387,7 +395,7 @@ class IncrementalSpec extends SparkSpec {
   /** The table and watermarks of the booted increment run without a crash. */
   private lazy val uninterrupted = {
     val (input, st, out) = bootedIncrement()
-    Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd).unpersist()
+    Checkpoints.release(Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd))
     (table(out), watermarks(st))
   }
 
@@ -399,7 +407,7 @@ class IncrementalSpec extends SparkSpec {
     val (input, st, out) = bootedIncrement()
     val state = Incremental.recover(spark, st, out, TimestampType)
     val staged = Incremental.stage(input, state, Incremental.OverlapReload, specOrd, None, out, st)
-    staged.rows.unpersist()
+    Checkpoints.release(staged.rows)
     val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new org.apache.hadoop.fs.Path(s"$out/_staging/${staged.runId}")
     if (crash != "staged") assert(Incremental.commit(spark, st, out, state, staged))
@@ -419,7 +427,7 @@ class IncrementalSpec extends SparkSpec {
     val rerun = Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd)
     // rows of a committed run are published by recovery, not processed again
     assert(rerun.count() == (if (crash == "staged") 40 else 0))
-    rerun.unpersist()
+    Checkpoints.release(rerun)
     val keys = spark.read.parquet(out).select("symbol_date_key").collect().map(_.getString(0))
     assert(keys.length == 600 && keys.distinct.length == 600, s"${keys.length} rows, ${keys.distinct.length} keys")
     assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$out/_staging")).isEmpty, "staging left behind")
@@ -448,7 +456,7 @@ class IncrementalSpec extends SparkSpec {
         .coalesce(1).write.parquet(st + suffix)
       val second = Incremental.runIncremental(spark, mkInput(1 to 20), st, out, Incremental.Truncated, specOrd)
       val days = second.select("trading_date").collect().map(_.getDate(0).toString).sorted.toSeq
-      second.unpersist()
+      Checkpoints.release(second)
       assert(days == (13 to 20).map(i => f"2024-01-$i%02d"), s"state in <state>$suffix was not read")
       val left = Files.list(java.nio.file.Paths.get(st)).toArray.toSeq
         .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).filterNot(_.startsWith("."))
@@ -484,13 +492,93 @@ class IncrementalSpec extends SparkSpec {
       .withColumn("symbol_date_key", Clean.compositeKey(col("symbol"), col("trading_date")))
     val cols = inc.columns.sorted.map(col).toSeq
     val got = inc.select(cols: _*).orderBy("symbol_date_key").collect().toSeq
-    inc.unpersist()
+    Checkpoints.release(inc)
     assert(got.size == 100 + 200)
     assert(got == expected.select(cols: _*).orderBy("symbol_date_key").collect().toSeq)
     val raised = fresh.groupBy("symbol").agg(unix_micros(max(col("timestamp")))).collect()
       .map(r => r.getString(0) -> r.getLong(1))
     assert(watermarks(st).map { case (s, t) => s -> Incremental.micros(t) } == marks ++ raised)
     assert(table(out) == got)
+  }
+
+  /** Every column chunk under `dir` is zstd and every column in `tsCols` is
+    * INT64 TIMESTAMP(MICROS, adjusted to UTC): the session's write policy.
+    */
+  private def assertWritePolicy(dir: String, tsCols: String*): Unit = {
+    val files = ParquetFooters.under(spark, dir)
+    assert(files.exists(_._2.getBlocks.size > 0), s"no row group under $dir")
+    val micros = LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)
+    files.foreach { case (p, f) =>
+      val codecs = f.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+      assert(codecs.forall(_ == CompressionCodecName.ZSTD), s"$p has $codecs chunks")
+      tsCols.foreach { c =>
+        val t = ParquetFooters.physicalType(f, c)
+        assert(t.getPrimitiveTypeName == PrimitiveTypeName.INT64 && t.getLogicalTypeAnnotation == micros,
+          s"$p stores $c as $t")
+      }
+    }
+  }
+
+  test("the processed table and the stream sink are zstd with INT64 TIMESTAMP(MICROS) timestamps") {
+    val (st, out) = (tmp() + "/wm", tmp() + "/out")
+    Checkpoints.release(
+      Incremental.runIncremental(spark, mkInput(1 to 12), st, out, Incremental.Truncated, specOrd))
+    assertWritePolicy(out, "timestamp")
+    val mem = MemoryStream[String](spark)
+    mem.addData("""{"ticker":"AAPL","date":"2024-01-01","open":1.0,"high":1.0,"low":1.0,"close":1.0,""" +
+      """"volume":10,"timestamp":"2024-01-01 00:00:00"}""")
+    val (sink, ckpt) = (tmp() + "/sink", tmp() + "/ckpt")
+    assert(MicroBatch.idempotentSink(MicroBatch.decode(mem.toDF()), sink, ckpt).awaitTermination(60000))
+    assertWritePolicy(sink, "consumed_at")
+  }
+
+  test("a timestamp predicate past the bootstrap watermark reads only the increment's records") {
+    val (input, st, out) = bootedIncrement()
+    val wm = Incremental.readState(spark, st).marks.values.map(_.micros).toSet
+    assert(wm.size == 1, s"the booted symbols end on different days: $wm")
+    Checkpoints.release(Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd))
+    var rows = 0
+    val read = work {
+      rows = spark.read.parquet(out).filter(col("timestamp") > timestamp_micros(lit(wm.head))).collect().length
+    }.records
+    // the bootstrap's row groups end at the watermark, so their statistics
+    // skip them; without statistics the scan reads all 600 rows
+    assert(rows == 40)
+    assert(read == 40, s"read $read of the table's 600 records")
+  }
+
+  test("a table written under snappy/INT96 reads back unchanged after an increment under the current policy") {
+    val input = asParquet(series(Seq("A", "B"), 0 until 300))
+    val boot = input.filter(col("trading_date") < lit(day0.plusDays(280).toString))
+    def run(st: String, out: String, in: DataFrame) =
+      Checkpoints.release(Incremental.runIncremental(spark, in, st, out, Incremental.OverlapReload, specOrd))
+    // bootstrap under the settings tables were written with before the
+    // policy, then the increment under the policy
+    val (st, out) = (tmp() + "/wm", tmp() + "/out")
+    val legacy = Seq("spark.sql.parquet.compression.codec" -> "snappy",
+      "spark.sql.parquet.outputTimestampType" -> "INT96")
+    val current = legacy.map { case (k, _) => k -> spark.conf.get(k) }
+    legacy.foreach { case (k, v) => spark.conf.set(k, v) }
+    try run(st, out, boot) finally current.foreach { case (k, v) => spark.conf.set(k, v) }
+    run(st, out, input)
+    val layouts = ParquetFooters.under(spark, out).map { case (_, f) =>
+      ParquetFooters.physicalType(f, "timestamp").getPrimitiveTypeName ->
+        f.getBlocks.get(0).getColumns.get(0).getCodec
+    }.toSet
+    assert(layouts == Set(PrimitiveTypeName.INT96 -> CompressionCodecName.SNAPPY,
+      PrimitiveTypeName.INT64 -> CompressionCodecName.ZSTD), s"layouts $layouts")
+    // the same two runs, both under the policy
+    val (refSt, refOut) = (tmp() + "/wm", tmp() + "/out")
+    run(refSt, refOut, boot)
+    run(refSt, refOut, input)
+    val expected = table(refOut)
+    assert(expected.size == 600)
+    assert(table(out) == expected)
+    // the watermarks committed over the legacy files still skip them
+    val rerun = Incremental.runIncremental(spark, input, st, out, Incremental.OverlapReload, specOrd)
+    assert(rerun.count() == 0)
+    Checkpoints.release(rerun)
+    assert(table(out) == expected)
   }
 
   test("WatermarkLookup: generated and interpreted code agree, nulls included") {

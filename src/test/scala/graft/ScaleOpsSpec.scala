@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.ScaleOps
+import graft.operators.{Checkpoints, ScaleOps}
 import org.apache.spark.sql.graftnative.{AviFunctions, ExifFunctions,
   FlacSynthFunctions, JpegSynthFunctions, MediaExpressions, Mp4TrackFunctions,
   PcmFunctions, RasterFunctions, RasterSynthFunctions, TextExpressions,
@@ -3788,6 +3788,20 @@ class ScaleOpsSpec extends SparkSpec {
     val far = ScaleOps.dhashHammingClusters(
       Seq((1L, a), (2L, a ^ 0x1FL)).toDF("pid", "dh")).collect()
     assert(far.isEmpty, "hamming 5 must not merge at budget 4")
+  }
+
+  test("dhashHammingClusters' eager checkpoint is freed by Checkpoints.release, not by unpersist()") {
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    def added = sc.getPersistentRDDs.keySet -- baseline
+    val a = 0x0123456789ABCDEFL
+    val out = ScaleOps.dhashHammingClusters(Seq((1L, a), (2L, a), (3L, a ^ 0xFL)).toDF("pid", "dh"))
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(2L -> 1L, 3L -> 1L))
+    assert(added.nonEmpty, "the result holds no checkpoint")
+    out.unpersist(blocking = true)
+    assert(added.nonEmpty, "unpersist() released a local checkpoint")
+    Checkpoints.release(out)
+    assert(added.isEmpty, s"RDDs ${added.mkString(", ")} still held")
   }
 
   test("video_dhash_neardup: banding runs on the REP side (reps well under frames)") {
