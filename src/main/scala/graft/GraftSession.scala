@@ -65,7 +65,9 @@ object GraftSession {
       // since INT64 columns carry statistics (finbench stored_bytes_per_row
       // 55.41 → 55.55 on stream_ingest); zstd more than pays for it
       // (medians of 10 runs: 55.3 → 41.7 B/row on stream_ingest, 191.5 →
-      // 172.7 on daily_incremental). The daily gain holds while bootstrap
+      // 172.7 on daily_incremental, both measured when the stream sinks
+      // still wrote one file per ticker per state partition; see
+      // MicroBatch.writeBatch). The daily gain holds while bootstrap
       // files dominate the table: a one-row increment file is mostly
       // footer, and zstd makes it slightly larger, so after 20–40 daily
       // increments without compaction the table is larger than under

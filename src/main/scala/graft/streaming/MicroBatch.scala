@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -18,8 +19,20 @@ import org.apache.spark.sql.types._
   * strictly dominates the reference's semantics.
   *
   * Scale notes: decode and stamping are narrow (no shuffle); the dedup in
-  * each micro-batch shuffles only batch-sized data on a compact key; sinks
-  * partition by symbol so downstream reads prune.
+  * each micro-batch shuffles only batch-sized data on a compact key; the
+  * dedup sink partitions by `ticker` so downstream reads prune.
+  *
+  * File count: every `foreachBatch` sink writes through [[writeBatch]],
+  * which runs one write task per advisory partition size
+  * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) of the batch's
+  * estimated size, at least one and at most the batch's state partitions.
+  * A batch under the advisory size (a small file backlog) therefore
+  * writes one file per ticker instead of one per ticker per state
+  * partition. Sources that report no size (Kafka, `MemoryStream`) estimate
+  * `Long.MaxValue` and keep every state partition, however few offsets a
+  * batch holds. Cluster caveat: when one task writes, that task
+  * also runs every state partition, so on a multi-executor cluster the
+  * state stores may load away from the executor that last held them.
   */
 object MicroBatch {
 
@@ -96,7 +109,8 @@ object MicroBatch {
     *
     * Each trigger admits staged files up to `maxBytesPerTrigger` bytes, so
     * a backlog of small files drains in ⌈bytes/budget⌉ micro-batches (one
-    * planned job, one state-store version and one partitioned write each)
+    * planned job, one state-store version and one partitioned write each,
+    * sized by [[writeBatch]])
     * rather than one per file, while a cold backlog stays memory-bounded.
     * Spark always admits at least one file, so a file larger than the
     * budget runs alone instead of stalling the stream.
@@ -162,11 +176,31 @@ object MicroBatch {
         // Writing each batch into its own batch_id partition with overwrite
         // makes a replay rewrite the same path instead of appending
         // duplicates -> genuinely idempotent.
-        batch.write.mode("overwrite").partitionBy("ticker")
-          .parquet(s"$outDir/batch_id=$batchId")
-        ()
+        writeBatch(batch, s"$outDir/batch_id=$batchId", "ticker")
       }
       .start()
+  }
+
+  /** Write tasks for a batch of `sizeInBytes` (Catalyst's estimate):
+    * one per `advisory` bytes, clamped to [1, numPartitions]. An unknown
+    * size (`Long.MaxValue`, e.g. a Kafka source) keeps every partition.
+    */
+  private[graft] def writeTasks(sizeInBytes: BigInt, advisory: Long, numPartitions: Int): Int =
+    ((sizeInBytes + advisory - 1) / advisory).min(BigInt(numPartitions)).max(BigInt(1)).toInt
+
+  /** The one per-batch writer of the `foreachBatch` sinks: coalesces the
+    * batch to [[writeTasks]] tasks, then overwrites `path`, partitioned by
+    * `partitionCols`. `coalesce` is narrow, so the stage that runs the
+    * stateful operator writes the files: no exchange and no extra job.
+    */
+  private[streaming] def writeBatch(batch: Dataset[_], path: String,
+      partitionCols: String*): Unit = {
+    val qe = batch.queryExecution
+    val parts = qe.toRdd.getNumPartitions
+    val n = writeTasks(qe.optimizedPlan.stats.sizeInBytes,
+      qe.sparkSession.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES), parts)
+    val sized = if (n < parts) batch.coalesce(n) else batch
+    sized.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
   }
 
   /** Event-time tumbling count with watermark (the streaming analogue of
@@ -290,7 +324,9 @@ object MicroBatch {
     * of a keyed parquet sink. foreachBatch is at-least-once; a replayed
     * batch OVERWRITES its own partition, making the sink idempotent —
     * the [[idempotentSink]]/funnelToKeyedSink recipe. Nothing reaches
-    * the driver.
+    * the driver. Without row counts Catalyst estimates a join as the
+    * product of its sides' sizes, so [[writeBatch]] sizes this sink's
+    * batches high: two ~27 KB event scans estimate ~84 MB, two tasks.
     */
   def joinToKeyedSink(joined: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -299,8 +335,7 @@ object MicroBatch {
       .trigger(trigger)
       .foreachBatch {
         (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-          ()
+          writeBatch(batch, s"$outDir/batch_id=$batchId")
       }
       .start()
 

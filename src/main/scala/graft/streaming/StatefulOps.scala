@@ -126,7 +126,8 @@ object StatefulOps {
     * parquet sink instead: [[funnelStages]] already emits AT MOST ONE
     * update per user per batch (the state machine folds the batch before
     * emitting), so the batch writes as-is — no per-batch aggregation —
-    * into its own `batch_id` partition. foreachBatch is at-least-once,
+    * into its own `batch_id` partition, in as many tasks as
+    * [[MicroBatch.writeBatch]] sizes it for. foreachBatch is at-least-once,
     * and a replayed batch overwriting its own path makes the sink
     * idempotent (same recipe as [[MicroBatch.idempotentSink]]). Nothing
     * ever reaches the driver; cross-batch resolution happens read-side
@@ -139,8 +140,7 @@ object StatefulOps {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[FunnelUpdate], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
+        MicroBatch.writeBatch(batch, s"$outDir/batch_id=$batchId")
       }
       .start()
 

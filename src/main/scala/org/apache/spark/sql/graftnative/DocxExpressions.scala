@@ -90,13 +90,13 @@ object DocxText {
                 val cp = Integer.parseInt(name.substring(2), 16)
                 if (Character.isValidCodePoint(cp))
                   new String(Character.toChars(cp)) else null
-              } catch { case _: Exception => null }
+              } catch { case _: NumberFormatException => null }
             case _ if name.startsWith("#") =>
               try {
                 val cp = Integer.parseInt(name.substring(1))
                 if (Character.isValidCodePoint(cp))
                   new String(Character.toChars(cp)) else null
-              } catch { case _: Exception => null }
+              } catch { case _: NumberFormatException => null }
             case _ => null
           }
           if (decoded != null) { out.append(decoded); i = semi + 1 }

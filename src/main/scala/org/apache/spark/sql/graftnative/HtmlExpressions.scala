@@ -135,10 +135,10 @@ object HtmlTextExtract {
           val decoded: String =
             if (name.startsWith("#x") || name.startsWith("#X")) {
               try codePointStr(Integer.parseInt(name.substring(2), 16))
-              catch { case _: Exception => null }
+              catch { case _: NumberFormatException => null }
             } else if (name.startsWith("#")) {
               try codePointStr(Integer.parseInt(name.substring(1)))
-              catch { case _: Exception => null }
+              catch { case _: NumberFormatException => null }
             } else NamedEntities.get(name)
           if (decoded != null) { out.append(decoded); i = semi + 1 }
           else { out.append(c); i += 1 }

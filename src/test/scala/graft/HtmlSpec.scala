@@ -103,6 +103,17 @@ class HtmlSpec extends AnyFunSuite {
     assert(text("&dagger;&Dagger;&Nbsp;") == "†‡&Nbsp;")
   }
 
+  test("malformed numeric references pass through in the HTML and XML decoders") {
+    val decoders = Seq[(String, (String, StringBuilder) => Unit)](
+      "html" -> HtmlTextExtract.decodeEntitiesInto, "xml" -> DocxText.decodeXmlInto)
+    for ((name, decode) <- decoders) {
+      def d(s: String): String = { val b = new StringBuilder; decode(s, b); b.toString }
+      for (bad <- Seq("&#xZZ;", "&#;", "&#x;", "&#99999999999;"))
+        assert(d(s"a ${bad} b") == s"a ${bad} b", s"$name: $bad")
+      assert(d("&#x41;&#65;") == "AA", name)
+    }
+  }
+
   test("CDATA sections drop with contents") {
     assert(text("a<![CDATA[ raw <p> 1 > 0 ]]>b") == "ab")
     // torn CDATA: remainder drops

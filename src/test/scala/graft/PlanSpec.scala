@@ -1149,7 +1149,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import spark.implicits._
-    import graft.operators.Incremental
+    import graft.operators.{Checkpoints, Incremental}
     val dir = java.nio.file.Files.createTempDirectory("graft_plan_inc").toString
     def bars(days: Range) = (for (s <- Seq("A", "B"); i <- days) yield (s, i, 100.0 + i % 17))
       .toDF("symbol", "i", "close")
@@ -1161,8 +1161,8 @@ class PlanSpec extends SparkSpec {
     bars(250 until 251).write.parquet(s"$dir/landing")
     val raw = spark.read.parquet(s"$dir/raw")
     val order = Seq("trading_date")
-    Incremental.runIncremental(spark, raw, s"$dir/wm", s"$dir/out", Incremental.OverlapReload, order)
-      .unpersist()
+    Checkpoints.release(Incremental.runIncremental(spark, raw, s"$dir/wm", s"$dir/out",
+      Incremental.OverlapReload, order))
     // the two-relation input of a daily increment (history ∪ landed day)
     val input = raw.unionByName(spark.read.parquet(s"$dir/landing"))
     val state = Incremental.readState(spark, s"$dir/wm").micros

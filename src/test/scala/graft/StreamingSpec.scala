@@ -404,6 +404,11 @@ class StreamingSpec extends SparkSpec {
       val harness = Queries.all("stream_join").fn(spark, dir)
         .as[(Long, Long, Long, Long)].collect().toSeq
       assert(sinkRows.nonEmpty && sinkRows == harness)
+      // Without row counts Catalyst sizes a join as the product of its
+      // sides (~84 MB for these two ~27 KB scans), so the data batch runs
+      // two write tasks of the four state partitions, not one
+      val files = filesPerBatch(out)
+      assert(files.nonEmpty && files.forall(n => n >= 1 && n <= 2), s"files per batch: $files")
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
@@ -436,6 +441,8 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, Long, Long, Long)].collect().toSeq
       assert(sinkStates.nonEmpty)
       assert(sinkStates == harness)
+      val files = filesPerBatch(out)
+      assert(files.nonEmpty && files.forall(_ == 1), s"files per batch: $files")
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
@@ -538,6 +545,18 @@ class StreamingSpec extends SparkSpec {
       Seq("AAPL", "TSLA"))
   }
 
+  /** Parquet data files directly under `dir`. */
+  private def parquetFiles(dir: java.io.File): Seq[String] =
+    Option(dir.listFiles()).toSeq.flatten.map(_.getName).filter(_.endsWith(".parquet"))
+
+  /** Subdirectories of `dir` named `<col>=<value>`. */
+  private def partitionDirs(dir: java.io.File, col: String): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.filter(f => f.isDirectory && f.getName.startsWith(s"$col="))
+
+  /** Parquet files in each `batch_id=` directory of an unpartitioned sink. */
+  private def filesPerBatch(out: java.io.File): Seq[Int] =
+    partitionDirs(out, "batch_id").map(parquetFiles(_).size)
+
   /** Writes one JSON-lines message file `name` into `dir`. */
   private def stageFile(dir: String, name: String, lines: Seq[String]): Unit = {
     Files.write(java.nio.file.Paths.get(dir, name), lines.mkString("", "\n", "\n").getBytes("UTF-8"))
@@ -637,6 +656,40 @@ class StreamingSpec extends SparkSpec {
     assert(parts(300L * 1024) == 2)
     assert(parts(2L * 1024 * 1024) == 8)
     assert(parts(1L << 40) == 8)
+  }
+
+  test("write tasks: one per advisory size of the batch estimate, within [1, numPartitions]") {
+    val advisory = 64L * 1024 * 1024
+    def tasks(bytes: BigInt): Int = MicroBatch.writeTasks(bytes, advisory, 8)
+    assert(tasks(0) == 1)
+    assert(tasks(1) == 1)
+    assert(tasks(advisory) == 1)
+    assert(tasks(advisory + 1) == 2)
+    assert(tasks(advisory * 8) == 8)
+    assert(tasks(advisory * 8 + 1) == 8)
+    // unknown statistics: defaultSizeInBytes, and the larger products a
+    // join's estimate reaches, keep every partition instead of overflowing
+    assert(tasks(BigInt(Long.MaxValue)) == 8)
+    assert(tasks(BigInt(Long.MaxValue) * Long.MaxValue) == 8)
+    for (parts <- 1 to 16; bytes <- Seq(BigInt(0), BigInt(advisory) * 3, BigInt(Long.MaxValue)))
+      assert((1 to parts).contains(MicroBatch.writeTasks(bytes, advisory, parts)), s"$parts parts, $bytes B")
+  }
+
+  test("a small drain writes one parquet file per ticker per micro-batch") {
+    val dir = Files.createTempDirectory("graft_files_src").toString
+    val out = Files.createTempDirectory("graft_files_out").toString + "/sink"
+    val ckpt = Files.createTempDirectory("graft_files_ckpt").toString
+    (1 to 4).foreach { d =>
+      val date = f"2024-01-$d%02d"
+      stageFile(dir, s"m$d.json", Seq("AAPL", "MSFT", "TSLA", "AAPL").map(msg(_, date, 10.0 + d)))
+    }
+    assert(drain(MicroBatch.fileSource(dir), out, ckpt) == ((1, 1)))
+    val batches = partitionDirs(new java.io.File(out), "batch_id")
+    assert(batches.map(_.getName) == Seq("batch_id=0"))
+    val tickers = partitionDirs(batches.head, "ticker")
+    assert(tickers.map(_.getName).sorted == Seq("ticker=AAPL", "ticker=MSFT", "ticker=TSLA"))
+    tickers.foreach(t => assert(parquetFiles(t).size == 1, s"${t.getName}: ${parquetFiles(t)}"))
+    assert(esIds(out).size == 12)
   }
 
   test("S10 csv symbols source with fallback") {
