@@ -68,21 +68,6 @@ object ArtifactMemo {
       path
     }
 
-  /** Build-once PARTITIONED parquet artifact — the serving-store layout:
-    * readers that filter on the partition columns scan only the matching
-    * directories (partition pruning), so a probe query touches its cells'
-    * files and nothing else.
-    */
-  def parquetPartitioned(key: String, name: String, partitionCols: Seq[String])
-      (build: => DataFrame): String =
-    cached[String](s"$key#$name#${partitionCols.mkString(",")}") {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_${name}_").toFile
-      tmp.deleteOnExit()
-      val path = new java.io.File(tmp, name).getPath
-      build.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-      path
-    }
-
   /** DURABLE build-once parquet artifact — the cross-process serving
     * store: the location is a STABLE function of (name, key-digest)
     * under `<warehouse>/graft_artifacts/`, so a fresh JVM over the same

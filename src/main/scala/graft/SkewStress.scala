@@ -75,12 +75,9 @@ object SkewStress {
         () => Indicators.withIndicators(hot, w),
         () => Indicators.chunkedIndicators(hot, monthChunk),
         indicatorSum),
-      // materialize=false: the persist knob was MEASURED COUNTERPRODUCTIVE
-      // here (ema chunked 12→17 s, rsi 27→34 s) — building the in-memory
-      // columnar cache of the wide state frame costs more than re-running
-      // the scan+shuffle+window diamond when shuffle is local-RAM-speed.
-      // The knob exists for clusters where recompute means re-reading
-      // remote storage; locally recompute wins.
+      // the chunked paths recompute their scan+window diamond: persisting
+      // the state frame measured slower on this lane (ema chunked
+      // 12→17 s, rsi 27→34 s)
       ("ema_true",
         () => hot.withColumn("ema", Indicators.trueEmaExact(col("close"), 12, w)),
         () => Indicators.chunkedTrueEma(hot, 12, monthChunk, out = "ema"),

@@ -105,6 +105,25 @@ object Smoke {
     println(s"[smoke] incremental held RDDs before=$heldBefore after=$held")
     assert(held == heldBefore, s"incremental left ${held - heldBefore} checkpoint(s) held")
 
+    // the iterative graph operators keep their rounds as checkpoints too:
+    // releasing the result must leave none of its rounds held
+    val sc = spark.sparkContext
+    val graphBefore = sc.getPersistentRDDs.keySet
+    import spark.implicits._
+    val tinyEdges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
+      .toDF("src", "dst")
+    val cc = operators.ScaleOps.connectedComponents(tinyEdges)
+    val (pr, prRounds) = operators.ScaleOps.pageRankConverge(
+      Seq(1L, 2L, 3L, 4L, 5L, 10L, 11L).toDF("node"), tinyEdges, tol = 1000000L)
+    val ccRows = cc.count()
+    println(s"[smoke] graph cc_rows=$ccRows pr_rows=${pr.count()} pr_rounds=$prRounds")
+    assert(ccRows == 5, "connectedComponents lost a component member")
+    operators.Checkpoints.release(cc)
+    operators.Checkpoints.release(pr)
+    val graphAdded = sc.getPersistentRDDs.keySet -- graphBefore
+    println(s"[smoke] graph held RDDs before=${graphBefore.size} added=${graphAdded.size}")
+    assert(graphAdded.isEmpty, s"graph operators left ${graphAdded.size} checkpoint(s) held")
+
     // ML parity end-to-end on real testdata: indicators -> future target ->
     // train -> registry -> predict latest
     val mlDir = java.nio.file.Files.createTempDirectory("graft_smoke_ml").toString

@@ -384,24 +384,24 @@ object Indicators {
     * gaps cannot break — dropping the dense_rank removes one distinct
     * aggregation plus one broadcast join from EVERY re-execution of the
     * lineage (the chunk-summary branch re-runs it).
-    *
-    * `materialize = true` persists the per-row state frame
-    * (MEMORY_AND_DISK) so the chunk-summary branch reads it back instead
-    * of re-executing the scan+window diamond. A knob, not a default:
-    * measured on local[16] the cache build COSTS more than the recompute
-    * (local shuffle is RAM-speed), but on a cluster where recompute
-    * means re-reading remote storage through a full sort, persisting the
-    * narrower state frame wins. The caller owns the session's storage
-    * lifecycle (blocks evict LRU).
     */
   def chunkedTrueEma(df: DataFrame, n: Int, chunkExpr: Column,
       orderCols: Seq[String] = Seq("trading_date", "l_orderkey", "l_linenumber",
         "l_partkey", "l_suppkey", "close", "volume", "open", "low"),
-      valueCol: String = "close", out: String = "ema_chunked",
-      materialize: Boolean = false): DataFrame =
+      valueCol: String = "close", out: String = "ema_chunked"): DataFrame =
     chunkedEmaAlpha(df.withColumn("chunk_id", chunkExpr), 2.0 / (n + 1),
-      orderCols, Seq(valueCol -> out), materialize)
+      orderCols, Seq(valueCol -> out))
       .drop("chunk_id")
+
+  /** Incoming affine state of a chunk: folds the end states of its PRIOR
+    * chunks (in chunk order) left to right, seeded by the first one. NaN
+    * for a symbol's first chunk, which has no prior state.
+    */
+  private def foldPrev(prevs: Column): Column =
+    when(size(prevs) === 0, lit(Double.NaN)).otherwise(
+      aggregate(prevs, lit(Double.NaN),
+        (acc, s) => when(isnan(acc), s.getField("cSeeded"))
+          .otherwise(s.getField("c") + s.getField("m") * acc)))
 
   /** Alpha-parametrized core of [[chunkedTrueEma]], operating on an
     * already-indexed frame (must carry a `chunk_id` column whose values
@@ -412,8 +412,7 @@ object Indicators {
     * halve their heavy stages this way.
     */
   private def chunkedEmaAlpha(indexed: DataFrame, alpha: Double,
-      orderCols: Seq[String], cols: Seq[(String, String)],
-      materialize: Boolean = false): DataFrame = {
+      orderCols: Seq[String], cols: Seq[(String, String)]): DataFrame = {
     def stateAgg(c: Column) =
       org.apache.spark.sql.graftnative.EmaFunctions.ema_state(c, alpha)
     def st(i: Int) = s"_st_$i"
@@ -421,57 +420,33 @@ object Indicators {
     // all recurrences over the SAME window spec → one WindowExec pass
     val cw = Window.partitionBy("symbol", "chunk_id").orderBy(orderCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val withState0 = cols.zipWithIndex.foldLeft(indexed) {
+    val withState = cols.zipWithIndex.foldLeft(indexed) {
       case (d, ((valueCol, _), i)) =>
         d.withColumn(st(i), stateAgg(col(valueCol)).over(cw))
     }
-    // the state frame feeds BOTH the chunk-summary aggregation and the
-    // final join: without materialization Spark re-executes the
-    // scan+sort+window branch for the summaries (exchange reuse does not
-    // survive the join's attribute aliasing — measured round 1);
-    // persisting trades executor storage for the second pass
-    val withState = if (materialize)
-      withState0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else withState0
 
-    // chunk summaries: the last row's states per (symbol, chunk). On the
-    // default (recompute) path they come from a NARROW projection — chunk
-    // key + order + value columns only — with its own state window, and
-    // the last row is picked by a `lead(1) IS NULL` marker inside that
-    // SAME window pass: zero extra sort, zero aggregation. (The previous
-    // argmax formulation — max(struct(orderCols ++ states)) — compared a
-    // 9-field struct interpreted per row and measured ~2× the cost of
-    // the sort it was avoiding.) The materialize path keeps an argmax
-    // over the persisted frame instead: a cached scan has no window to
-    // ride and no order guarantee to reuse.
-    val stCols = cols.indices.map(i => col(st(i)))
+    // chunk summaries: the last row's states per (symbol, chunk), from a
+    // NARROW projection — chunk key + order + value columns only — with
+    // its own state window, and the last row is picked by a
+    // `lead(1) IS NULL` marker inside that SAME window pass: zero extra
+    // sort, zero aggregation. (The previous argmax formulation —
+    // max(struct(orderCols ++ states)) — compared a 9-field struct
+    // interpreted per row and measured ~2× the cost of the sort it was
+    // avoiding.)
     val cwPlain = Window.partitionBy("symbol", "chunk_id").orderBy(orderCols.map(col): _*)
-    val summaries =
-      if (materialize)
-        withState.groupBy(col("symbol"), col("chunk_id"))
-          .agg(max(struct(orderCols.map(col) ++ stCols: _*)).as("_m"))
-          .select(Seq(col("symbol"), col("chunk_id")) ++
-            cols.indices.map(i => col(s"_m.${st(i)}").as(s"_end_$i")): _*)
-      else {
-        val narrowCols = (Seq("symbol", "chunk_id") ++ orderCols ++ cols.map(_._1)).distinct
-        cols.zipWithIndex.foldLeft(indexed.select(narrowCols.map(col): _*)) {
-          case (d, ((valueCol, _), i)) =>
-            d.withColumn(st(i), stateAgg(col(valueCol)).over(cw))
-        }
-          .withColumn("_is_last", lead(lit(1), 1).over(cwPlain).isNull)
-          .filter(col("_is_last"))
-          .select(Seq(col("symbol"), col("chunk_id")) ++
-            cols.indices.map(i => col(st(i)).as(s"_end_$i")): _*)
-      }
+    val narrowCols = (Seq("symbol", "chunk_id") ++ orderCols ++ cols.map(_._1)).distinct
+    val summaries = cols.zipWithIndex.foldLeft(indexed.select(narrowCols.map(col): _*)) {
+      case (d, ((valueCol, _), i)) =>
+        d.withColumn(st(i), stateAgg(col(valueCol)).over(cw))
+    }
+      .withColumn("_is_last", lead(lit(1), 1).over(cwPlain).isNull)
+      .filter(col("_is_last"))
+      .select(Seq(col("symbol"), col("chunk_id")) ++
+        cols.indices.map(i => col(st(i)).as(s"_end_$i")): _*)
     // incoming state per chunk: fold PRIOR chunk summaries in order (the
     // collect_list frame is the per-symbol chunk count — tiny)
     val prevW = Window.partitionBy("symbol").orderBy("chunk_id")
       .rowsBetween(Window.unboundedPreceding, -1)
-    def foldPrev(prevs: Column): Column =
-      when(size(prevs) === 0, lit(Double.NaN)).otherwise(
-        aggregate(prevs, lit(Double.NaN),
-          (acc, s) => when(isnan(acc), s.getField("cSeeded"))
-            .otherwise(s.getField("c") + s.getField("m") * acc)))
     val incoming = cols.indices.foldLeft(summaries) { (d, i) =>
       d.withColumn(s"_s_prev_$i", foldPrev(collect_list(col(s"_end_$i")).over(prevW)))
     }.select(Seq(col("symbol"), col("chunk_id")) ++
@@ -526,22 +501,14 @@ object Indicators {
     * First-chunk values are bit-identical to the plain path; later
     * chunks differ only by affine-composition association, O(ulp).
     * Agreement with the plain-window path is pinned by ChunkedSpec.
-    *
-    * `materialize = true` persists the narrow indexed frame so pass A
-    * and pass B share one scan (same local-vs-cluster trade-off as
-    * [[chunkedTrueEma]]'s knob).
     */
   def chunkedWilderRsi(df: DataFrame, chunkExpr: Column,
       orderCols: Seq[String] = Seq("trading_date", "l_orderkey", "l_linenumber",
         "l_partkey", "l_suppkey", "close", "volume", "open", "low"),
-      n: Int = 14, out: String = "rsi_wilder_chunked",
-      materialize: Boolean = false): DataFrame = {
+      n: Int = 14, out: String = "rsi_wilder_chunked"): DataFrame = {
     val alpha = 1.0 / n
     val beta = 1.0 - alpha
-    val indexed0 = df.withColumn("chunk_id", chunkExpr)
-    val indexed = if (materialize)
-      indexed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else indexed0
+    val indexed = df.withColumn("chunk_id", chunkExpr)
     val cwPlain = Window.partitionBy("symbol", "chunk_id").orderBy(orderCols.map(col): _*)
     val cwf = cwPlain.rowsBetween(Window.unboundedPreceding, 0)
     def gainOf(chg: Column) = when(chg > 0, chg).otherwise(lit(0.0))
@@ -591,11 +558,6 @@ object Indicators {
     // incoming state per chunk: fold PRIOR chunk end states in order
     // (collect_list frame = the per-symbol chunk count — tiny)
     val prevW = symW.rowsBetween(Window.unboundedPreceding, -1)
-    def foldPrev(prevs: Column): Column =
-      when(size(prevs) === 0, lit(Double.NaN)).otherwise(
-        aggregate(prevs, lit(Double.NaN),
-          (acc, s) => when(isnan(acc), s.getField("cSeeded"))
-            .otherwise(s.getField("c") + s.getField("m") * acc)))
     val incoming = ends
       .withColumn("_sp_g", foldPrev(collect_list(col("_end_g")).over(prevW)))
       .withColumn("_sp_l", foldPrev(collect_list(col("_end_l")).over(prevW)))

@@ -315,17 +315,18 @@ object ScaleOps {
       } else
         connectedComponents(edges, "src", "dst")
           .select(col("node").as("rep0"), col("rep").as("crep"))
-    // materialize the (small) result and RELEASE byHash: the output is
-    // one row per non-representative frame — the member explode is its
-    // last reader, so a long-lived session must not keep accumulating
-    // MEMORY_AND_DISK blocks per invocation (guide §5: unpersist when
-    // done)
+    // materialize the (small) result and RELEASE byHash and the
+    // components' final round: the output is one row per
+    // non-representative frame — the member explode is their last
+    // reader, so a long-lived session must not keep accumulating blocks
+    // per invocation (guide §5: unpersist when done)
     val out = byHash.select(col("rep0"), explode(col("ps")).as("pid"))
       .join(comp, Seq("rep0"), "left")
       .select(col("pid"), coalesce(col("crep"), col("rep0")).as("rep"))
       .filter(col("pid") =!= col("rep"))
       .localCheckpoint(true)
     byHash.unpersist()
+    Checkpoints.release(comp)
     out
   }
 
@@ -1744,56 +1745,90 @@ object ScaleOps {
     * plan would otherwise re-execute every prior round — and the
     * upstream candidate-generation pipeline — per action).
     *
-    * Checkpoint durability is the local-vs-cluster fork: the default
-    * `localCheckpoint(true)` stores blocks on executors — fine in
-    * local mode, but on a real cluster one executor loss mid-iteration
-    * severs the (deliberately truncated) lineage and kills the job.
-    * Passing `checkpointDir` round-trips each round's edge frame
-    * through parquet instead — the 100 TB form: any executor can die
-    * and the next round re-reads from durable storage. Each call writes
-    * under its own `$checkpointDir/cc_run_<uuid>/cc_round_$i` namespace
-    * (concurrent or repeated calls sharing one dir never clobber each
-    * other), and a round's directory is deleted as soon as the next is
-    * materialized, so peak footprint is two (shrinking) edge snapshots.
-    * NOTE the returned DataFrame stays backed by the run's FINAL round
-    * directory — it remains readable lazily, and the caller owns
-    * deleting the `cc_run_*` directory once done with the result. Use
-    * [[connectedComponentsDurable]] to get that directory back as a
-    * first-class handle (with [[releaseCcRun]] to honor the obligation
-    * in one call) instead of recovering it by listing the parent.
+    * Rounds are kept by [[Checkpoints.Rounds]]. Without `runDir` each
+    * round is a local checkpoint: fine in local mode, but on a real
+    * cluster one executor loss mid-iteration severs the (deliberately
+    * truncated) lineage and kills the job. With `runDir` each round's
+    * edge frame is written as parquet to `runDir/cc_round_<i>` instead —
+    * the 100 TB form: any executor can die and the next round re-reads
+    * from durable storage. Either way round i−1 is dropped once round i
+    * is materialized, so peak footprint is two (shrinking) edge
+    * snapshots. `runDir` must be absent or empty (one run per
+    * directory), and the caller deletes it once done with the result.
+    *
+    * The returned frame is checkpointed: it reads the final round. Release
+    * it with [[Checkpoints.release]] once no frame over it is needed.
     */
   def connectedComponents(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", maxIter: Int = 25,
-      checkpointDir: Option[String] = None): DataFrame =
-    ccRun(edges, srcCol, dstCol, maxIter, checkpointDir.map(newRunDir))._1
+      runDir: Option[String] = None): DataFrame = {
+    // Per-round materialization + lineage cut. A LAZY keep: the checksum
+    // probe that follows every round is a full-scan aggregate, so it
+    // materializes the round in the SAME job; the former eager form paid
+    // one extra job per round (materialize, then fingerprint the
+    // already-materialized blocks) — half the rounds' driver floor for
+    // free (guide §1.2: remove passes outright). The durable form's
+    // parquet write is an action of its own.
+    val rounds = new Checkpoints.Rounds(edges.sparkSession, runDir)
+    def canonical(e: DataFrame): DataFrame =
+      e.select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct()
 
-  /** Durable [[connectedComponents]] that RETURNS the `cc_run_*`
-    * namespace backing the result, closing the cleanup loop the
-    * Option-arg form leaves implicit: call [[releaseCcRun]] on the
-    * returned path once the result is consumed (or persisted elsewhere),
-    * and no orphan run directories accumulate under a long-lived shared
-    * checkpoint dir.
-    */
-  def connectedComponentsDurable(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", maxIter: Int = 25, checkpointDir: String)
-      : (DataFrame, String) = {
-    val (df, run) = ccRun(edges, srcCol, dstCol, maxIter,
-      Some(newRunDir(checkpointDir)))
-    (df, run.get)
+    // large-star: for each node u, every strictly-larger neighbor v is
+    // re-pointed at m = min(N(u) ∪ {u}); covers every edge because the
+    // adjacency view lists each edge under both endpoints.
+    def largeStar(e: DataFrame): DataFrame = {
+      val adj = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+      val mins = adj.groupBy("u")
+        .agg(min(col("v")).as("mn"))
+        .select(col("u"), least(col("u"), col("mn")).as("m"))
+      canonical(adj.join(mins, "u").filter(col("v") > col("u"))
+        .select(col("m").as("u"), col("v")))
+    }
+
+    // small-star: group edges by their LARGER endpoint u; every smaller
+    // neighbor (and u itself) is re-pointed at m = min of the group.
+    def smallStar(e: DataFrame): DataFrame = {
+      val dir = e // already canonical: u < v, so group by v
+      val mins = dir.groupBy("v").agg(min(col("u")).as("m"))
+      val selfEdges = mins.select(col("m").as("u"), col("v"))
+      val reEdges = dir.join(mins, "v").filter(col("u") =!= col("m"))
+        .select(col("m").as("u"), col("u").as("v"))
+      canonical(selfEdges.unionAll(reEdges))
+    }
+
+    // (count, xor-of-hashes): set-equality fingerprint that is order-
+    // independent and cannot overflow (sum would, and ANSI mode throws).
+    // Valid because the edge set is distinct; collision odds ~2^-64, and
+    // a false "converged" at worst stops one round early on a set the
+    // stars were still reshaping — caught by the result being non-star
+    // only with that same negligible probability.
+    def checksum(e: DataFrame): (Long, Long) = {
+      val r = e.agg(count(lit(1)),
+        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+
+    var (e, sum) = rounds.advance(canonical(
+      edges.select(col(srcCol).as("u"), col(dstCol).as("v"))), "cc_round_0",
+      eager = false)(checksum)
+    var it = 0
+    // the checksum's count doubles as the emptiness probe — no isEmpty job
+    var converged = sum._1 == 0L
+    while (!converged && it < maxIter) {
+      val (next, nextSum) = rounds.advance(smallStar(largeStar(e)),
+        s"cc_round_${it + 1}", eager = false)(checksum)
+      converged = nextSum == sum // star forest ⇔ both stars are no-ops
+      e = next
+      sum = nextSum
+      it += 1
+    }
+    if (!converged && it == maxIter)
+      throw new IllegalStateException(
+        s"connectedComponents: no convergence after $maxIter rounds")
+    rounds.finish(e.select(col("v").as("node"), col("u").as("rep")))
   }
-
-  /** Delete a [[connectedComponentsDurable]] run directory. The backing
-    * of that run's result frame goes with it — consume or persist the
-    * result first.
-    */
-  def releaseCcRun(spark: SparkSession, runDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(runDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  private def newRunDir(d: String): String =
-    s"$d/cc_run_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
   // ------------------------------------------------------------------
   // PageRank (fixed-point integer, bit-reproducible)
@@ -1835,28 +1870,30 @@ object ScaleOps {
     * collected to the driver, and each round's rank frame is eagerly
     * checkpointed to truncate lineage (else round k re-executes rounds
     * 1..k−1 — and the upstream candidate-generation pipeline — per
-    * action). `checkpointDir` round-trips rounds through parquet instead
-    * of executor-local blocks, the cluster-durable fork documented on
-    * [[connectedComponents]]; on a real cluster you would additionally
-    * bucket the edge list by `src` so the per-round join never reshuffles
-    * the (static) big side.
+    * action). With `runDir` every round, the node frame and the edge
+    * frame are written as parquet under `runDir` (`pr_round_<i>`,
+    * `pr_nodes`, `pr_edges`) instead of executor-local blocks — the
+    * cluster-durable form documented on [[connectedComponents]], with the
+    * same one-run-per-directory rule; on a real cluster you would
+    * additionally bucket the edge list by `src` so the per-round join
+    * never reshuffles the (static) big side.
     *
-    * Contract: without `checkpointDir` the returned frame is LAZY. The
-    * lineage is cut every `UnrollBatch` rounds but not after the last
-    * round, so the frame carries up to `UnrollBatch`−1 unrolled rounds,
-    * and every action on it re-executes them. A caller taking more than
-    * one action should checkpoint (or persist) it first. With
-    * `checkpointDir` the frame reads the last round's parquet back and
-    * carries no round lineage.
+    * Contract: without `runDir` the returned frame is LAZY. The lineage
+    * is cut every `UnrollBatch` rounds but not after the last round, so
+    * the frame carries up to `UnrollBatch`−1 unrolled rounds over the
+    * checkpointed node and edge frames, and every action on it
+    * re-executes them. A caller taking more than one action should
+    * checkpoint (or persist) it first, and releases the checkpoints under
+    * it with [[Checkpoints.release]]. With `runDir` the frame reads the
+    * last round's parquet back and carries no round lineage.
     */
   def pageRankFixedPoint(nodes: DataFrame, edges: DataFrame,
       nodeCol: String = "node", srcCol: String = "src",
       dstCol: String = "dst", iterations: Int = 5,
       scale: Long = 1000000000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      runDir: Option[String] = None): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    val spark = nodes.sparkSession
-    val runDir = checkpointDir.map(newRunDir)
+    val rounds = new Checkpoints.Rounds(nodes.sparkSession, runDir)
     // The rank chain is LINEAR — round k's frame is referenced exactly
     // once (by round k+1), so nothing re-executes if the rounds compose
     // into ONE plan. Materializing every round paid a per-round driver
@@ -1866,43 +1903,21 @@ object ScaleOps {
     // algorithm" / §2.4 remove passes outright). Rounds are now unrolled
     // and the lineage is cut only every `UnrollBatch` rounds to bound
     // Catalyst's plan-size growth for large iteration counts. The
-    // durable (runDir) branch keeps per-round parquet: there the
+    // durable (runDir) form keeps per-round parquet: there the
     // round-trip is the fault-tolerance contract, not an optimization.
-    def roundCheckpoint(df: DataFrame, round: Int): DataFrame = runDir match {
-      case Some(d) =>
-        val path = s"$d/pr_round_$round"
-        df.write.mode("overwrite").parquet(path)
-        val back = spark.read.parquet(path)
-        if (round > 0) {
-          val prev = new org.apache.hadoop.fs.Path(s"$d/pr_round_${round - 1}")
-          prev.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(prev, true)
-        }
-        back
-      case None =>
-        if (round > 0 && round < iterations && round % UnrollBatch == 0)
-          df.localCheckpoint(true)
-        else df // stays in the unrolled plan
-    }
-    def stored(df: DataFrame, name: String): DataFrame = runDir match {
-      case Some(d) =>
-        val path = s"$d/$name"
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
-      case None => df.localCheckpoint(true)
-    }
+    def cut(df: DataFrame, round: Int): DataFrame =
+      if (runDir.isEmpty &&
+          (round == 0 || round == iterations || round % UnrollBatch != 0))
+        df // stays in the unrolled plan
+      else rounds.advance(df, s"pr_round_$round", eager = true)(_ => ())._1
     // node frame materialized ONCE (it enters every round's aggregation;
     // without the cut each round would replay the upstream corpus scan).
     // Local mode: LAZY checkpoint — the count right below (needed for the
     // teleport constant anyway) materializes it in the SAME job instead
     // of a separate eager-checkpoint job.
-    val nodeIds = runDir match {
-      case Some(_) =>
-        stored(nodes.select(col(nodeCol).cast(LongType).as("node")), "pr_nodes")
-      case None =>
-        nodes.select(col(nodeCol).cast(LongType).as("node"))
-          .localCheckpoint(false)
-    }
+    val nodeIds = rounds.keep(
+      nodes.select(col(nodeCol).cast(LongType).as("node")), "pr_nodes",
+      eager = false)
     val n = nodeIds.count()
     require(n > 0, "pageRankFixedPoint: empty node set")
     val tele = (scale * 15L / 100L) / n
@@ -1910,10 +1925,10 @@ object ScaleOps {
     // join branches below would otherwise each re-execute the whole
     // upstream candidate→verify pipeline (ReuseExchange across the
     // branches is not guaranteed), doubling the most expensive stage
-    val e = stored(edges
+    val e = rounds.keep(edges
       .select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"))
-      .distinct(), "pr_dedup")
+      .distinct(), "pr_dedup", eager = true)
     // in durable mode these frames must survive executor loss too — every
     // round joins against them, so executor-local checkpoint blocks would
     // reintroduce exactly the failure mode the parquet round-trip exists
@@ -1929,9 +1944,9 @@ object ScaleOps {
     val contribAnnotated = e
       .join(e.groupBy("src").agg(count(lit(1)).as("deg"))
         .hint("shuffle_hash"), "src")
-    val contribEdges = stored(contribAnnotated, "pr_edges")
-    var ranks = roundCheckpoint(
-      nodeIds.withColumn("rank", lit(scale / n)), 0)
+    val contribEdges = rounds.keep(contribAnnotated, "pr_edges", eager = true)
+    rounds.drop("pr_dedup") // only the degree join read it
+    var ranks = cut(nodeIds.withColumn("rank", lit(scale / n)), 0)
     for (i <- 1 to iterations) {
       // teleport floor via union-zero instead of a left join back to
       // nodes: every node contributes one 0 row to the sum, so isolated
@@ -1942,17 +1957,14 @@ object ScaleOps {
         .join(ranks.withColumnRenamed("node", "src")
           .hint("shuffle_hash"), "src")
         .select(col("dst").as("node"), expr("rank div deg").as("contrib"))
-      ranks = roundCheckpoint(
+      ranks = cut(
         inflow.unionAll(nodeIds.select(col("node"), lit(0L).as("contrib")))
           .groupBy("node").agg(sum(col("contrib")).as("m"))
           .select(col("node"),
             (lit(tele) + expr("(m * 85) div 100")).as("rank")),
         i)
     }
-    // with checkpointDir, only the final round's parquet still backs
-    // `ranks`; the caller owns deleting the cc_run_* namespace once the
-    // result is consumed (same contract as connectedComponents)
-    ranks
+    rounds.finish(ranks)
   }
 
   /** Convergence-stopped PageRank with WARM-START support — the
@@ -1971,9 +1983,18 @@ object ScaleOps {
     * (newly arrived) start at the uniform rank; departed nodes in
     * `init` are dropped by the inner join onto the current node set.
     *
-    * Returns `(ranks, roundsUsed)`. The convergence probe joins the
-    * round's checkpointed frame against the previous one — O(n) per
-    * round, dwarfed by the O(|edges|) contribution join.
+    * Returns `(ranks, roundsUsed)`. The convergence probe is a
+    * scan-only ∞-norm aggregate over the round's frame (the previous rank
+    * rides the same rows) — O(n) per round, dwarfed by the O(|edges|)
+    * contribution join.
+    *
+    * With `runDir` the edge frame every round joins and the per-round
+    * rank frames are written as parquet under `runDir` (`pr_conv_*`), the
+    * durable form of [[connectedComponents]] with its one-run-per-directory
+    * rule; only the edges and the final round remain there, and the
+    * caller deletes the directory. Without it the returned frame is a
+    * local checkpoint of the final round: release it with
+    * [[Checkpoints.release]] once no frame over it is needed.
     */
   def pageRankConverge(nodes: DataFrame, edges: DataFrame,
       tol: Long, nodeCol: String = "node", srcCol: String = "src",
@@ -1983,29 +2004,14 @@ object ScaleOps {
       runDir: Option[String] = None): (DataFrame, Int) = {
     require(tol >= 1, s"tol must be >= 1 integer unit, got $tol")
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    // localCheckpoint blocks live in executor memory — a lost executor
-    // kills the warm run. With runDir, the edge frame every round joins
-    // and the per-round rank frames round-trip through parquet instead
-    // (the same escape hatch pageRankFixedPoint has); default stays
-    // executor-local for fixture scale.
-    def durable(df: DataFrame, name: String): DataFrame = runDir match {
-      case Some(d) =>
-        val path = s"$d/pr_conv_$name"
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      case None => df.localCheckpoint(true)
-    }
-    // node frame materialized once — it rides every round's aggregation.
+    val rounds = new Checkpoints.Rounds(nodes.sparkSession, runDir)
+    // node frame materialized once — it seeds the first rank frame.
     // Local mode: lazy checkpoint fused with the count the teleport
     // constant needs anyway (one job, not an upstream execution for the
     // count PLUS an eager-checkpoint job for the frame).
-    val nodeIds = runDir match {
-      case Some(_) =>
-        durable(nodes.select(col(nodeCol).cast(LongType).as("node")), "nodes")
-      case None =>
-        nodes.select(col(nodeCol).cast(LongType).as("node"))
-          .localCheckpoint(false)
-    }
+    val nodeIds = rounds.keep(
+      nodes.select(col(nodeCol).cast(LongType).as("node")), "pr_conv_nodes",
+      eager = false)
     val n = nodeIds.count()
     require(n > 0, "pageRankConverge: empty node set")
     val tele = (scale * 15L / 100L) / n
@@ -2013,25 +2019,27 @@ object ScaleOps {
     // distinct edges materialized BEFORE the degree self-join (one
     // execution of the upstream pipeline, not one per join branch) —
     // same rationale as pageRankFixedPoint
-    val e = durable(edges
+    val e = rounds.keep(edges
       .select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"))
-      .distinct(), "dedup")
-    val contribEdges = durable(e
+      .distinct(), "pr_conv_dedup", eager = true)
+    val contribEdges = rounds.keep(e
       .join(e.groupBy("src").agg(count(lit(1)).as("deg"))
         .hint("shuffle_hash"), "src"), // same broadcast-trap pin as pageRankFixedPoint
-      "edges")
-    var ranks = durable(init match {
+      "pr_conv_edges", eager = true)
+    rounds.drop("pr_conv_dedup") // only the degree join read it
+    var ranks = rounds.advance(init match {
       case Some(prev) =>
         nodeIds.join(prev.select(col("node").cast(LongType).as("node"),
             col("rank").cast(LongType).as("_init")), Seq("node"), "left")
           .select(col("node"),
             coalesce(col("_init"), lit(uniform)).as("rank"))
       case None => nodeIds.withColumn("rank", lit(uniform))
-    }, "ranks_0")
-    var rounds = 0
+    }, "pr_conv_ranks_0", eager = true)(_ => ())._1
+    rounds.drop("pr_conv_nodes") // the rounds read ranks, not nodes
+    var used = 0
     var converged = false
-    while (!converged && rounds < maxIterations) {
+    while (!converged && used < maxIterations) {
       // one aggregation per round: the teleport floor arrives as a
       // union-zero row per node (exact integers unchanged — see
       // pageRankFixedPoint), and the PREVIOUS rank rides the same rows
@@ -2050,105 +2058,17 @@ object ScaleOps {
         .select(col("node"),
           (lit(tele) + expr("(m * 85) div 100")).as("rank"),
           col("_prev"))
-      // local mode: LAZY checkpoint — the ∞-norm delta probe right below
-      // is a full-scan aggregate, so it materializes the round's frame in
-      // the SAME job (the eager form paid a separate materialization job
-      // per round); durable mode keeps the parquet round-trip
-      val next = runDir match {
-        case Some(_) => durable(nextPlan, s"ranks_${rounds + 1}")
-        case None => nextPlan.localCheckpoint(false)
-      }
-      rounds += 1
-      val delta = next
-        .agg(max(abs(col("rank") - col("_prev"))).as("d"))
-        .head().getLong(0)
+      // LAZY keep — the ∞-norm delta probe is a full-scan aggregate, so
+      // it materializes the round's frame in the SAME job (the eager form
+      // paid a separate materialization job per round)
+      val (next, delta) = rounds.advance(nextPlan,
+        s"pr_conv_ranks_${used + 1}", eager = false)(
+        _.agg(max(abs(col("rank") - col("_prev"))).as("d")).head().getLong(0))
+      used += 1
       ranks = next.select("node", "rank")
       converged = delta <= tol
     }
-    (ranks, rounds)
-  }
-
-  private def ccRun(edges: DataFrame, srcCol: String,
-      dstCol: String, maxIter: Int,
-      runDir: Option[String]): (DataFrame, Option[String]) = {
-    // Per-round materialization + lineage cut. Durable branch: a parquet
-    // write (an action). Local branch: a LAZY localCheckpoint — the
-    // checksum probe that immediately follows every round is a full-scan
-    // aggregate, so it materializes the checkpoint in the SAME job; the
-    // former eager form paid one extra job per round (materialize, then
-    // fingerprint the already-materialized blocks) — half the rounds'
-    // driver floor for free (guide §1.2: remove passes outright).
-    def checkpointRound(df: DataFrame, round: Int): DataFrame = runDir match {
-      case Some(d) =>
-        val path = s"$d/cc_round_$round"
-        df.write.mode("overwrite").parquet(path)
-        val back = df.sparkSession.read.parquet(path)
-        if (round > 0) { // previous round is no longer referenced
-          val prev = new org.apache.hadoop.fs.Path(s"$d/cc_round_${round - 1}")
-          prev.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(prev, true)
-        }
-        back
-      case None => df.localCheckpoint(false)
-    }
-    def canonical(e: DataFrame): DataFrame =
-      e.select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-
-    // large-star: for each node u, every strictly-larger neighbor v is
-    // re-pointed at m = min(N(u) ∪ {u}); covers every edge because the
-    // adjacency view lists each edge under both endpoints.
-    def largeStar(e: DataFrame): DataFrame = {
-      val adj = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = adj.groupBy("u")
-        .agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      canonical(adj.join(mins, "u").filter(col("v") > col("u"))
-        .select(col("m").as("u"), col("v")))
-    }
-
-    // small-star: group edges by their LARGER endpoint u; every smaller
-    // neighbor (and u itself) is re-pointed at m = min of the group.
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e // already canonical: u < v, so group by v
-      val mins = dir.groupBy("v").agg(min(col("u")).as("m"))
-      val selfEdges = mins.select(col("m").as("u"), col("v"))
-      val reEdges = dir.join(mins, "v").filter(col("u") =!= col("m"))
-        .select(col("m").as("u"), col("u").as("v"))
-      canonical(selfEdges.unionAll(reEdges))
-    }
-
-    // (count, xor-of-hashes): set-equality fingerprint that is order-
-    // independent and cannot overflow (sum would, and ANSI mode throws).
-    // Valid because the edge set is distinct; collision odds ~2^-64, and
-    // a false "converged" at worst stops one round early on a set the
-    // stars were still reshaping — caught by the result being non-star
-    // only with that same negligible probability.
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    var e = checkpointRound(canonical(
-      edges.select(col(srcCol).as("u"), col(dstCol).as("v"))), 0)
-    var sum = checksum(e)
-    var it = 0
-    // the checksum's count doubles as the emptiness probe — no isEmpty job
-    var converged = sum._1 == 0L
-    while (!converged && it < maxIter) {
-      val next = checkpointRound(smallStar(largeStar(e)), it + 1)
-      val nextSum = checksum(next)
-      converged = nextSum == sum // star forest ⇔ both stars are no-ops
-      e = next
-      sum = nextSum
-      it += 1
-    }
-    if (!converged && it == maxIter)
-      throw new IllegalStateException(
-        s"connectedComponents: no convergence after $maxIter rounds")
-    (e.select(col("v").as("node"), col("u").as("rep")), runDir)
+    (rounds.finish(ranks), used)
   }
 
   /** Exact global triangle count over an undirected edge list, returned
@@ -2224,28 +2144,6 @@ object ScaleOps {
       .crossJoin(closed.agg(count(lit(1)).as("n_triangles")))
   }
 
-  /** Label-propagation community detection (Raghavan et al. 2007), the
-    * DETERMINISTIC synchronous variant: every node starts with its own id
-    * as label; each round every node adopts the label most frequent among
-    * its NEIGHBORS (ties broken by smallest label; a node's own label
-    * does not vote). Classic LPA breaks ties randomly — that variant is
-    * neither reproducible at 100 TB (retries would flip communities) nor
-    * oracle-able; the min-label tie-break makes each round a pure
-    * function of the previous one, so a DuckDB oracle can replay the
-    * unrolled rounds and even the community assignment hash-matches.
-    * Runs a FIXED `iterations` rounds (bounded work by construction;
-    * LPA's natural stopping rule — no label changed — is the
-    * [[connectedComponents]]-style convergence loop at scale).
-    *
-    * 100 TB shape (the iterative-join discipline shared with
-    * [[pageRankFixedPoint]]): the undirected adjacency list materializes
-    * once; each round is one equi-join of edges against the (node,
-    * label) frame, one (node, label) count aggregate with map-side
-    * combine, and one argmax aggregate — `max(struct(cnt, -label))`
-    * instead of a row_number window, so the per-round shuffle stays
-    * O(|edges|) partial-aggregated with no sort. Rounds are eagerly
-    * checkpointed to truncate lineage.
-    */
   /** Deduped undirected adjacency for the LPA variants, with the
     * nonnegative-id precondition the min-label tie-break depends on
     * ENFORCED (the argmax negates the label, which orders correctly only
@@ -2253,18 +2151,14 @@ object ScaleOps {
     * than one cheap extra aggregate on a frame this walk scans anyway).
     */
   private def lpaAdjacency(edges: DataFrame, srcCol: String,
-      dstCol: String,
-      // default is a LAZY checkpoint: the nonnegative-id probe right
-      // below is a full-scan aggregate and materializes it in the same
-      // job (the durable caller passes its parquet-writing store)
-      store: DataFrame => DataFrame = _.localCheckpoint(false)): DataFrame = {
-    val und = store(edges
+      dstCol: String, rounds: Checkpoints.Rounds, eager: Boolean): DataFrame = {
+    val und = rounds.keep(edges
       .select(col(srcCol).cast(LongType).as("a"),
         col(dstCol).cast(LongType).as("b"))
       .unionAll(edges.select(col(dstCol).cast(LongType).as("a"),
         col(srcCol).cast(LongType).as("b")))
       .filter(col("a") =!= col("b"))
-      .distinct())
+      .distinct(), "lpa_adj", eager)
     val minId = und.agg(min(col("a"))).head()
     require(minId.isNullAt(0) || minId.getLong(0) >= 0,
       s"labelPropagation requires nonnegative node ids (min-label " +
@@ -2289,8 +2183,7 @@ object ScaleOps {
     * domain); a new caller with isolated nodes must densify first.
     * Pinned by the ScaleOpsSpec isolated-node test.
     */
-  private[graft] def lpaRound(und: DataFrame, labels: DataFrame,
-      store: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+  private[graft] def lpaRound(und: DataFrame, labels: DataFrame): DataFrame = {
     val neigh = und
       .join(labels.select(col("node").as("b"), col("label"))
         .hint("shuffle_hash"), "b") // per-node frame: broadcast-trap pin
@@ -2301,27 +2194,57 @@ object ScaleOps {
     // neighbor, so `best` covers the full label domain — the former
     // left-join-back to `labels` was a per-round join whose coalesce
     // never fired; the argmax IS the next label frame
-    store(neigh
+    neigh
       .groupBy("node")
       .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("m"))
-      .select(col("node"), (-col("m.neg")).as("label")))
+      .select(col("node"), (-col("m.neg")).as("label"))
   }
 
+  /** Label-propagation community detection (Raghavan et al. 2007), the
+    * DETERMINISTIC synchronous variant: every node starts with its own id
+    * as label; each round every node adopts the label most frequent among
+    * its NEIGHBORS (ties broken by smallest label; a node's own label
+    * does not vote). Classic LPA breaks ties randomly — that variant is
+    * neither reproducible at 100 TB (retries would flip communities) nor
+    * oracle-able; the min-label tie-break makes each round a pure
+    * function of the previous one, so a DuckDB oracle can replay the
+    * unrolled rounds and even the community assignment hash-matches.
+    * Runs a FIXED `iterations` rounds (bounded work by construction;
+    * LPA's natural stopping rule — no label changed — is the
+    * [[connectedComponents]]-style convergence loop at scale).
+    *
+    * 100 TB shape (the iterative-join discipline shared with
+    * [[pageRankFixedPoint]]): the undirected adjacency list materializes
+    * once; each round is one equi-join of edges against the (node,
+    * label) frame, one (node, label) count aggregate with map-side
+    * combine, and one argmax aggregate — `max(struct(cnt, -label))`
+    * instead of a row_number window, so the per-round shuffle stays
+    * O(|edges|) partial-aggregated with no sort. The rounds unroll into
+    * one plan, cut by an eager checkpoint every `UnrollBatch` rounds.
+    *
+    * The returned frame is LAZY over the checkpointed adjacency (and the
+    * last cut round): release them with [[Checkpoints.release]] once no
+    * frame over it is needed.
+    */
   def labelPropagation(edges: DataFrame, iterations: Int,
       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    val und = lpaAdjacency(edges, srcCol, dstCol)
+    val rounds = new Checkpoints.Rounds(edges.sparkSession, None)
+    // LAZY: the nonnegative-id probe is a full-scan aggregate and
+    // materializes the adjacency in the same job
+    val und = lpaAdjacency(edges, srcCol, dstCol, rounds, eager = false)
     val nodes = und.select(col("a").as("node")).distinct()
     // label chain is LINEAR (each round's frame feeds only the next), so
     // the fixed rounds unroll into one plan — same rationale and batch
     // bound as pageRankFixedPoint; `und` stays materialized because every
     // round joins it
     var labels = nodes.withColumn("label", col("node"))
-    for (i <- 1 to iterations)
-      labels = lpaRound(und, labels,
-        if (i < iterations && i % UnrollBatch == 0) _.localCheckpoint(true)
-        else identity[DataFrame])
-    labels
+    for (i <- 1 to iterations) {
+      labels = lpaRound(und, labels)
+      if (i < iterations && i % UnrollBatch == 0)
+        labels = rounds.advance(labels, s"lpa_labels_$i", eager = true)(_ => ())._1
+    }
+    rounds.finish(labels)
   }
 
   /** LPA with the natural stopping rule — iterate until NO label changed
@@ -2337,49 +2260,38 @@ object ScaleOps {
     * classic oscillation); the loop detects a zero-progress round pair
     * via the changed-count repeating and bails at `maxIterations` in
     * that case rather than hanging.
+    *
+    * With `runDir` the adjacency and the per-round label frames are
+    * written as parquet under `runDir` (`lpa_adj`, `lpa_labels_<i>`), the
+    * durable form of [[connectedComponents]] with its one-run-per-directory
+    * rule; only the adjacency and the final round remain there, and the
+    * caller deletes the directory. Without it the returned frame is a
+    * local checkpoint of the final round: release it with
+    * [[Checkpoints.release]] once no frame over it is needed.
     */
   def labelPropagationConverged(edges: DataFrame, maxIterations: Int = 40,
       srcCol: String = "src", dstCol: String = "dst",
       runDir: Option[String] = None): (DataFrame, Int) = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    // Same executor-loss escape hatch as pageRankConverge / ssspRun: with
-    // runDir the adjacency list and the per-round label frames round-trip
-    // through parquet (dropping the two-rounds-back frame — the previous
-    // round is still read by the convergence probe); default stays
-    // localCheckpoint for fixture scale.
-    def durable(name: String, dropPrev: Option[String])(df: DataFrame)
-        : DataFrame = runDir match {
-      case Some(d) =>
-        val path = s"$d/lpa_$name"
-        df.write.mode("overwrite").parquet(path)
-        val back = df.sparkSession.read.parquet(path)
-        dropPrev.foreach { p =>
-          val prev = new org.apache.hadoop.fs.Path(s"$d/lpa_$p")
-          prev.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(prev, true)
-        }
-        back
-      case None => df.localCheckpoint(true)
-    }
-    val und = lpaAdjacency(edges, srcCol, dstCol, durable("adj", None)(_))
+    val rounds = new Checkpoints.Rounds(edges.sparkSession, runDir)
+    val und = lpaAdjacency(edges, srcCol, dstCol, rounds, eager = true)
     val nodes = und.select(col("a").as("node")).distinct()
-    var labels = durable("labels_0", None)(
-      nodes.withColumn("label", col("node")))
-    var rounds = 0
+    var labels = rounds.advance(nodes.withColumn("label", col("node")),
+      "lpa_labels_0", eager = true)(_ => ())._1
+    var used = 0
     var converged = false
-    while (!converged && rounds < maxIterations) {
-      val next = lpaRound(und, labels,
-        durable(s"labels_${rounds + 1}",
-          if (rounds >= 1) Some(s"labels_${rounds - 1}") else None)(_))
-      rounds += 1
-      val changed = next
-        .join(labels.select(col("node"), col("label").as("_prev")), "node")
-        .filter(col("label") =!= col("_prev"))
-        .count()
+    while (!converged && used < maxIterations) {
+      // the changed-label probe reads the previous round, so that round
+      // is dropped only after it
+      val prev = labels.select(col("node"), col("label").as("_prev"))
+      val (next, changed) = rounds.advance(lpaRound(und, labels),
+        s"lpa_labels_${used + 1}", eager = true)(
+        _.join(prev, "node").filter(col("label") =!= col("_prev")).count())
+      used += 1
       labels = next
       converged = changed == 0
     }
-    (labels, rounds)
+    (rounds.finish(labels), used)
   }
 
   /** Single-source (or multi-source) WEIGHTED shortest paths to a bounded
@@ -2399,11 +2311,19 @@ object ScaleOps {
     * frontier, which is also what makes the bounded form oracle-able as
     * a depth-capped recursive SQL walk. Per-round state joins are
     * `shuffle_hash`-pinned (the compact per-node frame broadcast trap,
-    * see [[pageRankFixedPoint]]); rounds eagerly checkpoint to truncate
+    * see [[pageRankFixedPoint]]); each round is checkpointed to truncate
     * lineage. At 100 TB the per-round shuffle is bounded by the
     * frontier's edge neighborhood, never the whole graph; the
     * run-to-convergence form is this loop with the empty-frontier stop,
     * which the bounded form already short-circuits on.
+    *
+    * With `runDir` the adjacency and the per-round distance frames are
+    * written as parquet under `runDir` (`sssp_adj`, `sssp_merged_<i>`),
+    * the durable form of [[connectedComponents]] with its
+    * one-run-per-directory rule; only the adjacency and the final round
+    * remain there, and the caller deletes the directory. Without it the
+    * returned frame is a local checkpoint of the final round: release it
+    * with [[Checkpoints.release]] once no frame over it is needed.
     */
   def ssspWeighted(edges: DataFrame, seeds: DataFrame, maxRounds: Int,
       srcCol: String = "src", dstCol: String = "dst",
@@ -2424,7 +2344,8 @@ object ScaleOps {
     * the converged assignment EQUALS the bounded-round assignment for
     * any bound ≥ the convergence point (pinned in ScaleOpsSpec) — the
     * same contract [[labelPropagationConverged]] pins against its
-    * bounded form.
+    * bounded form. `runDir` and the returned frame follow
+    * [[ssspWeighted]]'s contract.
     */
   def ssspConverged(edges: DataFrame, seeds: DataFrame,
       maxIterations: Int = 64, srcCol: String = "src",
@@ -2440,26 +2361,7 @@ object ScaleOps {
       srcCol: String, dstCol: String, weightCol: String, seedCol: String,
       runDir: Option[String]): (DataFrame, Int) = {
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    // localCheckpoint blocks live in executor memory — a lost executor
-    // kills the run. With runDir, the adjacency list (joined every
-    // round) and the per-round merged-distance frames round-trip through
-    // parquet instead, each round deleting its predecessor (the same
-    // escape hatch pageRankConverge / ccRun have); default stays
-    // executor-local for fixture scale.
-    def durable(df: DataFrame, name: String, dropPrev: Option[String] = None)
-        : DataFrame = runDir match {
-      case Some(d) =>
-        val path = s"$d/sssp_$name"
-        df.write.mode("overwrite").parquet(path)
-        val back = df.sparkSession.read.parquet(path)
-        dropPrev.foreach { p =>
-          val prev = new org.apache.hadoop.fs.Path(s"$d/sssp_$p")
-          prev.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(prev, true)
-        }
-        back
-      case None => df.localCheckpoint(true)
-    }
+    val rounds = new Checkpoints.Rounds(edges.sparkSession, runDir)
     val adjPlan = edges
       .select(col(srcCol).cast(LongType).as("a"),
         col(dstCol).cast(LongType).as("b"),
@@ -2469,20 +2371,16 @@ object ScaleOps {
         col(weightCol).cast(LongType).as("w")))
       .filter(col("a") =!= col("b"))
       .groupBy("a", "b").agg(min(col("w")).as("w")) // parallel edges: keep min
-    // local mode: lazy checkpoint — the nonnegative-weight probe right
-    // below is a full-scan aggregate and materializes it in the same job
-    val adj = runDir match {
-      case Some(_) => durable(adjPlan, "adj")
-      case None => adjPlan.localCheckpoint(false)
-    }
+    // lazy keep — the nonnegative-weight probe right below is a
+    // full-scan aggregate and materializes it in the same job
+    val adj = rounds.keep(adjPlan, "sssp_adj", eager = false)
     val minW = adj.agg(min(col("w"))).head()
     require(minW.isNullAt(0) || minW.getLong(0) >= 0,
       s"ssspWeighted requires nonnegative weights, got min ${minW.getLong(0)}")
-    var dist = durable(seeds
+    var (dist, frontierHasRows) = rounds.advance(seeds
       .select(col(seedCol).cast(LongType).as("node")).distinct()
       .withColumn("dist", lit(0L)),
-      "merged_0")
-    var frontierHasRows = !dist.isEmpty
+      "sssp_merged_0", eager = true)(!_.isEmpty)
     var r = 1
     while (r <= maxRounds && frontierHasRows) {
       // round 1's frontier is the seed frame itself (no _improved column
@@ -2500,30 +2398,19 @@ object ScaleOps {
             coalesce(col("cand"), col("dist"))).as("dist"),
           (col("cand").isNotNull &&
             (col("dist").isNull || col("cand") < col("dist"))).as("_improved"))
-      runDir match {
-        // durable mode: the round's parquet write materializes; the
-        // improved-count probe and next round's frontier are cheap
-        // filters over it
-        case Some(_) =>
-          val merged = durable(mergedPlan, s"merged_$r",
-            dropPrev = Some(s"merged_${r - 1}"))
-          frontierHasRows = !merged.filter(col("_improved")).isEmpty
-          dist = merged
-        // local mode: LAZY checkpoint — the improved-count probe is a
-        // full-scan aggregate, so it materializes the round's frame in
-        // the SAME job. The former shape paid three jobs per round
-        // (merged checkpoint, frontier checkpoint, isEmpty); the
-        // frontier needs no materialization of its own — it is a filter
-        // over the round's cached blocks, exactly like the durable
-        // branch (guide §1.2 / §2.4: remove redundant passes).
-        case None =>
-          val merged = mergedPlan.localCheckpoint(false)
-          frontierHasRows = merged.filter(col("_improved")).count() > 0
-          dist = merged
-      }
+      // LAZY keep — the improved-count probe is a full-scan aggregate,
+      // so it materializes the round's frame in the SAME job. The former
+      // shape paid three jobs per round (merged checkpoint, frontier
+      // checkpoint, isEmpty); the frontier needs no materialization of
+      // its own — it is a filter over the round's kept frame (guide §1.2
+      // / §2.4: remove redundant passes).
+      val (merged, improved) = rounds.advance(mergedPlan, s"sssp_merged_$r",
+        eager = false)(_.filter(col("_improved")).count())
+      frontierHasRows = improved > 0
+      dist = merged
       r += 1
     }
-    (dist.select("node", "dist"), r - 1)
+    (rounds.finish(dist.select("node", "dist")), r - 1)
   }
 
   /** Breadth-first search to a bounded depth: minimum hop distance from a

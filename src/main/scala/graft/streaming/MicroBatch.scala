@@ -76,8 +76,7 @@ object MicroBatch {
     * changing downstream code. Both produce a `value` column that [[decode]]
     * accepts (Kafka's binary value casts to string inside decode).
     */
-  case class SourceConfig(format: String, options: Map[String, String],
-      schema: Option[StructType])
+  case class SourceConfig(format: String, options: Map[String, String])
 
   /** Production source: Kafka with the reference consumer's flow control —
     * `maxOffsetsPerTrigger` = 500 mirrors its size-flush of 500 messages
@@ -97,7 +96,7 @@ object MicroBatch {
       "subscribe" -> topic,
       "startingOffsets" -> startingOffsets,
       "maxOffsetsPerTrigger" -> maxOffsetsPerTrigger.toString,
-      "failOnDataLoss" -> "false"), None)
+      "failOnDataLoss" -> "false"))
 
   /** Per-trigger byte budget of [[fileSource]]: 128 MB, Spark's own
     * `spark.sql.files.maxPartitionBytes` default (one max-size scan split).
@@ -121,14 +120,11 @@ object MicroBatch {
     // explicit schema needed (and the source rejects one)
     SourceConfig("text", Map(
       "path" -> path,
-      "maxBytesPerTrigger" -> maxBytesPerTrigger.toString), None)
+      "maxBytesPerTrigger" -> maxBytesPerTrigger.toString))
 
   /** Materialize a config into a streaming DataFrame. */
-  def openSource(spark: SparkSession, cfg: SourceConfig): DataFrame = {
-    val reader = spark.readStream.format(cfg.format).options(cfg.options)
-    cfg.schema.foreach(reader.schema)
-    reader.load()
-  }
+  def openSource(spark: SparkSession, cfg: SourceConfig): DataFrame =
+    spark.readStream.format(cfg.format).options(cfg.options).load()
 
   /** Idempotent keyed sink: dedup on the deterministic key, then append
     * partitioned by symbol. The dedup is Spark's stateful streaming

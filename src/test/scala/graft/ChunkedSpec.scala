@@ -99,20 +99,17 @@ class ChunkedSpec extends SparkSpec {
     // 13-row chunks (smaller than the n=14 period): every chunk's RSI
     // depends on cross-chunk state composition, not any warm-up — the
     // chunked Wilder path has none by design
-    // materialize=true persists the state frame instead of re-executing
-    // the diamond — values must be unchanged either way
-    Seq((13, false), (100, false), (100, true)).foreach { case (chunkRows, mat) =>
+    Seq(13, 100).foreach { chunkRows =>
       val chunked = Indicators.chunkedWilderRsi(df, floor(col("idx") / chunkRows),
-          orderCols = Seq("trading_date"), materialize = mat)
+          orderCols = Seq("trading_date"))
         .select("symbol", "trading_date", "rsi_wilder_chunked")
         .orderBy("symbol", "trading_date").as[(String, java.sql.Date, Double)].collect()
       assert(plain.length == chunked.length)
       plain.zip(chunked).foreach { case ((s1, d1, a), (s2, d2, b)) =>
         assert(s1 == s2 && d1 == d2)
-        assert(math.abs(a - b) <= 1e-9, s"chunk=$chunkRows mat=$mat $d1: $a vs $b")
+        assert(math.abs(a - b) <= 1e-9, s"chunk=$chunkRows $d1: $a vs $b")
       }
     }
-    spark.catalog.clearCache()
   }
 
   test("chunked OBV is exact even with small chunks (offset decomposition)") {

@@ -2243,42 +2243,28 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("connectedComponents: parquet-checkpoint path (the cluster-durable form) matches localCheckpoint") {
-    // Same graph through checkpointDir — each round must round-trip its
-    // edge frame through parquet and still converge to identical clusters.
-    // Each call namespaces under its own cc_run_* dir (a shared dir is
-    // safe for repeated/concurrent calls) keeping ONLY its final round —
-    // which must stay readable, since it backs the returned frame.
+    // Same graph through runDir — each round must round-trip its edge
+    // frame through parquet and still converge to identical clusters,
+    // keeping ONLY its final round, which must stay readable, since it
+    // backs the returned frame.
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L),
       (20L, 21L), (21L, 22L)).toDF("src", "dst")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cc_ckpt_").toFile
     try {
       val durableDf = ScaleOps.connectedComponents(edges,
-        checkpointDir = Some(ckpt.getPath))
+        runDir = Some(ckpt.getPath))
       val durable = durableDf.as[(Long, Long)].collect().toMap
       val local = ScaleOps.connectedComponents(edges)
         .as[(Long, Long)].collect().toMap
       assert(durable == local)
       assert(durable == Map(2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
         11L -> 10L, 21L -> 20L, 22L -> 20L))
-      def roundDirs() = ckpt.listFiles().filter(_.getName.startsWith("cc_run_"))
-        .flatMap(_.listFiles()).map(_.getName).filter(_.startsWith("cc_round_"))
+      def roundDirs() = ckpt.listFiles().map(_.getName)
+        .filter(_.startsWith("cc_round_"))
       assert(roundDirs().length == 1,
         s"expected only the last round kept, got ${roundDirs().toSeq}")
-      // a second call into the SAME dir gets its own run namespace: it
-      // neither clobbers the first run's final round (still backing
-      // durableDf) nor inherits its state
-      // a second run via the handle-returning form: its namespace comes
-      // back as a value, and releaseCcRun closes the caller-owns-cleanup
-      // obligation without touching the first run's live backing
-      val (rerunDf, rerunDir) = ScaleOps.connectedComponentsDurable(
-        Seq((10L, 11L)).toDF("src", "dst"),
-        checkpointDir = ckpt.getPath)
-      assert(rerunDf.as[(Long, Long)].collect().toMap == Map(11L -> 10L))
-      assert(roundDirs().length == 2, s"per-run namespaces: ${roundDirs().toSeq}")
-      ScaleOps.releaseCcRun(spark, rerunDir)
-      assert(!new java.io.File(rerunDir).exists(), "released run dir remains")
-      assert(roundDirs().length == 1, "release removed the wrong namespace")
-      // the first result is STILL readable after the second run + release
+      // the final round still backs the result (GraphRoundsSpec pins that
+      // a second run into the same dir is refused)
       assert(durableDf.as[(Long, Long)].collect().toMap == durable)
     } finally {
       def rm(f: java.io.File): Unit = {
@@ -2971,21 +2957,19 @@ class ScaleOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("pr_durable").toString
     try {
       val durable = ScaleOps.pageRankFixedPoint(nodes, edges,
-        iterations = iters, checkpointDir = Some(dir))
+        iterations = iters, runDir = Some(dir))
       val got = durable.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == local, "durable mode must be bit-equal to local mode")
-      // the run namespace holds exactly the FINAL round (earlier rounds
-      // pruned) plus the degree-annotated edge frame
-      val runDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      assert(runDirs.length == 1, "one run namespace")
-      val rounds = runDirs.head.listFiles().map(_.getName).sorted
+      // the run dir holds exactly the FINAL round (earlier rounds pruned)
+      // plus the degree-annotated edge frame
+      val rounds = new java.io.File(dir).listFiles().map(_.getName).sorted
       assert(rounds.contains(s"pr_round_$iters"), rounds.mkString(","))
       assert(!rounds.exists(n2 => n2.startsWith("pr_round_") &&
         n2 != s"pr_round_$iters"), "earlier rounds pruned: " + rounds.mkString(","))
       assert(rounds.contains("pr_edges"))
       // cold re-read of the final round — the resume path
       val reread = spark.read
-        .parquet(s"${runDirs.head.getAbsolutePath}/pr_round_$iters")
+        .parquet(s"$dir/pr_round_$iters")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(reread == local, "resume re-read must reproduce the ranks")
     } finally {
@@ -3087,8 +3071,10 @@ class ScaleOpsSpec extends SparkSpec {
       val names = dir.listFiles().map(_.getName)
       assert(names.contains("pr_conv_edges"),
         s"degree-annotated edges must persist, got ${names.toSeq}")
-      assert(names.count(_.startsWith("pr_conv_ranks_")) >= 2,
-        s"per-round rank frames must persist, got ${names.toSeq}")
+      // each round's frame is dropped once the next is materialized:
+      // only the final round backs the result
+      assert(names.count(_.startsWith("pr_conv_ranks_")) == 1,
+        s"exactly the live rank round must remain, got ${names.toSeq}")
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
@@ -3214,10 +3200,14 @@ class ScaleOpsSpec extends SparkSpec {
         s"adjacency must persist, got ${names.toSeq}")
       assert(names.count(_.startsWith("sssp_merged_")) == 1,
         s"exactly the live merged round must remain, got ${names.toSeq}")
-      // bounded entry point threads the same escape hatch
-      val viaBounded = ScaleOps.ssspWeighted(edges, seeds, rounds,
-        runDir = Some(dir.getPath)).as[(Long, Long)].collect().toMap
-      assert(viaBounded == convMap)
+      // bounded entry point threads the same escape hatch (into its own
+      // dir: one run per directory)
+      val dir2 = java.nio.file.Files.createTempDirectory("graft_sssp_run_").toFile
+      try {
+        val viaBounded = ScaleOps.ssspWeighted(edges, seeds, rounds,
+          runDir = Some(dir2.getPath)).as[(Long, Long)].collect().toMap
+        assert(viaBounded == convMap)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir2)
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
@@ -3247,13 +3237,12 @@ class ScaleOpsSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_pr_ckpt_").toFile
     try {
       val durable = ScaleOps.pageRankFixedPoint(nodes, edges,
-          iterations = 3, checkpointDir = Some(ckpt.getPath))
+          iterations = 3, runDir = Some(ckpt.getPath))
         .as[(Long, Long)].collect().toMap
       val local = ScaleOps.pageRankFixedPoint(nodes, edges, iterations = 3)
         .as[(Long, Long)].collect().toMap
       assert(durable == local, "fixed-point ranks must be path-independent")
-      val runFiles = ckpt.listFiles().filter(_.getName.startsWith("cc_run_"))
-        .flatMap(_.listFiles()).map(_.getName)
+      val runFiles = ckpt.listFiles().map(_.getName)
       assert(runFiles.contains("pr_edges"),
         s"degree-annotated edges must persist in the run dir, got ${runFiles.toSeq}")
       assert(runFiles.count(_.startsWith("pr_round_")) == 1,

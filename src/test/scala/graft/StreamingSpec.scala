@@ -639,7 +639,7 @@ class StreamingSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_resume_out").toString + "/sink"
     val ckpt = Files.createTempDirectory("graft_resume_ckpt").toString
     backlog.take(2).zipWithIndex.foreach { case (lines, i) => stageFile(dir, s"m$i.json", lines) }
-    val perFile = MicroBatch.SourceConfig("text", Map("path" -> dir, "maxFilesPerTrigger" -> "1"), None)
+    val perFile = MicroBatch.SourceConfig("text", Map("path" -> dir, "maxFilesPerTrigger" -> "1"))
     assert(drain(perFile, out, ckpt)._1 == 2)
     // two more files; the later one redelivers a key of the first drain
     stageFile(dir, "m2.json", backlog(2))
