@@ -80,6 +80,11 @@ object ArtifactMemo {
     * digests, and same-name siblings untouched for >48 h are swept as
     * orphans on the next build (never a directory another live process
     * could still be reading at fixture timescales).
+    *
+    * Once written, the built frame's checkpoints are released
+    * ([[graft.operators.Checkpoints.release]]): `build` must return a
+    * frame whose checkpoints it created itself and nothing else reads,
+    * such as an iterative graph operator's result.
     */
   def parquetDurable(spark: SparkSession, key: String, name: String,
       partitionCols: Seq[String] = Nil)(build: => DataFrame): String =
@@ -103,9 +108,11 @@ object ArtifactMemo {
               fs.delete(st.getPath, true)
           }
         }
-        val w = build.write.mode("overwrite")
+        val built = build
+        val w = built.write.mode("overwrite")
         (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
           .parquet(loc.toString)
+        graft.operators.Checkpoints.release(built)
       }
       loc.toString
     }

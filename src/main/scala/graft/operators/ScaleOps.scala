@@ -2426,12 +2426,16 @@ object ScaleOps {
     * a left-anti against the visited set — the per-round shuffle is
     * bounded by the frontier's edge neighborhood, never the whole graph,
     * and first-reach order IS minimum level, so no min-aggregate pass is
-    * needed afterwards. Rounds are eagerly checkpointed to truncate
+    * needed afterwards. Rounds are checkpointed to truncate
     * lineage (same rationale as the CC/PageRank iterations: without it
     * round N replays rounds 1..N−1 per action). Depth is bounded by
     * construction — this is the hop-limited form; unbounded
     * shortest-paths at 100 TB wants the [[connectedComponents]]-style
     * convergence loop instead.
+    *
+    * The result is a union of the per-level local checkpoints; the
+    * adjacency's checkpoint is released before returning. The caller owns
+    * the level checkpoints and frees them with [[Checkpoints.release]].
     */
   def bfsLevels(edges: DataFrame, seeds: DataFrame, maxLevel: Int,
       srcCol: String = "src", dstCol: String = "dst",
@@ -2472,6 +2476,8 @@ object ScaleOps {
       frontier = next
       l += 1
     }
+    // every level is materialized, and the result reads none of adj
+    Checkpoints.release(adj)
     visited
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Checkpoints, ScaleOps}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -8,7 +9,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * ([[Checkpoints.Rounds]]): in local mode the result holds only the
   * checkpoints its plan reads, in durable mode the run directory keeps
   * only the live round and the inputs every round joins, and one run
-  * owns its directory.
+  * owns its directory. `bfsLevels` and a durable artifact built from a
+  * graph operator hold no checkpoint outside their result either.
   */
 class GraphRoundsSpec extends SparkSpec {
   import spark.implicits._
@@ -81,6 +83,64 @@ class GraphRoundsSpec extends SparkSpec {
       s"RDDs ${(added -- rddIds(out)).mkString(", ")} held outside the result's plan")
     Checkpoints.release(out)
     assert(added.isEmpty, s"RDDs ${added.mkString(", ")} still held after release")
+  }
+
+  test("bfsLevels: the result holds only its level checkpoints, and release frees them") {
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    def added = sc.getPersistentRDDs.keySet -- baseline
+    val out = ScaleOps.bfsLevels(ccEdges, Seq(2L).toDF("node"), maxLevel = 3)
+    assert(rows(out) == Map(2L -> 0L, 1L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 3L))
+    assert(added.nonEmpty, "the result reads no checkpoint")
+    assert(added.subsetOf(rddIds(out)),
+      s"RDDs ${(added -- rddIds(out)).mkString(", ")} held outside the result's plan")
+    Checkpoints.release(out)
+    assert(added.isEmpty, s"RDDs ${added.mkString(", ")} still held after release")
+  }
+
+  test("pagerank_incremental: a cold base-rank build holds only the checkpoints under its result") {
+    // a fixture copy has a new stamp, so the durable base ranks build cold
+    val fixture = java.nio.file.Files.createTempDirectory("graft_pr_cold_").toFile
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "documents.parquet"),
+      fixture.toPath.resolve("documents.parquet"))
+    val root = new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), "graft_artifacts")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def baseDirs: Set[Path] =
+      if (!fs.exists(root)) Set.empty
+      else fs.listStatus(root).map(_.getPath).filter(_.getName.startsWith("pr_base_ranks_")).toSet
+    val before = baseDirs
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    def added = sc.getPersistentRDDs.keySet -- baseline
+    try {
+      val out = Queries.all("pagerank_incremental").fn(spark, fixture.getPath)
+      assert(out.count() > 0)
+      assert((baseDirs -- before).size == 1, "the base ranks were not built cold")
+      assert(added.subsetOf(rddIds(out)),
+        s"RDDs ${(added -- rddIds(out)).mkString(", ")} held outside the result's plan")
+      Checkpoints.release(out)
+      assert(added.isEmpty, s"RDDs ${added.mkString(", ")} still held after release")
+    } finally {
+      (baseDirs -- before).foreach(fs.delete(_, true))
+      org.apache.commons.io.FileUtils.deleteDirectory(fixture)
+    }
+  }
+
+  test("parquetDurable releases the checkpoints of the graph result it writes") {
+    // a strong reference, so no GC can free the checkpoints before the check
+    var built: DataFrame = null
+    val path = new Path(ArtifactMemo.parquetDurable(spark,
+      s"graph_rounds_spec#${java.util.UUID.randomUUID()}", "graph_rounds_spec_ranks") {
+      built = ScaleOps.pageRankConverge(prNodes, prEdges, tol = 1000000L)._1
+      built
+    })
+    try {
+      val ids = rddIds(built)
+      assert(ids.nonEmpty, "the result reads no checkpoint")
+      val held = ids & spark.sparkContext.getPersistentRDDs.keySet
+      assert(held.isEmpty, s"RDDs ${held.mkString(", ")} still held after the write")
+      assert(spark.read.parquet(path.toString).count() == 6)
+    } finally path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
   }
 
   test("durable mode keeps only the live round and the inputs its rounds join, and no executor blocks") {

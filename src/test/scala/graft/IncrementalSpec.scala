@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.concurrent.{Future, Promise}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
+import org.apache.parquet.column.Encoding
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -519,17 +520,30 @@ class IncrementalSpec extends SparkSpec {
     }
   }
 
+  /** Every data file under `dir` stores each of `cols` DELTA_BINARY_PACKED,
+    * the writer v2 encoding of an integer column whose dictionary does not
+    * pay. */
+  private def assertDeltaPacked(dir: String, cols: String*): Unit =
+    ParquetFooters.under(spark, dir).filter(_._2.getBlocks.size > 0).foreach { case (p, f) =>
+      cols.foreach { c =>
+        val enc = ParquetFooters.encodings(f, c)
+        assert(enc.contains(Encoding.DELTA_BINARY_PACKED), s"$p stores $c as $enc")
+      }
+    }
+
   test("the processed table and the stream sink are zstd with INT64 TIMESTAMP(MICROS) timestamps") {
     val (st, out) = (tmp() + "/wm", tmp() + "/out")
     Checkpoints.release(
       Incremental.runIncremental(spark, mkInput(1 to 12), st, out, Incremental.Truncated, specOrd))
     assertWritePolicy(out, "timestamp")
+    assertDeltaPacked(out, "timestamp", "trading_date")
     val mem = MemoryStream[String](spark)
     mem.addData("""{"ticker":"AAPL","date":"2024-01-01","open":1.0,"high":1.0,"low":1.0,"close":1.0,""" +
       """"volume":10,"timestamp":"2024-01-01 00:00:00"}""")
     val (sink, ckpt) = (tmp() + "/sink", tmp() + "/ckpt")
     assert(MicroBatch.idempotentSink(MicroBatch.decode(mem.toDF()), sink, ckpt).awaitTermination(60000))
     assertWritePolicy(sink, "consumed_at")
+    assertDeltaPacked(sink, "volume")
   }
 
   test("a timestamp predicate past the bootstrap watermark reads only the increment's records") {
@@ -556,17 +570,19 @@ class IncrementalSpec extends SparkSpec {
     // policy, then the increment under the policy
     val (st, out) = (tmp() + "/wm", tmp() + "/out")
     val legacy = Seq("spark.sql.parquet.compression.codec" -> "snappy",
-      "spark.sql.parquet.outputTimestampType" -> "INT96")
+      "spark.sql.parquet.outputTimestampType" -> "INT96", "parquet.writer.version" -> "v1")
     val current = legacy.map { case (k, _) => k -> spark.conf.get(k) }
     legacy.foreach { case (k, v) => spark.conf.set(k, v) }
     try run(st, out, boot) finally current.foreach { case (k, v) => spark.conf.set(k, v) }
     run(st, out, input)
+    // (timestamp type, codec, writer v2's delta-packed dates)
     val layouts = ParquetFooters.under(spark, out).map { case (_, f) =>
-      ParquetFooters.physicalType(f, "timestamp").getPrimitiveTypeName ->
-        f.getBlocks.get(0).getColumns.get(0).getCodec
+      (ParquetFooters.physicalType(f, "timestamp").getPrimitiveTypeName,
+        f.getBlocks.get(0).getColumns.get(0).getCodec,
+        ParquetFooters.encodings(f, "trading_date").contains(Encoding.DELTA_BINARY_PACKED))
     }.toSet
-    assert(layouts == Set(PrimitiveTypeName.INT96 -> CompressionCodecName.SNAPPY,
-      PrimitiveTypeName.INT64 -> CompressionCodecName.ZSTD), s"layouts $layouts")
+    assert(layouts == Set((PrimitiveTypeName.INT96, CompressionCodecName.SNAPPY, false),
+      (PrimitiveTypeName.INT64, CompressionCodecName.ZSTD, true)), s"layouts $layouts")
     // the same two runs, both under the policy
     val (refSt, refOut) = (tmp() + "/wm", tmp() + "/out")
     run(refSt, refOut, boot)

@@ -1,6 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.Encoding
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -27,4 +29,11 @@ object ParquetFooters {
 
   def physicalType(f: ParquetMetadata, column: String): PrimitiveType =
     f.getFileMetaData.getSchema.getColumnDescription(Array(column)).getPrimitiveType
+
+  /** The encodings of `column`'s chunks in every row group of `f`, the
+    * level encodings included. */
+  def encodings(f: ParquetMetadata, column: String): Set[Encoding] =
+    f.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      .filter(_.getPath.toDotString == column)
+      .flatMap(_.getEncodings.asScala).toSet
 }

@@ -19,6 +19,7 @@ class SessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.parquet.compression.codec") == "zstd")
     assert(spark.conf.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS")
+    assert(spark.conf.get("parquet.writer.version") == "v2")
   }
 
   test("GraftExtensions functions resolve in plain SQL") {
@@ -47,10 +48,12 @@ class SessionSpec extends SparkSpec {
 
   test("no source file but GraftSession.scala sets a parquet write option") {
     // the session keys and parquet-mr's writer keys (`parquet.compression`
-    // covers both), and a writer's own `compression` option on a line that
-    // writes parquet; CSV, ORC and JSON compression are not the policy's
+    // covers both, `writer.version` is parquet-mr's), and a writer's own
+    // `compression` option on a line that writes parquet; CSV, ORC and
+    // JSON compression are not the policy's
     def setsPolicy(text: String) =
       text.contains("parquet.compression") || text.contains("outputTimestampType") ||
+        text.contains("writer.version") ||
         text.linesIterator.exists(l => l.contains("\"compression\"") && l.contains(".parquet("))
     val found = offenders(Seq("src/main/scala"), setsPolicy, Set("GraftSession.scala"))
     assert(found.isEmpty, s"set the write policy once, in GraftSession: ${found.mkString(", ")}")

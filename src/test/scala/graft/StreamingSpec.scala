@@ -3,9 +3,13 @@ package graft
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.streaming.MicroBatch
 import graft.sources.CsvSource
 
@@ -683,13 +687,33 @@ class StreamingSpec extends SparkSpec {
       val date = f"2024-01-$d%02d"
       stageFile(dir, s"m$d.json", Seq("AAPL", "MSFT", "TSLA", "AAPL").map(msg(_, date, 10.0 + d)))
     }
-    assert(drain(MicroBatch.fileSource(dir), out, ckpt) == ((1, 1)))
+    // the executed plans of the batch's parquet write, through the same
+    // listener bus the drain flushes before it returns
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.exists(_.isInstanceOf[DataWritingCommandExec])) writes.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try assert(drain(MicroBatch.fileSource(dir), out, ckpt) == ((1, 1)))
+    finally spark.listenerManager.unregister(listener)
     val batches = partitionDirs(new java.io.File(out), "batch_id")
     assert(batches.map(_.getName) == Seq("batch_id=0"))
     val tickers = partitionDirs(batches.head, "ticker")
     assert(tickers.map(_.getName).sorted == Seq("ticker=AAPL", "ticker=MSFT", "ticker=TSLA"))
     tickers.foreach(t => assert(parquetFiles(t).size == 1, s"${t.getName}: ${parquetFiles(t)}"))
     assert(esIds(out).size == 12)
+    tickers.foreach { t =>
+      val ids = spark.read.parquet(new java.io.File(t, parquetFiles(t).head).getPath)
+        .select("es_id").as[String].collect().toSeq
+      assert(ids.size == 4 && ids == ids.sorted, s"${t.getName} is not in es_id order: $ids")
+    }
+    // the sort by (ticker, es_id) is the write's only sort: it satisfies
+    // the planned write's ordering by ticker
+    assert(writes.size == 1, s"${writes.size} writes")
+    val sorts = new AdaptiveSparkPlanHelper {}.collect(writes.peek()) { case s: SortExec => s }
+    assert(sorts.size == 1, s"${sorts.size} sorts:\n${writes.peek()}")
   }
 
   test("S10 csv symbols source with fallback") {
