@@ -89,25 +89,32 @@ object Smoke {
       org.apache.spark.sql.functions.lit("1995-01-01"))
     val ord = Queries.tieCols // canonical total order on this data
     // each run returns a checkpoint the caller owns: every block must be
-    // released once the section is done, not whenever GC next runs
-    val heldBefore = spark.sparkContext.getPersistentRDDs.size
+    // released once the section is done, not whenever GC next runs. The
+    // results stay strongly referenced until the check, and the check
+    // compares RDD ids: a GC that collected some other RDD could hide a
+    // leak from a count
+    val sc = spark.sparkContext
+    val heldBefore = sc.getPersistentRDDs.keySet
     def inc(input: org.apache.spark.sql.DataFrame) = operators.Incremental.runIncremental(
       spark, input, s"$tmp/wm", s"$tmp/out", operators.Incremental.Truncated, ord)
-    operators.Checkpoints.release(inc(half))
-    operators.Checkpoints.release(inc(base))
+    val first = inc(half)
+    operators.Checkpoints.release(first)
+    val second = inc(base)
+    operators.Checkpoints.release(second)
     val rerun = inc(base)
     val written = spark.read.parquet(s"$tmp/out").count()
     println(s"[smoke] incremental written=$written rerun_new=${rerun.count()}")
     assert(written == n, s"incremental total $written != $n")
     assert(rerun.isEmpty, "re-run was not idempotent")
     operators.Checkpoints.release(rerun)
-    val held = spark.sparkContext.getPersistentRDDs.size
-    println(s"[smoke] incremental held RDDs before=$heldBefore after=$held")
-    assert(held == heldBefore, s"incremental left ${held - heldBefore} checkpoint(s) held")
+    val heldAfter = sc.getPersistentRDDs.keySet
+    println(s"[smoke] incremental held RDDs before=${heldBefore.size} after=${heldAfter.size}")
+    assert(heldAfter.subsetOf(heldBefore),
+      s"incremental left RDD(s) ${(heldAfter -- heldBefore).mkString(", ")} held")
+    java.lang.ref.Reference.reachabilityFence(Seq(first, second, rerun))
 
     // the iterative graph operators keep their rounds as checkpoints too:
     // releasing the result must leave none of its rounds held
-    val sc = spark.sparkContext
     val graphBefore = sc.getPersistentRDDs.keySet
     import spark.implicits._
     val tinyEdges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))

@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftnative.WatermarkLookup
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -31,7 +32,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    whole input once.
   *    `historyBound` sits in the same filter (fresh rows are exempt from
   *    it), so it cannot prune the scan either; it bounds the rows that
-  *    reach the exchange and the sort;
+  *    reach the window's sort (and, in the split plan below, the
+  *    exchange);
   *  - late rows older than the watermark are silently skipped forever
   *    (documented reference behavior — no event-time lateness).
   *
@@ -69,8 +71,23 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Single pass: one scan of the input feeds everything a run produces.
   * OverlapReload keeps fresh rows and bounded history rows in one filter,
   * then ranks the history tail with running counts over the indicator
-  * window itself, so one hash exchange and one sort serve both the tail
-  * selection and the indicators. The processed rows are checkpointed
+  * window itself, so one sort (and at most one hash exchange) serves both
+  * the tail selection and the indicators. The plan takes one of two
+  * shapes, by input size ([[fitsOneTask]]):
+  *
+  *  - single task: when Catalyst's size estimate of `input` plus its file
+  *    count × `spark.sql.files.openCostInBytes` is at most
+  *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, `input` is
+  *    coalesced to one partition. One partition satisfies the window's
+  *    clustering on `symbol`, so there is no exchange: scan, filter,
+  *    indicators, checkpoint fill and append run as one task of the
+  *    append's job;
+  *  - split: a larger input, or one of unknown size, keeps its file
+  *    splits and one hash exchange on `symbol`, whose map side AQE runs as
+  *    a job before the append.
+  *
+  * Windows over a total order do not depend on the partitioning, so both
+  * shapes write the same rows. The processed rows are checkpointed
   * lazily: the staging append's job fills the checkpoint as it writes, and
   * no job reads the checkpoint back. The same job carries the new
   * watermarks as an observed metric: max(timestamp) per symbol over the
@@ -309,11 +326,12 @@ object Incremental {
       historyBound: Option[Column], outDir: String, stateDir: String): Staged = {
     // Materialize once: the append and the caller both read the processed
     // rows, and each would otherwise re-run the scan, exchange and sort.
-    // The checkpoint is lazy: building it runs the shuffle-map stages, and
-    // the append's job computes the result stage and fills the checkpoint
-    // as it writes, so no job reads it back. localCheckpoint truncates the
-    // lineage, so the caller's frame never re-evaluates against a later
-    // watermark.
+    // The checkpoint is lazy: building it runs the plan's shuffle-map
+    // stages (none in the single-task plan unless `input` has an exchange
+    // of its own), and the append's job computes the result stage and
+    // fills the checkpoint as it writes, so no job reads it back.
+    // localCheckpoint truncates the lineage, so the caller's frame never
+    // re-evaluates against a later watermark.
     val keyed = process(input, state.micros, mode, orderCols, historyBound)
       .withColumn("symbol_date_key", Clean.compositeKey(col("symbol"), col("trading_date")))
       .localCheckpoint(false)
@@ -385,10 +403,12 @@ object Incremental {
     * history rows (e.g. `col("timestamp") >= <watermark − 2 years>`).
     * Without it, the indicator sort covers the ENTIRE processed history
     * to find the last 199 rows per symbol. A caller always knows a safe
-    * time bound covering maxFrame−1 trading rows; with it, the shuffle
-    * and sort cost is O(bound), independent of history size (the scan
-    * still reads the whole input, see the object doc). It applies to
-    * history rows only: fresh rows are never bounded.
+    * time bound covering maxFrame−1 trading rows; with it, the sort (and,
+    * in the split plan, the shuffle) cost is O(bound), independent of
+    * history size. The scan still reads the whole input, and the plan
+    * shape is chosen by the size of the whole input, not of the bounded
+    * rows (see the object doc). It applies to history rows only: fresh
+    * rows are never bounded.
     * Contract: the bound must keep ≥ maxFrame−1 rows per symbol, else
     * the first new rows see partially truncated frames.
     */
@@ -406,15 +426,31 @@ object Incremental {
     staged.rows
   }
 
+  /** Whether an input fits one task: Catalyst's `sizeInBytes` estimate plus
+    * `files` × `openCost` (Spark's own cost of opening a file, so an input
+    * of many small files keeps its splits) is at most the `advisory`
+    * partition size. `files` is evaluated only when the size alone fits;
+    * an unknown size (`Long.MaxValue`) never does.
+    */
+  private[graft] def fitsOneTask(sizeInBytes: BigInt, files: => Int, advisory: Long, openCost: Long): Boolean =
+    sizeInBytes <= advisory && sizeInBytes + BigInt(files) * openCost <= advisory
+
   /** The rows one run processes, with indicators, given the committed
-    * `watermarks` (epoch micros per symbol). Lazy: one scan of `input`, and
-    * for OverlapReload one hash exchange on `symbol`. The watermarks are a
-    * constant of the plan, fixed when it is built.
+    * `watermarks` (epoch micros per symbol). Lazy: one scan of `input`,
+    * coalesced to one partition with no exchange when it [[fitsOneTask]]
+    * under the session's advisory partition size and file open cost, else
+    * split with one hash exchange on `symbol` (see the object doc). The
+    * watermarks are a constant of the plan, fixed when it is built.
     */
   private[graft] def process(input: DataFrame, watermarks: Map[String, Long], mode: BoundaryMode,
       orderCols: Seq[String], historyBound: Option[Column]): DataFrame = {
+    val qe = input.queryExecution
+    val conf = qe.sparkSession.sessionState.conf
+    val oneTask = fitsOneTask(qe.optimizedPlan.stats.sizeInBytes, input.inputFiles.length,
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES), conf.filesOpenCostInBytes)
+    val sized = if (oneTask) input.coalesce(1) else input
     // a symbol without a watermark looks up null: all its rows are fresh
-    val withWm = input.withColumn("_wm",
+    val withWm = sized.withColumn("_wm",
       WatermarkLookup.column(col("symbol"), watermarks, input.schema("timestamp").dataType))
     val isFresh = col("_wm").isNull || col("timestamp") > col("_wm")
 

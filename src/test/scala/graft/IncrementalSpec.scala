@@ -13,11 +13,14 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{ElementAt, GenericRowWithSchema, Literal}
-import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, LogicalRDD}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftnative.WatermarkLookup
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import graft.operators.{Checkpoints, Clean, Incremental, Indicators}
 import graft.streaming.MicroBatch
@@ -612,5 +615,121 @@ class IncrementalSpec extends SparkSpec {
     val expected = Map(Some("A") -> Some(5L), Some("B") -> Some(-7L), Some("C") -> None, None -> None)
     assert(eval("true", "CODEGEN_ONLY") == expected)
     assert(eval("false", "NO_CODEGEN") == expected)
+  }
+
+  /** Run `body` with the session `settings`, then restore each key's
+    * previous value (or unset it).
+    */
+  private def withConf[T](settings: (String, String)*)(body: => T): T = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private val Advisory = SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key
+  private val OpenCost = SQLConf.FILES_OPEN_COST_IN_BYTES.key
+  private def sqlConf = spark.range(1).queryExecution.sparkSession.sessionState.conf
+
+  /** Every row of a processed table in key order, each double as its bits. */
+  private def bits(out: String) = table(out).map(_.toSeq.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case v => v
+  })
+
+  test("the single-task plan writes the split plan's rows bit for bit, with the same watermarks") {
+    // few input files: each file's open cost counts against the advisory
+    // size, and 16 files alone would fill it
+    val inDir = tmp() + "/in"
+    series(Seq("A", "B", "C"), 0 until 300).coalesce(2).write.parquet(inDir)
+    val modes = Seq(
+      "truncated" -> (Incremental.Truncated, None),
+      "overlap_unbounded" -> (Incremental.OverlapReload, None),
+      "overlap_bounded" -> (Incremental.OverlapReload, Some(col("timestamp") >= tsOf(80))))
+    // per mode and plan: a state and an output directory of its own
+    val dirs = (for ((m, _) <- modes; split <- Seq(false, true))
+      yield (m, split) -> (tmp() + "/wm", tmp() + "/out")).toMap
+    // a bootstrap, then three increments landing as new input files
+    Seq(None, Some(300 until 310), Some(310 until 320), Some(320 until 330)).foreach { landed =>
+      landed.foreach(days => series(Seq("A", "B", "C"), days).coalesce(1).write.mode("append").parquet(inDir))
+      for ((m, (mode, bound)) <- modes; split <- Seq(false, true)) {
+        val (st, out) = dirs(m -> split)
+        val input = spark.read.parquet(inDir)
+        def run() = Incremental.runIncremental(spark, input, st, out, mode, specOrd, bound)
+        var inc: DataFrame = null
+        // an advisory size under any file's open cost forces the split plan
+        val jobs = work { inc = if (split) withConf(Advisory -> "1k")(run()) else run() }.jobs
+        Checkpoints.release(inc)
+        // the split plan's exchange runs its map side as a job of its own
+        assert(jobs == (if (split) 2 else 1), s"$m split=$split: $jobs jobs")
+      }
+    }
+    modes.foreach { case (m, _) =>
+      val (single, split) = (dirs(m -> false), dirs(m -> true))
+      assert(bits(single._2) == bits(split._2), s"$m: the plans wrote different rows")
+      val (a, b) = (Incremental.readState(spark, single._1), Incremental.readState(spark, split._1))
+      assert(a.version == 4 && b.version == 4 && a.tsType == b.tsType && a.micros == b.micros,
+        s"$m: watermarks differ: ${a.micros} vs ${b.micros}")
+    }
+    assert(spark.read.parquet(dirs("truncated" -> false)._2).count() == 990)
+  }
+
+  /** Whether `process` plans `input` with a hash exchange (the split plan)
+    * rather than one coalesced partition; exactly one of the two holds.
+    */
+  private def splits(input: DataFrame): Boolean = {
+    val p = Incremental.process(input, Map.empty, Incremental.OverlapReload, specOrd, None)
+      .queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val hashed = p.collect { case e: ShuffleExchangeExec => e }.nonEmpty
+    val coalesced = p.collect { case c: CoalesceExec => c.numPartitions } == Seq(1)
+    assert(hashed != coalesced, s"expected exactly one of an exchange and a CoalesceExec(1):\n$p")
+    hashed
+  }
+
+  test("an input whose files' open cost exceeds the advisory size keeps the exchange") {
+    def filesOf(n: Int) = asParquet(series(Seq("A", "B"), 0 until 30).repartition(n))
+    val (two, three) = (filesOf(2), filesOf(3))
+    assert(two.inputFiles.length == 2 && three.inputFiles.length == 3)
+    assert(!splits(three))
+    // three files' open cost alone is over the advisory size, two files' is not
+    val advisory = sqlConf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    withConf(OpenCost -> (advisory / 3 + 1).toString) {
+      assert(splits(three))
+      assert(!splits(two))
+    }
+  }
+
+  test("an input of unknown size keeps the exchange") {
+    val local = series(Seq("A", "B"), 0 until 30)
+    val overRdd = spark.createDataFrame(local.rdd, local.schema)
+    assert(overRdd.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(Long.MaxValue))
+    assert(splits(overRdd))
+    assert(!splits(local))
+  }
+
+  test("an input just over the advisory size keeps the exchange; one at it is one task") {
+    val input = asParquet(series(Seq("A", "B"), 0 until 30))
+    val size = input.queryExecution.optimizedPlan.stats.sizeInBytes +
+      BigInt(input.inputFiles.length) * sqlConf.filesOpenCostInBytes
+    withConf(Advisory -> size.toString)(assert(!splits(input)))
+    withConf(Advisory -> (size - 1).toString)(assert(splits(input)))
+  }
+
+  test("fitsOneTask: size plus files × open cost at most the advisory size") {
+    val (advisory, open) = (64L << 20, 4L << 20)
+    def fits(size: BigInt, files: Int) = Incremental.fitsOneTask(size, files, advisory, open)
+    assert(fits(0, 0))
+    assert(fits(advisory, 0) && !fits(advisory + 1, 0))
+    assert(fits(advisory - 2 * open, 2) && !fits(advisory - 2 * open + 1, 2))
+    assert(fits(0, 16) && !fits(0, 17))
+    assert(!fits(Long.MaxValue, 0))
+    // no overflow at the extremes
+    assert(!Incremental.fitsOneTask(0, Int.MaxValue, Long.MaxValue, Long.MaxValue))
+    // the file count is evaluated only when the size alone fits
+    assert(!Incremental.fitsOneTask(advisory + 1, fail("file count evaluated"), advisory, open))
+    var evaluated = false
+    assert(Incremental.fitsOneTask(advisory - open, { evaluated = true; 1 }, advisory, open) && evaluated)
   }
 }

@@ -1143,11 +1143,14 @@ class PlanSpec extends SparkSpec {
       spark.sparkContext.defaultParallelism)
   }
 
-  test("incremental OverlapReload: one scan per input relation, one hash exchange on symbol") {
+  /** The OverlapReload plan `process` builds for a daily increment's
+    * two-relation input (history ∪ landed day, 2 symbols × 251 days of
+    * parquet) over committed state, built under the session's current
+    * config. Returns the plan and the file scans' root paths.
+    */
+  private def incrementalPlan(): (SparkPlan, Seq[String]) = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import spark.implicits._
     import graft.operators.{Checkpoints, Incremental}
     val dir = java.nio.file.Files.createTempDirectory("graft_plan_inc").toString
@@ -1169,6 +1172,22 @@ class PlanSpec extends SparkSpec {
     assert(state.size == 2)
     val p = physical(Incremental.process(input, state,
       Incremental.OverlapReload, order, Some(col("timestamp") >= lit("2023-03-01").cast("timestamp"))))
+    val scans = collectAll(p) { case s: FileSourceScanExec => s.relation.location.rootPaths.mkString }
+    // history and landing: each scanned exactly once, and the state never
+    assert(scans.size == 2 && scans.distinct.size == 2, s"scans: ${scans.mkString(", ")}")
+    assert(!scans.exists(_.contains("/wm")), s"state scanned: ${scans.mkString(", ")}")
+    (p, scans)
+  }
+
+  test("incremental OverlapReload: one scan per input relation, one hash exchange on symbol") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    // an advisory partition size under the input's file open cost alone
+    // forces the split plan
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    val (p, _) = try incrementalPlan() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
 
     val hashed = collectAll(p) { case e: ShuffleExchangeExec => e.outputPartitioning }
       .collect { case h: HashPartitioning => h }
@@ -1176,9 +1195,17 @@ class PlanSpec extends SparkSpec {
     assert(hashed.head.expressions.map(_.references.map(_.name).mkString) == Seq("symbol"))
     // the watermarks are a literal of the plan: no broadcast, no state scan
     assert(collectAll(p) { case b: BroadcastExchangeExec => b }.isEmpty, s"broadcast in plan:\n$p")
-    // history and landing: each scanned exactly once
-    val scans = collectAll(p) { case s: FileSourceScanExec => s.relation.location.rootPaths.mkString }
-    assert(scans.size == 2 && scans.distinct.size == 2, s"scans: ${scans.mkString(", ")}")
-    assert(!scans.exists(_.contains("/wm")), s"state scanned: ${scans.mkString(", ")}")
+  }
+
+  test("incremental OverlapReload: an input that fits one advisory partition is one task, with no exchange") {
+    import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val (p, scans) = incrementalPlan()
+    assert(collectAll(p) { case e: ShuffleExchangeExec => e }.isEmpty, s"exchange in plan:\n$p")
+    // one partition satisfies the window's clustering on symbol
+    val coalesces = collectAll(p) { case c: CoalesceExec => c }
+    assert(coalesces.map(_.numPartitions) == Seq(1), s"expected one CoalesceExec(1):\n$p")
+    val under = coalesces.head.collect { case s: FileSourceScanExec => s.relation.location.rootPaths.mkString }
+    assert(under.sorted == scans.sorted, s"scans outside the coalesce:\n$p")
   }
 }
