@@ -35,13 +35,12 @@ object Queries {
   // ---------------------------------------------------------------- shared
   private val PriceDec = Tables.PriceDec
 
-  /** Window order must be TOTAL for deterministic frames. (l_orderkey,
-    * l_linenumber, l_partkey, l_suppkey) is unique at sf0.01/sf0.1; the
-    * value-column tail covers the one residual collision at sf0.001
-    * (full rows are distinct at every sf).
-    */
   /** The canonical total order within a symbol on this testdata — reuse
-    * this everywhere a deterministic window order is needed.
+    * this everywhere a deterministic window order is needed. Window order
+    * must be TOTAL for deterministic frames. (l_orderkey, l_linenumber,
+    * l_partkey, l_suppkey) is unique at sf0.01/sf0.1; the value-column
+    * tail covers the one residual collision at sf0.001 (full rows are
+    * distinct at every sf).
     */
   val tieCols: Seq[String] = Seq("trading_date", "l_orderkey", "l_linenumber",
     "l_partkey", "l_suppkey", "close", "volume", "open", "low")
@@ -501,12 +500,13 @@ object Queries {
          | FROM l1 $ORD""".stripMargin)))
 
   // ----------------------------- fidelity upgrades: true EMA / Wilder RSI
-  // Exponential recurrences via bounded-lookback sequential folds
-  // (Indicators.trueEma / withWilderRsi). Both engines fold the window
-  // list left-to-right with the identical expression tree, so results are
-  // bitwise comparable: Spark `aggregate(collect_list(...), NaN, f)`
-  // consumes the first element via the isnan branch exactly like DuckDB's
-  // `list_reduce` seeding from the first element.
+  // Exponential recurrences over a bounded 512-row lookback
+  // (Indicators.trueEma / withWilderRsi). The Spark side is the native
+  // `ema_run` aggregate over the ROWS frame, which Spark re-runs over the
+  // frame in order for every row; its update `α·x + (1−α)·acc`, with a
+  // NaN accumulator reseeding from x, has the fold's expression shape, so
+  // results are bitwise comparable with DuckDB's `list_reduce` over the
+  // same frame's list seeding from its first element.
   private def foldSql(listExpr: String, alpha: String): String =
     s"""list_reduce($listExpr, (acc, x) ->
        | CASE WHEN isnan(acc) THEN x ELSE x * ($alpha) + acc * (1.0 - ($alpha)) END)""".stripMargin
@@ -543,13 +543,12 @@ object Queries {
          |   CASE WHEN avg_loss <> 0 THEN avg_gain / avg_loss ELSE 100.0 END)) AS rsi_wilder
          | FROM c3 $ORD""".stripMargin)))
 
-  // Production path for the same recurrences (⊘ oracle): the
-  // EmaAggregator UDAF — O(1) state per row instead of the 512-double
-  // collect_list frame, and exact rather than lookback-truncated. No SQL
-  // mirror (DuckDB can't run a custom UDAF and the exact unbounded fold
-  // would need O(n) lists per row); agreement with the fold variants is
-  // pinned to 1e-9 in IndicatorsSpec. This key exists so Bench times the
-  // path a production cluster would run.
+  // Production path for the same recurrences (⊘ oracle): the same native
+  // `ema_run` over an unbounded-preceding frame — O(1) state per row and
+  // exact rather than lookback-truncated. No SQL mirror (the exact
+  // unbounded fold would need an O(n) list per row in DuckDB); agreement
+  // with the bounded keys is pinned to 1e-9 in IndicatorsSpec. This key
+  // exists so Bench times the path a production cluster would run.
   private val emaRsiProdQ = Q(
     (s, dir) => {
       import graft.operators.Indicators

@@ -294,14 +294,13 @@ object QueriesScale {
     ScaleOps.bucketSkewStats(minhashBandBuckets(sig), "ids")
   }
 
-  /** Shared DuckDB CTE chain mirroring the md5 minhash banding over the
-    * duped corpus — defines `corpus`, `sh` (shingle arrays), and `pairs`
-    * (one row per shared band, id1 < id2). Used by BOTH minhash_dedup and
-    * dedup_pipeline so their oracles cannot drift.
-    */
   /** The minhash/LSH oracle machinery (md5 family, 8 hashes, 4 bands,
-    * capped buckets) over an arbitrary `corpus(doc_id, text)` CTE —
-    * shared by the plain dedup gates and the crawl-composition gate.
+    * capped buckets) over an arbitrary `corpus(doc_id, text)` CTE: a
+    * DuckDB CTE chain mirroring the md5 minhash banding that defines
+    * `corpus`, `sh` (shingle arrays), and `pairs` (one row per shared
+    * band, id1 < id2). Shared by the plain dedup gates (minhash_dedup and
+    * dedup_pipeline) and the crawl-composition gate, so their oracles
+    * cannot drift.
     */
   private def minhashOracleCtesFor(corpusSql: String) =
     s"""corpus AS ($corpusSql),
@@ -360,10 +359,10 @@ object QueriesScale {
   // on doc_id alone.
   private val dedupJaccardThreshold = 0.7
 
-  /** Candidates → exact-jaccard verify → keep-min anti-join: the shared
-    * tail of both dedup_pipeline variants, parameterized only by the
-    * signature table (md5 = oracle family, xxhash64 = production family)
-    * so the two plans cannot drift.
+  /** Candidates → exact-jaccard verify: the (id1, id2) pairs whose true
+    * shingle-set jaccard clears the threshold. Shared by the keep-min
+    * pipelines ([[dedupPipelineFrom]]) and the connected-components
+    * clustering below.
     *
     * The verify joins are PINNED to shuffled-hash with the candidate side
     * as build. Left to itself, AQE's runtime stats see a low ROW count on
@@ -375,10 +374,6 @@ object QueriesScale {
     * the corpus. The hint keeps the only join against full documents a
     * partitioned hash join on doc_id, which is the 100 TB-correct plan
     * regardless of what the local stats say.
-    */
-  /** Candidates → exact-jaccard verify: the (id1, id2) pairs whose true
-    * shingle-set jaccard clears the threshold. Shared by the keep-min
-    * pipelines and the connected-components clustering below.
     */
   private def verifiedPairs(corpus: DataFrame, sig: DataFrame): DataFrame = {
     val cands = minhashPairsFromBuckets(minhashBandBuckets(sig))
@@ -397,6 +392,11 @@ object QueriesScale {
       .select("id1", "id2")
   }
 
+  /** Candidates → exact-jaccard verify → keep-min anti-join: the shared
+    * tail of both dedup_pipeline variants, parameterized only by the
+    * signature table (md5 = oracle family, xxhash64 = production family)
+    * so the two plans cannot drift.
+    */
   private def dedupPipelineFrom(corpus: DataFrame, sig: DataFrame): DataFrame = {
     val verified = verifiedPairs(corpus, sig)
     val removed = verified.select(col("id2").as("doc_id")).distinct()
@@ -4870,10 +4870,6 @@ object QueriesScale {
   private val ivfK = 16
   private val ivfProbes = 2
 
-  /** The IVF serving plan, shared by the first-K (oracle) and trained
-    * (production) codebooks. `emb` carries (vec_id, embedding, nv);
-    * `cents` carries (c_id, c_emb, nc).
-    */
   /** Corpus-side IVF assignment: each vector lands in its argmax-cosine
     * inverted list. An ARGMAX aggregation, not a window: a row_number
     * over the K×-expanded corpus would exchange and sort K copies of
@@ -4919,6 +4915,10 @@ object QueriesScale {
       .orderBy(col("q_id"), col("rank"))
   }
 
+  /** The IVF serving plan, shared by the first-K (oracle) and trained
+    * (production) codebooks: [[ivfAssign]] then [[ivfServe]]. `emb`
+    * carries (vec_id, embedding, nv); `cents` carries (c_id, c_emb, nc).
+    */
   private def ivfTopk(emb: DataFrame, cents: DataFrame, nProbe: Int): DataFrame =
     ivfServe(ivfAssign(emb, cents), emb, cents, nProbe)
 

@@ -37,18 +37,6 @@ object AsOfJoin {
     right.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** Inner as-of join: returns `left` columns plus `valueCol` as
-    * `asofValueName`; left rows with no preceding right row are dropped.
-    *
-    * Null-valued right rows never match: the carry-forward uses
-    * `last(_v, ignoreNulls)` (probe rows ride as nulls), so a null quote
-    * is skipped and the probe gets the latest OLDER non-null quote —
-    * "latest non-null value" semantics, a declared divergence from engines
-    * whose ASOF JOIN would match the null row itself. The explicit filter
-    * below restates what ignoreNulls already does (and prunes the rows
-    * before the shuffle), so the contract is visible in the plan rather
-    * than implicit in a window flag.
-    */
   /** Shared probe/quote stacking for both as-of paths: probes ride with a
     * null `_v`, quotes are projected onto the left schema with null
     * padding. Null-TIME rows are dropped on both sides — a row without a
@@ -75,6 +63,18 @@ object AsOfJoin {
           Seq(col("_t"), col("_side"), col("_v"))): _*))
   }
 
+  /** Inner as-of join: returns `left` columns plus `valueCol` as
+    * `asofValueName`; left rows with no preceding right row are dropped.
+    *
+    * Null-valued right rows never match: the carry-forward uses
+    * `last(_v, ignoreNulls)` (probe rows ride as nulls), so a null quote
+    * is skipped and the probe gets the latest OLDER non-null quote —
+    * "latest non-null value" semantics, a declared divergence from engines
+    * whose ASOF JOIN would match the null row itself. The explicit filter
+    * below restates what ignoreNulls already does (and prunes the rows
+    * before the shuffle), so the contract is visible in the plan rather
+    * than implicit in a window flag.
+    */
   def asofJoin(left: DataFrame, right: DataFrame, key: String, leftTime: String,
       rightTime: String, valueCol: String, asofValueName: String): DataFrame = {
     val stacked = stack(left, right, key, leftTime, rightTime, valueCol)

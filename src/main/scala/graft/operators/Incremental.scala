@@ -394,12 +394,13 @@ object Incremental {
   /** One incremental run: recover, stage, commit, publish (see the object
     * doc). Returns the newly processed frame, locally checkpointed: the
     * caller owns its blocks and should [[Checkpoints.release]] it when done.
-    */
-  // orderCols has NO default on purpose: it must be a total order on the
-  // caller's data (Queries.tieCols for the OHLCV testdata) and no single
-  // column set is total on every frame — a silent wrong default made
-  // window frames nondeterministic.
-  /** `historyBound`: optional predicate bounding the OverlapReload
+    *
+    * `orderCols` has NO default on purpose: it must be a total order on the
+    * caller's data (`Queries.tieCols` for the OHLCV testdata) and no single
+    * column set is total on every frame — a silent wrong default made
+    * window frames nondeterministic.
+    *
+    * `historyBound`: optional predicate bounding the OverlapReload
     * history rows (e.g. `col("timestamp") >= <watermark − 2 years>`).
     * Without it, the indicator sort covers the ENTIRE processed history
     * to find the last 199 rows per symbol. A caller always knows a safe

@@ -102,6 +102,18 @@ object Indicators {
     }
   }
 
+  /** Dense per-symbol chunk index (shared by both chunked paths): bucket
+    * by `chunkExpr`, dense-rank the tiny distinct chunk set so gaps don't
+    * break adjacency, broadcast-join the index back.
+    */
+  private def withDenseChunkIdx(df: DataFrame, chunkExpr: Column): DataFrame = {
+    val withChunk = df.withColumn("chunk_raw", chunkExpr)
+    val chunkIdx = withChunk.select(col("symbol"), col("chunk_raw")).distinct()
+      .withColumn("chunk_id", dense_rank().over(
+        Window.partitionBy("symbol").orderBy("chunk_raw")))
+    withChunk.join(broadcast(chunkIdx), Seq("symbol", "chunk_raw"))
+  }
+
   /** Chunked overlap-and-trim indicator pipeline — the 100 TB skew
     * mitigation (SURVEY §4): `partitionBy(symbol)` puts one symbol's whole
     * history in one task, which breaks when a symbol has billions of rows.
@@ -127,24 +139,13 @@ object Indicators {
     * silently truncating lookbacks (the per-chunk count rides a narrow
     * two-column aggregate and a broadcast join, negligible next to the
     * window pass itself).
+    *
+    * `orderCols` MUST totally order rows within (symbol, chunk): the OBV
+    * offset recompute re-sorts independently of the indicator window, so
+    * a tie would let the two passes disagree. The default is the same
+    * value-column-extended total order [[baseWindow]] uses (the bare
+    * 4-part lineitem key collides once at sf0.001).
     */
-  /** Dense per-symbol chunk index (shared by both chunked paths): bucket
-    * by `chunkExpr`, dense-rank the tiny distinct chunk set so gaps don't
-    * break adjacency, broadcast-join the index back.
-    */
-  private def withDenseChunkIdx(df: DataFrame, chunkExpr: Column): DataFrame = {
-    val withChunk = df.withColumn("chunk_raw", chunkExpr)
-    val chunkIdx = withChunk.select(col("symbol"), col("chunk_raw")).distinct()
-      .withColumn("chunk_id", dense_rank().over(
-        Window.partitionBy("symbol").orderBy("chunk_raw")))
-    withChunk.join(broadcast(chunkIdx), Seq("symbol", "chunk_raw"))
-  }
-
-  // orderCols MUST totally order rows within (symbol, chunk): the OBV
-  // offset recompute below re-sorts independently of the indicator
-  // window, so a tie would let the two passes disagree. The default is
-  // the same value-column-extended total order baseWindow uses (the bare
-  // 4-part lineitem key collides once at sf0.001).
   def chunkedIndicators(df: DataFrame, chunkExpr: Column,
       orderCols: Seq[String] = Seq("trading_date", "l_orderkey", "l_linenumber",
         "l_partkey", "l_suppkey", "close", "volume", "open", "low"),
@@ -316,47 +317,45 @@ object Indicators {
 
   /** True exponential EMA (fidelity upgrade over the reference's SMA
     * approximation, SURVEY §7.3): ema_t = α·x_t + (1−α)·ema_{t−1},
-    * α = 2/(n+1), seeded with the first value. Closed form over the
-    * unbounded-preceding frame via higher-order `aggregate` on the
-    * collected prefix would blow memory at scale; instead the recurrence
-    * folds over a bounded lookback. The truncation error of an L-row
-    * lookback is (1−α)^(L−1) of the older history's weight — for the
-    * default L=512: n=12 → ~4e-41, n=26 → ~3e-17, i.e. at or below double
-    * precision. (L must grow ~7.7·(n+1) per decimal digit of accuracy.)
+    * α = 2/(n+1), seeded with the first value of the frame. The recurrence
+    * runs over a bounded lookback of `lookback` rows — the form the DuckDB
+    * oracle mirrors with a `list_reduce` fold over the same frame. The
+    * truncation error of an L-row lookback is (1−α)^(L−1) of the older
+    * history's weight — for the default L=512: n=12 → ~4e-41, n=26 →
+    * ~3e-17, i.e. at or below double precision. (L must grow ~7.7·(n+1)
+    * per decimal digit of accuracy.) The native `ema_run` over the
+    * bounded ROWS frame is that fold in generated code, bit for bit (see
+    * `graftnative.EmaAggregates`; pinned in IndicatorsSpec).
+    * [[trueEmaExact]] is the same recurrence over the whole history.
+    *
+    * Nulls: a null input counts as NaN — that row's EMA is NaN and the
+    * next row reseeds, for as long as the null is inside the frame. Every
+    * in-repo call site feeds non-null columns.
     */
-  def trueEma(close: Column, n: Int, w: WindowSpec, lookback: Int = 512): Column = {
-    val alpha = 2.0 / (n + 1)
-    val xs = collect_list(close).over(w.rowsBetween(-(lookback - 1), 0))
-    // Sequential fold reproduces the recurrence exactly over the window.
-    aggregate(xs, lit(Double.NaN),
-      (acc, x) => when(isnan(acc), x).otherwise(x * lit(alpha) + acc * lit(1 - alpha)))
-  }
+  def trueEma(close: Column, n: Int, w: WindowSpec, lookback: Int = 512): Column =
+    emaOver(close, 2.0 / (n + 1), w.rowsBetween(-(lookback - 1), 0))
 
-  /** True EMA, production path (SURVEY §7.3 option a): the native
-    * [[org.apache.spark.sql.graftnative.EmaRunAgg]] declarative aggregate
-    * over an unbounded-preceding frame. O(1) state per row — no
-    * `collect_list` materialization — and EXACT (the bounded-lookback
-    * fold in [[trueEma]] truncates ~1e-17 of the weight; kept because
-    * the DuckDB oracle can only mirror a bounded fold). Bit-agreement
-    * with both the fold and the [[graft.functions.EmaAggregator]] UDAF
-    * is pinned in IndicatorsSpec; the native form replaces the UDAF on
-    * the hot path because the UDAF's per-row Encoder round-trips
-    * dominate multi-million-row window partitions. Grouped misuse still
-    * fails fast (EmaRunAgg raises on a real two-buffer merge).
+  /** True EMA, production path (SURVEY §7.3 option a): the [[trueEma]]
+    * recurrence, and its null rule, over an unbounded-preceding frame.
+    * O(1) state per row and EXACT, where the bounded lookback truncates
+    * ~1e-17 of the weight; the oracle can only mirror the bounded fold.
     */
   def trueEmaExact(close: Column, n: Int, w: WindowSpec): Column =
-    org.apache.spark.sql.graftnative.EmaFunctions
-      .ema_run(close, 2.0 / (n + 1))
-      .over(w.rowsBetween(Window.unboundedPreceding, 0))
+    emaOver(close, 2.0 / (n + 1), w.rowsBetween(Window.unboundedPreceding, 0))
+
+  /** The one EMA body: native `ema_run` over the given ordered frame. */
+  private def emaOver(x: Column, alpha: Double, frame: WindowSpec): Column =
+    org.apache.spark.sql.graftnative.EmaFunctions.ema_run(x, alpha).over(frame)
 
   /** Chunked exact EMA — the skew answer for UNBOUNDED exponential
     * recurrences, where [[chunkedIndicators]]' overlap-and-trim cannot
     * apply (the lookback is the entire history, not a bounded frame). The
-    * [[graft.functions.EmaAggregator]] affine-map state makes the
+    * affine-map state of the native `ema_state` aggregate
+    * ([[org.apache.spark.sql.graftnative.EmaStateAgg]]) makes the
     * recurrence chunk-parallel EXACTLY:
     *
     *  1. within each (symbol, chunk) — a bounded partition — the state
-    *     aggregator yields per-row (cSeeded, c, m);
+    *     aggregate yields per-row (cSeeded, c, m);
     *  2. the chunk's last-row state summarizes the whole chunk; the tiny
     *     per-symbol summary set folds in chunk order,
     *     s_k = c_end(k) + m_end(k)·s_{k−1} with s_1 = cSeeded_end(1),
@@ -365,17 +364,13 @@ object Indicators {
     *     a broadcast join of the summary table back onto the rows.
     *
     * No warm-up clones, no trimming, exact for ANY chunk sizes (the
-    * composition is the same associative affine algebra merge() uses;
-    * association differs from the pure sequential fold by O(ulp)).
+    * composition is the same associative affine algebra as the state's
+    * merge; association differs from the pure sequential fold by O(ulp)).
     * Requires NaN-free input: NaN is the "no prior chunk" sentinel here,
-    * so the reseed-on-NaN semantics of the row-level aggregator do not
+    * so the reseed-on-NaN semantics of the row-level aggregate do not
     * extend across chunk boundaries.
-    */
-  // default orderCols = the FULL total order on the OHLCV testdata
-  // (baseWindow's value-column tail included): the bare 4-part lineitem
-  // key has one collision at sf0.001, and a tied pair would make both the
-  // state window and the chunk-summary pick nondeterministic.
-  /** `chunkExpr` must bucket the `orderCols` order MONOTONICALLY (all of
+    *
+    * `chunkExpr` must bucket the `orderCols` order MONOTONICALLY (all of
     * chunk k's rows sort before chunk k+1's — e.g. `year(trading_date)`,
     * `date_trunc`), the same contract as
     * [[graft.operators.AsOfJoin.asofJoinChunked]]'s `chunkOf`. Unlike
@@ -383,7 +378,12 @@ object Indicators {
     * affine fold and the prior-chunk lag only need chunk ORDER, which
     * gaps cannot break — dropping the dense_rank removes one distinct
     * aggregation plus one broadcast join from EVERY re-execution of the
-    * lineage (the chunk-summary branch re-runs it).
+    * lineage (the chunk-summary branch re-runs it). The default
+    * `orderCols` is the FULL total order on the OHLCV testdata
+    * ([[baseWindow]]'s value-column tail included): the bare 4-part
+    * lineitem key has one collision at sf0.001, and a tied pair would
+    * make both the state window and the chunk-summary pick
+    * nondeterministic.
     */
   def chunkedTrueEma(df: DataFrame, n: Int, chunkExpr: Column,
       orderCols: Seq[String] = Seq("trading_date", "l_orderkey", "l_linenumber",
@@ -602,44 +602,34 @@ object Indicators {
   /** Wilder-smoothed RSI (fidelity upgrade over W8's plain-SMA variant,
     * SURVEY §7.3): avg_gain_t = (avg_gain_{t−1}·(n−1) + gain_t)/n — the
     * same exponential recurrence as EMA with α = 1/n, seeded by the first
-    * value. Same bounded-lookback closed form as [[trueEma]]: the default
-    * 512-row lookback truncates (1−1/14)^511 ≈ 4e-17 of the weight —
-    * below double precision.
+    * value. Same bounded lookback and the same `ema_run` body as
+    * [[trueEma]], bit-equal to the oracle's `list_reduce` fold: the
+    * default 512-row lookback truncates (1−1/14)^511 ≈ 4e-17 of the
+    * weight — below double precision. Gains and losses are never null
+    * (a null close folds 0 on its own row and the next), so [[trueEma]]'s
+    * null rule cannot arise here.
     */
-  def withWilderRsi(df: DataFrame, w: WindowSpec, n: Int = 14, lookback: Int = 512): DataFrame = {
-    val alpha = 1.0 / n
-    def smooth(c: Column): Column =
-      aggregate(collect_list(c).over(w.rowsBetween(-(lookback - 1), 0)),
-        lit(Double.NaN),
-        (acc, x) => when(isnan(acc), x).otherwise(x * lit(alpha) + acc * lit(1 - alpha)))
+  def withWilderRsi(df: DataFrame, w: WindowSpec, n: Int = 14, lookback: Int = 512): DataFrame =
+    wilderRsi(df, w, n, w.rowsBetween(-(lookback - 1), 0))
+
+  /** Wilder RSI, production path: the [[withWilderRsi]] recurrence over an
+    * unbounded frame — O(1) state per row, and exact rather than
+    * lookback-truncated.
+    */
+  def withWilderRsiExact(df: DataFrame, w: WindowSpec, n: Int = 14): DataFrame =
+    wilderRsi(df, w, n, w.rowsBetween(Window.unboundedPreceding, 0))
+
+  /** The one Wilder body: lag-derived gains and losses, each smoothed by
+    * [[emaOver]] (α = 1/n) over `frame`.
+    */
+  private def wilderRsi(df: DataFrame, w: WindowSpec, n: Int, frame: WindowSpec): DataFrame =
     // gains/losses materialized first: the recurrence window cannot nest
     // the lag window in a single pass
     df.withColumn("w_chg", col("close") - lag(col("close"), 1).over(w))
       .withColumn("w_gain", when(col("w_chg") > 0, col("w_chg")).otherwise(lit(0.0)))
       .withColumn("w_loss", when(col("w_chg") < 0, -col("w_chg")).otherwise(lit(0.0)))
-      .withColumn("w_avg_gain", smooth(col("w_gain")))
-      .withColumn("w_avg_loss", smooth(col("w_loss")))
+      .withColumn("w_avg_gain", emaOver(col("w_gain"), 1.0 / n, frame))
+      .withColumn("w_avg_loss", emaOver(col("w_loss"), 1.0 / n, frame))
       .withColumn("rsi_wilder", rsiFrom(col("w_avg_gain"), col("w_avg_loss")))
       .drop("w_chg", "w_gain", "w_loss", "w_avg_gain", "w_avg_loss")
-  }
-
-  /** Wilder RSI, production path: same recurrence through the
-    * [[graft.functions.EmaAggregator]] (α = 1/n) over an unbounded frame —
-    * O(1) state per row instead of the 512-double `collect_list` frame of
-    * [[withWilderRsi]], and exact rather than lookback-truncated.
-    */
-  def withWilderRsiExact(df: DataFrame, w: WindowSpec, n: Int = 14): DataFrame = {
-    // native EmaRunAgg: see trueEmaExact — codegen'd buffer updates, and
-    // grouped misuse (merge-order-dependent) still fails fast
-    def run(c: Column): Column =
-      org.apache.spark.sql.graftnative.EmaFunctions.ema_run(c, 1.0 / n)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-    df.withColumn("w_chg", col("close") - lag(col("close"), 1).over(w))
-      .withColumn("w_gain", when(col("w_chg") > 0, col("w_chg")).otherwise(lit(0.0)))
-      .withColumn("w_loss", when(col("w_chg") < 0, -col("w_chg")).otherwise(lit(0.0)))
-      .withColumn("w_avg_gain", run(col("w_gain")))
-      .withColumn("w_avg_loss", run(col("w_loss")))
-      .withColumn("rsi_wilder", rsiFrom(col("w_avg_gain"), col("w_avg_loss")))
-      .drop("w_chg", "w_gain", "w_loss", "w_avg_gain", "w_avg_loss")
-  }
 }

@@ -2097,6 +2097,11 @@ object ScaleOps {
     * Input normalization (canonicalize + distinct) makes the count
     * well-defined under duplicate or reversed input edges; self-loops
     * are dropped.
+    *
+    * The result reads two eager local checkpoints, the canonical edges
+    * `e` and the oriented edges `ori`, and the caller owns their blocks:
+    * `Dataset.unpersist()` does not free them, [[Checkpoints.release]] on
+    * the result does, once no frame over it is still needed.
     */
   def triangleCount(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {

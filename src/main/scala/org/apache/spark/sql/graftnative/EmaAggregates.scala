@@ -7,38 +7,43 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
-/** Native declarative EMA aggregates — the codegen replacement for the
-  * `Aggregator`-UDAF pair in [[graft.functions.EmaAggregator]].
+/** Native declarative EMA aggregates — the engine's one implementation of
+  * the exponential recurrence `e ← α·x + (1−α)·e` (true EMA, Wilder
+  * smoothing, and the chunk-parallel state of the chunked paths).
   *
-  * The UDAF path is semantically right but pays a per-row tax in window
-  * frames: `ScalaAggregator` is a `TypedImperativeAggregate`, so every
-  * `update` round-trips the input through an `Encoder` and every
-  * per-row `evaluate` re-serializes the buffer case class. Over the
-  * multi-million-row hot-key partitions the chunked family exists for,
-  * that tax dominates the window stage. A `DeclarativeAggregate` keeps
-  * the whole recurrence in generated mutable-projection code over four
-  * primitive buffer slots — no objects, no encoders.
+  * A `DeclarativeAggregate` keeps the whole recurrence in generated
+  * mutable-projection code over four primitive buffer slots — no objects,
+  * no encoders. The alternatives it replaced paid per row: an
+  * `Aggregator` UDAF (`ScalaAggregator` is a `TypedImperativeAggregate`,
+  * so every `update` round-trips the input through an `Encoder`), and a
+  * `collect_list` + `aggregate` fold over a bounded frame (`ArrayAggregate`
+  * is a `CodegenFallback`, so its lambda is interpreted once per list
+  * element, on top of one array per row).
   *
-  * State algebra (identical to [[graft.functions.EmaBuf]]): the
-  * recurrence `e ← α·x + (1−α)·e` is affine in the incoming state, so a
+  * Frames: over `UNBOUNDED PRECEDING .. CURRENT ROW` the aggregate is the
+  * exact recurrence over the whole history; over a bounded ROWS frame
+  * Spark re-initializes it for each row and updates it over the frame in
+  * order, so it is the oracle's bounded `list_reduce` fold, bit for bit.
+  *
+  * State algebra: the recurrence is affine in the incoming state, so a
   * row span is summarized by its affine map `f(prev) = c + m·prev` plus
   * `cSeeded`, the value produced when the span's first row seeds the
-  * series. Update arithmetic is expression-for-expression the same as
-  * `EmaAggregator.reduce` (same multiply/add shapes, same NaN reseed), so
-  * results are BIT-IDENTICAL to the UDAF — pinned by IndicatorsSpec.
+  * series. The `cSeeded` update is `α·x + (1−α)·acc` with a NaN
+  * accumulator reseeding from `x` — the oracle fold's expression shape
+  * (IEEE products and sums commute bit-exactly) — pinned bit for bit in
+  * IndicatorsSpec against plain-Scala folds, over bounded and unbounded
+  * frames.
   *
   * Null inputs behave like NaN inputs: the row's EMA is NaN and the next
-  * row reseeds (the `collect_list` fold variant *skips* nulls instead;
-  * all in-repo call sites feed non-null columns, where the three paths
-  * coincide).
+  * row reseeds (while the null is inside a bounded frame, each row's fold
+  * reseeds after it). All in-repo call sites feed non-null columns.
   *
-  * Ordering caveat (same as the UDAF): `merge` composes the two affine
-  * maps ASSUMING left precedes right. Ordered window frames — the
-  * production path — only ever `update` in frame order and never merge;
-  * grouped aggregation merges partial buffers in task-completion order
-  * and would be nondeterministic. [[EmaRunAgg]] therefore fails fast on
-  * a real two-buffer merge unless `allowMerge` is set (mirroring
-  * `EmaAggregator(windowOnly = true)`).
+  * Ordering caveat: `merge` composes the two affine maps ASSUMING left
+  * precedes right. Ordered window frames only ever `update` in frame
+  * order and never merge; grouped aggregation merges partial buffers in
+  * task-completion order and would be nondeterministic. [[EmaRunAgg]]
+  * therefore fails fast on a real two-buffer merge unless `allowMerge` is
+  * set.
   */
 abstract class EmaDeclarativeBase extends DeclarativeAggregate with UnaryLike[Expression] {
   def alpha: Double
@@ -61,8 +66,7 @@ abstract class EmaDeclarativeBase extends DeclarativeAggregate with UnaryLike[Ex
   override lazy val initialValues: Seq[Expression] =
     Seq(Literal(0.0), Literal(0.0), Literal(1.0), Literal(0L))
 
-  // null input → NaN: poisons this row's EMA, reseeds on the next — the
-  // closest declarative analogue of the UDAF's non-null precondition
+  // null input → NaN: poisons this row's EMA, reseeds on the next
   @transient private lazy val x: Expression =
     If(IsNull(child), Literal(Double.NaN), KnownNotNull(child))
 
@@ -70,7 +74,8 @@ abstract class EmaDeclarativeBase extends DeclarativeAggregate with UnaryLike[Ex
     val aL = Literal(alpha)
     val bL = Literal(beta)
     Seq(
-      // NaN accumulator RESEEDS with x (see EmaAggregator.reduce)
+      // NaN accumulator RESEEDS with x, as the oracle fold's
+      // `CASE WHEN isnan(acc) THEN x` does
       If(Or(EqualTo(bN, Literal(0L)), IsNaN(bCSeeded)), x,
         Add(Multiply(aL, x), Multiply(bL, bCSeeded))),
       Add(Multiply(aL, x), Multiply(bL, bC)),
@@ -78,7 +83,7 @@ abstract class EmaDeclarativeBase extends DeclarativeAggregate with UnaryLike[Ex
       Add(bN, Literal(1L)))
   }
 
-  /** Affine composition, left-precedes-right (EmaAggregator.merge). */
+  /** Affine composition, left-precedes-right. */
   protected lazy val composedMerge: Seq[Expression] = {
     def pick(ifLeftEmpty: Expression, ifRightEmpty: Expression, both: Expression) =
       If(EqualTo(bN.left, Literal(0L)), ifLeftEmpty,

@@ -9,8 +9,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * ([[Checkpoints.Rounds]]): in local mode the result holds only the
   * checkpoints its plan reads, in durable mode the run directory keeps
   * only the live round and the inputs every round joins, and one run
-  * owns its directory. `bfsLevels` and a durable artifact built from a
-  * graph operator hold no checkpoint outside their result either.
+  * owns its directory. `bfsLevels`, `triangleCount` and a durable
+  * artifact built from a graph operator hold no checkpoint outside their
+  * result either.
   */
 class GraphRoundsSpec extends SparkSpec {
   import spark.implicits._
@@ -91,6 +92,21 @@ class GraphRoundsSpec extends SparkSpec {
     def added = sc.getPersistentRDDs.keySet -- baseline
     val out = ScaleOps.bfsLevels(ccEdges, Seq(2L).toDF("node"), maxLevel = 3)
     assert(rows(out) == Map(2L -> 0L, 1L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 3L))
+    assert(added.nonEmpty, "the result reads no checkpoint")
+    assert(added.subsetOf(rddIds(out)),
+      s"RDDs ${(added -- rddIds(out)).mkString(", ")} held outside the result's plan")
+    Checkpoints.release(out)
+    assert(added.isEmpty, s"RDDs ${added.mkString(", ")} still held after release")
+  }
+
+  test("triangleCount: the result holds only its two checkpoints, and release frees them") {
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    def added = sc.getPersistentRDDs.keySet -- baseline
+    val out = ScaleOps.triangleCount(lpaEdges)
+    val row = out.head()
+    // two 5-cliques and a bridge: 10 nodes, 21 edges, 2 × C(5,3) triangles
+    assert((row.getLong(0), row.getLong(1), row.getLong(2)) == (10L, 21L, 20L))
     assert(added.nonEmpty, "the result reads no checkpoint")
     assert(added.subsetOf(rddIds(out)),
       s"RDDs ${(added -- rddIds(out)).mkString(", ")} held outside the result's plan")

@@ -270,6 +270,52 @@ class IndicatorsSpec extends SparkSpec {
     assert(!got.last.isNaN, "aggregator must recover after NaN, not poison the tail")
   }
 
+  test("trueEma and withWilderRsi are bit-equal to a plain-Scala fold: sliding and short frames, NaN and null inputs") {
+    // the oracle's fold over each row's last `lookback` values: the first
+    // value seeds, a NaN accumulator reseeds from the next value
+    def fold(xs: Seq[Double], alpha: Double, lookback: Int): Seq[Double] =
+      xs.indices.map { i =>
+        xs.slice(math.max(0, i - lookback + 1), i + 1).foldLeft(Double.NaN) { (acc, x) =>
+          if (acc.isNaN) x else x * alpha + acc * (1 - alpha)
+        }
+      }
+    // one symbol of 40 rows: a NaN close at 12, a null close at 25
+    val closes: Seq[Option[Double]] = (0 until 40).map { i =>
+      if (i == 12) Some(Double.NaN) else if (i == 25) None
+      else Some(100.0 + 9 * math.sin(i / 3.0) + (i % 7) / 3.0)
+    }
+    val df = closes.zipWithIndex.map { case (c, i) => ("S", i, c) }
+      .toDF("symbol", "idx", "close")
+    val wi = Window.partitionBy("symbol").orderBy("idx")
+    // UnsafeRow canonicalizes NaN payloads, so NaNs compare as one value
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToLongBits)
+    // the null rule: a null counts as NaN, and the next row reseeds
+    val xs = closes.map(_.getOrElse(Double.NaN))
+    // lookback 8 < 40 rows: frames slide; 512 > 40: every frame is short
+    for (lookback <- Seq(8, 512); n <- Seq(12, 26)) {
+      val got = df.withColumn("ema", Indicators.trueEma(col("close"), n, wi, lookback))
+        .orderBy("idx").select("ema").as[Double].collect().toSeq
+      val want = fold(xs, 2.0 / (n + 1), lookback)
+      assert(bits(got) == bits(want), s"trueEma n=$n lookback=$lookback: $got vs $want")
+      assert(got(25).isNaN && got(26) == closes(26).get, s"null rule, lookback=$lookback")
+    }
+    // Wilder: a null close folds 0 into gain and loss on its row and the
+    // next; a NaN change is a gain (Spark orders NaN above every number)
+    val chg = closes.indices.map { i =>
+      if (i == 0) None else for (a <- closes(i); b <- closes(i - 1)) yield a - b
+    }
+    val gains = chg.map { case Some(c) if c.isNaN || c > 0 => c; case _ => 0.0 }
+    val losses = chg.map { case Some(c) if !c.isNaN && c < 0 => -c; case _ => 0.0 }
+    for (lookback <- Seq(8, 512)) {
+      val got = Indicators.withWilderRsi(df, wi, lookback = lookback)
+        .orderBy("idx").select("rsi_wilder").as[Double].collect().toSeq
+      val want = fold(gains, 1.0 / 14, lookback).zip(fold(losses, 1.0 / 14, lookback)).map {
+        case (g, l) => 100.0 - 100.0 / (1.0 + (if (l != 0.0) g / l else 100.0))
+      }
+      assert(bits(got) == bits(want), s"withWilderRsi lookback=$lookback: $got vs $want")
+    }
+  }
+
   test("indicator typed-null padding yields all 15 columns as double") {
     val out = Indicators.withIndicators(frame(Seq(1.0, 2.0)), w)
     Indicators.indicatorCols.foreach { c =>

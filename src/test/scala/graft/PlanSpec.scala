@@ -1,12 +1,15 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.graftnative.WarcFunctions
+import org.apache.spark.sql.graftnative.{EmaRunAgg, WarcFunctions}
 
 /** Physical-plan shape assertions — the 100 TB design contract:
   * filters/projections reach the parquet scan, small dims broadcast,
@@ -538,6 +541,19 @@ class PlanSpec extends SparkSpec {
       assert(shj.nonEmpty, s"$name: df join must stay shuffle-hash " +
         "(broadcast would materialize the corpus-wide df table per executor)")
       assert(collectAll(p) { case c: CartesianProductExec => c }.isEmpty)
+    }
+  }
+
+  test("ema_true and rsi_wilder: ema_run inside a Window, no collect_list fold") {
+    Seq("ema_true", "rsi_wilder").foreach { k =>
+      val plan = Queries.all(k).fn(spark, sf0001).queryExecution.optimizedPlan
+      val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      assert(!exprs.exists(_.isInstanceOf[CollectList]), s"$k collects a list:\n$plan")
+      assert(!exprs.exists(_.isInstanceOf[ArrayAggregate]), s"$k folds a list:\n$plan")
+      val windowed = plan.collect { case w: logical.Window =>
+        w.windowExpressions.flatMap(_.collect { case a: EmaRunAgg => a })
+      }.flatten
+      assert(windowed.nonEmpty, s"$k evaluates no ema_run in a Window:\n$plan")
     }
   }
 

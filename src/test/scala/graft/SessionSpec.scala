@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions.{col, lit}
 
 /** The test suite runs under the engine's own session config,
   * [[GraftSession]] stays the only place that builds a session and sets
-  * the parquet write policy, and [[Bench]] stays the one measurement
-  * runner.
+  * the parquet write policy, [[Bench]] stays the one measurement runner,
+  * and every scaladoc block in the engine sources reaches its definition.
   */
 class SessionSpec extends SparkSpec {
   import spark.implicits._
@@ -73,6 +73,27 @@ class SessionSpec extends SparkSpec {
     }
     val back = spark.read.parquet(dir).select(col("symbol"), col("timestamp").cast("string"))
     assert(back.collect().toSet == df.select(col("symbol"), col("timestamp").cast("string")).collect().toSet)
+  }
+
+  /** Whether a scaladoc block is followed, past blank or `//` lines only,
+    * by another doc block: scaladoc then drops the first one. */
+  private def orphanedDoc(text: String): Boolean = {
+    val lines = text.linesIterator.map(_.trim).toVector
+    def next(j: Int): Int =
+      if (j < lines.size && (lines(j).isEmpty || lines(j).startsWith("//"))) next(j + 1) else j
+    var inDoc = false
+    lines.indices.exists { i =>
+      if (lines(i).startsWith("/**")) inDoc = true
+      val closes = inDoc && lines(i).contains("*/")
+      if (closes) inDoc = false
+      closes && { val j = next(i + 1); j < lines.size && lines(j).startsWith("/**") }
+    }
+  }
+
+  test("no scaladoc block in src/main is orphaned by a second doc block") {
+    val found = offenders(Seq("src/main/scala"), orphanedDoc, Set.empty)
+    assert(found.isEmpty,
+      s"merge each pair into one doc on its definition: ${found.mkString(", ")}")
   }
 
   test("only Bench, Verify and Smoke define a main") {

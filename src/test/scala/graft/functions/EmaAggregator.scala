@@ -16,34 +16,31 @@ import org.apache.spark.sql.expressions.Aggregator
   */
 case class EmaBuf(cSeeded: Double, c: Double, m: Double, n: Long)
 
-/** Exponential-moving-average as a Spark `Aggregator` — the SURVEY §7.3
-  * preferred design for the true-EMA / Wilder-RSI production path.
+/** Exponential-moving-average as a Spark `Aggregator` — a second,
+  * independently written reference for the engine's native EMA aggregates
+  * (`graftnative.EmaDeclarativeBase`), used by the test suite only.
   *
   * Over a window frame `UNBOUNDED PRECEDING .. CURRENT ROW`, Spark feeds
   * rows to `reduce` one at a time in frame order, so the result is the
   * EXACT sequential recurrence `e_t = α·x_t + (1−α)·e_{t−1}` seeded with
   * the first value — bit-identical to a left fold, with O(1) state per
-  * row. This replaces the bounded-lookback `collect_list` fold (512
-  * doubles ≈ 4 KB materialized per output row) and is also exact rather
-  * than truncated.
+  * row.
   *
   * `merge` (used only by grouped partial aggregation, never by ordered
   * window frames) composes the two affine maps ASSUMING the left buffer's
   * rows precede the right's. Affine composition is associative but NOT
   * commutative, and Spark merges grouped partial buffers in task-completion
   * order — so a groupBy EMA is only deterministic when the input is a
-  * single sorted partition (as the spec's groupBy test arranges). The
-  * ordered-window path, which is the production use, never calls merge.
+  * single sorted partition. The ordered-window path never calls merge.
   *
   * α = 2/(n+1) gives the classic n-period EMA; α = 1/n gives Wilder
   * smoothing (RSI).
   *
-  * Preconditions: inputs must be NON-NULL (the fold variant's
-  * collect_list silently skips nulls; a Double-typed UDAF cannot — all
-  * in-repo call sites feed non-null columns). A NaN input yields NaN for
-  * that row and reseeds on the next, matching the fold; the affine (c, m)
-  * terms cannot represent the reseed, so the grouped/merge path
-  * additionally assumes NaN-free input.
+  * Preconditions: inputs must be NON-NULL (a Double-typed UDAF cannot
+  * see a null; the native aggregate counts one as NaN). A NaN input
+  * yields NaN for that row and reseeds on the next, matching the native
+  * aggregate; the affine (c, m) terms cannot represent the reseed, so the
+  * grouped/merge path additionally assumes NaN-free input.
   */
 class EmaAggregator(alpha: Double, windowOnly: Boolean = false)
     extends Aggregator[Double, EmaBuf, Double] {
@@ -52,10 +49,11 @@ class EmaAggregator(alpha: Double, windowOnly: Boolean = false)
   def zero: EmaBuf = EmaBuf(0.0, 0.0, 1.0, 0L)
 
   def reduce(b: EmaBuf, x: Double): EmaBuf = EmaBuf(
-    // NaN accumulator RESEEDS with x — mirroring the fold variant's
-    // `when(isnan(acc), x)` recovery. Without this, one NaN input would
-    // poison every subsequent EMA (alpha*x + beta*NaN = NaN forever),
-    // where the fold emits NaN for that row and recovers on the next.
+    // NaN accumulator RESEEDS with x — mirroring the oracle fold's
+    // `CASE WHEN isnan(acc) THEN x` recovery. Without this, one NaN input
+    // would poison every subsequent EMA (alpha*x + beta*NaN = NaN
+    // forever), where the fold emits NaN for that row and recovers on the
+    // next.
     cSeeded = if (b.n == 0L || b.cSeeded.isNaN) x else alpha * x + beta * b.cSeeded,
     c = alpha * x + beta * b.c,
     m = beta * b.m,
@@ -69,7 +67,7 @@ class EmaAggregator(alpha: Double, windowOnly: Boolean = false)
     // merge of two NON-EMPTY buffers in a grouped aggregation is only
     // correct if the caller guarantees left-precedes-right row order —
     // which the window path never needs (frames feed reduce() in order and
-    // only ever merge(zero, buf)). Production window call sites set
+    // only ever merge(zero, buf)). Window call sites set
     // windowOnly = true to turn any accidental grouped use into an error.
     else if (windowOnly) throw new IllegalStateException(
       "EmaAggregator(windowOnly=true) merged two non-empty buffers: " +
@@ -86,20 +84,4 @@ class EmaAggregator(alpha: Double, windowOnly: Boolean = false)
 
   def bufferEncoder: Encoder[EmaBuf] = Encoders.product[EmaBuf]
   def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-}
-
-/** Same recurrence, but finishing with the FULL affine state instead of
-  * the seeded value — the building block for chunk-parallel EMA
-  * ([[graft.operators.Indicators.chunkedTrueEma]]): a chunk's last-row
-  * state (cSeeded, c, m) summarizes the whole chunk, and chunk summaries
-  * compose across chunks with the same algebra `merge` uses.
-  */
-class EmaStateAggregator(alpha: Double) extends Aggregator[Double, EmaBuf, EmaBuf] {
-  private val inner = new EmaAggregator(alpha)
-  def zero: EmaBuf = inner.zero
-  def reduce(b: EmaBuf, x: Double): EmaBuf = inner.reduce(b, x)
-  def merge(l: EmaBuf, r: EmaBuf): EmaBuf = inner.merge(l, r)
-  def finish(b: EmaBuf): EmaBuf = b
-  def bufferEncoder: Encoder[EmaBuf] = Encoders.product[EmaBuf]
-  def outputEncoder: Encoder[EmaBuf] = Encoders.product[EmaBuf]
 }
