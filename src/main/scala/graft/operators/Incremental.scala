@@ -9,10 +9,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftnative.WatermarkLookup
+import org.apache.spark.sql.graftnative.{OnePartition, WatermarkLookup}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -77,14 +78,22 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   *  - single task: when Catalyst's size estimate of `input` plus its file
   *    count × `spark.sql.files.openCostInBytes` is at most
-  *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, `input` is
-  *    coalesced to one partition. One partition satisfies the window's
-  *    clustering on `symbol`, so there is no exchange: scan, filter,
-  *    indicators, checkpoint fill and append run as one task of the
-  *    append's job;
+  *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the whole input
+  *    is read as one partition: every leaf of its plan and its root are
+  *    coalesced to one partition ([[OnePartition]]). One partition
+  *    satisfies the window's clustering on `symbol` and every
+  *    distribution the input's own operators require, so the caller's
+  *    dedup, aggregate, join or sort needs no exchange either: scan, the
+  *    input's own operators, filter, indicators, checkpoint fill and
+  *    append run as one task of the append's job. Only an explicit
+  *    `repartition(n)` in `input` keeps its exchange. Nondeterministic
+  *    expressions in `input` (`rand`, `spark_partition_id`) evaluate in
+  *    that one partition: on either plan they depend on its shape;
   *  - split: a larger input, or one of unknown size, keeps its file
   *    splits and one hash exchange on `symbol`, whose map side AQE runs as
-  *    a job before the append.
+  *    a job before the append. An input whose plan holds a `Generate`
+  *    (`explode`) counts as unknown size: Catalyst estimates a `Generate`
+  *    at its child's size, however many rows it makes.
   *
   * Windows over a total order do not depend on the partitioning, so both
   * shapes write the same rows. The processed rows are checkpointed
@@ -327,8 +336,8 @@ object Incremental {
     // Materialize once: the append and the caller both read the processed
     // rows, and each would otherwise re-run the scan, exchange and sort.
     // The checkpoint is lazy: building it runs the plan's shuffle-map
-    // stages (none in the single-task plan unless `input` has an exchange
-    // of its own), and the append's job computes the result stage and
+    // stages (none in the single-task plan unless `input` has an explicit
+    // `repartition(n)`), and the append's job computes the result stage and
     // fills the checkpoint as it writes, so no job reads it back.
     // localCheckpoint truncates the lineage, so the caller's frame never
     // re-evaluates against a later watermark.
@@ -406,10 +415,11 @@ object Incremental {
     * to find the last 199 rows per symbol. A caller always knows a safe
     * time bound covering maxFrame−1 trading rows; with it, the sort (and,
     * in the split plan, the shuffle) cost is O(bound), independent of
-    * history size. The scan still reads the whole input, and the plan
-    * shape is chosen by the size of the whole input, not of the bounded
-    * rows (see the object doc). It applies to history rows only: fresh
-    * rows are never bounded.
+    * history size. The scan, and any dedup or join of the caller's in
+    * `input`, still covers the whole input, and the plan shape is chosen
+    * by the size of the whole input, not of the bounded rows (see the
+    * object doc). It applies to history rows only: fresh rows are never
+    * bounded.
     * Contract: the bound must keep ≥ maxFrame−1 rows per symbol, else
     * the first new rows see partially truncated frames.
     */
@@ -437,19 +447,25 @@ object Incremental {
     sizeInBytes <= advisory && sizeInBytes + BigInt(files) * openCost <= advisory
 
   /** The rows one run processes, with indicators, given the committed
-    * `watermarks` (epoch micros per symbol). Lazy: one scan of `input`,
-    * coalesced to one partition with no exchange when it [[fitsOneTask]]
-    * under the session's advisory partition size and file open cost, else
-    * split with one hash exchange on `symbol` (see the object doc). The
+    * `watermarks` (epoch micros per symbol). Lazy: one scan of `input`.
+    * When it [[fitsOneTask]] under the session's advisory partition size
+    * and file open cost, and its plan holds no `Generate`, `input` is read
+    * as one partition from its leaves up ([[OnePartition]]), so neither it
+    * nor the window plans an exchange; else it keeps its splits and the
+    * window one hash exchange on `symbol` (see the object doc). The
     * watermarks are a constant of the plan, fixed when it is built.
     */
   private[graft] def process(input: DataFrame, watermarks: Map[String, Long], mode: BoundaryMode,
       orderCols: Seq[String], historyBound: Option[Column]): DataFrame = {
     val qe = input.queryExecution
     val conf = qe.sparkSession.sessionState.conf
-    val oneTask = fitsOneTask(qe.optimizedPlan.stats.sizeInBytes, input.inputFiles.length,
+    val optimized = qe.optimizedPlan
+    // a Generate estimates its child's size, however many rows it makes
+    val size = if (optimized.exists(_.isInstanceOf[Generate])) BigInt(Long.MaxValue)
+      else optimized.stats.sizeInBytes
+    val oneTask = fitsOneTask(size, input.inputFiles.length,
       conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES), conf.filesOpenCostInBytes)
-    val sized = if (oneTask) input.coalesce(1) else input
+    val sized = if (oneTask) OnePartition(input) else input
     // a symbol without a watermark looks up null: all its rows are fresh
     val withWm = sized.withColumn("_wm",
       WatermarkLookup.column(col("symbol"), watermarks, input.schema("timestamp").dataType))

@@ -636,45 +636,77 @@ class IncrementalSpec extends SparkSpec {
     case v => v
   })
 
-  test("the single-task plan writes the split plan's rows bit for bit, with the same watermarks") {
-    // few input files: each file's open cost counts against the advisory
-    // size, and 16 files alone would fill it
-    val inDir = tmp() + "/in"
-    series(Seq("A", "B", "C"), 0 until 300).coalesce(2).write.parquet(inDir)
+  /** A bootstrap, then three increments: before each run `land` lands its
+    * days as new input files (none for an empty `Seq`), and `input()` reads
+    * the whole input. Each run goes under the single-task plan and the
+    * forced split plan in all three modes, each with a state and an output
+    * directory of its own. A single-task run is one job and a split run
+    * `splitJobs`; both plans write the same rows bit for bit with the same
+    * watermarks. Returns the output directory of the single-task truncated
+    * runs.
+    */
+  private def assertPlansAgree(landings: Seq[Seq[Int]], land: Seq[Int] => Unit, input: () => DataFrame,
+      splitJobs: Int): String = {
     val modes = Seq(
       "truncated" -> (Incremental.Truncated, None),
       "overlap_unbounded" -> (Incremental.OverlapReload, None),
       "overlap_bounded" -> (Incremental.OverlapReload, Some(col("timestamp") >= tsOf(80))))
-    // per mode and plan: a state and an output directory of its own
     val dirs = (for ((m, _) <- modes; split <- Seq(false, true))
       yield (m, split) -> (tmp() + "/wm", tmp() + "/out")).toMap
-    // a bootstrap, then three increments landing as new input files
-    Seq(None, Some(300 until 310), Some(310 until 320), Some(320 until 330)).foreach { landed =>
-      landed.foreach(days => series(Seq("A", "B", "C"), days).coalesce(1).write.mode("append").parquet(inDir))
+    landings.foreach { days =>
+      if (days.nonEmpty) land(days)
       for ((m, (mode, bound)) <- modes; split <- Seq(false, true)) {
         val (st, out) = dirs(m -> split)
-        val input = spark.read.parquet(inDir)
-        def run() = Incremental.runIncremental(spark, input, st, out, mode, specOrd, bound)
+        // read outside the counted work: schema inference runs a job
+        val in = input()
+        def run() = Incremental.runIncremental(spark, in, st, out, mode, specOrd, bound)
         var inc: DataFrame = null
         // an advisory size under any file's open cost forces the split plan
         val jobs = work { inc = if (split) withConf(Advisory -> "1k")(run()) else run() }.jobs
         Checkpoints.release(inc)
-        // the split plan's exchange runs its map side as a job of its own
-        assert(jobs == (if (split) 2 else 1), s"$m split=$split: $jobs jobs")
+        // each of the split plan's exchanges runs its map side as a job of its own
+        assert(jobs == (if (split) splitJobs else 1), s"$m split=$split: $jobs jobs")
       }
     }
     modes.foreach { case (m, _) =>
       val (single, split) = (dirs(m -> false), dirs(m -> true))
       assert(bits(single._2) == bits(split._2), s"$m: the plans wrote different rows")
       val (a, b) = (Incremental.readState(spark, single._1), Incremental.readState(spark, split._1))
-      assert(a.version == 4 && b.version == 4 && a.tsType == b.tsType && a.micros == b.micros,
-        s"$m: watermarks differ: ${a.micros} vs ${b.micros}")
+      assert(a.version == landings.size && b.version == landings.size && a.tsType == b.tsType &&
+        a.micros == b.micros, s"$m: watermarks differ: ${a.micros} vs ${b.micros}")
     }
-    assert(spark.read.parquet(dirs("truncated" -> false)._2).count() == 990)
+    dirs("truncated" -> false)._2
   }
 
-  /** Whether `process` plans `input` with a hash exchange (the split plan)
-    * rather than one coalesced partition; exactly one of the two holds.
+  test("the single-task plan writes the split plan's rows bit for bit, with the same watermarks") {
+    // few input files: each file's open cost counts against the advisory
+    // size, and 16 files alone would fill it
+    val inDir = tmp() + "/in"
+    series(Seq("A", "B", "C"), 0 until 300).coalesce(2).write.parquet(inDir)
+    val out = assertPlansAgree(Seq(Nil, 300 until 310, 310 until 320, 320 until 330),
+      days => series(Seq("A", "B", "C"), days).coalesce(1).write.mode("append").parquet(inDir),
+      () => spark.read.parquet(inDir), splitJobs = 2)
+    assert(spark.read.parquet(out).count() == 990)
+  }
+
+  test("a fitting input's own dedup runs in the single task, bit for bit as the split plan") {
+    // the daily increment's shape: history ∪ a landing that carries
+    // redelivered copies, deduplicated by the caller
+    val (histDir, landDir) = (tmp() + "/raw", tmp() + "/landing")
+    val symbols = Seq("A", "B", "C")
+    series(symbols, 0 until 300).coalesce(2).write.parquet(histDir)
+    val out = assertPlansAgree(Seq(300 until 301, 301 until 311, 311 until 321, 321 until 331),
+      days => series(symbols, days).unionByName(series(symbols, days.take(3))).coalesce(1)
+        .write.mode("append").parquet(landDir),
+      () => spark.read.parquet(histDir).unionByName(spark.read.parquet(landDir).dropDuplicates()),
+      // the landing dedup's exchange and the window's
+      splitJobs = 3)
+    assert(spark.read.parquet(out).count() == 3 * 331)
+  }
+
+  /** Whether `process` plans `input` split, with a hash exchange, rather
+    * than as one task: no exchange, at least one coalesce, each to one
+    * partition, and every file scan under one. Exactly one of the two holds.
     */
   private def splits(input: DataFrame): Boolean = {
     val p = Incremental.process(input, Map.empty, Incremental.OverlapReload, specOrd, None)
@@ -683,8 +715,11 @@ class IncrementalSpec extends SparkSpec {
       case p => p
     }
     val hashed = p.collect { case e: ShuffleExchangeExec => e }.nonEmpty
-    val coalesced = p.collect { case c: CoalesceExec => c.numPartitions } == Seq(1)
-    assert(hashed != coalesced, s"expected exactly one of an exchange and a CoalesceExec(1):\n$p")
+    val coalesces = p.collect { case c: CoalesceExec => c }
+    val scans = p.collect { case s: FileSourceScanExec => s }
+    val oneTask = !hashed && coalesces.nonEmpty && coalesces.forall(_.numPartitions == 1) &&
+      coalesces.flatMap(_.collect { case s: FileSourceScanExec => s }).toSet == scans.toSet
+    assert(hashed != oneTask, s"expected exactly one of an exchange and the one-task plan:\n$p")
     hashed
   }
 
@@ -707,6 +742,16 @@ class IncrementalSpec extends SparkSpec {
     assert(overRdd.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(Long.MaxValue))
     assert(splits(overRdd))
     assert(!splits(local))
+  }
+
+  test("an input whose plan holds a Generate keeps the exchange; the same input without it is one task") {
+    val input = asParquet(series(Seq("A", "B"), 0 until 30))
+    // ten rows per input row, estimated at no more than the input's size
+    val exploded = input.withColumn("_rep", explode(sequence(lit(1), lit(10)))).drop("_rep")
+    def size(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size(exploded) <= size(input))
+    assert(splits(exploded))
+    assert(!splits(input))
   }
 
   test("an input just over the advisory size keeps the exchange; one at it is one task") {

@@ -1160,11 +1160,13 @@ class PlanSpec extends SparkSpec {
   }
 
   /** The OverlapReload plan `process` builds for a daily increment's
-    * two-relation input (history ∪ landed day, 2 symbols × 251 days of
-    * parquet) over committed state, built under the session's current
-    * config. Returns the plan and the file scans' root paths.
+    * input over committed state, built under the session's current
+    * config. The input is `shape(history, landing)` of a history (2
+    * symbols × 250 days of parquet) and a landed day; by default their
+    * union. Returns the plan and the file scans' root paths.
     */
-  private def incrementalPlan(): (SparkPlan, Seq[String]) = {
+  private def incrementalPlan(
+      shape: (DataFrame, DataFrame) => DataFrame = _ unionByName _): (SparkPlan, Seq[String]) = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.execution.FileSourceScanExec
     import spark.implicits._
@@ -1182,18 +1184,34 @@ class PlanSpec extends SparkSpec {
     val order = Seq("trading_date")
     Checkpoints.release(Incremental.runIncremental(spark, raw, s"$dir/wm", s"$dir/out",
       Incremental.OverlapReload, order))
-    // the two-relation input of a daily increment (history ∪ landed day)
-    val input = raw.unionByName(spark.read.parquet(s"$dir/landing"))
+    val input = shape(raw, spark.read.parquet(s"$dir/landing"))
     val state = Incremental.readState(spark, s"$dir/wm").micros
     assert(state.size == 2)
     val p = physical(Incremental.process(input, state,
       Incremental.OverlapReload, order, Some(col("timestamp") >= lit("2023-03-01").cast("timestamp"))))
     val scans = collectAll(p) { case s: FileSourceScanExec => s.relation.location.rootPaths.mkString }
-    // history and landing: each scanned exactly once, and the state never
-    assert(scans.size == 2 && scans.distinct.size == 2, s"scans: ${scans.mkString(", ")}")
+    // the state is never scanned
     assert(!scans.exists(_.contains("/wm")), s"state scanned: ${scans.mkString(", ")}")
     (p, scans)
   }
+
+  /** The single-task plan: no shuffle exchange, at least one coalesce,
+    * each to one partition, and every file scan under one.
+    */
+  private def assertOneTask(p: SparkPlan, scans: Seq[String]): Unit = {
+    import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    assert(collectAll(p) { case e: ShuffleExchangeExec => e }.isEmpty, s"exchange in plan:\n$p")
+    // one partition satisfies the window's clustering on symbol
+    val coalesces = collectAll(p) { case c: CoalesceExec => c }
+    assert(coalesces.nonEmpty && coalesces.forall(_.numPartitions == 1), s"expected CoalesceExec(1) only:\n$p")
+    val under = coalesces.flatMap(_.collect { case s: FileSourceScanExec => s.relation.location.rootPaths.mkString })
+    assert(under.distinct.sorted == scans.distinct.sorted, s"scans outside a coalesce:\n$p")
+  }
+
+  /** History and landing each scanned exactly once. */
+  private def assertTwoScans(scans: Seq[String]): Unit =
+    assert(scans.size == 2 && scans.distinct.size == 2, s"scans: ${scans.mkString(", ")}")
 
   test("incremental OverlapReload: one scan per input relation, one hash exchange on symbol") {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -1203,7 +1221,8 @@ class PlanSpec extends SparkSpec {
     val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "1k")
-    val (p, _) = try incrementalPlan() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val (p, scans) = try incrementalPlan() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assertTwoScans(scans)
 
     val hashed = collectAll(p) { case e: ShuffleExchangeExec => e.outputPartitioning }
       .collect { case h: HashPartitioning => h }
@@ -1214,14 +1233,42 @@ class PlanSpec extends SparkSpec {
   }
 
   test("incremental OverlapReload: an input that fits one advisory partition is one task, with no exchange") {
-    import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val (p, scans) = incrementalPlan()
-    assert(collectAll(p) { case e: ShuffleExchangeExec => e }.isEmpty, s"exchange in plan:\n$p")
-    // one partition satisfies the window's clustering on symbol
-    val coalesces = collectAll(p) { case c: CoalesceExec => c }
-    assert(coalesces.map(_.numPartitions) == Seq(1), s"expected one CoalesceExec(1):\n$p")
-    val under = coalesces.head.collect { case s: FileSourceScanExec => s.relation.location.rootPaths.mkString }
-    assert(under.sorted == scans.sorted, s"scans outside the coalesce:\n$p")
+    assertTwoScans(scans)
+    assertOneTask(p, scans)
+  }
+
+  test("incremental OverlapReload: a fitting input's own dedup, sort and aggregate join plan no exchange") {
+    import org.apache.spark.sql.functions._
+    val shapes = Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+      // the daily increment: history ∪ a landing that carries redeliveries
+      "history ∪ landing.dropDuplicates()" -> ((h, l) => h.unionByName(l.dropDuplicates())),
+      "orderBy" -> ((h, l) => h.unionByName(l).orderBy("symbol", "trading_date")),
+      "aggregate join" -> ((h, l) =>
+        h.unionByName(l).join(l.groupBy("symbol").agg(max("close").as("landed_close")), "symbol")))
+    shapes.foreach { case (name, shape) =>
+      val (p, scans) = incrementalPlan(shape)
+      withClue(s"$name: ")(assertOneTask(p, scans))
+    }
+  }
+
+  test("incremental OverlapReload: a cached fragment of a fitting input stays an in-memory scan") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    var cached: DataFrame = null
+    try {
+      val (p, scans) = incrementalPlan { (h, l) => cached = l.cache(); h.unionByName(cached.dropDuplicates()) }
+      assert(collectAll(p) { case m: InMemoryTableScanExec => m }.size == 1, s"cache lost:\n$p")
+      // the dedup above the cached scan runs in the one task too
+      assertOneTask(p, scans)
+    } finally Option(cached).foreach(_.unpersist())
+  }
+
+  test("incremental OverlapReload: an explicit repartition in a fitting input keeps its exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val (p, _) = incrementalPlan((h, l) => h.unionByName(l.dropDuplicates().repartition(4)))
+    // the caller's repartition(4), and not the dedup's hash exchange
+    val exchanges = collectAll(p) { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(exchanges == Seq(RoundRobinPartitioning(4)), s"expected only the caller's exchange:\n$p")
   }
 }
